@@ -11,8 +11,7 @@ batch size; this bench measures the curve explicitly so the default
 trigger sizing is a measured choice, not a guess.
 
 Method: the sf0.1 documents table is replicated (disjoint ids,
-replica-salted text — same fixture derivation as
-bench_streaming.bench_corpus_ingest) to N rows, written as
+replica-salted text) to N rows, written as
 ceil(N / B) parquet files of ~B docs each, and drained with
 maxFilesPerTrigger=1 — so every micro-batch processes ~B documents
 through the FULL near-dup-gated path (quality gates, watermarked

@@ -189,8 +189,10 @@ def use_rocksdb_state(spark: SparkSession, changelog: bool = True) -> None:
 # --- in-flight data-quality metrics --------------------------------------
 def with_quality_metrics(df: DataFrame, name: str = "quality") -> DataFrame:
     """Attach ``observe()`` data-quality metrics to a (streaming or
-    batch) events DataFrame: row count, null/blank user ids, and the
-    event-time high-water mark.
+    batch) events DataFrame: row count, null/blank user ids, null event
+    times, and the event-time high-water mark. The stateful sessionizer
+    leaves the bad-user and bad-time rows out; these counts are where
+    they show.
 
     ``observe`` computes the aggregates inside the existing plan — at
     100 TB a monitoring pass that re-scans the input is its own
@@ -214,5 +216,6 @@ def with_quality_metrics(df: DataFrame, name: str = "quality") -> DataFrame:
                 1,
             ).otherwise(0)
         ).alias("n_bad_user"),
+        F.sum(F.when(F.col("ts_sec").isNull(), 1).otherwise(0)).alias("n_bad_ts"),
         F.max("ts_sec").alias("max_ts_sec"),
     )

@@ -10,11 +10,21 @@ state store via ``applyInPandasWithState`` — updates are visible
 within the batch (events are processed in time order per user), the
 race disappears, and checkpointing gives exactly-once state.
 
+State is bucketed: the state key is ``pmod(hash(user_id), BUCKETS)``,
+not the user, so a micro-batch costs at most ``BUCKETS`` Python calls
+instead of one per user (Spark's fixed cost per group — Arrow/pandas
+conversion plus a state get and put — dominated the per-user design).
+A bucket's state value is one packed binary: the ``USER_STATE`` numpy
+records of its users, sorted by ``user_id``. One call sessionizes the
+whole bucket in a single vectorised pass (sort, shift, forward-fill)
+and merges each touched user's last row back into the records.
+
 Session rules (batch-identical to operators/sessionize.py):
   new session ⇔ user unseen ∨ gap > 30 min (strict) ∨ init event
   session_id = "<user>-<session_start_epoch_sec>" (deterministic, F5)
-Cart/category carry: only purchase events move them (T3); new users
-seed cart to 0 (reference :175).
+Cart carry: only purchase events move it (T3); new users seed cart to
+0 (reference :175). ``ctgry`` is the constant "none": the stream
+carries no category column.
 """
 
 from __future__ import annotations
@@ -22,23 +32,34 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from msstreamingstack_spark.operators.sessionize import DEFAULT_GAP_SEC
 
-# (last_ts, session_start, n_events, cart_amt, ctgry)
-STATE_SCHEMA = T.StructType(
+# State keys per query, so at most this many Python calls per trigger.
+# Fewer keys starve the shuffle: 4 bucket keys hash onto only 2 of 4
+# state partitions; more keys pay Spark's fixed cost per group again.
+BUCKETS = 16
+
+# One record per user of a bucket, kept sorted by user_id.
+USER_STATE = np.dtype(
     [
-        T.StructField("last_ts", T.LongType()),
-        T.StructField("session_start", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("cart_amt", T.DoubleType()),
-        T.StructField("ctgry", T.StringType()),
+        ("user_id", "<i8"),
+        ("last_ts", "<i8"),
+        ("session_start", "<i8"),
+        ("n_events", "<i8"),
+        ("cart_amt", "<f8"),
     ]
 )
+
+# The bucket's USER_STATE records as raw bytes.
+STATE_SCHEMA = T.StructType([T.StructField("users", T.BinaryType())])
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -56,15 +77,24 @@ OUTPUT_SCHEMA = T.StructType(
 )
 
 
-def make_session_fn(
+def _ffill(mark: np.ndarray, vals: np.ndarray) -> np.ndarray:
+    """``vals`` at the last marked row at or before each row; row 0
+    must be marked."""
+    idx = np.where(mark, np.arange(len(mark)), 0)
+    np.maximum.accumulate(idx, out=idx)
+    return vals[idx]
+
+
+def make_bucket_fn(
     gap_sec: int = DEFAULT_GAP_SEC,
     init_event_type: str = "signup",
     purchase_event_type: str = "purchase",
 ):
-    """Build the per-group state-transition function.
+    """Build the per-bucket state-transition function.
 
-    Events inside a batch are sorted by (ts_sec, event_id); state
-    carries across micro-batches via the state store.
+    All chunks of the bucket's micro-batch are concatenated and sorted
+    by (user_id, ts_sec, event_id) before any row is sessionized, so
+    the chunking Spark picks cannot change the result.
     """
 
     def fn(
@@ -72,53 +102,85 @@ def make_session_fn(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            last_ts, session_start, n_events, cart_amt, ctgry = state.get
-            new_user = False
-        else:
-            last_ts, session_start, n_events, cart_amt, ctgry = (
-                None,
-                None,
-                0,
-                0.0,  # reference seeds new-user cart to "0" (:175)
-                "none",
-            )
-            new_user = True
+        chunks = list(pdfs)
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        if pdf.empty:
+            return
+        uid = pdf["user_id"].to_numpy(np.int64)
+        ts = pdf["ts_sec"].to_numpy(np.int64)
+        eid = pdf["event_id"].to_numpy(np.int64)
+        order = np.lexsort((eid, ts, uid))
+        uid, ts, eid = uid[order], ts[order], eid[order]
+        etype = pdf["event_type"].to_numpy()[order]
+        value = pdf["value"].to_numpy(np.float64)[order]
+        n = len(uid)
 
-        out_rows: list[dict] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts_sec", "event_id"])
-            for r in pdf.itertuples(index=False):
-                ts = int(r.ts_sec)
-                split = (
-                    last_ts is None
-                    or (ts - last_ts) > gap_sec
-                    or r.event_type == init_event_type
-                )
-                if split:
-                    session_start = ts
-                if r.event_type == purchase_event_type:
-                    cart_amt = float(r.value)
-                    ctgry = str(r.prop_k % 10) if hasattr(r, "prop_k") else ctgry
-                out_rows.append(
-                    {
-                        "event_id": int(r.event_id),
-                        "user_id": int(user_id),
-                        "ts_sec": ts,
-                        "event_type": r.event_type,
-                        "value": float(r.value),
-                        "session_id": f"{user_id}-{session_start}",
-                        "is_new_user": new_user and n_events == 0 and not out_rows,
-                        "is_new_session": bool(split),
-                        "cart_amt": cart_amt,
-                        "ctgry": ctgry,
-                    }
-                )
-                last_ts = ts
-        n_events += len(out_rows)
-        state.update((last_ts, session_start, n_events, cart_amt, ctgry))
-        yield pd.DataFrame(out_rows, columns=[f.name for f in OUTPUT_SCHEMA.fields])
+        # users of this batch: first row, row -> user index
+        first = np.empty(n, dtype=bool)
+        first[0] = True
+        np.not_equal(uid[1:], uid[:-1], out=first[1:])
+        starts = np.flatnonzero(first)
+        users = uid[starts]
+        row_user = np.cumsum(first) - 1
+
+        # each user's prior record (zeros for a user never seen)
+        old = (
+            np.frombuffer(state.get[0], dtype=USER_STATE)
+            if state.exists
+            else np.empty(0, dtype=USER_STATE)
+        )
+        pos = np.searchsorted(old["user_id"], users)
+        seen = pos < len(old)
+        seen[seen] = old["user_id"][pos[seen]] == users[seen]
+        prior = np.zeros(len(users), dtype=USER_STATE)
+        prior[seen] = old[pos[seen]]
+        is_new_user = first & ~seen[row_user]
+
+        prev_ts = np.empty_like(ts)
+        prev_ts[1:] = ts[:-1]
+        prev_ts[starts] = prior["last_ts"]
+        split = is_new_user | ((ts - prev_ts) > gap_sec) | (etype == init_event_type)
+        session_start = _ffill(
+            split | first, np.where(split, ts, prior["session_start"][row_user])
+        )
+        purchase = etype == purchase_event_type
+        cart_amt = _ffill(
+            purchase | first, np.where(purchase, value, prior["cart_amt"][row_user])
+        )
+
+        # merge each touched user's last row back into the sorted records
+        ends = np.append(starts[1:], n) - 1
+        touched = np.empty(len(users), dtype=USER_STATE)
+        touched["user_id"] = users
+        touched["last_ts"] = ts[ends]
+        touched["session_start"] = session_start[ends]
+        touched["n_events"] = prior["n_events"] + (ends - starts + 1)
+        touched["cart_amt"] = cart_amt[ends]
+        new_pos = pos[~seen]
+        merged = np.insert(old, new_pos, touched[~seen])
+        # a seen user's record moved right by the new users inserted before it
+        merged[pos[seen] + np.searchsorted(new_pos, pos[seen], side="right")] = touched[seen]
+        state.update((merged.tobytes(),))
+
+        session_id = pc.binary_join_element_wise(
+            pc.cast(pa.array(uid), pa.string()),
+            pc.cast(pa.array(session_start), pa.string()),
+            "-",
+        ).to_numpy(zero_copy_only=False)
+        yield pd.DataFrame(
+            {
+                "event_id": eid,
+                "user_id": uid,
+                "ts_sec": ts,
+                "event_type": etype,
+                "value": value,
+                "session_id": session_id,
+                "is_new_user": is_new_user,
+                "is_new_session": split,
+                "cart_amt": cart_amt,
+                "ctgry": "none",
+            }
+        )
 
     return fn
 
@@ -126,9 +188,15 @@ def make_session_fn(
 def sessionize_stream(events: DataFrame, gap_sec: int = DEFAULT_GAP_SEC) -> DataFrame:
     """Apply the stateful sessionizer to a (streaming or batch-test)
     events DataFrame with columns event_id,user_id,ts_sec,event_type,
-    value. Shuffles once on user_id into the state store partitioning."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        make_session_fn(gap_sec),
+    value. Rows without a user_id or ts_sec cannot be keyed or ordered
+    and are left out (``pipeline.with_quality_metrics`` counts them).
+    Shuffles once on the user's hash bucket into the state store
+    partitioning."""
+    keyed = events.where(
+        F.col("user_id").isNotNull() & F.col("ts_sec").isNotNull()
+    ).withColumn("bucket", F.pmod(F.hash("user_id"), F.lit(BUCKETS)))
+    return keyed.groupBy("bucket").applyInPandasWithState(
+        make_bucket_fn(gap_sec),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",

@@ -104,6 +104,51 @@ def test_new_user_flag_once_per_user(spark, staged_stream_dir, tmp_path):
     assert all(v == 1 for v in new_flags.values()), new_flags
 
 
+def test_null_user_row_is_counted_not_fatal(spark, tmp_path):
+    """A row without a user_id (or event time) cannot be keyed: it is
+    left out of the stateful input and counted in the quality metrics,
+    and the query keeps going — the next drop is processed too."""
+    src = tmp_path / "in"
+    src.mkdir()
+    ids = [list(range(1, 11)), list(range(11, 21))]
+    for i, eids in enumerate(ids):
+        n = len(eids)
+        tbl = pa.table(
+            {
+                "event_id": pa.array(eids, pa.int64()),
+                "ts": pa.array(
+                    [None if e == 5 else (1000 + 60 * e) * 10**9 for e in eids], pa.int64()
+                ),
+                "user_id": pa.array([None if e == 3 else e % 4 for e in eids], pa.int64()),
+                "event_type": ["view"] * n,
+                "value": [0.0] * n,
+                "props": ["{}"] * n,
+            }
+        )
+        path = src / f"part-{i:03d}.parquet"
+        pq.write_table(tbl, path)
+        mt = 1_700_000_000 + i * 10
+        os.utime(path, (mt, mt))
+
+    sink = CollectingSink()
+    q = run_pipeline(
+        spark, str(src), checkpoint_dir=str(tmp_path / "cp_null"), sinks=[sink]
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert sorted(r["event_id"] for r in sink.rows) == [
+        e for e in range(1, 21) if e not in (3, 5)
+    ]
+    observed = [
+        p["observedMetrics"]["quality"]
+        for p in q.recentProgress
+        if "quality" in p.get("observedMetrics", {})
+    ]
+    assert sum(m["n_rows"] for m in observed) == 20
+    assert sum(m["n_bad_user"] for m in observed) == 1
+    assert sum(m["n_bad_ts"] for m in observed) == 1
+
+
 def test_stream_static_dim_join(spark, staged_stream_dir, tmp_path):
     """Reference J1 parity (StructuredStreaming.scala:151-155): the
     streaming side LEFT-joins a static dimension; Spark re-evaluates

@@ -28,6 +28,18 @@ from msstreamingstack_spark.streaming.stateful import sessionize_stream
 
 SinkFn = Callable[[DataFrame, int], None]
 
+# Input bytes one run_pipeline trigger admits: a backlog drains in as few
+# triggers as this allows, instead of paying the fixed per-trigger cost
+# (offsets, planning, WAL, Python workers, sink job) once per drop. The
+# bound is memory: fan_out persists the whole micro-batch and each state
+# call concatenates one bucket's share (1/BUCKETS) into one pandas frame.
+# Drops are about 27 B per event as parquet, so 64 MiB is about 2.5M
+# events a trigger, or about 150k rows per bucket call at BUCKETS=16.
+# Not uncapped (Spark's default): that would admit a whole outage's
+# backlog as one batch. The first pending file is always admitted, even
+# when it alone is larger.
+ADMIT_BYTES_PER_TRIGGER = 64 * 1024 * 1024
+
 
 def _ts_is_parquet_timestamp(path: str) -> bool:
     """Probe one parquet footer under ``path`` for the physical type of
@@ -51,10 +63,18 @@ def read_event_stream(
     spark: SparkSession,
     path: str,
     max_files_per_trigger: int = 1,
+    max_bytes_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-drop event stream with the declared schema (streaming
     sources cannot infer — the reference pre-computed its schema from
     a sample batch read, StructuredStreaming.scala:70-76; we declare).
+
+    Admission: each trigger takes up to ``max_files_per_trigger``
+    pending files, oldest first. With ``max_bytes_per_trigger`` set it
+    instead takes pending files until their sizes reach that many bytes
+    (always at least one file), and ``max_files_per_trigger`` is
+    ignored: Spark rejects both options on one source. A trigger's
+    input, and so its memory, is bounded by whichever cap applies.
 
     ``ts_sec`` (integer epoch seconds) matches the batch loader
     ``sources.tables.events_with_time`` bit-for-bit for either physical
@@ -71,12 +91,12 @@ def read_event_stream(
     else:
         schema = EVENTS_SCHEMA
         ts_sec = (F.col("ts") / NANOS_PER_SEC).cast("long")
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-        .withColumn("ts_sec", ts_sec)
-    )
+    reader = spark.readStream.schema(schema)
+    if max_bytes_per_trigger is None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    else:
+        reader = reader.option("maxBytesPerTrigger", max_bytes_per_trigger)
+    return reader.parquet(path).withColumn("ts_sec", ts_sec)
 
 
 def kafka_reader(spark: SparkSession, bootstrap: str, topic: str,
@@ -130,8 +150,18 @@ def run_pipeline(
 
     ``available_now=True`` drains all pending input then stops —
     deterministic for tests and backfills; pass False for continuous
-    processing."""
-    events = read_event_stream(spark, source_path).select(
+    processing.
+
+    Each trigger admits every pending drop up to
+    ``ADMIT_BYTES_PER_TRIGGER`` bytes of input (at least one drop), so a
+    backlog drains in as few micro-batches as that memory bound allows
+    and a live stream that keeps up takes each drop as it lands. Drops
+    are sessionized in (ts_sec, event_id) order within a trigger, so
+    events out of order ACROSS drops can give different sessions
+    depending on which drops shared a trigger."""
+    events = read_event_stream(
+        spark, source_path, max_bytes_per_trigger=ADMIT_BYTES_PER_TRIGGER
+    ).select(
         "event_id", "user_id", "ts_sec", "event_type", "value"
     )
     events = with_quality_metrics(events)

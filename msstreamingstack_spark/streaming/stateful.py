@@ -291,28 +291,31 @@ def make_rollup_fn(gap_sec: int = DEFAULT_GAP_SEC):
             ss = lt = None
             n, sv = 0, 0.0
 
+        # one sort over all chunks: sorting each chunk on its own lets
+        # Spark's chunking reorder the user's events
+        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
+            ["ts_sec", "event_id"], kind="stable"
+        )
         out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts_sec", "event_id"])
-            for r in pdf.itertuples(index=False):
-                ts = int(r.ts_sec)
-                if lt is not None and (ts - lt) > gap_sec:
-                    out.append(
-                        {
-                            "user_id": int(user_id),
-                            "session_start": ss,
-                            "session_end": lt,
-                            "n_events": n,
-                            "sum_value": sv,
-                            "closed_by_timeout": False,
-                        }
-                    )
-                    ss, n, sv = ts, 0, 0.0
-                if lt is None:
-                    ss = ts
-                n += 1
-                sv += float(r.value)
-                lt = ts
+        for r in pdf.itertuples(index=False):
+            ts = int(r.ts_sec)
+            if lt is not None and (ts - lt) > gap_sec:
+                out.append(
+                    {
+                        "user_id": int(user_id),
+                        "session_start": ss,
+                        "session_end": lt,
+                        "n_events": n,
+                        "sum_value": sv,
+                        "closed_by_timeout": False,
+                    }
+                )
+                ss, n, sv = ts, 0, 0.0
+            if lt is None:
+                ss = ts
+            n += 1
+            sv += float(r.value)
+            lt = ts
         state.update((ss, lt, n, sv))
         # close the open session once the watermark passes last_ts+gap
         state.setTimeoutTimestamp((lt + gap_sec) * 1000)

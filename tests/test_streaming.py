@@ -9,6 +9,7 @@ streaming sessionizer must reproduce EXACTLY the batch sessionizer's
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -19,6 +20,7 @@ from pyspark.sql import functions as F
 from msstreamingstack_spark.operators.sessionize import sessionize
 from msstreamingstack_spark.sinks.writers import CollectingSink
 from msstreamingstack_spark.sources.tables import events_with_time
+from msstreamingstack_spark.streaming import pipeline
 from msstreamingstack_spark.streaming.pipeline import run_pipeline
 
 SF = "/root/testdata/sf0.001"
@@ -50,6 +52,59 @@ def _batch_truth(spark):
     return {r["event_id"]: r["session_id"] for r in out.collect()}
 
 
+def _land_drops_one_by_one(spark, staged_dir, tmp_path, sinks, name):
+    """Run a continuous ``run_pipeline`` query and land the staged drops
+    one at a time, each drained before the next lands, so every drop is
+    its own micro-batch (a staged backlog drains as one)."""
+    src = tmp_path / f"{name}_in"
+    src.mkdir()
+
+    def land(fname):
+        # the file source skips dot-files: copy hidden, then rename in
+        shutil.copy(os.path.join(staged_dir, fname), src / f".{fname}")
+        os.rename(src / f".{fname}", src / fname)
+
+    drops = sorted(f for f in os.listdir(staged_dir) if f.endswith(".parquet"))
+    land(drops[0])
+    q = run_pipeline(
+        spark,
+        str(src),
+        checkpoint_dir=str(tmp_path / name),
+        sinks=sinks,
+        available_now=False,
+    )
+    try:
+        q.processAllAvailable()
+        for fname in drops[1:]:
+            land(fname)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def test_backlog_admitted_by_byte_budget(spark, staged_stream_dir, tmp_path, monkeypatch):
+    """A staged backlog of 3 drops fits the byte budget, so
+    ``available_now`` drains it in one data trigger; with a 1-byte
+    budget each trigger still admits one drop, so it takes 3. Time-
+    ordered input gives the batch sessions however it is batched."""
+    want = _batch_truth(spark)
+    for budget, triggers in ((pipeline.ADMIT_BYTES_PER_TRIGGER, 1), (1, 3)):
+        monkeypatch.setattr(pipeline, "ADMIT_BYTES_PER_TRIGGER", budget)
+        sink = CollectingSink()
+        q = run_pipeline(
+            spark,
+            staged_stream_dir,
+            checkpoint_dir=str(tmp_path / f"cp_admit_{budget}"),
+            sinks=[sink],
+            available_now=True,
+        )
+        q.awaitTermination(300)
+        data_triggers = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        assert len(data_triggers) == triggers, (budget, q.recentProgress)
+        got = {r["event_id"]: r["session_id"] for r in sink.rows}
+        assert got == want, budget
+
+
 def test_stream_matches_batch_sessionizer(spark, staged_stream_dir, tmp_path):
     sink = CollectingSink()
     q = run_pipeline(
@@ -69,16 +124,9 @@ def test_stream_matches_batch_sessionizer(spark, staged_stream_dir, tmp_path):
 
 def test_stream_processes_multiple_batches_with_state(spark, staged_stream_dir, tmp_path):
     sink = CollectingSink()
-    q = run_pipeline(
-        spark,
-        staged_stream_dir,
-        checkpoint_dir=str(tmp_path / "cp2"),
-        sinks=[sink],
-        available_now=True,
-    )
-    q.awaitTermination(300)
+    _land_drops_one_by_one(spark, staged_stream_dir, tmp_path, [sink], "cp2")
     nonempty = [b for b, rows in sink.batches if rows]
-    assert len(nonempty) >= 2, "maxFilesPerTrigger=1 should yield multiple batches"
+    assert len(nonempty) >= 2, "drops landed one by one should yield multiple batches"
     # a session continuing across batch boundaries keeps its id: find a
     # user whose events span two batches with a small gap
     by_batch = {b: {r["user_id"] for r in rows} for b, rows in sink.batches}
@@ -296,14 +344,7 @@ def test_transactional_sink_exactly_once(spark, staged_stream_dir, tmp_path):
     from msstreamingstack_spark.sinks.writers import TransactionalParquetSink
 
     sink = TransactionalParquetSink(str(tmp_path / "txn"))
-    q = run_pipeline(
-        spark,
-        staged_stream_dir,
-        checkpoint_dir=str(tmp_path / "cp_txn"),
-        sinks=[sink],
-        available_now=True,
-    )
-    q.awaitTermination(300)
+    _land_drops_one_by_one(spark, staged_stream_dir, tmp_path, [sink], "cp_txn")
     ids = sink.committed_ids()
     assert len(ids) >= 2
 

@@ -17,7 +17,7 @@ idiomatic PySpark 3.5+/4.x DataFrame engine:
 Layout:
     session.py    — SparkSession factory tuned for the harness
     schemas.py    — declared StructTypes (clickstream/state/output + testdata)
-    sources/      — table loaders, file/rate/kafka sources
+    sources/      — table loaders, event generator, Python data sources
     sinks/        — console/parquet/memory foreachBatch sinks; external stubs
     functions/    — expression library (scalar derivations, text, vectors)
     operators/    — batch operators (sessionize, state, dedup, similarity…)

@@ -57,9 +57,9 @@ def rotating_persist(
     returning. Use it where the persisted frame feeds MULTIPLE
     broadcast subtrees: broadcast builds run concurrently on the
     driver's broadcast threads and race to populate a lazy cache,
-    re-executing the fold per build — the r10 contention A/B
-    (EAGER_AB_r10.json) measured the single-shot (driver-window) cost
-    of lang_shingle_overlap at 12.4 s lazy vs 3.9 s eager under load,
+    re-executing the fold per build — the round 10 contention A/B
+    measured the single-shot cost of lang_shingle_overlap at 12.4 s
+    lazy vs 3.9 s eager under load,
     against a ~0.3 s steady-state premium for the extra pass."""
     spark = df.sparkSession
     with _LOCK:

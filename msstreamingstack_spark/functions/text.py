@@ -297,20 +297,19 @@ def dup_ngram_fraction_sql(text_sql: str, n: int = 3) -> str:
     )
 
 
-def doc_bigram_counts(docs, text_col: str = "text", id_col: str = "doc_id"):
-    """(id, w1, w2, c) — per-document bigram TYPE counts. One explode
+def doc_bigram_counts(docs):
+    """(doc_id, w1, w2, c) — per-document bigram TYPE counts. One explode
     via aligned ``arrays_zip(slice, slice)`` (native array functions —
     no interpreted HOF lambda), folded immediately to type counts so
     downstream joins move |distinct (doc, bigram)| rows, never
-    occurrences. Shared by the corpus bigram-LM quality score
-    (queries_extensions.bigram_lm_scores) and the LM-gated ingest
-    increment (operators/incremental.py). Docs with fewer than 2
+    occurrences. Used by the corpus bigram-LM quality score
+    (queries_extensions.bigram_lm_scores). Docs with fewer than 2
     tokens yield no rows."""
-    toks = F.split(F.col(text_col), " ")
-    d2 = docs.select(id_col, toks.alias("t")).filter(F.size("t") >= 2)
+    toks = F.split(F.col("text"), " ")
+    d2 = docs.select("doc_id", toks.alias("t")).filter(F.size("t") >= 2)
     return (
         d2.select(
-            id_col,
+            "doc_id",
             F.explode(
                 F.expr(
                     "arrays_zip(slice(t, 1, size(t) - 1), "
@@ -319,10 +318,10 @@ def doc_bigram_counts(docs, text_col: str = "text", id_col: str = "doc_id"):
             ).alias("bg"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("bg").getField("0").alias("w1"),
             F.col("bg").getField("1").alias("w2"),
         )
-        .groupBy(id_col, "w1", "w2")
+        .groupBy("doc_id", "w1", "w2")
         .agg(F.count("*").alias("c"))
     )

@@ -176,7 +176,7 @@ FROM (SELECT doc_id, unnest({shingles_sql('text')}) AS sh FROM {doc_rel})
 # re-measured r12 on the array-form verify: off 0.76 vs on 0.89 s);
 # above it the corpus-sized array fold is the cost and dropping
 # non-candidate docs BEFORE the groupBy pays (16x: 1.34 vs 1.22 s;
-# 64x: 1.99 vs 1.07 s — SCALE64_r12.json, parity True at every
+# 64x: 1.99 vs 1.07 s — round 12 64× run, parity True at every
 # scale). PySpark has no DataFrame Bloom builder, so the filter is
 # the guide's sanctioned approximation: a broadcast LEFT SEMI join on
 # the distinct candidate doc ids (exact, zero false positives).
@@ -379,9 +379,6 @@ def minhash_cross_pairs(
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    *,
-    shingles_df: DataFrame | None = None,
-    buckets_df: DataFrame | None = None,
 ) -> DataFrame:
     """Fuzzy cross-corpus decontamination: banded-minhash candidates
     restricted to (train, eval) pairs — train docs that share an LSH
@@ -394,27 +391,11 @@ def minhash_cross_pairs(
     never all-pairs — but the join is train×eval instead of a
     self-join, so candidate volume is bounded by the (small) eval
     side's bucket occupancy. ``eval_pred`` is an unbound Column
-    predicate over ``doc_id``. ``shingles_df`` lets a composed caller
-    (pipeline_pretrain_corpus_v2) share ONE shingle materialization
-    across the dedup + decontamination stages instead of exploding
-    the text three times — same contract as minhash_lsh_pairs.
-    ``buckets_df`` likewise shares a caller-owned (doc_id, band, key)
-    bucket table so a composition running BOTH minhash kernels builds
-    the signature aggregate once (r12; the two kernels' signature
-    subtrees are identical expressions, so sharing cannot change
-    rows)."""
-    sh = (
-        shingles_df
-        if shingles_df is not None
-        else doc_shingle_hashes(
-            docs, text_col=text_col, id_col=id_col, slot="minhash_cross.sh"
-        )
+    predicate over ``doc_id``."""
+    sh = doc_shingle_hashes(
+        docs, text_col=text_col, id_col=id_col, slot="minhash_cross.sh"
     )
-    buckets = (
-        buckets_df
-        if buckets_df is not None
-        else _band_buckets(minhash_signatures(sh), id_col)
-    )
+    buckets = _band_buckets(minhash_signatures(sh), id_col)
     train_b = buckets.filter(~eval_pred)
     eval_b = buckets.filter(eval_pred)
     cand = (
@@ -471,42 +452,17 @@ WHERE CAST(n_inter AS DOUBLE) / CAST(sa.n + sb.n - n_inter AS DOUBLE) >= {thresh
 """
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    shingles_df: DataFrame | None = None,
-    buckets_df: DataFrame | None = None,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Banded-LSH candidate generation + exact-jaccard verification.
     Bands explode to (band_idx, band_key) and bucket-join — the
-    scalable alternative to an all-pairs signature comparison.
-
-    ``shingles_df`` lets a caller that already holds the (doc_id, h)
-    shingle table (and OWNS its persist lifecycle — e.g. the per-batch
-    ``minhash_increment``, which must unpersist deterministically in
-    continuous ingest) supply it instead of having this function
-    persist a fresh one it can never release. ``buckets_df`` shares a
-    caller-owned bucket table the same way (see minhash_cross_pairs)."""
-    sh = (
-        shingles_df
-        if shingles_df is not None
-        else doc_shingle_hashes(
-            docs,
-            text_col=text_col,
-            id_col=id_col,
-            slot="minhash.sh",
-            eager=True,  # 6.6 -> 3.4 s at sf0.1: the signature and
-            # sizes subtrees otherwise re-shingled under broadcasts
-        )
+    scalable alternative to an all-pairs signature comparison."""
+    sh = doc_shingle_hashes(
+        docs,
+        slot="minhash.sh",
+        eager=True,  # 6.6 -> 3.4 s at sf0.1: the signature and
+        # sizes subtrees otherwise re-shingled under broadcasts
     )
-    buckets = (
-        buckets_df
-        if buckets_df is not None
-        else _band_buckets(minhash_signatures(sh))
-    )
+    buckets = _band_buckets(minhash_signatures(sh))
     cand = (
         buckets.alias("x")
         .join(buckets.alias("y").hint("shuffle_hash"), ["band", "key"])
@@ -626,7 +582,7 @@ SIMHASH_WIDE_T = 4
 # Generator dispatch: past this Catalyst-estimated size of the docs
 # input the selective (10,4) layout beats the cheap (8,2) one (the
 # quadratic collision term overtakes the linear replication term).
-# Measured (SCALE64_r12.json, interleaved same-session best-of):
+# Measured (round 12 64× run, interleaved same-session best-of):
 # sf0.1 (~0.6 MB): (8,2) 1.09 vs (10,4) 1.8-2.0 s — narrow wins;
 # 16x (~9 MB): 6.7 vs 8.5 s — narrow still wins; 64x (~45 MB): 87.8
 # vs 58.9 s — wide wins. Crossover sits between 16x and 64x docs
@@ -684,7 +640,7 @@ def simhash_pairs(
       - (nb=8, t=2): 28 12-bit keys — cheapest below the crossover,
         where the linear term dominates (sf0.1: 0.73 vs 1.82 s).
       - (nb=10, t=4): 210 18-20-bit keys — the r11 verdict's 64×
-        scale-killer was the (8,2) collision tail (SCALE64_r11 ratio
+        scale-killer was the (8,2) collision tail (round 11 64× ratio
         33.3; 4.22e9 join emissions measured at 64× — 12× the uniform
         estimate because template-skewed band values make hot
         buckets); (10,4) measured 84→56 s at 64×, emissions cut ~3×.
@@ -840,7 +796,7 @@ def simhash_pairs_wide(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
     own all-pairs oracle rather than an in-place change.
 
     Why it exists: at 48 bits the declared kernel's collision tail is
-    irreducible past ~10^5 docs (SCALE64_r12: 58.9 s at 64× after the
+    irreducible past ~10^5 docs (round 12 64× run: 58.9 s at 64× after the
     r12 generator work — the hot-bucket enumeration of a 48-bit key
     space on a template-heavy corpus). Width is the remaining knob:
     24-bit subset keys cut the random-collision rate ~2 orders of
@@ -1005,22 +961,15 @@ def eval_overlap_stats(
     frac_threshold: float = DECONTAM_FRAC_T,
     text_col: str = "text",
     id_col: str = "doc_id",
-    *,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """Per-TRAIN-doc overlap with the eval shingle universe.
 
     Output: (doc_id, n_shingles, n_overlap, overlap_frac, contaminated)
     for every doc NOT matching ``eval_pred``; docs too short to shingle
-    get (0, 0, 0.0, 0). ``shingles_df`` shares a caller-owned shingle
-    table (same contract as minhash_lsh_pairs).
+    get (0, 0, 0.0, 0).
     """
-    sh = (
-        shingles_df
-        if shingles_df is not None
-        else doc_shingle_hashes(
-            docs, text_col=text_col, id_col=id_col, slot="decontaminate.sh"
-        )
+    sh = doc_shingle_hashes(
+        docs, text_col=text_col, id_col=id_col, slot="decontaminate.sh"
     )
     eval_ids = docs.filter(eval_pred).select(id_col)
     eval_h = (

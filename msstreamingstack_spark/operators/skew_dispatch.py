@@ -4,10 +4,10 @@ when the data says so.
 The engine carries bit-identical ``skew_robust`` twins for the window
 family (the one operator class AQE cannot skew-split — a window
 partitioned by a hot key sorts that key's entire slice in ONE task).
-The twins cost a measured premium on uniform data
-(``TWINS_r7.json``: 1.09-3.28x) and win past a measured hot-key share
-(``SKEW_CROSSOVER_r6/r7.json``), so until now every caller had to
-decide by hand via ``--skew-robust``.
+The twins cost a measured premium on uniform data (round 7 twin
+runs: 1.09-3.28x) and win past a measured hot-key share (round 6-7
+crossover runs), so until now every caller had to decide by hand via
+``--skew-robust``.
 
 This module closes the loop: a cheap top-1-key-share probe plus the
 measured two-point crossover data pick the plan. Both plans are
@@ -16,7 +16,7 @@ can never change a result — only its cost.
 
 Crossover model
 ---------------
-``bench_skew.py`` measures each family at two hot-share points
+The crossover runs measured each family at two hot-share points
 (uniform, and 0.3 for the key-skew fixtures / 0.6 for the
 source-dominance fixtures). Runtime is modeled linearly in the hot
 share ``h`` between the two points::
@@ -29,16 +29,16 @@ the lines never cross in (0, 1] — the twin's premium exceeds any
 plain-side degradation, as measured for the source-keyed
 value-ordered windows at this scale — the crossover is ``inf`` and
 auto mode always picks the plain plan (the twin stays reachable via
-an explicit ``--skew-robust on``; its hazard is the 10^4x regime, as
-SKEW_CROSSOVER_r7.json records).
+an explicit ``--skew-robust on``; its hazard is the 10^4x regime the
+round 7 crossover runs recorded).
 
 For rank-window twins (top-k per key) no direct crossover fixture
 exists at bench SF (their inputs are too small to degrade), so their
 model is a documented TRANSFER: plain normalized to 1.0 at uniform
 degrading to 2.5 at 30% hot (the midpoint of the two measured window
 families: sessionize 2.33x, running_revenue 2.80x), twin flat at its
-measured uniform premium from TWINS_r7.json (the measured twins were
-flat under skew: 1.01x, 0.83x). Those models carry
+measured uniform premium from the round 7 twin runs (the measured
+twins were flat under skew: 1.01x, 0.83x). Those models carry
 ``extrapolated=True`` so the provenance is visible in the decision.
 """
 
@@ -68,8 +68,7 @@ class CrossoverModel:
 
     ``measured_hot`` is the hot share of the skewed fixture the
     numbers come from (0.3 for the key-skew events/orders fixtures,
-    0.6 for the source-dominance documents fixtures —
-    ``bench_skew.py`` HOT_FRAC / DOC_HOT_FRAC). ``extrapolated``
+    0.6 for the source-dominance documents fixtures). ``extrapolated``
     marks transfer models (see module docstring) vs directly
     measured families.
     """
@@ -81,7 +80,7 @@ class CrossoverModel:
     twin_hot: float
     measured_hot: float = 0.3
     extrapolated: bool = False
-    # Optional INTERIOR measured point (round 9, SKEW_CROSSOVER_r9):
+    # Optional INTERIOR measured point (round 9 crossover runs):
     # with it the model is piecewise-linear through three points
     # instead of one line through two. The r9 interior fixtures
     # showed plain-side cost slightly CONCAVE in hot share (measured
@@ -123,11 +122,11 @@ class CrossoverModel:
         return h if h <= 1.0 else math.inf
 
 
-# Directly measured families — numbers verbatim from
-# SKEW_CROSSOVER_r9.json (32x sf0.1 fixtures, quiet host, THREE
-# points per family: uniform / 15% / 30% hot — 30%/60% for the
-# source-dominance pair). r9 vs the r7 two-point models: both window
-# families' crossovers moved DOWN (sessionize 0.336 -> ~0.245,
+# Directly measured families — numbers verbatim from the round 9
+# crossover runs (32x sf0.1 fixtures, quiet host, THREE points per
+# family: uniform / 15% / 30% hot — 30%/60% for the source-dominance
+# pair). r9 vs the r7 two-point models:
+# both window families' crossovers moved DOWN (sessionize 0.336 -> ~0.245,
 # running_revenue 0.221 -> ~0.196 piecewise) — consistent with r8's
 # observed dead heat at share 0.30 — and the interior points confirm
 # ~linearity (two-point-line ratios 0.84-1.02) with mild concavity,
@@ -157,7 +156,7 @@ def _rank_window_model(premium: float) -> CrossoverModel:
 
     Normalized: plain 1.0 -> 2.5 at 30% hot (midpoint of the two
     measured window-family degradations, 2.33x and 2.80x); twin flat
-    at its TWINS_r7.json uniform premium (measured twins were flat
+    at its round 7 uniform premium (measured twins were flat
     under skew). h* = (premium - 1) / 1.5 * 0.3.
     """
     return CrossoverModel(
@@ -273,7 +272,7 @@ def _term_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Premiums from TWINS_r7.json (uniform sf0.1, default_s -> robust_s).
+# Premiums from the round 7 twin runs (uniform sf0.1, default_s -> robust_s).
 _DISPATCHES: Sequence[SkewDispatch] = (
     # Directly measured families
     SkewDispatch(
@@ -304,7 +303,7 @@ _DISPATCHES: Sequence[SkewDispatch] = (
         "quality_source_calibrated", _col_probe("documents", "source"),
         CALIBRATED_QUALITY,
     ),
-    # Rank-window transfer models (premium from TWINS_r7.json)
+    # Rank-window transfer models (premium from the round 7 twin runs)
     SkewDispatch(
         "topk_customers_per_segment", _col_probe("customer", "c_mktsegment"),
         _rank_window_model(1.48),

@@ -84,6 +84,13 @@ def _dec_sum(col, alias: str, prec: str = "decimal(25,6)"):
     return F.sum(col.cast(prec)).cast("double").alias(alias)
 
 
+def _epoch_sec(col):
+    """Timestamp → epoch seconds (long). The testdata's ms timestamps
+    arrive as TIMESTAMP_NTZ; under the pinned UTC session an NTZ→LTZ
+    hop then long-cast equals DuckDB's ``epoch(ts)`` exactly."""
+    return col.cast("timestamp_ltz").cast("long")
+
+
 # ---------------------------------------------------------------------------
 # Flagship: clickstream enrichment + 30-min-gap sessionization
 # (reference T2 batch-exact; SURVEY.md §7 step 1)
@@ -230,7 +237,8 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Register the remaining query families (import side effects populate
-# REGISTRY; placed at module bottom to avoid circular imports).
+# REGISTRY; placed at module bottom to avoid circular imports). The
+# registry's order is this import order.
 # ---------------------------------------------------------------------------
 from msstreamingstack_spark import queries_relational  # noqa: E402,F401
 from msstreamingstack_spark import queries_state  # noqa: E402,F401
@@ -239,109 +247,3 @@ from msstreamingstack_spark import queries_streaming  # noqa: E402,F401
 from msstreamingstack_spark import queries_advanced  # noqa: E402,F401
 from msstreamingstack_spark import queries_layout  # noqa: E402,F401
 from msstreamingstack_spark import queries_analytics  # noqa: E402,F401
-from msstreamingstack_spark import queries_pipeline  # noqa: E402,F401
-
-# ---------------------------------------------------------------------------
-# Driver-window ordering. The correctness driver validates the FIRST 50
-# registry entries (dict iteration order), so the order is a budget to
-# spend deliberately: every query family gets a representative inside
-# the window, and only fully-oracled entries sit there (rows-only
-# checks — approx_distinct_users, multimodal_features,
-# similarity_ann_ivf, similarity_ann_ivf_ml — are pushed past it; a
-# rows-only entry in the window would burn a driver check without a
-# hash verdict; their correctness lives in pytest recall/property
-# tests instead).
-# ---------------------------------------------------------------------------
-# Round-12 rotation — executes the round-11 verdict's pre-computed r12
-# window budget verbatim (its "Next round" task #3). Audit basis:
-# CORRECTNESS_r1-r11 union = 186 distinct oracled queries driver-
-# checked, all latest-hash-green; latest-round histogram entering r12
-# (regenerated AUDIT.md at round open): r11=50, r10=48, r9=48, r8=40,
-# r7=0; never=5 oracled (the five round-11 registrations) + rows-only
-# entries kept out of the window by policy above.
-# Composition, in the judge's priority order:
-#   (a) the FIVE round-11 registrations the driver has never checked
-#       (catalog never-checked order);
-#   (b) ALL 40 r8-latest queries (3 rounds stale if r12 missed them)
-#       — the r11 budget's leftover list, verbatim order; covers the
-#       tpch slot (q3/q5/q13/q22), the similarity slot
-#       (similarity_topk_cosine, similarity_ann_srp) and the LSH/skew
-#       cohort (dedup_simhash/minhash/jaccard_dfcapped);
-#   (c) 5 fills: the two every-window family slots
-#       (zorder_cluster_stats — only oracled layout query;
-#       grouping_sets_revenue — only oracled grouping-sets query),
-#       multimodal_frame_sample pulled forward from the r9-latest
-#       cohort for the mandatory multimodal slot, then the r9-latest
-#       cohort head in registry order (sessionize_events,
-#       sessionize_events_bucketed).
-DRIVER_WINDOW: tuple[str, ...] = (
-    # (a) never-driver-checked r11 registrations — mandatory this round
-    "anomaly_cusum_events", "embedding_label_outliers",
-    "ngram_novelty_score", "sample_weighted_tickets",
-    "segment_overlap_theta",
-    # (b) the 40 r8-latest queries — mandatory this round
-    "tpch_q3_building", "tpch_q5_regional_revenue", "set_ops_customers",
-    "unpivot_event_counts", "timeseries_gapfill",
-    "events_new_vs_returning", "session_summary", "text_stats",
-    "langid_heuristic", "doc_fingerprints", "dedup_minhash_lsh",
-    "dedup_simhash_pairs", "similarity_topk_cosine", "similarity_ann_srp",
-    "embedding_norm_stats", "repetition_quality", "dedup_jaccard_dfcapped",
-    "hash_split_assign", "pipeline_pretrain_corpus", "pii_scrub",
-    "sample_reservoir_stratified", "shuffle_shard_assign",
-    "decontaminate_eval_overlap", "quality_chartrigram_df",
-    "quality_bigram_lm", "chunk_dup_fraction", "token_budget_quality_sample",
-    "top_ngrams_per_lang", "session_window_native", "asof_last_purchase",
-    "dedup_embedding_cosine", "dedup_clusters", "hypertable_rollup",
-    "tpch_q13_custdist", "tpch_q22_idle_rich_customers",
-    "interval_join_attribution", "window_rank_family",
-    "sql_frontend_window_join_parity", "corpus_duplication_rate",
-    "lang_shingle_overlap",
-    # (c) every-window family slots (layout, grouping-sets)
-    "zorder_cluster_stats", "grouping_sets_revenue",
-    # (c) multimodal slot pulled forward from the r9-latest cohort
-    "multimodal_frame_sample",
-    # (c) r9-latest fills, registry order
-    "sessionize_events", "sessionize_events_bucketed",
-)
-# ROUND-13 WINDOW BUDGET (arithmetic, do this first next session):
-# after this rotation nothing is >2 rounds stale. Latest-round
-# histogram entering r13: r12=50, r11=48 (the r11 cohort minus
-# zorder_cluster_stats/grouping_sets_revenue, refreshed here),
-# r10=48, r9=45, r8=0. The r13 window = any round-12 registrations
-# the driver has never checked FIRST (per the catalog's never-checked
-# list at r13 time), then ALL 48 r10-latest queries (3 rounds stale if
-# r13 misses them; the list = CORRECTNESS_r10 names minus
-# zorder_cluster_stats/grouping_sets_revenue — it already covers
-# multimodal via multimodal_features, tpch via tpch_q18_large_orders,
-# skew via basket_lift_pairs_capped/salted_join_events_customer and
-# reference via device_transitions), then the two every-window family
-# slots (zorder_cluster_stats, grouping_sets_revenue) — that is
-# exactly 50 when no new registrations exist; if r12 registers new
-# oracled queries, drop r10-cohort tail rows (they become the r13
-# leftover list) to make room, keeping the family-tag invariants of
-# test_driver_window_invariants.
-
-
-def _apply_driver_window() -> None:
-    """Reorder REGISTRY so DRIVER_WINDOW names come first.
-
-    Import-order tolerant: when a query module is imported DIRECTLY
-    (e.g. ``import msstreamingstack_spark.queries_extensions``), that
-    module's import of :mod:`queries` re-enters here while its own
-    registrations are still pending — missing names then mean
-    "registration in flight", not a typo, so this is a no-op and the
-    partially-imported module re-applies the window at its bottom.
-    The strict guarantee (window complete and REGISTRY starts with it)
-    is pinned by tests/test_smoke_all_queries.py.
-    """
-    if any(n not in REGISTRY for n in DRIVER_WINDOW):
-        return
-    ordered = {n: REGISTRY[n] for n in DRIVER_WINDOW}
-    for n, spec in REGISTRY.items():
-        if n not in ordered:
-            ordered[n] = spec
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_apply_driver_window()

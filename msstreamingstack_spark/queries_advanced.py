@@ -24,9 +24,9 @@ from msstreamingstack_spark.queries import (
     EVENTS_TS_SQL,
     _dec_sum,
     _dec_sum_sql,
+    _epoch_sec,
     register,
 )
-from msstreamingstack_spark.queries_relational import _epoch_sec
 from msstreamingstack_spark.sources.tables import (
     events_with_time,
     load_table,
@@ -3858,24 +3858,3 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_triangles"))
     )
     return node_tri.join(deg, "node").select("node", "deg", "n_triangles")
-
-
-# Re-apply the driver window: when THIS module was the direct import
-# target, queries.py ran before our registrations existed (see the
-# _apply_driver_window docstring). When we are instead mid-way through
-# queries.py's own bottom imports, the helper isn't defined yet — the
-# getattr no-ops and queries.py's own call applies the window.
-import msstreamingstack_spark.queries as _queries  # noqa: E402
-
-getattr(_queries, "_apply_driver_window", lambda: None)()
-
-# Same re-entrancy story for the v2-pipeline composed oracle: if this
-# module was the direct import target, queries_pipeline's bottom ran
-# before dedup_semantic existed and its attach no-op'd — retry now
-# that our registrations are complete (no-op when already attached,
-# and never triggers a fresh queries_pipeline import).
-import sys as _sys  # noqa: E402
-
-_qp = _sys.modules.get("msstreamingstack_spark.queries_pipeline")
-if _qp is not None:
-    getattr(_qp, "_attach_v2_oracle", lambda: None)()

@@ -866,8 +866,8 @@ def q_lang_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashes per language), far smaller than the corpus. Slot-rotated:
     # one live cache entry across repeat invocations.
     # eager: lh feeds the self-join sides AND two broadcast totals;
-    # lazy population races per broadcast build (r10 A/B: 12.4 s lazy
-    # vs 3.9 s eager single-shot under load, EAGER_AB_r10.json)
+    # lazy population races per broadcast build (round 10 A/B: 12.4 s
+    # lazy vs 3.9 s eager single-shot under load)
     lh = rotating_persist(
         sh.join(docs.select("doc_id", "lang"), "doc_id")
         .select("lang", "h")
@@ -1863,7 +1863,7 @@ def q_bootstrap_ci_value_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash48(F.col("event_id").cast("string")).alias("h"),
         "value",
     )
-    # r11 negative result (recorded in OPTIMIZATION_r11.md): a
+    # r11 negative result: a
     # one-pass 2·REPS-conditional-aggregate form (the simhash-votes
     # pattern) was built and interleaved-A/B'd at 1.6x SLOWER than
     # this fan-out (2.29 vs 1.41 s best-of) — 64 DECIMAL agg-updates
@@ -2901,13 +2901,3 @@ def q_anomaly_cusum_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         (s.cast("double") / F.lit(1000000.0)).alias("cusum_stat"),
         (s * CUSUM_ALARM_DIV > F.col("t_sum")).alias("alarm"),
     )
-
-
-# Re-apply the driver window: when THIS module was the direct import
-# target, queries.py ran before our registrations existed (see the
-# _apply_driver_window docstring). When we are instead mid-way through
-# queries.py's own bottom imports, the helper isn't defined yet — the
-# getattr no-ops and queries.py's own call applies the window.
-import msstreamingstack_spark.queries as _queries  # noqa: E402
-
-getattr(_queries, "_apply_driver_window", lambda: None)()

@@ -203,7 +203,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "over 60 bits) — the scale twin of dedup_simhash_pairs: a "
     "STRICTER near-dup predicate whose 24-bit band-subset keys keep "
     "the banded candidate join sub-quadratic where the 48-bit "
-    "kernel's collision tail goes hot past ~10^5 docs (SCALE64_r12: "
+    "kernel's collision tail goes hot past ~10^5 docs (round 12 64× run: "
     "16×→64× step 3.45 vs 6.9 for 4× data). Priced like the other "
     "insurance twins: costs ~2.6× the declared kernel at bench SF, "
     "pays for itself at corpus scale.",
@@ -1178,7 +1178,7 @@ def q_quality_chartrigram_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-freq table re-aggregates the (doc, t) counts instead of a
     # SECOND trigram explosion (the old plan exploded every document
     # twice and joined at occurrence granularity — the worst 16×
-    # scaler in SCALE16 at 4.53×), and the broadcast join + final agg
+    # scaler in the round 5 16× run at 4.53×), and the broadcast join + final agg
     # now move |distinct (doc, t)| rows, not |occurrences|.
     from msstreamingstack_spark.caching import rotating_persist
 
@@ -2480,8 +2480,8 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         % DSIR_BUCKETS
     )
     # eager: f feeds FOUR broadcast subtrees (raw/tgt totals + the two
-    # scalar counts); lazy population races per broadcast build (r10
-    # A/B: 4.0 s lazy vs 2.5 s eager single-shot, EAGER_AB_r10.json)
+    # scalar counts); lazy population races per broadcast build (round
+    # 10 A/B: 4.0 s lazy vs 2.5 s eager single-shot)
     f = rotating_persist(
         words.groupBy("doc_id", "lang", bucket.alias("b")).agg(
             F.count("*").alias("c")
@@ -3283,9 +3283,6 @@ def q_quality_source_calibrated(
     )
 
 
-# Re-apply the driver window: when THIS module was the direct import
-# target, queries.py ran before our registrations existed (see the
-# _apply_driver_window docstring). When we are instead mid-way through
 # ---------------------------------------------------------------------------
 # BPE tokenizer training (learn merges on the vocab, segment the corpus)
 # ---------------------------------------------------------------------------
@@ -3705,21 +3702,3 @@ def q_embedding_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= LABEL_OUTLIER_K)
         .select("label", "vec_id", "cos_centroid", "rn")
     )
-
-
-# queries.py's own bottom imports, the helper isn't defined yet — the
-# getattr no-ops and queries.py's own call applies the window.
-import msstreamingstack_spark.queries as _queries  # noqa: E402
-
-getattr(_queries, "_apply_driver_window", lambda: None)()
-
-# v2-pipeline composed-oracle retry (see queries_pipeline's bottom):
-# a direct import of THIS module makes queries_pipeline's attach run
-# before quality_gopher_rules / quality_ensemble_score exist; retry
-# now that they do. No-op when already attached; never triggers a
-# fresh queries_pipeline import.
-import sys as _sys  # noqa: E402
-
-_qp = _sys.modules.get("msstreamingstack_spark.queries_pipeline")
-if _qp is not None:
-    getattr(_qp, "_attach_v2_oracle", lambda: None)()

@@ -74,13 +74,3 @@ def q_zorder_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("yq").alias("price_hi"),
         _dec_sum(F.col("o_totalprice"), "sum_price"),
     )
-
-
-# Re-apply the driver window: when THIS module was the direct import
-# target, queries.py ran before our registrations existed (see the
-# _apply_driver_window docstring). When we are instead mid-way through
-# queries.py's own bottom imports, the helper isn't defined yet — the
-# getattr no-ops and queries.py's own call applies the window.
-import msstreamingstack_spark.queries as _queries  # noqa: E402
-
-getattr(_queries, "_apply_driver_window", lambda: None)()

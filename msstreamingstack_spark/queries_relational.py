@@ -24,15 +24,10 @@ from msstreamingstack_spark.queries import (
     EVENTS_TS_SQL,
     _dec_sum,
     _dec_sum_sql,
+    _epoch_sec,
     register,
 )
 from msstreamingstack_spark.sources.tables import events_with_time, load_table
-
-def _epoch_sec(col):
-    """Timestamp → epoch seconds (long). The testdata's ms timestamps
-    arrive as TIMESTAMP_NTZ; under the pinned UTC session an NTZ→LTZ
-    hop then long-cast equals DuckDB's ``epoch(ts)`` exactly."""
-    return col.cast("timestamp_ltz").cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -681,13 +676,3 @@ def q_skew_profile_events_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     from msstreamingstack_spark.sources.tables import load_table
 
     return key_skew_profile(load_table(spark, sf_dir, "events"), "user_id")
-
-
-# Re-apply the driver window: when THIS module was the direct import
-# target, queries.py ran before our registrations existed (see the
-# _apply_driver_window docstring). When we are instead mid-way through
-# queries.py's own bottom imports, the helper isn't defined yet — the
-# getattr no-ops and queries.py's own call applies the window.
-import msstreamingstack_spark.queries as _queries  # noqa: E402
-
-getattr(_queries, "_apply_driver_window", lambda: None)()

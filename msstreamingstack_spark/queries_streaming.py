@@ -48,13 +48,3 @@ def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts_sec", "event_type", "value"
     )
     return session_window_agg(ev, gap="30 minutes")
-
-
-# Re-apply the driver window: when THIS module was the direct import
-# target, queries.py ran before our registrations existed (see the
-# _apply_driver_window docstring). When we are instead mid-way through
-# queries.py's own bottom imports, the helper isn't defined yet — the
-# getattr no-ops and queries.py's own call applies the window.
-import msstreamingstack_spark.queries as _queries  # noqa: E402
-
-getattr(_queries, "_apply_driver_window", lambda: None)()

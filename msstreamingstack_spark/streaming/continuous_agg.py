@@ -102,10 +102,9 @@ def upsert_mv(updates: DataFrame, mv_dir: str) -> None:
             # `carried` lazily reads the same partition dirs the write
             # below deletes/replaces, so without an eager snapshot a
             # task retry mid-commit would re-read already-mutated
-            # partitions and permanently drop untouched groups (same
-            # reason operators/incremental.py localCheckpoints before
-            # mutating its stores). The snapshot is a few changed
-            # minute-buckets per micro-batch — small by construction.
+            # partitions and permanently drop untouched groups. The
+            # snapshot is a few changed minute-buckets per micro-batch
+            # — small by construction.
             out = out.localCheckpoint(eager=True)
         out.write.mode("overwrite").partitionBy("min_bucket").parquet(mv_dir)
     finally:

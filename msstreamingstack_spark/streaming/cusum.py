@@ -27,7 +27,7 @@ sequential definition whose prefix-sum identity the batch query
 computes — with the SAME mu/slack/h the closed-hour outputs are
 bit-equal to the batch rows (pinned by tests/test_streaming_cusum.py).
 
-Ordering contract (same as streaming/neardup.py): file drops arrive
+Ordering contract: file drops arrive
 in event-time order across batches; within a batch rows are sorted on
 (ts_sec, event_id). A row for an already-closed hour would belong to
 a watermark-late drop — counted into the OPEN hour is wrong, so it is
@@ -185,8 +185,7 @@ def run_cusum_stream(
     max_files_per_trigger: int = 1,
 ):
     """Launch the monitor; each micro-batch appends its closed hours
-    under ``batch_id=<n>`` (idempotent replay — the corpus-ingest
-    sink discipline). Returns the StreamingQuery."""
+    under ``batch_id=<n>`` (idempotent replay). Returns the StreamingQuery."""
     import os
 
     from msstreamingstack_spark.streaming.pipeline import read_event_stream

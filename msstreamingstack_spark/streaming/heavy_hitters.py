@@ -23,7 +23,7 @@ snapshot (``capacity`` rows, NOT the batch's row count), so the sink
 sees a bounded update stream and the latest batch IS the answer.
 
 Determinism: chunks are concatenated then sorted once on
-``event_id`` (the arrival-order contract of streaming/neardup.py),
+``event_id`` (batch-then-event_id arrival order),
 eviction ties break on (count, key) ascending — so the final state
 is bit-equal to a sequential reference run over the same
 batch-then-event_id order (pinned by tests/test_streaming_hh.py
@@ -172,8 +172,7 @@ def run_heavy_hitters_stream(
     max_files_per_trigger: int = 1,
 ):
     """Launch the sketch stream; each micro-batch overwrites
-    ``batch_id=<n>`` with that batch's top-k (idempotent replay, the
-    corpus-ingest sink discipline). Returns the StreamingQuery."""
+    ``batch_id=<n>`` with that batch's top-k (idempotent replay). Returns the StreamingQuery."""
     import os
 
     from msstreamingstack_spark.streaming.pipeline import read_event_stream

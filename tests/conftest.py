@@ -14,7 +14,7 @@ from msstreamingstack_spark.session import get_spark  # noqa: E402
 # Two-tier suite (r12, verdict task #2). The default `pytest tests/`
 # run is the FAST tier: smoke + every equivalence/invariant pin —
 # the external driver's verify budget could not finish the ~30 min
-# full suite (VERIFY_r11 tests_ok=false on timeout, zero failures).
+# full suite (round 11 timed out with zero failures).
 # The SLOW tier (exhaustive property sweeps and per-query oracle
 # parity already covered by `python -m msstreamingstack_spark
 # verify`) stays runnable:

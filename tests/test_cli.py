@@ -51,7 +51,7 @@ def test_query_skew_robust_flag(spark, capsys):
     """--skew-robust selects the bounded-partition twin where one
     exists and errors (exit 2) where the plan is already bounded."""
     rc = main([
-        "query", "token_budget_sample",
+        "query", "topk_customers_per_segment",
         "--sf-dir", "/root/testdata/sf0.001", "--rows", "2",
         "--skew-robust",
     ])
@@ -82,78 +82,6 @@ def test_query_skew_robust_auto_mode(spark, capsys):
     ])
     assert rc == 2
     assert "no skew auto-dispatch entry" in capsys.readouterr().err
-
-
-def test_ingest_subcommand_end_to_end(spark, tmp_path):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    drops = str(tmp_path / "doc_drops")
-    os.makedirs(drops)
-    texts = {
-        1: "alpha beta gamma delta epsilon zeta eta theta",
-        2: "zebra yak xylophone walrus vulture tiger snake",  # = eval doc
-        3: "a a a a a a",                                      # repetitive
-    }
-    tbl = pa.table(
-        {
-            "doc_id": pa.array(list(texts), pa.int64()),
-            "text": pa.array(list(texts.values()), pa.string()),
-            "lang": pa.array(["en"] * 3, pa.string()),
-            "source": pa.array(["crawl"] * 3, pa.string()),
-            "n_chars": pa.array([len(t) for t in texts.values()], pa.int64()),
-        }
-    )
-    pq.write_table(tbl, os.path.join(drops, "b0.parquet"))
-    ev = str(tmp_path / "eval.parquet")
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([100], pa.int64()),
-                "text": pa.array([texts[2]], pa.string()),
-                "lang": pa.array(["en"], pa.string()),
-                "source": pa.array(["bench"], pa.string()),
-                "n_chars": pa.array([len(texts[2])], pa.int64()),
-            }
-        ),
-        ev,
-    )
-    accept, reject = str(tmp_path / "acc"), str(tmp_path / "rej")
-    rc = main(
-        [
-            "ingest", "--source", drops, "--eval-parquet", ev,
-            "--accept", accept, "--reject", reject,
-            "--checkpoint", str(tmp_path / "icp"), "--once",
-        ]
-    )
-    assert rc == 0
-    assert {r["doc_id"] for r in spark.read.parquet(accept).collect()} == {1}
-    rej = {
-        r["doc_id"]: r["reject_reason"]
-        for r in spark.read.parquet(reject).collect()
-    }
-    assert rej == {2: "contaminated", 3: "too_repetitive"}
-
-
-def test_cli_dedup_increment(tmp_path, capsys):
-    from msstreamingstack_spark.__main__ import main
-
-    store = str(tmp_path / "store")
-    out1 = str(tmp_path / "fresh1")
-    rc = main([
-        "dedup-increment",
-        "--docs", "/root/testdata/sf0.001/documents.parquet",
-        "--store", store, "--label", "inc1", "--out", out1,
-    ])
-    assert rc == 0
-    assert "fresh docs registered" in capsys.readouterr().out
-    # replay with the same label: same count, store unchanged
-    rc = main([
-        "dedup-increment",
-        "--docs", "/root/testdata/sf0.001/documents.parquet",
-        "--store", store, "--label", "inc1",
-    ])
-    assert rc == 0
 
 
 def test_cli_mv_and_compact(tmp_path, capsys):
@@ -208,53 +136,15 @@ def test_cli_verify_unknown_name():
     assert r.returncode == 2
 
 
-def test_cli_neardup(spark, tmp_path, capsys):
-    """neardup subcommand drains document drops and writes per-batch
-    verdict parquet; an exact re-crawl under a new id is flagged."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    drops = str(tmp_path / "nd_drops")
-    os.makedirs(drops)
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    other = "one two three four five six seven eight nine ten eleven"
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([1, 2], pa.int64()),
-                "text": pa.array([base, other], pa.string()),
-                "lang": pa.array(["en"] * 2, pa.string()),
-                "source": pa.array(["crawl"] * 2, pa.string()),
-                "n_chars": pa.array([len(base), len(other)], pa.int64()),
-            }
-        ),
-        os.path.join(drops, "b0.parquet"),
-    )
-    # drop 2: verbatim re-crawl of doc 1 under a new id
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([10], pa.int64()),
-                "text": pa.array([base], pa.string()),
-                "lang": pa.array(["en"], pa.string()),
-                "source": pa.array(["crawl"], pa.string()),
-                "n_chars": pa.array([len(base)], pa.int64()),
-            }
-        ),
-        os.path.join(drops, "b1.parquet"),
-    )
-    os.utime(os.path.join(drops, "b0.parquet"), (1_700_000_000, 1_700_000_000))
-    os.utime(os.path.join(drops, "b1.parquet"), (1_700_000_010, 1_700_000_010))
-
-    out = str(tmp_path / "nd_out")
-    rc = main([
-        "neardup", "--source", drops, "--out", out,
-        "--checkpoint", str(tmp_path / "nd_cp"),
-    ])
+def test_plan_cli(capsys):
+    rc = main(["plan", "tpch_q6_forecast_revenue",
+               "--sf-dir", "/root/testdata/sf0.001"])
     assert rc == 0
-    assert "1 docs flagged" in capsys.readouterr().out
-    verdicts = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
-    assert verdicts[10]["is_neardup"] is True
-    assert verdicts[10]["matched_doc"] == 1
-    assert verdicts[10]["est_jaccard"] == 1.0
-    assert verdicts[1]["is_neardup"] is False
+    out = capsys.readouterr().out
+    import json
+
+    payload = json.loads(out)
+    assert payload["query"] == "tpch_q6_forecast_revenue"
+    assert payload["pushed_filters"], "q6's scan filters must be pushed"
+    assert payload["python_evals"] == 0
+    assert main(["plan", "no_such_query"]) == 2

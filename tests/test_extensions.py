@@ -291,210 +291,6 @@ def test_embedding_lsh_neardup_recall(spark, sf_correctness):
     assert recall >= 0.7, f"embedding LSH recall {recall:.3f}"
 
 
-def test_incremental_dedup_equals_oneshot_and_replays(spark, sf_correctness, tmp_path):
-    """Processing the corpus in two increments must keep exactly the
-    docs a one-shot exact dedup keeps (earlier increments win), and
-    replaying an increment must change nothing (idempotent store)."""
-    from msstreamingstack_spark.operators.dedup import exact_dedup
-    from msstreamingstack_spark.operators.incremental import (
-        dedup_increment,
-        store_digests,
-    )
-
-    docs = load_table(spark, sf_correctness, "documents")
-    half1 = docs.filter(F.col("doc_id") < 250)
-    half2 = docs.filter(F.col("doc_id") >= 250)
-    store = str(tmp_path / "digest_store")
-
-    fresh1 = {r["doc_id"] for r in dedup_increment(half1, store, "inc1").collect()}
-    fresh2 = {r["doc_id"] for r in dedup_increment(half2, store, "inc2").collect()}
-    assert fresh1 and fresh2
-    assert not (fresh1 & fresh2)
-
-    # one-shot truth: canonical keepers over the full corpus. doc_id
-    # ordering makes "earlier increment wins" == "min doc_id wins".
-    oneshot = {
-        r["doc_id"]
-        for r in exact_dedup(docs).filter(~F.col("is_dup")).collect()
-    }
-    assert fresh1 | fresh2 == oneshot
-
-    # replay increment 2: store unchanged, nothing new admitted
-    before = sorted(
-        (r["content_md5"], r["increment"])
-        for r in store_digests(spark, store).collect()
-    )
-    replay = {r["doc_id"] for r in dedup_increment(half2, store, "inc2").collect()}
-    after = sorted(
-        (r["content_md5"], r["increment"])
-        for r in store_digests(spark, store).collect()
-    )
-    assert after == before
-    assert replay == fresh2  # deterministic: same fresh set on replay
-
-
-@pytest.mark.slow
-def test_minhash_increment_catches_cross_increment_neardups(spark, tmp_path):
-    """Near-dup counterpart of the digest store: a doc in increment 2
-    that is a near-duplicate of an increment-1 doc must be matched via
-    the persisted SIGNATURES (no shingles stored) and excluded from the
-    fresh set; brand-new docs pass; replay is idempotent."""
-    from msstreamingstack_spark.operators.incremental import minhash_increment
-
-    base = " ".join(
-        f"token{i} word{i * 7 % 41} item{i * 3 % 29}" for i in range(20)
-    )  # 60 words → 58 shingles
-    neardup = base + " trailing addendum"  # superset: jaccard ≈ 58/60
-    fresh_text = ("completely different content about spacecraft engines "
-                  "and orbital mechanics with no shared phrases at all here")
-
-    def docs(rows):
-        return spark.createDataFrame(rows, ["doc_id", "text"])
-
-    store = str(tmp_path / "sig_store")
-    f1, m1 = minhash_increment(docs([(1, base)]), store, "inc1")
-    assert {r["doc_id"] for r in f1.collect()} == {1}
-    assert m1.count() == 0
-
-    f2, m2 = minhash_increment(
-        docs([(10, neardup), (11, fresh_text)]), store, "inc2"
-    )
-    assert {r["doc_id"] for r in f2.collect()} == {11}
-    got = {(r["new_id"], r["old_id"]) for r in m2.collect()}
-    assert got == {(10, 1)}
-    assert all(r["est_jaccard"] >= 0.8 for r in m2.collect())
-
-    # replay increment 2: identical outcome, store unchanged
-    f2r, m2r = minhash_increment(
-        docs([(10, neardup), (11, fresh_text)]), store, "inc2"
-    )
-    assert {r["doc_id"] for r in f2r.collect()} == {11}
-    assert {(r["new_id"], r["old_id"]) for r in m2r.collect()} == {(10, 1)}
-
-
-@pytest.mark.slow
-def test_minhash_increment_nondefault_columns(spark, tmp_path):
-    """text_col/id_col must thread through the WHOLE increment,
-    including the in-increment LSH stage (ADVICE round-2: it hardcoded
-    'text', so a non-default text_col errored — or silently deduped
-    the wrong column if a 'text' column coexisted) and the empty-store
-    matches schema (hardcoded long ids vs the input's actual type)."""
-    from msstreamingstack_spark.operators.incremental import minhash_increment
-
-    base = " ".join(
-        f"token{i} word{i * 7 % 41} item{i * 3 % 29}" for i in range(20)
-    )
-    neardup = base + " trailing addendum"
-    decoy = "decoy decoy decoy"  # a coexisting 'text' column to ignore
-
-    docs1 = spark.createDataFrame(
-        [(1, base, decoy)], ["uid", "body", "text"]
-    )
-    store = str(tmp_path / "sig_store_alt")
-    f1, m1 = minhash_increment(
-        docs1, store, "inc1", text_col="body", id_col="uid"
-    )
-    assert {r["doc_id"] for r in f1.collect()} == {1}
-    # empty-store matches schema derives id type from the input
-    assert dict(m1.dtypes)["new_id"] == "bigint"
-    assert m1.count() == 0
-
-    # in-increment near-dup on body (the decoy 'text' columns are
-    # identical everywhere — deduping on them would drop everything)
-    docs2 = spark.createDataFrame(
-        [(10, neardup, decoy), (11, "totally unrelated spacecraft "
-          "engine content with no shared phrases at all here", decoy)],
-        ["uid", "body", "text"],
-    )
-    f2, m2 = minhash_increment(
-        docs2, store, "inc2", text_col="body", id_col="uid"
-    )
-    assert {r["doc_id"] for r in f2.collect()} == {11}
-    assert {(r["new_id"], r["old_id"]) for r in m2.collect()} == {(10, 1)}
-
-
-@pytest.mark.slow
-def test_minhash_increment_releases_caches(spark, tmp_path):
-    """Continuous-ingest leak regression (ADVICE round-4): every
-    minhash_increment call persisted a shingle table it never released
-    and left two localCheckpoint RDDs to driver GC — one cached set per
-    micro-batch in long-running mode. Pin that (a) the shingle cache is
-    released inside the call, so the only blocks left behind are the
-    checkpoint snapshots of the RETURNED frames, and (b)
-    release_checkpoint frees those deterministically."""
-    from msstreamingstack_spark.operators.incremental import (
-        minhash_increment,
-        release_checkpoint,
-    )
-
-    def persistent_ids() -> set:
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        it = m.keySet().iterator()
-        s = set()
-        while it.hasNext():
-            s.add(it.next())
-        return s
-
-    def docs(rows):
-        return spark.createDataFrame(rows, ["doc_id", "text"])
-
-    store = str(tmp_path / "sig_store_leak")
-    base = persistent_ids()  # prior tests' leftovers may GC mid-test —
-    handles = []             # compare by id SET, not global count
-    for i in range(3):  # 3 "micro-batches", store non-empty from #2 on
-        text = " ".join(f"w{i}x{j} y{j * 7 % 31} z{j % 13}" for j in range(20))
-        f, m = minhash_increment(docs([(i, text)]), store, f"inc{i}")
-        f.collect(), m.collect()
-        handles.extend((f, m))
-    # exactly the returned frames' checkpoint blocks remain — the
-    # per-call shingle persist must NOT survive the call
-    assert len(persistent_ids() - base) == len(handles)
-    release_checkpoint(*handles)
-    assert not (persistent_ids() - base)
-
-
-@pytest.mark.slow
-def test_embedding_increment_semantic_dedup(spark, tmp_path):
-    """Semantic dedup across increments: a near-identical embedding in
-    increment 2 must match increment 1's stored int8+SRP representation
-    (cosine confirmed on the reconstructed vector); an orthogonal
-    vector passes; replay is idempotent."""
-    import math
-
-    from msstreamingstack_spark.operators.incremental import (
-        embedding_increment,
-    )
-
-    dim = 64
-
-    def vec(seed, flip=0.0):
-        # frequency-distinct sinusoids: pairwise |cos| < 0.03 across
-        # seeds, so only the flipped copy is a near-dup
-        v = [math.sin(seed * 0.7 * (i + 1)) for i in range(dim)]
-        v[0] += flip
-        return [float(x) for x in v]
-
-    def embs(rows):
-        return spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    store = str(tmp_path / "emb_store")
-    f1, m1 = embedding_increment(embs([(1, vec(1)), (2, vec(2))]), store, "inc1")
-    assert {r["vec_id"] for r in f1.collect()} == {1, 2}
-    assert m1.count() == 0
-
-    near = vec(1, flip=0.01)  # cos vs vec(1) ≈ 0.9999
-    ortho = vec(9)
-    f2, m2 = embedding_increment(embs([(10, near), (11, ortho)]), store, "inc2")
-    assert {r["vec_id"] for r in f2.collect()} == {11}
-    pairs = {(r["new_id"], r["old_id"]) for r in m2.collect()}
-    assert pairs == {(10, 1)}
-    assert all(r["approx_cos"] >= 0.9 for r in m2.collect())
-
-    f2r, m2r = embedding_increment(embs([(10, near), (11, ortho)]), store, "inc2")
-    assert {r["vec_id"] for r in f2r.collect()} == {11}
-    assert {(r["new_id"], r["old_id"]) for r in m2r.collect()} == {(10, 1)}
-
-
 def test_bigram_lm_ranks_gibberish_above_echoed_text(spark):
     """SEMANTIC pin for the leave-one-out Laplace estimator: a naive
     self-trained bigram LM (P = c12/c1) rates a doc of globally-unique
@@ -618,125 +414,6 @@ def test_topk_salted_twins_bit_identical(spark, sf_correctness):
         )
 
 
-def test_bigram_lm_increment_gates_junk_and_replays(spark, tmp_path):
-    """LM-gated ingest increment: an empty store accepts everything
-    (the first drop defines the corpus); afterwards a doc echoing the
-    accepted corpus scores low and passes while unsupported gibberish
-    pays ~log2(V) bits and is rejected; too-short docs pass with a
-    null score (the token-floor gate owns them); replaying an
-    increment under the same label recomputes identically; the
-    returned frames' checkpoint blocks release cleanly."""
-    from msstreamingstack_spark.operators.incremental import (
-        bigram_lm_increment,
-        release_checkpoint,
-    )
-
-    store = str(tmp_path / "lm_store")
-    fluent = "the quick brown fox jumps over the lazy dog near the river bank"
-    b1 = spark.createDataFrame(
-        [(i, fluent) for i in range(5)], ["doc_id", "text"]
-    )
-    a1, s1 = bigram_lm_increment(b1, store, "inc1")
-    assert a1.count() == 5  # cold start: no LM to judge against
-    assert all(r["bits_per_bigram"] is None for r in s1.collect())
-
-    b2 = spark.createDataFrame(
-        [
-            (10, fluent),  # echoes the accepted corpus
-            (11, "zq1 xv7 kkj9 wpm2 bbr4 ncx8 qql3 vvt6 hzd5 jfy0"),
-            (12, "hi"),    # too short to score
-        ],
-        ["doc_id", "text"],
-    )
-    a2, s2 = bigram_lm_increment(b2, store, "inc2", max_bits=3.0)
-    scores = {r["doc_id"]: r["bits_per_bigram"] for r in s2.collect()}
-    assert scores[10] is not None and scores[10] <= 3.0
-    assert scores[11] is not None and scores[11] > 3.0
-    assert scores[12] is None
-    assert sorted(r["doc_id"] for r in a2.collect()) == [10, 12]
-
-    # replay: same label -> own counts excluded -> identical verdicts
-    a2r, s2r = bigram_lm_increment(b2, store, "inc2", max_bits=3.0)
-    assert sorted(r["doc_id"] for r in a2r.collect()) == [10, 12]
-    assert {r["doc_id"]: r["bits_per_bigram"] for r in s2r.collect()} == scores
-
-    release_checkpoint(a1, s1, a2, s2, a2r, s2r)
-
-
-def test_bigram_lm_increment_replay_of_first_increment(spark, tmp_path):
-    """An at-least-once restart that replays the VERY FIRST increment
-    finds the store non-empty but holding only its own label's prior
-    output — the label-excluded LM is empty (V=0, c1 null), which under
-    Spark 4 ANSI made the Laplace denominator a DIVIDE_BY_ZERO and
-    crash-looped the ingest. The replay must re-take the cold-start
-    accept-all branch and recompute identically."""
-    from msstreamingstack_spark.operators.incremental import (
-        bigram_lm_increment,
-        release_checkpoint,
-    )
-
-    store = str(tmp_path / "lm_store_first_replay")
-    fluent = "the quick brown fox jumps over the lazy dog near the river"
-    b1 = spark.createDataFrame(
-        [(i, fluent) for i in range(4)], ["doc_id", "text"]
-    )
-    a1, s1 = bigram_lm_increment(b1, store, "inc1")
-    assert a1.count() == 4
-
-    # replay of inc1: store has ONLY increment=inc1 — must not divide
-    # by the empty excluded-LM's zero vocabulary
-    a1r, s1r = bigram_lm_increment(b1, store, "inc1")
-    assert sorted(r["doc_id"] for r in a1r.collect()) == [0, 1, 2, 3]
-    assert all(r["bits_per_bigram"] is None for r in s1r.collect())
-
-    # and the store still holds exactly one copy of inc1's counts:
-    # a later increment scores against the same LM either way
-    a2, s2 = bigram_lm_increment(
-        spark.createDataFrame(
-            [(10, fluent), (11, "zq1 xv7 kkj9 wpm2 bbr4 ncx8 qql3 vvt6")],
-            ["doc_id", "text"],
-        ),
-        store,
-        "inc2",
-        max_bits=3.0,
-    )
-    assert sorted(r["doc_id"] for r in a2.collect()) == [10]
-    release_checkpoint(a1, s1, a1r, s1r, a2, s2)
-
-
-def test_bigram_lm_increment_nondefault_columns(spark, tmp_path):
-    """text_col/id_col must thread through scoring, acceptance and the
-    store registration (the minhash increment regression, round 2)."""
-    from msstreamingstack_spark.operators.incremental import (
-        bigram_lm_increment,
-    )
-
-    store = str(tmp_path / "lm_store_alt")
-    fluent = "the quick brown fox jumps over the lazy dog near the bank"
-    decoy = "decoy decoy decoy"
-    d1 = spark.createDataFrame(
-        [(i, fluent, decoy) for i in range(4)], ["uid", "body", "text"]
-    )
-    a1, s1 = bigram_lm_increment(
-        d1, store, "inc1", text_col="body", id_col="uid"
-    )
-    assert a1.count() == 4
-
-    d2 = spark.createDataFrame(
-        [
-            (10, fluent, decoy),
-            (11, "zz1 yy2 xx3 ww4 vv5 uu6 tt7 ss8 rr9 qq0", decoy),
-        ],
-        ["uid", "body", "text"],
-    )
-    a2, s2 = bigram_lm_increment(
-        d2, store, "inc2", max_bits=3.0, text_col="body", id_col="uid"
-    )
-    assert sorted(r["doc_id"] for r in a2.collect()) == [10]
-    scores = {r["doc_id"]: r["bits_per_bigram"] for r in s2.collect()}
-    assert scores[10] <= 3.0 < scores[11]
-
-
 def test_rotating_persist_bounds_registry_query_caches(spark):
     """Round-5 ADVICE leak regression: registry query functions persist
     reused subtrees but return the frame BEFORE any action, so they can
@@ -781,117 +458,6 @@ def test_rotating_persist_bounds_registry_query_caches(spark):
     # cleanup: rotate tiny frames through both slots, then unpersist
     for slot, df in list(live_slots(spark).items()):
         df.unpersist(blocking=False)
-
-
-@pytest.mark.slow
-def test_compact_store_preserves_increment_semantics(spark, tmp_path):
-    """Compaction folds N increment partitions into one __base
-    partition WITHOUT changing what later increments compute: the
-    compacted store must drive bit-identical accept/reject decisions
-    vs an uncompacted twin, shrink the partition-dir count to 1, and
-    (for the LM store) re-aggregate count rows. Repeated compaction
-    must mint fresh __base_<n> labels."""
-    import os
-
-    from msstreamingstack_spark.operators.incremental import (
-        bigram_lm_increment,
-        compact_store,
-        dedup_increment,
-        minhash_increment,
-        release_checkpoint,
-    )
-
-    fluent = "the quick brown fox jumps over the lazy dog by the river"
-    junk = "zq1 xv7 kkj9 wpm2 bbr4 ncx8 qql3 vvt6 hzd5 jfy0"
-
-    def doc_text(i):
-        # per-doc disjoint vocabulary so the in-increment near-dup
-        # gate keeps every doc (the LM-side batches reuse `fluent`)
-        return " ".join(f"v{i}w{k}" for k in range(12))
-
-    def batches(texts=None):
-        return [
-            spark.createDataFrame(
-                [
-                    (b * 10 + j,
-                     texts(b * 10 + j) if texts else f"{fluent} tail{b * 10 + j}")
-                    for j in range(3)
-                ],
-                ["doc_id", "text"],
-            )
-            for b in range(3)
-        ]
-
-    def dirs(store):
-        return sorted(
-            e for e in os.listdir(store) if e.startswith("increment=")
-        )
-
-    handles = []
-    # --- LM store: counts aggregate + verdict equality --------------
-    lm_a, lm_b = str(tmp_path / "lm_a"), str(tmp_path / "lm_b")
-    for store in (lm_a, lm_b):
-        for i, b in enumerate(batches()):
-            a, s = bigram_lm_increment(b, store, f"inc{i}")
-            a.count()
-            handles.extend((a, s))
-    rows_before = spark.read.parquet(lm_a).count()
-    compact_store(spark, lm_a, agg="counts")
-    assert dirs(lm_a) == ["increment=__base_0"]
-    assert spark.read.parquet(lm_a).count() < rows_before  # re-aggregated
-    probe = spark.createDataFrame(
-        [(100, fluent), (101, junk)], ["doc_id", "text"]
-    )
-    va, sa = bigram_lm_increment(probe, lm_a, "probe", max_bits=3.0)
-    vb, sb = bigram_lm_increment(probe, lm_b, "probe", max_bits=3.0)
-    score = lambda s: sorted(
-        (r["doc_id"], r["bits_per_bigram"]) for r in s.collect()
-    )
-    assert score(sa) == score(sb)  # identical LM despite compaction
-    assert sorted(r["doc_id"] for r in va.collect()) == [100]
-    handles.extend((va, sa, vb, sb))
-
-    # --- digest store: dedup agg + foreign-label semantics ----------
-    dg_a, dg_b = str(tmp_path / "dg_a"), str(tmp_path / "dg_b")
-    for store in (dg_a, dg_b):
-        for i, b in enumerate(batches()):
-            f = dedup_increment(b, store, f"inc{i}")
-            f.count()
-            handles.append(f)
-    compact_store(spark, dg_a, agg="dedup")
-    assert dirs(dg_a) == ["increment=__base_0"]
-    recrawl = spark.createDataFrame(
-        [(200, f"{fluent} tail0"), (201, "completely fresh words here")],
-        ["doc_id", "text"],
-    )
-    fa = dedup_increment(recrawl, dg_a, "probe")
-    fb = dedup_increment(recrawl, dg_b, "probe")
-    assert (
-        sorted(r["doc_id"] for r in fa.collect())
-        == sorted(r["doc_id"] for r in fb.collect())
-        == [201]  # the re-crawl of tail0 is caught either way
-    )
-    handles.extend((fa, fb))
-
-    # --- signature store + repeated compaction labels ---------------
-    sg = str(tmp_path / "sg")
-    for i, b in enumerate(batches(texts=doc_text)):
-        f, m = minhash_increment(b, sg, f"inc{i}")
-        assert f.count() == 3  # disjoint vocab: nothing deduped
-        handles.extend((f, m))
-    compact_store(spark, sg)
-    f2, m2 = minhash_increment(
-        spark.createDataFrame(
-            [(300, doc_text(11) + " extra")], ["doc_id", "text"]
-        ),
-        sg,
-        "probe",
-    )
-    assert {r["old_id"] for r in m2.collect()} == {11}  # edited re-crawl
-    handles.extend((f2, m2))
-    compact_store(spark, sg)
-    assert dirs(sg) == ["increment=__base_1"]  # fresh label each time
-    release_checkpoint(*handles)
 
 
 def test_substring_dup_spans_alignment_and_coverage(spark):

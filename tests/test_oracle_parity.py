@@ -1,7 +1,7 @@
 """Mirror of the driver's sf0.01 DuckDB-oracle gate, run locally.
 
 Every oracle-bearing query in the registry must hash-match; a failure
-here predicts a CORRECTNESS_r{N}.json failure.
+here predicts a `python -m msstreamingstack_spark verify` failure.
 """
 
 from __future__ import annotations

@@ -180,7 +180,6 @@ def test_no_python_eval_in_relational_paths(spark):
             "corpus_topic_balance",  # pinned_cell_assign (Arrow batch)
             "dedup_semantic",  # pinned_cell_assign (Arrow batch)
             "sample_cluster_balanced",  # pinned_cell_assign (Arrow batch)
-            "pipeline_pretrain_corpus_v2",  # embeds dedup_semantic's assign
             "similarity_ann_quantized",  # Arrow matmul code scan
             "mine_hard_negatives_ann",  # pinned-IVF probe/assign UDFs
             "dedup_embedding_lsh",  # SRP bucket UDF (Arrow matmul)
@@ -565,12 +564,12 @@ def test_chartrigram_freq_join_is_broadcast(spark):
     """The trigram->corpus-frequency join must broadcast the freq side:
     char-trigram cardinality is alphabet-bounded at any corpus size,
     and leaving it to AQE re-shuffled the full exploded trigram
-    relation (2.93x scale ratio at 4x data, SCALE_r02). Round 5: the
+    relation (2.93x scale ratio at 4x data, round 2). Round 5: the
     explode is folded to per-(doc, trigram) counts FIRST and runs
     exactly once — one parquet scan feeding the persisted counts
     (InMemoryTableScan everywhere else); freq + join both read the
     fold, moving |distinct (doc,t)| rows instead of |occurrences|
-    (4.53x -> 1.73x at 16x data, SCALE16_r5)."""
+    (4.53x -> 1.73x at 16x data, round 5)."""
     import re
 
     f = plan_facts(REGISTRY["quality_chartrigram_df"].builder(spark, SF))
@@ -854,16 +853,3 @@ def test_vocab_oov_broadcasts_bounded_vocab(spark):
     assert f.broadcast_joins >= 1, f.text
     assert "CartesianProduct" not in f.text
 
-
-def test_pipeline_v2_plan_shape(spark):
-    """pipeline_pretrain_corpus_v2 composes six kernels into one plan;
-    pin the composition-level hazards: no CartesianProduct anywhere
-    (the semantic stage's scalar cross joins must stay broadcast), and
-    the mixing-rate join — a handful of per-source rows against the
-    doc-level flag frame — must be broadcast, never a shuffle of the
-    corpus on source (fixed source cardinality = the skew shape)."""
-    f = plan_facts(
-        REGISTRY["pipeline_pretrain_corpus_v2"].builder(spark, SF)
-    )
-    assert "CartesianProduct" not in f.text
-    assert f.broadcast_joins >= 1, f.text[:2000]

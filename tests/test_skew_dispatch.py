@@ -2,7 +2,7 @@
 (operators/skew_dispatch.py).
 
 The contract under test, per family:
-  - crossover math reproduces SKEW_CROSSOVER_r9.json's shape
+  - crossover math reproduces the round 9 crossover runs' shape
     (piecewise 3-point: sessionize ~0.245, running_revenue ~0.196,
     the two source-dominance families inf — no crossover at this
     scale);
@@ -107,8 +107,8 @@ class TestHotKeyShareAndDecision:
         )
 
     def _hot30(self, spark):
-        # ~30% of rows on ONE key (bench_skew.py's HOT_FRAC fixture
-        # shape), the regime SKEW_CROSSOVER_r9 measured.
+        # ~30% of rows on ONE key (the hot-key fixture shape), the
+        # regime the round 9 crossover runs measured.
         return spark.range(4000).select(
             F.when(F.col("id") % 10 < 3, F.lit(0))
             .otherwise(F.col("id"))

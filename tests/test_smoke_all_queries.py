@@ -4,6 +4,8 @@ sf0.01 oracle tests wouldn't see."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from msstreamingstack_spark.queries import REGISTRY
@@ -19,50 +21,44 @@ def test_query_runs_at_tiny_sf(spark, name):
     assert rows is not None
 
 
-def test_driver_window_invariants():
-    """The correctness driver validates the FIRST 50 registry entries:
-    the curated window must stay exactly 50, first in iteration order,
-    fully oracled (a rows-only entry there burns a driver check as a
-    red row), and every major family must keep a representative."""
-    from msstreamingstack_spark.queries import DRIVER_WINDOW, REGISTRY
-
-    assert len(DRIVER_WINDOW) == 50
-    assert list(REGISTRY)[:50] == list(DRIVER_WINDOW)
-    rows_only = [n for n in DRIVER_WINDOW if REGISTRY[n].oracle is None]
-    assert rows_only == [], f"rows-only entries inside the window: {rows_only}"
-    window_tags = {t for n in DRIVER_WINDOW for t in REGISTRY[n].tags}
-    for family in ("reference", "relational", "tpch", "dedup", "similarity",
-                   "multimodal", "skew", "pipeline", "text", "window",
-                   "grouping-sets", "layout"):
-        assert family in window_tags, f"family {family!r} left the window"
-
-
-def test_registry_complete_under_any_first_import():
-    """Direct imports of individual query modules must still yield the
-    full registry with the v2 pipeline's composed oracle attached —
-    the re-entrant import path (_apply_driver_window docstring) broke
-    for the composed oracle when queries_pipeline's attach ran before
-    its constituent modules finished registering (and extensions-first
-    crashed outright on a from-import of partial-module constants)."""
+def _registry_after_first_import(module: str) -> dict:
+    """{name: oracle} of the full registry in a fresh interpreter whose
+    first import is ``module``."""
+    import json
     import subprocess
     import sys
 
-    for first in (
-        "msstreamingstack_spark.queries_extensions",
-        "msstreamingstack_spark.queries_advanced",
-        "msstreamingstack_spark.queries_pipeline",
-        "msstreamingstack_spark.queries",
-    ):
-        code = (
-            f"import {first}\n"
-            "from msstreamingstack_spark.queries import REGISTRY\n"
-            "assert REGISTRY['pipeline_pretrain_corpus_v2'].oracle\n"
-            "assert len(REGISTRY) >= 184\n"
-        )
-        r = subprocess.run(
-            [sys.executable, "-c", code],
-            capture_output=True,
-            text=True,
-            cwd="/root/repo",
-        )
-        assert r.returncode == 0, (first, r.stderr[-800:])
+    code = (
+        f"import {module}\n"
+        "import json\n"
+        "from msstreamingstack_spark.queries import REGISTRY\n"
+        "print(json.dumps({n: s.oracle for n, s in REGISTRY.items()}))\n"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert r.returncode == 0, (module, r.stderr[-800:])
+    return json.loads(r.stdout.splitlines()[-1])
+
+
+def test_registry_complete_under_any_first_import():
+    """Importing any query module first must yield the same registry
+    (names and oracles) as importing ``queries`` first: a module that
+    imports a helper from a half-initialised sibling breaks this."""
+    import msstreamingstack_spark
+
+    pkg = os.path.dirname(msstreamingstack_spark.__file__)
+    modules = sorted(
+        f"msstreamingstack_spark.{f[:-3]}"
+        for f in os.listdir(pkg)
+        if f.startswith("queries") and f.endswith(".py")
+    )
+    want = _registry_after_first_import("msstreamingstack_spark.queries")
+    assert len(want) == len(REGISTRY)
+    for module in modules:
+        got = _registry_after_first_import(module)
+        assert got.keys() == want.keys(), module
+        assert got == want, module

@@ -1,163 +1,12 @@
-"""Text-format corpus sources (JSONL / CSV): declared-schema reads
-must round-trip the parquet documents table exactly, corrupt lines
-must be routed and counted (never fatal, never silently dropped), and
-the streaming JSONL path must feed the corpus-ingest pipeline
-unchanged."""
+"""Source and publish edges: event drops that gain columns, the
+manifest-committed JSONL sink, and the ``export`` CLI that publishes a
+registry query through either writer."""
 
 from __future__ import annotations
 
-import pytest
-
-import json
 import os
 
 from pyspark.sql import functions as F
-
-from msstreamingstack_spark.sources.files import (
-    read_documents_csv,
-    read_documents_jsonl,
-    split_corrupt,
-    write_documents_csv,
-    write_documents_jsonl,
-)
-from msstreamingstack_spark.sources.tables import load_table
-
-
-def _docs_key(rows):
-    return sorted(
-        (r["doc_id"], r["text"], r["lang"], r["source"], r["n_chars"])
-        for r in rows
-    )
-
-
-def test_jsonl_roundtrip_matches_parquet(spark, sf_smoke, tmp_path):
-    docs = load_table(spark, sf_smoke, "documents")
-    out = str(tmp_path / "docs_jsonl")
-    write_documents_jsonl(docs, out)
-    clean, rejected = split_corrupt(read_documents_jsonl(spark, out))
-    assert rejected.count() == 0
-    assert _docs_key(clean.collect()) == _docs_key(docs.collect())
-
-
-def test_csv_roundtrip_matches_parquet(spark, sf_smoke, tmp_path):
-    docs = load_table(spark, sf_smoke, "documents")
-    out = str(tmp_path / "docs_csv")
-    write_documents_csv(docs, out)
-    clean, rejected = split_corrupt(read_documents_csv(spark, out))
-    assert rejected.count() == 0
-    assert _docs_key(clean.collect()) == _docs_key(docs.collect())
-
-
-def test_jsonl_corrupt_lines_routed_not_fatal(spark, tmp_path):
-    p = tmp_path / "drop.jsonl"
-    good = [
-        {"doc_id": 1, "text": "alpha beta", "lang": "en",
-         "source": "crawl", "n_chars": 10},
-        {"doc_id": 2, "text": "gamma delta", "lang": "en",
-         "source": "crawl", "n_chars": 11},
-    ]
-    lines = [json.dumps(good[0]), "{not json at all", json.dumps(good[1]),
-             '"just a string"']
-    p.write_text("\n".join(lines) + "\n")
-    clean, rejected = split_corrupt(read_documents_jsonl(spark, str(p)))
-    assert {r["doc_id"] for r in clean.collect()} == {1, 2}
-    bad = [r["raw_line"] for r in rejected.collect()]
-    assert len(bad) == 2 and "{not json at all" in bad
-
-
-@pytest.mark.slow
-def test_corpus_ingest_from_jsonl_drops(spark, tmp_path):
-    """The full streaming ingest pipeline (gates → watermarked dedup →
-    decontamination → accept/reject sinks) runs unchanged on raw JSONL
-    crawl drops."""
-    from msstreamingstack_spark.streaming.corpus import run_corpus_ingest
-
-    normal_a = "alpha beta gamma delta epsilon zeta eta theta iota"
-    normal_b = "kappa mu nu xi omicron rho sigma tau upsilon"
-    drops = tmp_path / "jsonl_drops"
-    drops.mkdir()
-
-    def write_drop(name, rows, mtime):
-        path = drops / name
-        path.write_text(
-            "\n".join(
-                json.dumps(
-                    {"doc_id": i, "text": t, "lang": "en",
-                     "source": "crawl", "n_chars": len(t)}
-                )
-                for i, t in rows
-            )
-            + "\n"
-        )
-        os.utime(path, (mtime, mtime))
-
-    write_drop("b0.jsonl", [(1, normal_a), (2, "a a a a a a"),
-                            (3, "tiny doc")], 1_700_000_000)
-    write_drop("b1.jsonl", [(4, normal_a), (5, normal_b)], 1_700_000_010)
-
-    eval_docs = spark.createDataFrame(
-        [(100, "zebra yak xylophone walrus", "en", "bench", 26)],
-        ["doc_id", "text", "lang", "source", "n_chars"],
-    )
-    accept_dir = str(tmp_path / "accept")
-    reject_dir = str(tmp_path / "reject")
-    q = run_corpus_ingest(
-        spark,
-        str(drops),
-        eval_docs,
-        accept_dir,
-        reject_dir,
-        checkpoint_dir=str(tmp_path / "cp"),
-        fmt="jsonl",
-    )
-    q.awaitTermination(120)
-
-    accepted = {r["doc_id"] for r in spark.read.parquet(accept_dir).collect()}
-    rejected = {
-        r["doc_id"]: r["reject_reason"]
-        for r in spark.read.parquet(reject_dir).collect()
-    }
-    assert accepted == {1, 5}
-    assert rejected == {2: "too_repetitive", 3: "too_short"}
-    assert 4 not in accepted and 4 not in rejected  # cross-batch dup
-
-
-def test_jsonl_reader_prunes_columns(spark, sf_smoke, tmp_path):
-    """Column pruning must reach the scan feeding the projection. JSONL
-    is row-oriented, so file-scan pruning saves parse/convert rather
-    than IO; the split_corrupt cache parses each line once for both
-    branches, and the cached-relation scan must then serve a 2-column
-    projection without touching the wide text column."""
-    docs = load_table(spark, sf_smoke, "documents")
-    out = str(tmp_path / "docs_jsonl")
-    write_documents_jsonl(docs, out)
-    clean, _ = split_corrupt(read_documents_jsonl(spark, out))
-    plan = (
-        clean.select("doc_id", "lang")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    scan_line = next(
-        ln for ln in plan.splitlines() if "InMemoryTableScan" in ln
-    )
-    assert "text" not in scan_line, (
-        f"cached-relation scan did not prune the text column: {scan_line}"
-    )
-
-
-def test_orc_roundtrip_matches_parquet(spark, sf_smoke, tmp_path):
-    from msstreamingstack_spark.sources.files import (
-        read_documents_orc,
-        write_documents_orc,
-    )
-
-    docs = load_table(spark, sf_smoke, "documents")
-    out = str(tmp_path / "docs_orc")
-    write_documents_orc(docs, out)
-    assert _docs_key(read_documents_orc(spark, out).collect()) == _docs_key(
-        docs.collect()
-    )
 
 
 def test_event_drops_schema_evolution(spark, tmp_path):
@@ -209,86 +58,6 @@ def test_event_drops_schema_evolution(spark, tmp_path):
     merged = spark.read.option("mergeSchema", "true").parquet(str(d))
     assert "crawler_tag" in merged.columns
     assert merged.filter(F.col("crawler_tag").isNull()).count() == 3
-
-
-def test_jsonl_stream_corrupt_lines_counted_and_routed(spark, tmp_path):
-    """A malformed crawl line must never vanish silently: it lands in
-    the reject sink with its raw payload as text and reason
-    'corrupt_line', and the per-batch observe metrics count it
-    (n_corrupt) — sources/files.py's 'corrupt lines are data, counted'
-    policy, enforced on the STREAMING path (ADVICE round-2 finding:
-    the jsonl branch previously dropped the split_corrupt reject
-    branch and the metrics only saw post-drop rows)."""
-    import json as _json
-
-    from msstreamingstack_spark.streaming.corpus import run_corpus_ingest
-
-    normal_a = "alpha beta gamma delta epsilon zeta eta theta iota"
-    normal_b = "kappa mu nu xi omicron rho sigma tau upsilon"
-    bad_line = '{"doc_id": 7, "text": "unterminated'
-    drops = tmp_path / "jsonl_corrupt_drops"
-    drops.mkdir()
-    good = [
-        _json.dumps(
-            {"doc_id": i, "text": t, "lang": "en", "source": "crawl",
-             "n_chars": len(t)}
-        )
-        for i, t in [(1, normal_a), (2, normal_b)]
-    ]
-    path = drops / "b0.jsonl"
-    path.write_text("\n".join([good[0], bad_line, good[1]]) + "\n")
-    os.utime(path, (1_700_000_000, 1_700_000_000))
-
-    eval_docs = spark.createDataFrame(
-        [(100, "zebra yak xylophone walrus", "en", "bench", 26)],
-        ["doc_id", "text", "lang", "source", "n_chars"],
-    )
-    accept_dir = str(tmp_path / "accept_c")
-    reject_dir = str(tmp_path / "reject_c")
-    q = run_corpus_ingest(
-        spark,
-        str(drops),
-        eval_docs,
-        accept_dir,
-        reject_dir,
-        checkpoint_dir=str(tmp_path / "cp_c"),
-        fmt="jsonl",
-    )
-    q.awaitTermination(120)
-
-    accepted = {r["doc_id"] for r in spark.read.parquet(accept_dir).collect()}
-    rej_rows = spark.read.parquet(reject_dir).collect()
-    assert accepted == {1, 2}
-    corrupt = [r for r in rej_rows if r["reject_reason"] == "corrupt_line"]
-    assert len(corrupt) == 1
-    assert corrupt[0]["text"] == bad_line  # raw payload preserved
-    assert corrupt[0]["doc_id"] is None
-    observed = [
-        p["observedMetrics"]["corpus"]
-        for p in q.recentProgress
-        if "corpus" in p.get("observedMetrics", {})
-    ]
-    assert sum(m["n_corrupt"] for m in observed) == 1
-    assert sum(m["n_rows"] for m in observed) == 3
-
-
-def test_xml_roundtrip_matches_parquet(spark, sf_smoke, tmp_path):
-    """Spark 4 native XML source: documents written as <doc> elements
-    read back bit-equal to the parquet originals under the declared
-    schema (same contract as the ORC round-trip)."""
-    from msstreamingstack_spark.sources.files import (
-        read_documents_xml,
-        write_documents_xml,
-    )
-    from msstreamingstack_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_smoke, "documents")
-    path = str(tmp_path / "docs_xml")
-    write_documents_xml(docs, path)
-    back = read_documents_xml(spark, path)
-    want = sorted(map(tuple, docs.collect()))
-    got = sorted(map(tuple, back.select(*docs.columns).collect()))
-    assert got == want and len(got) > 0
 
 
 def test_manifest_jsonl_sink_commit_protocol(spark, sf_smoke, tmp_path):

@@ -364,110 +364,6 @@ def test_transactional_sink_exactly_once(spark, staged_stream_dir, tmp_path):
     assert sink.read_committed(spark).count() == n_before
 
 
-def test_transform_with_state_user_table(spark, staged_stream_dir, tmp_path):
-    """transformWithStateInPandas (streaming/tws.py): the typed
-    per-user state machine over micro-batched drops converges to the
-    batch per-user aggregate — last event, conditional purchase
-    carry, decimal-exact running total.
-
-    Requires RocksDB state store AND a working google.protobuf (the
-    TWS Python runner's wire protocol). Where protobuf is absent the
-    runner cannot start by CONSTRUCTION (pip is unavailable in the
-    build sandbox), so instead of a perpetual skip this test then
-    verifies the gate itself: tws_available() must be False for
-    exactly the google.protobuf reason, and the processor must still
-    pass a multi-chunk contract run (chunk-order independence of the
-    carried last_* state) — the semantics the e2e would exercise,
-    protobuf-free. The applyInPandasWithState twin
-    (test_user_state_stream_matches_batch) carries the runtime
-    evidence for per-user state on Spark-managed state stores."""
-    from msstreamingstack_spark.streaming.pipeline import (
-        read_event_stream,
-        use_rocksdb_state,
-    )
-    from msstreamingstack_spark.streaming.tws import tws_available, user_state_tws
-
-    if not tws_available():
-        # the gate must be accurate: google.protobuf truly unimportable
-        with pytest.raises(ImportError):
-            import google.protobuf  # noqa: F401
-        # multi-chunk contract: same rows split across Arrow chunks in
-        # adverse order must yield the same state as one ordered chunk
-        import pandas as pd
-
-        from msstreamingstack_spark.streaming.tws import UserStateProcessor
-
-        rows = pd.DataFrame(
-            {
-                "ts_sec": [10, 20, 30, 40, 50],
-                "event_id": [1, 2, 3, 4, 5],
-                "event_type": ["purchase", "view", "click", "purchase", "view"],
-                "value": [5.5, 1.0, 2.0, 7.25, 0.5],
-            }
-        )
-        proc = UserStateProcessor()
-        proc.init(_FakeTWSHandle())
-        (want,) = proc.handleInputRows((7,), iter([rows]), None)
-        proc2 = UserStateProcessor()
-        proc2.init(_FakeTWSHandle())
-        # latest events in the FIRST chunk: per-chunk processing would
-        # finish on the wrong last_* values
-        (got,) = proc2.handleInputRows(
-            (7,), iter([rows.iloc[3:], rows.iloc[:3]]), None
-        )
-        assert got.iloc[0].to_dict() == want.iloc[0].to_dict()
-        return
-    use_rocksdb_state(spark)
-
-    stream = read_event_stream(spark, staged_stream_dir).select(
-        "event_id", "user_id", "ts_sec", "event_type", "value"
-    )
-    sink = CollectingSink()
-    q = (
-        user_state_tws(stream)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "cp_tws"))
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    # last emission per user across batches = final state
-    final = {}
-    for batch_id, rows in sink.batches:
-        for r in rows:
-            final[r.user_id] = r
-
-    ev = events_with_time(spark, SF)
-    w_last = (
-        F.struct("ts_sec", "event_id", "event_type", "value")
-    )
-    batch = (
-        ev.groupBy("user_id")
-        .agg(
-            F.max(w_last).alias("last"),
-            F.max(
-                F.when(F.col("event_type") == "purchase", w_last)
-            ).alias("last_p"),
-            F.sum(F.col("value").cast("decimal(25,6)"))
-            .cast("double")
-            .alias("total_value"),
-            F.count("*").alias("n_events"),
-        )
-        .collect()
-    )
-    assert len(final) == len(batch)
-    for r in batch:
-        got = final[r.user_id]
-        assert got.last_ts == r.last.ts_sec, r.user_id
-        assert got.last_event_type == r.last.event_type, r.user_id
-        want_pv = r.last_p.value if r.last_p else None
-        assert got.last_purchase_value == want_pv, r.user_id
-        assert got.total_value == r.total_value, r.user_id
-        assert got.n_events == r.n_events, r.user_id
-
-
 @pytest.mark.slow
 def test_observed_quality_metrics_in_progress(spark, staged_stream_dir, tmp_path):
     """observe() metrics ride the existing plan: every micro-batch's
@@ -567,62 +463,6 @@ class _FakeTWSHandle:
 
     def getValueState(self, name, schema):
         return self.states.setdefault(name, _FakeValueState())
-
-
-def test_tws_processor_semantics_without_runner():
-    """UserStateProcessor's state machine, exercised directly against a
-    fake StatefulProcessorHandle — runs in EVERY environment, including
-    this one where google.protobuf is absent and the TWS wire runner
-    cannot start (the e2e twin above skips there). Covers: conditional
-    purchase carry, decimal-exact running total across micro-batches,
-    and in-batch determinism (ts_sec then event_id ordering)."""
-    import pandas as pd
-
-    from msstreamingstack_spark.streaming.tws import UserStateProcessor
-
-    proc = UserStateProcessor()
-    proc.init(_FakeTWSHandle())
-
-    # batch 1: out-of-order rows; last event is a view AFTER a purchase
-    b1 = pd.DataFrame(
-        {
-            "ts_sec": [30, 10, 20],
-            "event_id": [3, 1, 2],
-            "event_type": ["view", "purchase", "click"],
-            "value": [1.5, 100.25, 2.25],
-        }
-    )
-    (out1,) = proc.handleInputRows((7,), iter([b1]), None)
-    row = out1.iloc[0]
-    assert row["user_id"] == 7
-    assert row["last_ts"] == 30 and row["last_event_type"] == "view"
-    assert row["last_purchase_value"] == 100.25  # carried past the view
-    assert row["total_value"] == 104.0
-    assert row["n_events"] == 3
-
-    # batch 2: purchase updates the carry; total accumulates exactly
-    b2 = pd.DataFrame(
-        {
-            "ts_sec": [40, 50],
-            "event_id": [4, 5],
-            "event_type": ["purchase", "error"],
-            "value": [0.1, 0.2],
-        }
-    )
-    (out2,) = proc.handleInputRows((7,), iter([b2]), None)
-    row = out2.iloc[0]
-    assert row["last_ts"] == 50 and row["last_event_type"] == "error"
-    assert row["last_purchase_value"] == 0.1
-    assert row["n_events"] == 5
-    # 104.0 + 0.1 + 0.2 through DECIMAL — no float drift
-    assert row["total_value"] == 104.3
-
-    # determinism: same rows, shuffled arrival order, fresh processor
-    proc2 = UserStateProcessor()
-    proc2.init(_FakeTWSHandle())
-    shuffled = pd.concat([b2, b1]).sample(frac=1.0, random_state=0)
-    (outs,) = proc2.handleInputRows((7,), iter([shuffled]), None)
-    assert outs.iloc[0].to_dict() == row.to_dict()
 
 
 # --- S1 Kafka surface, broker-free ---------------------------------------

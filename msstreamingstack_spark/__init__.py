@@ -16,6 +16,7 @@ idiomatic PySpark 3.5+/4.x DataFrame engine:
 
 Layout:
     session.py    — SparkSession factory tuned for the harness
+    worker_daemon.py — Python worker daemon on the installed PySpark
     schemas.py    — declared StructTypes (clickstream/state/output + testdata)
     sources/      — table loaders, event generator, Python data sources
     sinks/        — console/parquet/memory foreachBatch sinks; external stubs

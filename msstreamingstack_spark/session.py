@@ -6,6 +6,16 @@ connector hosts). Here the session is tuned for correctness-reproducible
 local runs that still scale: AQE on, UTC timezone pinned (oracle
 comparison), Arrow enabled for the pandas-UDF slow path, shuffle
 partitions sized to cores rather than Spark's default 200.
+
+Sessions built by ``get_spark`` also start their Python workers through
+``worker_daemon`` (``spark.python.daemon.module``). Spark puts
+``$SPARK_HOME``'s ``pyspark.zip``, py4j zip and ``spark-core`` jar ahead
+of site-packages on the workers' path; every task then re-reads each
+cached archive (``importlib.invalidate_caches()``) and every new daemon
+compiles PySpark from source, a fixed cost paid by each state partition,
+pandas/Arrow UDF task and first task of a session. The daemon drops the
+archives when an installed PySpark of the same version is there. Both
+confs are static: a session created elsewhere keeps Spark's daemon.
 """
 
 from __future__ import annotations
@@ -62,6 +72,11 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# the directory holding this package, so Python workers started from any
+# working directory can import the engine (and ``worker_daemon``)
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
@@ -85,9 +100,11 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
-        # one JVM hosts all 32 executor threads in local mode — size the
-        # heap so shuffle/broadcast buffers don't turn into GC churn
+        # one JVM hosts all ``cpus`` executor threads in local mode — size
+        # the heap so shuffle/broadcast buffers don't turn into GC churn
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
+        .config("spark.python.daemon.module", "msstreamingstack_spark.worker_daemon")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -61,8 +61,8 @@ def _cmd_produce(args: argparse.Namespace) -> int:
 def _cmd_consume(args: argparse.Namespace) -> int:
     from msstreamingstack_spark.session import get_spark
     from msstreamingstack_spark.sinks.writers import (
+        TransactionalParquetSink,
         console_sink,
-        parquet_append_writer,
     )
     from msstreamingstack_spark.streaming.pipeline import (
         run_pipeline,
@@ -77,7 +77,7 @@ def _cmd_consume(args: argparse.Namespace) -> int:
     if args.console:
         sinks.append(console_sink)
     if args.parquet_out:
-        sinks.append(parquet_append_writer(args.parquet_out))
+        sinks.append(TransactionalParquetSink(args.parquet_out))
     if not sinks:
         sinks = [console_sink]
     q = run_pipeline(
@@ -221,72 +221,6 @@ def _cmd_catalog(args: argparse.Namespace) -> int:
     return 0
 
 
-def _check_skew_mode(name: str, mode, err_code: int):
-    """Validate a --skew-robust mode BEFORE any SparkSession exists.
-
-    Returns None when the combination is runnable, else the
-    command's error exit code (query uses 2, export uses 1 — each
-    matches its command's convention). Pure introspection: neither
-    check needs a session, so a bad flag exits without the ~10 s JVM
-    spin-up.
-    """
-    import inspect
-
-    from msstreamingstack_spark.operators.skew_dispatch import DISPATCH
-    from msstreamingstack_spark.queries import REGISTRY
-
-    if mode == "auto":
-        if name not in DISPATCH:
-            print(
-                f"{name} has no skew auto-dispatch entry (no probe/"
-                "crossover data); use an explicit --skew-robust on "
-                "where a twin exists",
-                file=sys.stderr,
-            )
-            return err_code
-    elif mode == "on":
-        builder = REGISTRY[name].builder
-        d = DISPATCH.get(name)
-        if "skew_robust" not in inspect.signature(builder).parameters and (
-            d is None or d.twin_entry is None
-        ):
-            print(
-                f"{name} has no skew_robust twin (its plan is "
-                "already bounded)",
-                file=sys.stderr,
-            )
-            return err_code
-    return None
-
-
-def _build_with_skew_mode(spark, sf_dir: str, name: str, mode):
-    """Build the query's DataFrame under a validated --skew-robust
-    mode (None = default plan, 'on' = forced twin, 'auto' =
-    probe-and-route via operators/skew_dispatch — bit-identical
-    either way; the decision line goes to stderr so piped stdout
-    stays clean)."""
-    from msstreamingstack_spark.queries import REGISTRY
-
-    if mode == "auto":
-        from msstreamingstack_spark.operators.skew_dispatch import auto_build
-
-        df, decision = auto_build(spark, sf_dir, name)
-        print(decision.describe(), file=sys.stderr)
-        return df
-    if mode == "on":
-        import inspect
-
-        from msstreamingstack_spark.operators.skew_dispatch import DISPATCH
-
-        builder = REGISTRY[name].builder
-        if "skew_robust" in inspect.signature(builder).parameters:
-            return builder(spark, sf_dir, skew_robust=True)
-        # entry-pair twin (e.g. sessionize_events_bucketed): the
-        # validated mode guarantees a twin_entry exists here
-        return REGISTRY[DISPATCH[name].twin_entry].builder(spark, sf_dir)
-    return REGISTRY[name].builder(spark, sf_dir)
-
-
 def _cmd_query(args: argparse.Namespace) -> int:
     from msstreamingstack_spark.queries import REGISTRY
     from msstreamingstack_spark.session import get_spark
@@ -295,13 +229,9 @@ def _cmd_query(args: argparse.Namespace) -> int:
         known = ", ".join(sorted(REGISTRY))
         print(f"unknown query {args.name!r}; known: {known}", file=sys.stderr)
         return 2
-    mode = getattr(args, "skew_robust", None)
-    bad = _check_skew_mode(args.name, mode, err_code=2)
-    if bad is not None:
-        return bad
     spark = get_spark(app_name=f"msstreamingstack-query-{args.name}")
     spark.sparkContext.setLogLevel("ERROR")
-    df = _build_with_skew_mode(spark, args.sf_dir, args.name, mode)
+    df = REGISTRY[args.name].builder(spark, args.sf_dir)
     if args.explain:
         df.explain("formatted")
     df.show(args.rows, truncate=False)
@@ -557,13 +487,9 @@ def _cmd_export(args: argparse.Namespace) -> int:
     if args.name not in REGISTRY:
         print(f"unknown query: {args.name}", file=sys.stderr)
         return 1
-    mode = getattr(args, "skew_robust", None)
-    bad = _check_skew_mode(args.name, mode, err_code=1)
-    if bad is not None:
-        return bad
     spark = get_spark(app_name="msstreamingstack-export")
     spark.sparkContext.setLogLevel("WARN")
-    df = _build_with_skew_mode(spark, args.sf_dir, args.name, mode)
+    df = REGISTRY[args.name].builder(spark, args.sf_dir)
     if args.format == "parquet":
         df.write.mode("overwrite").parquet(args.out)
         print(f"exported {args.name} -> {args.out} (parquet)")
@@ -600,7 +526,7 @@ def main(argv: list[str] | None = None) -> int:
     c = sub.add_parser("consume", help="run the streaming pipeline (consumer)")
     c.add_argument("--source", required=True, help="event drop directory")
     c.add_argument("--checkpoint", required=True)
-    c.add_argument("--parquet-out", help="append history sink directory")
+    c.add_argument("--parquet-out", help="exactly-once history sink directory")
     c.add_argument("--console", action="store_true", help="console sink")
     c.add_argument("--gap-sec", type=int, default=1800)
     c.add_argument("--once", action="store_true",
@@ -613,18 +539,6 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     q.add_argument("--rows", type=int, default=20)
     q.add_argument("--explain", action="store_true")
-    q.add_argument(
-        "--skew-robust",
-        dest="skew_robust",
-        nargs="?",
-        const="on",
-        choices=("on", "auto"),
-        default=None,
-        help="run the bounded-partition twin plan (bit-identical "
-        "results; errors if the query has no twin). 'auto' probes "
-        "the top-key share and routes past the measured crossover "
-        "(operators/skew_dispatch.py)",
-    )
     q.set_defaults(fn=_cmd_query)
 
     hh = sub.add_parser(
@@ -729,17 +643,6 @@ def main(argv: list[str] | None = None) -> int:
     ex.add_argument("--out", required=True)
     ex.add_argument(
         "--format", choices=("parquet", "manifest_jsonl"), default="parquet"
-    )
-    ex.add_argument(
-        "--skew-robust",
-        dest="skew_robust",
-        nargs="?",
-        const="on",
-        choices=("on", "auto"),
-        default=None,
-        help="publish via the bounded-partition twin plan "
-        "(bit-identical results); 'auto' probes the top-key share "
-        "and routes past the measured crossover",
     )
     ex.set_defaults(fn=_cmd_export)
 

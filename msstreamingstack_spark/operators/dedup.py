@@ -60,31 +60,13 @@ def _perm_sql(i: int, h_sql: str) -> str:
 # 1. Exact dedup
 # ---------------------------------------------------------------------------
 def exact_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    skew_robust: bool = False,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Canonical id per content-hash group = min doc id; rows flagged
-    as duplicates when not canonical. Default: window over the digest
-    partition → single shuffle, no join. ``skew_robust``: at web-crawl
-    scale a viral page's digest group holds millions of rows, and the
-    window buffers the whole group in one task; the twin computes
-    keep_id through a partial-aggregated groupBy (map-side combine
-    collapses any hot digest to one row per task) and re-attaches it
-    with an AQE-skew-splittable equi-join — same rows, one extra
-    compact-table shuffle."""
+    as duplicates when not canonical. A window over the digest
+    partition → single shuffle, no join."""
     digest = F.md5(F.col(text_col).cast("binary"))
     hashed = docs.withColumn("content_md5", digest)
-    if skew_robust:
-        keep = hashed.groupBy("content_md5").agg(
-            F.min(id_col).alias("keep_id")
-        )
-        return (
-            hashed.join(keep, "content_md5")
-            .withColumn("is_dup", F.col(id_col) != F.col("keep_id"))
-            .select(id_col, "content_md5", "keep_id", "is_dup")
-        )
     w = Window.partitionBy("content_md5")
     return (
         hashed.withColumn("keep_id", F.min(id_col).over(w))

@@ -65,76 +65,6 @@ def bucketed_running_sum(
     )
 
 
-def equidepth_bucket(
-    df: DataFrame,
-    col: str,
-    descending: bool = False,
-    target_rows: int = 100_000,
-    min_q: int = 16,
-    max_q: int = 4096,
-) -> Column:
-    """A monotone equi-depth bucket expression for ``col`` — the
-    bucket function for value-ordered prefix decompositions where
-    FIXED-width bands would not bound a hot band (document lengths and
-    quality scores cluster, so a popular band is corpus-sized).
-
-    Cutpoints come from approxQuantile with Q sized ≈ rows/target, so
-    expected bucket depth stays ~``target_rows`` as the data grows.
-    The bucket is the count of cutpoints strictly below (ASC) or above
-    (DESC) the value — monotone non-decreasing along the order
-    direction, as the prefix decomposition requires. EXACTNESS of the
-    decomposed result does not depend on the cutpoints at all (any
-    monotone bucket function yields bit-identical output; pinned by
-    the twins' parity tests), so the sketch's approximation only
-    shifts bucket boundaries, never values.
-
-    Evaluation is a balanced binary-search WHEN-tree over the sorted
-    cutpoints — log2(Q) comparisons per row (12 at max_q=4096), not a
-    Q-wide array scan; the cutpoint literals still live in the plan
-    (they must, short of a side table), but per-row cost no longer
-    grows with Q on exactly the corpus-scale path Q sizing serves.
-
-    NULLs are bucketed to match Spark's window order: ASC ⇒ bucket 0
-    (asc_nulls_first — NULL rows sort before every cutpoint), DESC ⇒
-    the terminal bucket (desc_nulls_last). Callers ordering with
-    explicit NULLS LAST on ASC (or NULLS FIRST on DESC) must not pass
-    NULL-bearing columns here — the bucket would break monotonicity
-    silently."""
-    n = df.count()
-    q = int(min(max_q, max(min_q, n // max(target_rows, 1))))
-    probs = [i / q for i in range(1, q)]
-    cuts = sorted(set(df.approxQuantile(col, probs, 0.001))) if probs else []
-    if not cuts:
-        return F.lit(0)
-    v = F.col(col).cast("double")
-
-    def lower_count(lo: int, hi: int) -> Column:
-        # count of cutpoints c with (c < v) — ASC qualifying prefix
-        if lo == hi:
-            return F.lit(lo)
-        mid = (lo + hi) // 2
-        return F.when(
-            F.lit(float(cuts[mid])) < v, lower_count(mid + 1, hi)
-        ).otherwise(lower_count(lo, mid))
-
-    def first_above(lo: int, hi: int) -> Column:
-        # first index with (cuts[i] > v); DESC bucket = len - index
-        if lo == hi:
-            return F.lit(lo)
-        mid = (lo + hi) // 2
-        return F.when(
-            F.lit(float(cuts[mid])) > v, first_above(lo, mid)
-        ).otherwise(first_above(mid + 1, hi))
-
-    if descending:
-        return F.when(v.isNull(), F.lit(len(cuts))).otherwise(
-            F.lit(len(cuts)) - first_above(0, len(cuts))
-        )
-    return F.when(v.isNull(), F.lit(0)).otherwise(
-        lower_count(0, len(cuts))
-    )
-
-
 def topk_per_key_salted(
     df: DataFrame,
     key_cols: tuple,
@@ -169,54 +99,4 @@ def topk_per_key_salted(
     w2 = Window.partitionBy(*key_cols).orderBy(*order_cols)
     return cand.withColumn(out, F.row_number().over(w2)).filter(
         F.col(out) <= k
-    )
-
-
-def bucketed_percent_rank(
-    df: DataFrame,
-    part_col: str,
-    order_cols: tuple,
-    bucket_col: Column,
-    out: str = "pct_rank",
-) -> DataFrame:
-    """percent_rank over (``part_col``, ``order_cols``) with the
-    event-sized shuffle keyed (part, bucket) — the RANK instance of
-    the prefix decomposition above: global row_number = rows in prior
-    buckets + local row_number, percent_rank = (rn−1)/(n−1) on exact
-    integers, so the result is bit-identical to the single-window
-    form.
-
-    Requires a TOTAL order (``order_cols`` must include a unique
-    tiebreaker) — under a total order percent_rank degenerates to the
-    row_number form this decomposes; with ties spanning a bucket
-    boundary plain rank() would not decompose. ``bucket_col`` must be
-    a monotone non-decreasing function of the leading order columns
-    (never of the tiebreaker alone).
-    """
-    ev = df.withColumn("_bkt", bucket_col.cast("long"))
-    w_b = Window.partitionBy(part_col, "_bkt").orderBy(*order_cols)
-    ev = ev.withColumn("_lrn", F.row_number().over(w_b))
-    # one row per (key, bucket): prior-bucket row counts and the
-    # per-key total ride the same tiny summary table
-    summary = ev.groupBy(part_col, "_bkt").agg(F.count("*").alias("_cnt"))
-    w_u = (
-        Window.partitionBy(part_col)
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_all = Window.partitionBy(part_col)
-    summary = summary.withColumn(
-        "_prior", F.coalesce(F.sum("_cnt").over(w_u), F.lit(0))
-    ).withColumn("_n", F.sum("_cnt").over(w_all))
-    return (
-        ev.join(
-            summary.select(part_col, "_bkt", "_prior", "_n"),
-            [part_col, "_bkt"],
-        )
-        .withColumn(
-            out,
-            (F.col("_prior") + F.col("_lrn") - F.lit(1)).cast("double")
-            / F.greatest(F.col("_n") - F.lit(1), F.lit(1)).cast("double"),
-        )
-        .drop("_bkt", "_lrn", "_prior", "_n")
     )

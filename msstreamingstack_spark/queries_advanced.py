@@ -458,7 +458,7 @@ FROM sk JOIN ex USING (event_type)
     "survive has too few rows to estimate quantiles from anyway.",
 )
 def q_percentile_event_values_sketch(
-    spark: SparkSession, sf_dir: str, skew_robust: bool = False
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from pyspark.sql import Window
 
@@ -469,34 +469,11 @@ def q_percentile_event_values_sketch(
     cand = ev.select(
         "event_type", "value", h.alias("hv"), "event_id"
     ).filter(F.col("hv") < F.lit(_QSK_THRESH))
-    if skew_robust:
-        # The 100 TB knob (r10 verdict task #5): if a hot event_type's
-        # survivor count ever outgrows the threshold sizing, the
-        # per-type bottom-K rank becomes one task sorting that type's
-        # whole slice. The salted two-pass rank bounds the unsalted
-        # pass at p×K rows per type — constant regardless of corpus
-        # size — and is bit-identical because (hv, event_id) is a
-        # total order and the salt (pmod of the 48-bit hash) is a
-        # deterministic function of the row
-        # (tests/test_advanced_queries.py pins the parity).
-        from msstreamingstack_spark.operators.windows import (
-            topk_per_key_salted,
-        )
-
-        samp = topk_per_key_salted(
-            cand,
-            ("event_type",),
-            ("hv", "event_id"),
-            _QSK_K,
-            salt_col=F.col("hv"),
-            out="rk",
-        )
-    else:
-        w = Window.partitionBy("event_type").orderBy("hv", "event_id")
-        samp = (
-            cand.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= _QSK_K)
-        )
+    w = Window.partitionBy("event_type").orderBy("hv", "event_id")
+    samp = (
+        cand.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= _QSK_K)
+    )
     sk = samp.groupBy("event_type").agg(
         F.count("*").alias("k_used"),
         *[

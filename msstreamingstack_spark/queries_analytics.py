@@ -581,33 +581,16 @@ GROUP BY d.term, d.df_docs
     "serialize as a sorted comma-joined string so both engines "
     "hash identically.",
 )
-def q_inverted_index_sampled(
-    spark: SparkSession, sf_dir: str, skew_robust: bool = False
-) -> DataFrame:
+def q_inverted_index_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
     ).distinct()
     dfc = tok.groupBy("term").agg(F.count("*").alias("df_docs"))
-    if skew_robust:
-        # a stopword's posting list is corpus-sized, and the bare
-        # partitionBy(term) window sorts it in ONE task; the salted
-        # twin bounds the final per-term rank at p×k rows — exact
-        # under the (doc_id) total order (operators/windows.py).
-        from msstreamingstack_spark.operators.windows import (
-            topk_per_key_salted,
-        )
-
-        ranked = topk_per_key_salted(
-            tok, ("term",), ("doc_id",), _POSTINGS_K, F.col("doc_id")
-        )
-    else:
-        ranked = tok.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("term").orderBy("doc_id")
-            ),
-        ).filter(F.col("rn") <= _POSTINGS_K)
+    ranked = tok.withColumn(
+        "rn",
+        F.row_number().over(Window.partitionBy("term").orderBy("doc_id")),
+    ).filter(F.col("rn") <= _POSTINGS_K)
     post = ranked.groupBy("term").agg(
         F.array_join(F.sort_array(F.collect_list("doc_id")), ",").alias(
             "postings_sample"

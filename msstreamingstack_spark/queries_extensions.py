@@ -638,62 +638,28 @@ GROUP BY source, chunk_idx
     doc=f"Greedy sequence packing into {PACK_CAPACITY}-token training "
     "chunks: running token total per source shard (deterministic "
     "doc_id order), chunk index = pre-document total div capacity, "
-    "then per-chunk fill stats. One window shuffle on source at bench "
-    "SF; at corpus scale one source's slice is one task, so the "
-    "skew_robust twin decomposes the cumsum over (source, doc-range "
-    "bucket) — bit-identical, see operators/windows.py. The per-chunk "
-    "token sum may overshoot capacity by at most one document (greedy "
-    "semantics, documents not split).",
+    "then per-chunk fill stats. One window shuffle on source. The "
+    "per-chunk token sum may overshoot capacity by at most one document "
+    "(greedy semantics, documents not split).",
 )
-def q_pack_sequences(
-    spark: SparkSession, sf_dir: str, skew_robust: bool = False
-) -> DataFrame:
+def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = spread(load_table(spark, sf_dir, "documents"))
     toks = d.select(
         "doc_id", "source", token_count(F.col("text")).alias("n_tokens")
     )
-    if skew_robust:
-        # source cardinality is FIXED (a handful of domains) while
-        # rows grow with the corpus, so a window partitioned by bare
-        # source pins one source's entire corpus slice to one task at
-        # 100 TB — and windows, unlike joins, cannot be AQE-skew-split.
-        # The prefix sum decomposes exactly over (source, doc_id-range
-        # bucket): long partials re-add exactly (operators/windows.py),
-        # so the twin is bit-identical; parity + plan pinned in tests.
-        from msstreamingstack_spark.operators.windows import (
-            bucketed_running_sum,
-        )
-
-        cum = bucketed_running_sum(
-            toks,
-            "source",
-            ("doc_id",),
-            "n_tokens",
-            F.floor(F.col("doc_id") / 4096),
-            out="_cum",
-            prec="long",
-        )
-        packed = cum.withColumn(
-            "chunk_idx",
-            F.floor(
-                (F.col("_cum") - F.col("n_tokens")) / PACK_CAPACITY
-            ).cast("bigint"),
-        ).drop("_cum")
-    else:
-        w = (
-            Window.partitionBy("source")
-            .orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        packed = toks.withColumn(
-            "chunk_idx",
-            F.floor(
-                (F.sum("n_tokens").over(w) - F.col("n_tokens"))
-                / PACK_CAPACITY
-            ).cast("bigint"),
-        )
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    packed = toks.withColumn(
+        "chunk_idx",
+        F.floor(
+            (F.sum("n_tokens").over(w) - F.col("n_tokens")) / PACK_CAPACITY
+        ).cast("bigint"),
+    )
     return packed.groupBy("source", "chunk_idx").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").alias("chunk_tokens"),
@@ -755,39 +721,21 @@ GROUP BY source, block_id
     "single-partition shape that cannot exist at 100 TB) plus one "
     "keyed re-aggregation.",
 )
-def q_pack_blocks_fixed(
-    spark: SparkSession, sf_dir: str, skew_robust: bool = False
-) -> DataFrame:
+def q_pack_blocks_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"))
     toks = d.select(
         "doc_id",
         "source",
         (token_count(F.col("text")) + 1).alias("n_tokens"),
     )
-    if skew_robust:
-        # same decomposition as q_pack_sequences — see its comment
-        from msstreamingstack_spark.operators.windows import (
-            bucketed_running_sum,
-        )
-
-        spans = bucketed_running_sum(
-            toks,
-            "source",
-            ("doc_id",),
-            "n_tokens",
-            F.floor(F.col("doc_id") / 4096),
-            out="fin",
-            prec="long",
-        ).withColumn("st", F.col("fin") - F.col("n_tokens"))
-    else:
-        w = (
-            Window.partitionBy("source")
-            .orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        spans = toks.withColumn(
-            "fin", F.sum("n_tokens").over(w)
-        ).withColumn("st", F.col("fin") - F.col("n_tokens"))
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    spans = toks.withColumn("fin", F.sum("n_tokens").over(w)).withColumn(
+        "st", F.col("fin") - F.col("n_tokens")
+    )
     blocks = spans.withColumn(
         "block_id",
         F.explode(
@@ -948,13 +896,9 @@ SELECT lang, doc_id, sample_rank FROM r WHERE sample_rank <= {RESERVOIR_K}
     "and incremental loads (a new row only enters the reservoir by "
     "displacing the current max hash). The hash prefilter discards "
     f"~{100 - RESERVOIR_PREFILTER}%% of rows BEFORE the per-stratum "
-    "window shuffle — a constant fraction, not a bound, so the "
-    "skew_robust twin additionally salts the rank (topk_per_key_salted"
-    ") to cap the final per-stratum sort at p×k rows.",
+    "window shuffle.",
 )
-def q_sample_reservoir(
-    spark: SparkSession, sf_dir: str, skew_robust: bool = False
-) -> DataFrame:
+def q_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from msstreamingstack_spark.functions.text import hash48
@@ -964,25 +908,6 @@ def q_sample_reservoir(
     cand = d.select("lang", "doc_id", h.alias("h")).filter(
         (F.col("h") % 100) < RESERVOIR_PREFILTER
     )
-    if skew_robust:
-        # the % prefilter trims a constant FRACTION, so a stratum's
-        # candidate set still grows with the corpus and the bare
-        # partitionBy(lang) rank sorts it in one task; the salted twin
-        # bounds the final rank input at p×k rows per stratum — exact
-        # under the (h, doc_id) total order (operators/windows.py).
-        from msstreamingstack_spark.operators.windows import (
-            topk_per_key_salted,
-        )
-
-        ranked = topk_per_key_salted(
-            cand,
-            ("lang",),
-            ("h", "doc_id"),
-            RESERVOIR_K,
-            F.col("doc_id"),
-            out="sample_rank",
-        )
-        return ranked.select("lang", "doc_id", "sample_rank")
     w = Window.partitionBy("lang").orderBy("h", "doc_id")
     return (
         cand.withColumn("sample_rank", F.row_number().over(w))
@@ -1296,27 +1221,10 @@ GROUP BY doc_id
 """
 
 
-def bigram_lm_scores(d: DataFrame, skew_robust: bool = False) -> DataFrame:
+def bigram_lm_scores(d: DataFrame) -> DataFrame:
     """(doc_id, n_bigrams, bits_per_bigram) — the Spark twin of
     BIGRAM_LM_SQL (leave-one-out + Laplace; see the constant's comment
-    and q_quality_bigram_lm's docstring for the plan rationale).
-
-    ``skew_robust`` selects the corpus-scale plan (the house
-    skew-twin discipline, cf. sessionize_events_bucketed): the default
-    window plan computes c12/c1 with ``partitionBy(w1)`` over the FULL
-    bigram fold, so every row whose left word is a stopword lands in
-    ONE window task — bounded at bench SF (16x ratio 1.45) but growing
-    linearly with corpus size at 100 TB, and window partitions, unlike
-    join partitions, cannot be AQE-skew-split. The robust plan folds
-    c12 through a partial-aggregated groupBy (map-side combine bounds
-    hot keys at #tasks rows each), derives c1 as a window over the
-    COMPACT bigram-type table (a hot w1's partition is bounded by its
-    following-word vocabulary, never by corpus size), and joins back
-    on (w1, w2) where AQE skew-split applies. Same-session A/B x4 at
-    sf0.1: window 1.18-1.45 s vs hybrid 1.58-1.68 s, values
-    bit-identical (integer counts) — the ~25% premium at uniform bench
-    scale buys bounded partitions at any scale; parity and both plan
-    shapes are pinned in tests."""
+    and q_quality_bigram_lm's docstring for the plan rationale)."""
     from msstreamingstack_spark.caching import rotating_persist
     from msstreamingstack_spark.functions.text import doc_bigram_counts
 
@@ -1346,33 +1254,18 @@ def bigram_lm_scores(d: DataFrame, skew_robust: bool = False) -> DataFrame:
     # scalar |vocab(w2)| broadcast into every row (explicit-broadcast
     # scalar total — the house crossJoin discipline)
     vsz = dbc.agg(F.countDistinct("w2").alias("vsz"))
-    if skew_robust:
-        # corpus-scale shape: see the docstring. One partial-agg
-        # shuffle to the bigram-type table, c1 as a window over THAT
-        # (compact; hot-w1 partition <= following-word vocab), one
-        # AQE-skew-splittable join back; d1c stays doc-bounded.
-        c12t = dbc.groupBy("w1", "w2").agg(F.sum("c").alias("c12"))
-        c1w = c12t.withColumn(
-            "c1", F.sum("c12").over(Window.partitionBy("w1"))
-        )
-        scored = (
-            dbc.join(c1w, ["w1", "w2"])
-            .withColumn("d1c", F.sum("c").over(w_doc_w1))
-            .crossJoin(F.broadcast(vsz))
-        )
-    else:
-        w_w1 = Window.partitionBy("w1")
-        w_w1w2 = (
-            Window.partitionBy("w1")
-            .orderBy("w2")
-            .rangeBetween(Window.currentRow, Window.currentRow)
-        )
-        scored = (
-            dbc.withColumn("c12", F.sum("c").over(w_w1w2))
-            .withColumn("c1", F.sum("c").over(w_w1))
-            .withColumn("d1c", F.sum("c").over(w_doc_w1))
-            .crossJoin(F.broadcast(vsz))
-        )
+    w_w1 = Window.partitionBy("w1")
+    w_w1w2 = (
+        Window.partitionBy("w1")
+        .orderBy("w2")
+        .rangeBetween(Window.currentRow, Window.currentRow)
+    )
+    scored = (
+        dbc.withColumn("c12", F.sum("c").over(w_w1w2))
+        .withColumn("c1", F.sum("c").over(w_w1))
+        .withColumn("d1c", F.sum("c").over(w_doc_w1))
+        .crossJoin(F.broadcast(vsz))
+    )
     term = F.round(
         -F.log2(
             (F.col("c12") - F.col("c") + F.lit(1)).cast("double")
@@ -1846,50 +1739,22 @@ FROM c WHERE cum_tokens <= {QUALITY_BUDGET_PER_SOURCE}
     "by quality_bigram_lm). One extra shuffle over the plain "
     "sampler (the score join).",
 )
-def q_token_budget_quality_sample(
-    spark: SparkSession, sf_dir: str, skew_robust: bool = False
-) -> DataFrame:
+def q_token_budget_quality_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = spread(load_table(spark, sf_dir, "documents"))
     t = d.select(
         "doc_id", "source", token_count(F.col("text")).alias("n_tokens")
     ).join(
-        bigram_lm_scores(d, skew_robust=skew_robust).select(
-            "doc_id", "bits_per_bigram"
-        ),
+        bigram_lm_scores(d).select("doc_id", "bits_per_bigram"),
         "doc_id",
     )
-    if skew_robust:
-        # equi-depth score bands (scores cluster around the corpus
-        # mode, so fixed-width bands would not bound a hot band); see
-        # equidepth_bucket for why cutpoints never affect the values.
-        # Persist is load-bearing here: the frame embeds the bigram-LM
-        # join, and the cutpoint actions would otherwise re-run it
-        # twice more (measured 3.2x premium without, ~1.6x with).
-        from msstreamingstack_spark.caching import rotating_persist
-        from msstreamingstack_spark.operators.windows import (
-            bucketed_running_sum,
-            equidepth_bucket,
-        )
-
-        t = rotating_persist(t, "token_budget_quality.t")
-        cum = bucketed_running_sum(
-            t,
-            "source",
-            (F.col("bits_per_bigram").asc(), F.col("doc_id")),
-            "n_tokens",
-            equidepth_bucket(t, "bits_per_bigram"),
-            out="cum_tokens",
-            prec="long",
-        )
-    else:
-        w = (
-            Window.partitionBy("source")
-            .orderBy(F.col("bits_per_bigram").asc(), F.col("doc_id"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum = t.withColumn("cum_tokens", F.sum("n_tokens").over(w))
+    w = (
+        Window.partitionBy("source")
+        .orderBy(F.col("bits_per_bigram").asc(), F.col("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = t.withColumn("cum_tokens", F.sum("n_tokens").over(w))
     return cum.filter(
         F.col("cum_tokens") <= QUALITY_BUDGET_PER_SOURCE
     ).select("doc_id", "source", "n_tokens", "bits_per_bigram", "cum_tokens")
@@ -1918,35 +1783,16 @@ FROM r WHERE rnk <= {TOP_NGRAMS_K}
     doc=f"Top-{TOP_NGRAMS_K} word trigrams per language — corpus "
     "inspection surface (boilerplate and template text shows up as "
     "dominant n-grams). Partial-aggregated count, then a per-lang "
-    "top-k window over the ngram-type table (Heaps-law growth — the "
-    "skew_robust twin salts the rank, bit-identical); ties broken by "
-    "gram for determinism.",
+    "top-k window over the ngram-type table; ties broken by gram for "
+    "determinism.",
 )
-def q_top_ngrams_per_lang(
-    spark: SparkSession, sf_dir: str, skew_robust: bool = False
-) -> DataFrame:
+def q_top_ngrams_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = spread(load_table(spark, sf_dir, "documents"))
     g = d.select("lang", F.explode(shingles(F.col("text"))).alias("gram"))
     c = g.groupBy("lang", "gram").agg(F.count("*").alias("cnt"))
     order = (F.col("cnt").desc(), F.col("gram").asc())
-    if skew_robust:
-        # the count fold is partial-aggregated (safe), but the rank
-        # window's per-lang partition is the lang's ngram-type
-        # vocabulary — Heaps-law growth with the corpus, one task per
-        # language; the salted twin bounds the final rank at p×k rows
-        # per language (salt from the gram, a deterministic row key).
-        from msstreamingstack_spark.operators.windows import (
-            topk_per_key_salted,
-        )
-
-        ranked = topk_per_key_salted(
-            c, ("lang",), order, TOP_NGRAMS_K, F.xxhash64("gram"), out="_rnk"
-        )
-        return ranked.select(
-            "lang", "gram", "cnt", F.col("_rnk").cast("long").alias("rnk")
-        )
     w = Window.partitionBy("lang").orderBy(*order)
     return (
         c.withColumn("rnk", F.row_number().over(w).cast("long"))
@@ -1996,53 +1842,22 @@ FROM c WHERE cum_tokens <= {TOKEN_BUDGET_PER_SOURCE}
     doc=f"Token-budget subsampling: per source, keep the largest docs "
     f"(ties by id) until a {TOKEN_BUDGET_PER_SOURCE}-token budget is "
     "hit — the deterministic form of 'mix K tokens per domain' corpus "
-    "curation. One shuffle (window by source) at bench SF; the "
-    "skew_robust twin decomposes the cumsum over (source, length "
-    "band) for corpus scale — bit-identical. Integer sort keys only, "
+    "curation. One shuffle (window by source). Integer sort keys only, "
     "so ordering is exact cross-engine.",
 )
-def q_token_budget_sample(
-    spark: SparkSession, sf_dir: str, skew_robust: bool = False
-) -> DataFrame:
+def q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = spread(load_table(spark, sf_dir, "documents"))
     t = d.select(
         "doc_id", "source", token_count(F.col("text")).alias("n_tokens")
     )
-    if skew_robust:
-        # prefix decomposition over (source, equi-depth length band):
-        # document lengths CLUSTER, so fixed-width bands would leave a
-        # hot band corpus-sized — quantile cutpoints keep expected
-        # bucket depth constant as the data grows, and exactness never
-        # depends on where the cutpoints fall (see equidepth_bucket).
-        # Persist first: the cutpoint derivation is two extra actions
-        # (count + quantile sketch) over this frame — without the slot
-        # the token scan would run three times (measured 3.3x premium,
-        # 1.8x with it).
-        from msstreamingstack_spark.caching import rotating_persist
-        from msstreamingstack_spark.operators.windows import (
-            bucketed_running_sum,
-            equidepth_bucket,
-        )
-
-        t = rotating_persist(t, "token_budget_sample.t")
-        cum = bucketed_running_sum(
-            t,
-            "source",
-            (F.col("n_tokens").desc(), F.col("doc_id")),
-            "n_tokens",
-            equidepth_bucket(t, "n_tokens", descending=True),
-            out="cum_tokens",
-            prec="long",
-        )
-    else:
-        w = (
-            Window.partitionBy("source")
-            .orderBy(F.col("n_tokens").desc(), F.col("doc_id"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum = t.withColumn("cum_tokens", F.sum("n_tokens").over(w))
+    w = (
+        Window.partitionBy("source")
+        .orderBy(F.col("n_tokens").desc(), F.col("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = t.withColumn("cum_tokens", F.sum("n_tokens").over(w))
     return cum.filter(
         F.col("cum_tokens") <= TOKEN_BUDGET_PER_SOURCE
     ).select("doc_id", "source", "n_tokens", "cum_tokens")
@@ -3230,16 +3045,12 @@ FROM s
     "everything from the cleanest source and almost nothing from the "
     "noisiest; the calibrated gate keeps the same FRACTION of every "
     "source. One window shuffle partitioned by source — parallel "
-    "ACROSS sources, one task per source WITHIN, so the skew_robust "
-    "twin decomposes the rank over score bands for corpus scale "
-    "(bucketed_percent_rank, bit-identical); percent_rank is pure "
+    "ACROSS sources, one task per source WITHIN; percent_rank is pure "
     "integer-rank arithmetic (rank-1)/(n-1), bit-identical "
     "cross-engine; the doc_id tiebreak makes the ordering total so "
     "ranks are deterministic.",
 )
-def q_quality_source_calibrated(
-    spark: SparkSession, sf_dir: str, skew_robust: bool = False
-) -> DataFrame:
+def q_quality_source_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     from msstreamingstack_spark.functions.text import distinct_token_ratio
 
     d = spread(load_table(spark, sf_dir, "documents"))
@@ -3248,33 +3059,9 @@ def q_quality_source_calibrated(
         "source",
         distinct_token_ratio(F.col("text")).alias("score"),
     )
-    if skew_robust:
-        # the (doc_id tiebreak ⇒ total order) makes percent_rank the
-        # row_number form, which decomposes exactly over score bands
-        # (operators/windows.py::bucketed_percent_rank) — same integer
-        # rank arithmetic, same double bits; see q_pack_sequences for
-        # why bare partitionBy(source) cannot ship at corpus scale.
-        from msstreamingstack_spark.caching import rotating_persist
-        from msstreamingstack_spark.operators.windows import (
-            bucketed_percent_rank,
-            equidepth_bucket,
-        )
-
-        s = rotating_persist(s, "quality_source_calibrated.s")
-        ranked = bucketed_percent_rank(
-            s,
-            "source",
-            (F.col("score"), F.col("doc_id")),
-            equidepth_bucket(s, "score"),
-            out="_pr",
-        )
-        pr = F.col("_pr")
-        src = ranked
-    else:
-        w = Window.partitionBy("source").orderBy("score", "doc_id")
-        pr = F.percent_rank().over(w)
-        src = s
-    return src.select(
+    w = Window.partitionBy("source").orderBy("score", "doc_id")
+    pr = F.percent_rank().over(w)
+    return s.select(
         "doc_id",
         "source",
         F.round(F.col("score"), 9).alias("score"),

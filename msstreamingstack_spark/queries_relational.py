@@ -153,31 +153,9 @@ SELECT c_mktsegment, c_custkey, c_name, c_acctbal, rn FROM (
     "partition key; filter prunes to K rows per group before any "
     "further stage.",
 )
-def q_topk_per_segment(
-    spark: SparkSession, sf_dir: str, skew_robust: bool = False
-) -> DataFrame:
+def q_topk_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     order = (F.col("c_acctbal").desc(), F.col("c_custkey").asc())
-    if skew_robust:
-        # 5 segments over a growing customer table ⇒ a bare
-        # partitionBy(c_mktsegment) window sorts ~20% of ALL customers
-        # in one task at scale; the salted twin ranks p parallel
-        # slices then re-ranks at most p×k survivors per segment —
-        # exact under the total order (operators/windows.py).
-        from msstreamingstack_spark.operators.windows import (
-            topk_per_key_salted,
-        )
-
-        ranked = topk_per_key_salted(
-            c, ("c_mktsegment",), order, 3, F.col("c_custkey"), out="_rn"
-        )
-        return ranked.select(
-            "c_mktsegment",
-            "c_custkey",
-            "c_name",
-            "c_acctbal",
-            F.col("_rn").cast("long").alias("rn"),
-        )
     w = Window.partitionBy("c_mktsegment").orderBy(*order)
     return (
         c.withColumn("rn", F.row_number().over(w).cast("long"))

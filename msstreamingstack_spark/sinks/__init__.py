@@ -2,6 +2,5 @@ from msstreamingstack_spark.sinks.writers import (  # noqa: F401
     CollectingSink,
     cassandra_writer,
     console_sink,
-    parquet_append_writer,
     redis_writer,
 )

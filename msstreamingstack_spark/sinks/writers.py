@@ -28,19 +28,6 @@ def console_sink(df: DataFrame, batch_id: int) -> None:
     df.show(20, truncate=False)
 
 
-def parquet_append_writer(out_dir: str) -> Callable[[DataFrame, int], None]:
-    """K3 analogue: append-only history table. Batch-id subdirs make
-    re-delivered batches overwrite themselves → idempotent at-least-
-    once → effectively exactly-once history."""
-
-    def write(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-
-    return write
-
-
 class CollectingSink:
     """Test sink: captures each micro-batch's rows driver-side.
     (Test-only — a production sink never collects.)"""
@@ -112,7 +99,7 @@ def redis_writer(
             raise NotImplementedError(
                 "redis client not available in this environment; "
                 "pass client_factory= or use CollectingSink/"
-                "parquet_append_writer as the live sinks"
+                "TransactionalParquetSink as the live sinks"
             ) from e
 
         def client_factory():  # pragma: no cover - needs a server
@@ -305,9 +292,9 @@ class TransactionalParquetSink:
     """Exactly-once history sink with an explicit commit log — the
     Delta-transaction-lite pattern.
 
-    ``parquet_append_writer`` gets idempotence from batch-id subdir
-    overwrite; this sink adds an atomic *commit marker* so a batch is
-    either fully visible or not at all:
+    Batch-id subdir overwrite makes a re-delivered batch idempotent;
+    an atomic *commit marker* makes a batch either fully visible or
+    not at all:
 
     1. skip if ``_commits/<batchId>`` exists (foreachBatch redelivery
        after checkpoint recovery re-runs the last batch);

@@ -47,7 +47,12 @@ def _ts_is_parquet_timestamp(path: str) -> bool:
     timestamp (TIMESTAMP(MICROS); surfaces as timestamp_ntz on Spark
     4); the paced generator writes int64 nanos. A streaming source
     must declare ONE schema, so the dispatch happens here, driver-side,
-    at stream-definition time — a single footer read, no data scan."""
+    at stream-definition time — a single footer read, no data scan.
+
+    An empty directory means the producer's shape (int64 nanos): a
+    stream started before ``produce`` has written anything must read
+    the engine's own drops. Re-staged driver testdata must therefore
+    have a drop in place before the stream starts."""
     import glob
 
     import pyarrow as pa
@@ -55,7 +60,7 @@ def _ts_is_parquet_timestamp(path: str) -> bool:
 
     files = sorted(glob.glob(os.path.join(path, "*.parquet")))
     if not files:
-        return True  # empty dir: assume driver-testdata shape (timestamp ts)
+        return False
     return pa.types.is_timestamp(pq.read_schema(files[0]).field("ts").type)
 
 

@@ -566,33 +566,6 @@ def test_percentile_sketch_sample_properties(spark, sf_correctness):
             )
 
 
-def test_percentile_sketch_salted_twin_bit_identical(
-    spark, sf_correctness
-):
-    """The skew_robust=True form (topk_per_key_salted bottom-K, the
-    100 TB hot-type knob from the r10 verdict's task #5) must be
-    BIT-identical to the single-window default: (hv, event_id) is a
-    total order and the salt is a deterministic function of the row,
-    so the surviving sample — and every interpolated estimate — is the
-    same set."""
-    from msstreamingstack_spark.queries_advanced import (
-        q_percentile_event_values_sketch,
-    )
-
-    base = sorted(
-        map(tuple, q_percentile_event_values_sketch(
-            spark, sf_correctness
-        ).collect())
-    )
-    salted = sorted(
-        map(tuple, q_percentile_event_values_sketch(
-            spark, sf_correctness, skew_robust=True
-        ).collect())
-    )
-    assert base == salted
-    assert len(base) > 0
-
-
 def test_coreset_kcenter_matches_python_greedy(spark, sf_correctness):
     """Pure-Python greedy farthest-point model with the same
     round-then-exact-sum distance discipline must pick the same

@@ -35,7 +35,9 @@ def test_produce_consume_roundtrip(spark, tmp_path):
     )
     assert rc == 0
 
-    out = spark.read.parquet(hist)
+    from msstreamingstack_spark.sinks.writers import TransactionalParquetSink
+
+    out = TransactionalParquetSink(hist).read_committed(spark)
     assert out.count() == 20  # every produced event reached the sink
     assert "session_id" in out.columns
 
@@ -45,43 +47,6 @@ def test_query_subcommand_runs_and_unknown_rejected(spark, capsys):
     assert rc == 0
     rc = main(["query", "no_such_query_xyz"])
     assert rc == 2
-
-
-def test_query_skew_robust_flag(spark, capsys):
-    """--skew-robust selects the bounded-partition twin where one
-    exists and errors (exit 2) where the plan is already bounded."""
-    rc = main([
-        "query", "topk_customers_per_segment",
-        "--sf-dir", "/root/testdata/sf0.001", "--rows", "2",
-        "--skew-robust",
-    ])
-    assert rc == 0
-    rc = main([
-        "query", "tpch_q1",
-        "--sf-dir", "/root/testdata/sf0.001", "--skew-robust",
-    ])
-    assert rc == 2
-    assert "no skew_robust twin" in capsys.readouterr().err
-
-
-def test_query_skew_robust_auto_mode(spark, capsys):
-    """--skew-robust auto probes the top-key share and routes via the
-    measured crossover (operators/skew_dispatch.py); a query with no
-    dispatch entry errors BEFORE any session work (exit 2)."""
-    rc = main([
-        "query", "topk_customers_per_segment",
-        "--sf-dir", "/root/testdata/sf0.001", "--rows", "2",
-        "--skew-robust", "auto",
-    ])
-    assert rc == 0
-    err = capsys.readouterr().err
-    assert "top-key share" in err and "crossover" in err
-    rc = main([
-        "query", "tpch_q1",
-        "--sf-dir", "/root/testdata/sf0.001", "--skew-robust", "auto",
-    ])
-    assert rc == 2
-    assert "no skew auto-dispatch entry" in capsys.readouterr().err
 
 
 def test_cli_mv_and_compact(tmp_path, capsys):

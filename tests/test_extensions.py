@@ -3,8 +3,6 @@ exact jaccard agreement, and the multimodal plumbing."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from msstreamingstack_spark.extensions.multimodal import (
@@ -15,7 +13,6 @@ from msstreamingstack_spark.extensions.multimodal import (
     synthetic_media,
 )
 from msstreamingstack_spark.operators.dedup import (
-    exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
 )
@@ -315,103 +312,6 @@ def test_bigram_lm_ranks_gibberish_above_echoed_text(spark):
     assert got[100] > 0.5 * math.log2(max(v, 2))
     # echoed text is cheap: well under half the gibberish cost
     assert got[0] < got[100] / 2
-
-
-def test_bigram_lm_skew_robust_twin_is_bit_identical(spark, sf_correctness):
-    """The skew_robust corpus-scale plan (partial-agg + compact-window
-    + join) and the default window plan produce bit-identical rows —
-    both sum the same exact integer counts, so the only thing the flag
-    may change is the physical shape (pinned in test_plans)."""
-    import msstreamingstack_spark.queries  # noqa: F401 — full registry first
-    from msstreamingstack_spark.queries_extensions import bigram_lm_scores
-
-    d = load_table(spark, sf_correctness, "documents")
-    a = sorted(map(tuple, bigram_lm_scores(d).collect()))
-    b = sorted(map(tuple, bigram_lm_scores(d, skew_robust=True).collect()))
-    assert a == b and len(a) > 0
-
-
-@pytest.mark.slow
-def test_per_source_window_skew_robust_twins_bit_identical(
-    spark, sf_correctness
-):
-    """The five per-source corpus operators (greedy packing ×2, token
-    budget ×2, calibrated quality gate) window over partitionBy(source)
-    — source cardinality is fixed while rows grow, so each has a
-    skew_robust twin that decomposes the prefix sum / rank over
-    (source, bucket) via operators/windows.py. The decomposition is
-    exact (long partials; integer rank arithmetic), so each twin must
-    be BIT-identical to its default plan."""
-    import msstreamingstack_spark.queries  # noqa: F401 — full registry first
-    from msstreamingstack_spark.queries_extensions import (
-        q_pack_blocks_fixed,
-        q_pack_sequences,
-        q_quality_source_calibrated,
-        q_token_budget_quality_sample,
-        q_token_budget_sample,
-    )
-
-    for fn in (
-        q_pack_sequences,
-        q_pack_blocks_fixed,
-        q_token_budget_sample,
-        q_token_budget_quality_sample,
-        q_quality_source_calibrated,
-    ):
-        a = fn(spark, sf_correctness)
-        b = fn(spark, sf_correctness, skew_robust=True)
-        assert a.columns == b.columns, fn.__name__
-        ra = sorted(map(tuple, a.collect()))
-        rb = sorted(map(tuple, b.collect()))
-        assert ra == rb and len(ra) > 0, (
-            f"{fn.__name__}: twin diverged "
-            f"({len(ra)} vs {len(rb)} rows)"
-        )
-
-
-def test_exact_dedup_skew_robust_twin_bit_identical(spark, sf_correctness):
-    """exact_dedup's groupBy+join twin (hot-digest-safe: a viral page's
-    content group collapses map-side instead of buffering in one
-    window task) must flag the identical rows."""
-    docs = load_table(spark, sf_correctness, "documents")
-    a = sorted(map(tuple, exact_dedup(docs).collect()))
-    b = sorted(map(tuple, exact_dedup(docs, skew_robust=True).collect()))
-    assert a == b and len(a) > 0
-
-
-def test_topk_salted_twins_bit_identical(spark, sf_correctness):
-    """The four top-K-per-hot-key operators (segment top-3, posting
-    samples per term, reservoir per lang, top ngrams per lang) rank
-    with a window partitioned by a key whose slice grows with the
-    data; each has a skew_robust twin through
-    operators/windows.py::topk_per_key_salted (salted pre-rank →
-    ≤p×k survivors → exact re-rank). Under the queries' total orders
-    the twin must be BIT-identical."""
-    import msstreamingstack_spark.queries  # noqa: F401 — full registry first
-    from msstreamingstack_spark.queries_analytics import (
-        q_inverted_index_sampled,
-    )
-    from msstreamingstack_spark.queries_extensions import (
-        q_sample_reservoir,
-        q_top_ngrams_per_lang,
-    )
-    from msstreamingstack_spark.queries_relational import q_topk_per_segment
-
-    for fn in (
-        q_topk_per_segment,
-        q_inverted_index_sampled,
-        q_sample_reservoir,
-        q_top_ngrams_per_lang,
-    ):
-        a = fn(spark, sf_correctness)
-        b = fn(spark, sf_correctness, skew_robust=True)
-        assert a.columns == b.columns, fn.__name__
-        ra = sorted(map(tuple, a.collect()))
-        rb = sorted(map(tuple, b.collect()))
-        assert ra == rb and len(ra) > 0, (
-            f"{fn.__name__}: twin diverged "
-            f"({len(ra)} vs {len(rb)} rows)"
-        )
 
 
 def test_rotating_persist_bounds_registry_query_caches(spark):

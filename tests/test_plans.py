@@ -66,93 +66,6 @@ def test_bigram_lm_is_window_passes_not_rejoins(spark):
     )
 
 
-def test_bigram_lm_skew_robust_twin_plan_shape(spark):
-    """The corpus-scale twin (skew_robust=True) must NOT window the
-    full bigram fold by w1 (a stopword's partition grows with corpus
-    size and windows cannot be AQE-skew-split): c12 goes through a
-    partial-aggregated groupBy(w1, w2), c1 windows only the COMPACT
-    bigram-type table, and the fold is re-attached via an equi-join
-    (AQE-skew-splittable). Pin: exactly two Window nodes (compact c1,
-    doc-bounded d1c), a hash aggregate keyed on the bigram, no
-    Python."""
-    import re
-
-    from msstreamingstack_spark.queries_extensions import bigram_lm_scores
-    from msstreamingstack_spark.sources.tables import load_table
-
-    d = load_table(spark, SF, "documents")
-    f = plan_facts(bigram_lm_scores(d, skew_robust=True))
-    assert f.python_evals == 0
-    # formatted explain prints each physical node twice (tree + node
-    # detail section), so two Window NODES == exactly 4 regex hits —
-    # an inequality here would silently tolerate a third window (same
-    # x2 convention test_shuffle_budget_pins uses for Exchange).
-    assert len(re.findall(r"\bWindow\b", f.text)) == 4, f.text[:2000]
-    assert re.search(r"Keys \[2\]: \[w1#\d+, w2#\d+\]", f.text), (
-        "bigram-type partial aggregate missing:\n" + f.text[:2000]
-    )
-
-
-def test_per_source_skew_robust_twins_bucket_the_exchange(spark):
-    """Every skew_robust per-source twin must shuffle events on
-    (source, _bkt) — never a bare partitionBy(source) window over the
-    corpus-sized input (fixed source cardinality ⇒ one task per source
-    at 100 TB, and windows cannot be AQE-skew-split). Pin: the plan
-    aggregates/windows on the two-part key and stays JVM-side."""
-    import re
-
-    from msstreamingstack_spark.queries_extensions import (
-        q_pack_blocks_fixed,
-        q_pack_sequences,
-        q_quality_source_calibrated,
-        q_token_budget_quality_sample,
-        q_token_budget_sample,
-    )
-
-    for fn in (
-        q_pack_sequences,
-        q_pack_blocks_fixed,
-        q_token_budget_sample,
-        q_token_budget_quality_sample,
-        q_quality_source_calibrated,
-    ):
-        f = plan_facts(fn(spark, SF, skew_robust=True))
-        assert re.search(
-            r"Keys \[2\]: \[source#\d+, _bkt#\d+L?\]", f.text
-        ) or re.search(
-            r"windowspecdefinition\(source#\d+, _bkt#\d+L?,", f.text
-        ), f"{fn.__name__}: (source,_bkt) keyed pass missing\n" + f.text[:1500]
-
-
-def test_topk_salted_twins_salt_the_heavy_sort(spark):
-    """Each skew_robust top-K twin's heavy rank pass must be
-    partitioned (key, _salt) — the unsalted window may only appear
-    over the ≤p×k survivor set. Pin: a _salt-keyed window spec exists
-    and the plan stays JVM-side."""
-    import re
-
-    from msstreamingstack_spark.queries_analytics import (
-        q_inverted_index_sampled,
-    )
-    from msstreamingstack_spark.queries_extensions import (
-        q_sample_reservoir,
-        q_top_ngrams_per_lang,
-    )
-    from msstreamingstack_spark.queries_relational import q_topk_per_segment
-
-    for fn in (
-        q_topk_per_segment,
-        q_inverted_index_sampled,
-        q_sample_reservoir,
-        q_top_ngrams_per_lang,
-    ):
-        f = plan_facts(fn(spark, SF, skew_robust=True))
-        assert f.python_evals == 0
-        assert re.search(
-            r"windowspecdefinition\([^)]*_salt#\d+L?,", f.text
-        ), f"{fn.__name__}: salted rank pass missing\n" + f.text[:1500]
-
-
 def test_range_join_is_broadcast_not_cartesian(spark):
     f = plan_facts(REGISTRY["range_join_price_bands"].builder(spark, SF))
     assert "BroadcastNestedLoopJoin" in f.text

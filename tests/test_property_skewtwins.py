@@ -1,10 +1,9 @@
-"""Property tests for the round-7 skew-decomposition kernels
+"""Property tests for the skew-decomposition kernels
 (operators/windows.py): on random data with random bucket/salt
-granularity, each twin must be BIT-identical to the plain
+granularity, each kernel must be BIT-identical to the plain
 single-window form — the exactness claims (long partials re-add
-exactly; row_number under a total order is deterministic; the global
-top-k of a union is in the union of per-part top-ks) hold for every
-input, not just the fixtures."""
+exactly; the global top-k of a union is in the union of per-part
+top-ks) hold for every input, not just the fixtures."""
 
 from __future__ import annotations
 
@@ -14,7 +13,6 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import Window, functions as F
 
 from msstreamingstack_spark.operators.windows import (
-    bucketed_percent_rank,
     bucketed_running_sum,
     topk_per_key_salted,
 )
@@ -79,23 +77,6 @@ def test_bucketed_running_sum_matches_window(
 
 
 @settings(max_examples=25, deadline=None)
-@given(rows=rows_strategy, bucket_width=st.sampled_from([1, 4, 16, 1000]))
-def test_bucketed_percent_rank_matches_window(
-    spark_session_holder, rows, bucket_width
-):
-    spark = spark_session_holder
-    df = _df(spark, rows)
-    w = Window.partitionBy("k").orderBy("o", "rid")
-    plain = df.withColumn("pr", F.percent_rank().over(w))
-    twin = bucketed_percent_rank(
-        df, "k", ("o", "rid"), F.floor(F.col("o") / bucket_width), out="pr"
-    )
-    assert sorted(map(tuple, plain.select("rid", "pr").collect())) == sorted(
-        map(tuple, twin.select("rid", "pr").collect())
-    )
-
-
-@settings(max_examples=25, deadline=None)
 @given(
     rows=rows_strategy,
     k=st.sampled_from([1, 3, 7]),
@@ -123,107 +104,3 @@ def test_topk_per_key_salted_matches_window(
         map(tuple, plain.select("rid", "rn").collect())
     ) == sorted(map(tuple, twin.select("rid", "rn").collect()))
 
-
-# ---------------------------------------------------------------------------
-# equidepth_bucket: monotone along the order direction (the ONLY
-# property the prefix decomposition needs), binary-search tree form
-# equals the brute-force cutpoint count, and NULLs land on the end of
-# the order that Spark's default null placement gives them
-# (asc_nulls_first / desc_nulls_last).
-# ---------------------------------------------------------------------------
-
-values_strategy = st.lists(
-    st.one_of(
-        st.none(),
-        st.floats(
-            min_value=-1000, max_value=1000,
-            allow_nan=False, allow_infinity=False,
-        ),
-    ),
-    min_size=1,
-    max_size=60,
-)
-
-
-def _vdf(spark, values):
-    return spark.createDataFrame(
-        [(float(v) if v is not None else None, i)
-         for i, v in enumerate(values)],
-        "x double, rid long",
-    )
-
-
-@settings(max_examples=20, deadline=None)
-@given(values=values_strategy, descending=st.booleans())
-def test_equidepth_bucket_monotone_and_null_placement(
-    spark_session_holder, values, descending
-):
-    from msstreamingstack_spark.operators.windows import equidepth_bucket
-
-    spark = spark_session_holder
-    df = _vdf(spark, values)
-    b = equidepth_bucket(
-        df, "x", descending=descending, target_rows=1, min_q=4, max_q=16
-    )
-    order = F.col("x").desc() if descending else F.col("x").asc()
-    got = (
-        df.withColumn("b", b)
-        .orderBy(order, F.col("rid"))
-        .select("b")
-        .collect()
-    )
-    seq = [r["b"] for r in got]
-    # monotone non-decreasing along the window order — NULLs included
-    # (they sort first under asc, last under desc, and the bucket
-    # expression pins them to 0 / terminal respectively)
-    assert all(a <= c for a, c in zip(seq, seq[1:])), seq
-
-
-@settings(max_examples=20, deadline=None)
-@given(values=values_strategy, descending=st.booleans())
-def test_equidepth_bucket_tree_equals_bruteforce(
-    spark_session_holder, values, descending
-):
-    """The when-tree is pure plumbing: for non-null values its bucket
-    must equal the brute-force count of qualifying cutpoints (the
-    pre-round-8 array-scan semantics)."""
-    from msstreamingstack_spark.operators.windows import equidepth_bucket
-
-    spark = spark_session_holder
-    df = _vdf(spark, values)
-    b = equidepth_bucket(
-        df, "x", descending=descending, target_rows=1, min_q=4, max_q=16
-    )
-    # recompute the cutpoints exactly as the kernel does
-    n = df.count()
-    q = int(min(16, max(4, n // 1)))
-    probs = [i / q for i in range(1, q)]
-    cuts = sorted(set(df.approxQuantile("x", probs, 0.001))) if probs else []
-    rows = df.withColumn("b", b).collect()
-    for r in rows:
-        if r["x"] is None:
-            assert r["b"] == (len(cuts) if descending else 0)
-        elif descending:
-            assert r["b"] == sum(1 for c in cuts if c > r["x"])
-        else:
-            assert r["b"] == sum(1 for c in cuts if c < r["x"])
-
-
-def test_equidepth_bucket_large_q_plan_compiles_and_stays_monotone(
-    spark_session_holder,
-):
-    """The corpus-scale sizing path: a ~1000-cutpoint when-tree must
-    plan, codegen (or fall back) and evaluate correctly — the round-8
-    rewrite's O(log Q) claim is only worth having if large Q is
-    actually usable. 60k distinct-ish doubles, q=1024."""
-    from msstreamingstack_spark.operators.windows import equidepth_bucket
-
-    spark = spark_session_holder
-    df = spark.range(60_000).select(
-        (F.col("id") % 9_777 * 1.37).alias("x"), F.col("id").alias("rid")
-    )
-    b = equidepth_bucket(df, "x", target_rows=1, min_q=1024, max_q=1024)
-    got = df.withColumn("b", b).orderBy("x", "rid").select("b").collect()
-    seq = [r["b"] for r in got]
-    assert all(a <= c for a, c in zip(seq, seq[1:]))
-    assert len(set(seq)) > 500  # the tree really discriminates

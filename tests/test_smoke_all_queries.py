@@ -4,6 +4,7 @@ sf0.01 oracle tests wouldn't see."""
 
 from __future__ import annotations
 
+import inspect
 import os
 
 import pytest
@@ -15,7 +16,10 @@ SF_TINY = "/root/testdata/sf0.001"
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_runs_at_tiny_sf(spark, name):
-    df = REGISTRY[name].builder(spark, SF_TINY)
+    # one plan per query: a builder takes no plan-selecting parameter
+    builder = REGISTRY[name].builder
+    assert list(inspect.signature(builder).parameters) == ["spark", "sf_dir"]
+    df = builder(spark, SF_TINY)
     rows = df.limit(5).collect()
     assert df.columns, name
     assert rows is not None

@@ -149,11 +149,13 @@ def test_manifest_jsonl_sink_append_merges_and_overwrite_replaces(
 def test_export_cli_manifest_roundtrip(spark, tmp_path):
     """`export <query> --format manifest_jsonl` publishes the query
     result through the Python DataSource sink with a complete
-    manifest."""
+    manifest; the parquet format publishes exactly the registry
+    builder's rows."""
     import json as _json
     import os as _os
 
     from msstreamingstack_spark.__main__ import main as cli_main
+    from msstreamingstack_spark.queries import REGISTRY
     from msstreamingstack_spark.sources.pysink import MANIFEST
 
     out = str(tmp_path / "exp")
@@ -165,25 +167,14 @@ def test_export_cli_manifest_roundtrip(spark, tmp_path):
     man = _json.load(open(_os.path.join(out, MANIFEST)))
     assert man["n_rows"] > 0 and man["files"]
 
-
-def test_export_cli_skew_robust_twin_parquet(spark, tmp_path):
-    """--skew-robust publishes through the bounded-partition twin and
-    the parquet result matches the default plan's rows exactly."""
-    from msstreamingstack_spark.__main__ import main as cli_main
-
-    a, b = str(tmp_path / "plain"), str(tmp_path / "robust")
-    for out, extra in ((a, []), (b, ["--skew-robust"])):
-        rc = cli_main([
-            "export", "token_budget_sample",
-            "--sf-dir", "/root/testdata/sf0.001", "--out", out,
-        ] + extra)
-        assert rc == 0
-    pa = sorted(map(tuple, spark.read.parquet(a).collect()))
-    pb = sorted(map(tuple, spark.read.parquet(b).collect()))
-    assert pa == pb and len(pa) > 0
-    # no twin -> clear error, nothing written
+    out = str(tmp_path / "exp_parquet")
     rc = cli_main([
-        "export", "tpch_q1", "--sf-dir", "/root/testdata/sf0.001",
-        "--out", str(tmp_path / "no"), "--skew-robust",
+        "export", "token_budget_sample",
+        "--sf-dir", "/root/testdata/sf0.001", "--out", out,
     ])
-    assert rc == 1
+    assert rc == 0
+    got = sorted(map(tuple, spark.read.parquet(out).collect()))
+    want = REGISTRY["token_budget_sample"].builder(
+        spark, "/root/testdata/sf0.001"
+    )
+    assert got == sorted(map(tuple, want.collect())) and len(got) > 0

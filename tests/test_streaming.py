@@ -254,16 +254,46 @@ def test_generator_feeds_pipeline(spark, tmp_path):
 
 
 def test_parquet_sink_idempotent_on_redelivery(spark, tmp_path):
-    """K3 exactly-once: re-running a batch id overwrites, not appends."""
-    from msstreamingstack_spark.sinks.writers import parquet_append_writer
+    """K3 exactly-once: a redelivered batch id is written once, and a
+    batch directory without a commit marker (a torn write) stays
+    invisible to readers."""
+    from msstreamingstack_spark.sinks.writers import TransactionalParquetSink
 
-    out = str(tmp_path / "hist")
-    write = parquet_append_writer(out)
+    sink = TransactionalParquetSink(str(tmp_path / "hist"))
     df = spark.range(5).withColumnRenamed("id", "event_id")
-    write(df, batch_id=7)
-    write(df, batch_id=7)  # redelivery of the same epoch
-    got = spark.read.parquet(out + "/batch_id=7")
-    assert got.count() == 5
+    sink(df, batch_id=7)
+    sink(df, batch_id=7)  # redelivery of the same epoch
+    df.write.parquet(os.path.join(sink.data_dir, "batch_id=8"))
+    assert sink.committed_ids() == [7]
+    assert sink.read_committed(spark).count() == 5
+
+
+def test_stream_started_on_empty_dir_reads_producer_drops(spark, tmp_path):
+    """``consume`` started before ``produce``: the stream's ``ts`` type
+    is fixed when the query starts, so an empty source directory must
+    declare the producer's int64-nanos shape, not the timestamp one."""
+    from msstreamingstack_spark.sinks.writers import TransactionalParquetSink
+    from msstreamingstack_spark.sources.generator import drop_batches
+
+    src = tmp_path / "drops"
+    src.mkdir()
+    sink = TransactionalParquetSink(str(tmp_path / "hist"))
+    q = run_pipeline(
+        spark,
+        str(src),
+        checkpoint_dir=str(tmp_path / "cp_empty"),
+        sinks=[sink],
+        available_now=False,
+    )
+    try:
+        (drop,) = drop_batches(str(tmp_path / "staging"), 1, batch_size=10)
+        os.rename(drop, src / os.path.basename(drop))
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    rows = sink.read_committed(spark).collect()
+    assert sorted(r.event_id for r in rows) == list(range(10))
+    assert all(r.session_id for r in rows)
 
 
 @pytest.mark.slow

@@ -28,32 +28,18 @@ from __future__ import annotations
 
 import argparse
 import sys
-import time
 
 
 def _cmd_produce(args: argparse.Namespace) -> int:
     from msstreamingstack_spark.sources.generator import drop_batches
 
-    if args.sleep > 0:
-        # paced mode: one drop per sleep interval (the reference's
-        # counter+Thread.sleep loop, App.scala:40-48)
-        for b in range(args.batches):
-            drop_batches(
-                args.out,
-                n_batches=1,
-                batch_size=args.batch_size,
-                t0_sec=b * args.gap_sec,
-            )
-            print(f"dropped batch {b + 1}/{args.batches}", file=sys.stderr)
-            if b < args.batches - 1:
-                time.sleep(args.sleep)
-    else:
-        drop_batches(
-            args.out,
-            n_batches=args.batches,
-            batch_size=args.batch_size,
-            gap_sec=args.gap_sec,
-        )
+    drop_batches(
+        args.out,
+        n_batches=args.batches,
+        batch_size=args.batch_size,
+        gap_sec=args.gap_sec,
+        sleep_sec=args.sleep,
+    )
     print(f"wrote {args.batches} drops to {args.out}")
     return 0
 
@@ -71,8 +57,7 @@ def _cmd_consume(args: argparse.Namespace) -> int:
 
     spark = get_spark(app_name="msstreamingstack-consume")
     spark.sparkContext.setLogLevel("WARN")
-    if args.rocksdb:
-        use_rocksdb_state(spark)
+    use_rocksdb_state(spark)
     sinks = []
     if args.console:
         sinks.append(console_sink)
@@ -316,43 +301,25 @@ def _cmd_ann(args: argparse.Namespace) -> int:
 
 
 def _cmd_fit_pinned(args: argparse.Namespace) -> int:
-    """Refit a pinned serving model (textclf / pca) and write its JSON.
+    """Refit the pinned PCA serving model and write its JSON.
 
-    The committed resources/*.json are the models the registry serves;
-    this reproduces them (fit at --sf-dir, default the sf0.01 oracle
-    fixture). Refits are deterministic up to float reduction order —
-    the committed pin, not the refit, is the source of truth."""
+    The committed resources/pca_pinned.json is the model the registry
+    serves; this reproduces it (fit at --sf-dir, default the sf0.01
+    oracle fixture). Refits are deterministic up to float reduction
+    order — the committed pin, not the refit, is the source of truth."""
     import json
 
+    from msstreamingstack_spark.operators.pca import fit_pca_pinned
     from msstreamingstack_spark.session import get_spark
     from msstreamingstack_spark.sources.tables import load_table
 
     spark = get_spark(app_name="msstreamingstack-fit")
     spark.sparkContext.setLogLevel("WARN")
-    if args.model == "textclf":
-        from msstreamingstack_spark.operators.textclf import fit_nb_pinned
-
-        pin = fit_nb_pinned(
-            load_table(spark, args.sf_dir, "documents"),
-            buckets=args.buckets,
-            meta={"fit_sf": args.sf_dir, "task": "en-vs-rest"},
-        )
-    elif args.model == "bpe":
-        from msstreamingstack_spark.operators.bpe import fit_bpe_pinned
-
-        pin = fit_bpe_pinned(
-            load_table(spark, args.sf_dir, "documents"),
-            rounds=args.rounds,
-            meta={"fit_sf": args.sf_dir},
-        )
-    else:
-        from msstreamingstack_spark.operators.pca import fit_pca_pinned
-
-        pin = fit_pca_pinned(
-            load_table(spark, args.sf_dir, "embeddings"),
-            q=args.q,
-            meta={"fit_sf": args.sf_dir},
-        )
+    pin = fit_pca_pinned(
+        load_table(spark, args.sf_dir, "embeddings"),
+        q=args.q,
+        meta={"fit_sf": args.sf_dir},
+    )
     with open(args.out, "w") as fh:
         json.dump(pin, fh, indent=1)
     print(f"pinned {args.model} model -> {args.out}")
@@ -531,7 +498,6 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--gap-sec", type=int, default=1800)
     c.add_argument("--once", action="store_true",
                    help="Trigger.AvailableNow: drain pending input, then stop")
-    c.add_argument("--rocksdb", action="store_true", help="RocksDB state store")
     c.set_defaults(fn=_cmd_consume)
 
     q = sub.add_parser("query", help="run a registered named query")
@@ -582,15 +548,12 @@ def main(argv: list[str] | None = None) -> int:
 
     fp = sub.add_parser(
         "fit-pinned",
-        help="refit a pinned serving model (textclf/pca/bpe) and write "
-        "its JSON",
+        help="refit a pinned serving model (pca) and write its JSON",
     )
-    fp.add_argument("model", choices=("textclf", "pca", "bpe"))
+    fp.add_argument("model", choices=("pca",))
     fp.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     fp.add_argument("--out", required=True)
-    fp.add_argument("--buckets", type=int, default=1024, help="textclf buckets")
     fp.add_argument("--q", type=int, default=4, help="pca components")
-    fp.add_argument("--rounds", type=int, default=12, help="bpe merge rounds")
     fp.set_defaults(fn=_cmd_fit_pinned)
 
     sq = sub.add_parser("sql", help="run ad-hoc SQL over the fixture tables")

@@ -17,12 +17,6 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 TOKEN_RE = r"\S+"
-# BPE-ish segmentation: word pieces or single non-space punctuation
-BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-STOPWORDS: tuple[str, ...] = (
-    "the", "a", "of", "and", "to", "in", "is", "it", "for", "on",
-)
 
 # Tiny per-language stopword profiles for the n-gram/stopword language
 # heuristic. Precedence order breaks score ties deterministically.
@@ -55,26 +49,6 @@ def tokens(text: Column) -> Column:
 
 def tokens_sql(text_sql: str) -> str:
     return f"string_split({text_sql}, chr(32))"
-
-
-def stop_count(text: Column) -> Column:
-    toks = tokens(text)
-    stop = F.array(*[F.lit(s) for s in STOPWORDS])
-    return F.size(F.filter(toks, lambda x: F.array_contains(stop, x)))
-
-
-def stop_count_sql(text_sql: str) -> str:
-    lst = ", ".join(f"'{s}'" for s in STOPWORDS)
-    return (
-        f"length(list_filter({tokens_sql(text_sql)}, "
-        f"x -> list_contains([{lst}], x)))"
-    )
-
-
-def profile_score(text: Column, words: tuple[str, ...]) -> Column:
-    toks = tokens(text)
-    prof = F.array(*[F.lit(s) for s in words])
-    return F.size(F.filter(toks, lambda x: F.array_contains(prof, x)))
 
 
 def profile_score_sql(text_sql: str, words: tuple[str, ...]) -> str:
@@ -236,28 +210,8 @@ def char_trigrams_sql(text_sql: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Quality signals: repetition + cleaning
+# Quality signals: repetition
 # ---------------------------------------------------------------------------
-HTML_TAG_RE = "<[^>]+>"
-MULTISPACE_RE = "\\s+"
-
-
-def clean_text(text: Column) -> Column:
-    """Normalization pass for scraped corpora: strip markup tags,
-    collapse whitespace runs, trim. Pure JVM regex — runs inside the
-    scan's codegen stage at 100 TB."""
-    stripped = F.regexp_replace(text, HTML_TAG_RE, " ")
-    collapsed = F.regexp_replace(stripped, MULTISPACE_RE, " ")
-    return F.trim(collapsed)
-
-
-def clean_text_sql(text_sql: str) -> str:
-    return (
-        f"trim(regexp_replace(regexp_replace({text_sql}, '{HTML_TAG_RE}', "
-        f"' ', 'g'), '{MULTISPACE_RE}', ' ', 'g'))"
-    )
-
-
 def distinct_token_ratio(text: Column) -> Column:
     """|unique tokens| / |tokens| — low values flag degenerate
     repetition (gopher-style quality signal)."""

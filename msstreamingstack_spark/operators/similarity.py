@@ -719,15 +719,6 @@ def _plane(p: int) -> list[float]:
     return vals
 
 
-def _plane_matrix():
-    """DIM × (N_TABLES·PLANES_PER_TABLE) plane matrix, built once per
-    executor (closure-captured, broadcast with the UDF)."""
-    import numpy as np
-
-    n_planes = N_TABLES * PLANES_PER_TABLE
-    return np.array([_plane(p) for p in range(n_planes)], dtype="float64").T
-
-
 def srp_buckets(
     vec_col: Column,
     n_tables: int | None = None,

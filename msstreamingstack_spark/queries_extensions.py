@@ -13,9 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from msstreamingstack_spark.functions.text import (
-    BPE_RE,
     char_trigrams_sql,
-    clean_text_sql,
     distinct_token_ratio_sql,
     dup_ngram_fraction_sql,
     hash48_sql,
@@ -24,8 +22,6 @@ from msstreamingstack_spark.functions.text import (
     md5_hex,
     shingles,
     shingles_sql,
-    stop_count,
-    stop_count_sql,
     token_count,
     token_count_sql,
 )
@@ -64,64 +60,8 @@ N_QUERY_VECS = 10
 
 
 # ---------------------------------------------------------------------------
-# Text analysis
+# Document fingerprints
 # ---------------------------------------------------------------------------
-@register(
-    "text_stats",
-    f"""
-SELECT doc_id, lang, source,
-       length(text) AS char_len,
-       {token_count_sql('text')} AS n_tokens,
-       {token_count_sql('text', BPE_RE)} AS n_bpe_tokens,
-       {stop_count_sql('text')} AS n_stopwords,
-       CAST({stop_count_sql('text')} AS DOUBLE)
-         / CAST({token_count_sql('text')} AS DOUBLE) AS stop_ratio,
-       CAST(length(text) AS DOUBLE)
-         / CAST({token_count_sql('text')} AS DOUBLE) AS avg_token_len
-FROM documents
-""",
-    tags=("extension", "text"),
-    doc="Per-document quality features: char/token/BPE-ish token "
-    "counts, stopword ratio, mean token length — all JVM-side regex/"
-    "array expressions, no UDFs.",
-)
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spread(load_table(spark, sf_dir, "documents"))
-    text = F.col("text")
-    n_tok = token_count(text)
-    n_stop = stop_count(text)
-    return d.select(
-        "doc_id",
-        "lang",
-        "source",
-        F.length(text).alias("char_len"),
-        n_tok.alias("n_tokens"),
-        token_count(text, BPE_RE).alias("n_bpe_tokens"),
-        n_stop.alias("n_stopwords"),
-        (n_stop.cast("double") / n_tok.cast("double")).alias("stop_ratio"),
-        (F.length(text).cast("double") / n_tok.cast("double")).alias("avg_token_len"),
-    )
-
-
-@register(
-    "langid_heuristic",
-    f"""
-SELECT doc_id, lang AS lang_label, {langid_pred_sql('text')} AS lang_pred
-FROM documents
-""",
-    tags=("extension", "text", "langid"),
-    doc="Stopword-profile language heuristic (argmax over per-language "
-    "profiles, deterministic tie-break by profile precedence).",
-)
-def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spread(load_table(spark, sf_dir, "documents"))
-    return d.select(
-        "doc_id",
-        F.col("lang").alias("lang_label"),
-        langid_pred(F.col("text")).alias("lang_pred"),
-    )
-
-
 @register(
     "doc_fingerprints",
     f"""
@@ -340,33 +280,6 @@ def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         dup_ngram_fraction(text, 2).alias("dup_bigram_frac"),
         tri.alias("dup_trigram_frac"),
         ((dtr >= 0.3) & (tri <= 0.5)).alias("passes_quality"),
-    )
-
-
-@register(
-    "text_cleaning",
-    f"""
-SELECT doc_id,
-       {clean_text_sql('text')} AS cleaned,
-       length({clean_text_sql('text')}) AS cleaned_len,
-       length(text) AS raw_len
-FROM documents
-""",
-    tags=("extension", "text", "cleaning"),
-    doc="Markup-strip + whitespace-collapse normalization (the "
-    "ingest-side cleaning pass of a training-data pipeline); JVM "
-    "regex only.",
-)
-def q_text_cleaning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.functions.text import clean_text
-
-    d = spread(load_table(spark, sf_dir, "documents"))
-    cleaned = clean_text(F.col("text"))
-    return d.select(
-        "doc_id",
-        cleaned.alias("cleaned"),
-        F.length(cleaned).alias("cleaned_len"),
-        F.length("text").alias("raw_len"),
     )
 
 
@@ -764,109 +677,12 @@ def q_pack_blocks_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PII scrubbing, stratified sampling, shard assignment — the remaining
-# bookkeeping operators a pretraining corpus build needs between
-# cleaning and shard write-out. All three are pure narrow expression
-# maps plus at most one keyed window shuffle, so they compose into the
-# scan stage of a larger pipeline at 100 TB.
+# Stratified sampling, shard assignment — the remaining bookkeeping
+# operators a pretraining corpus build needs before shard write-out.
+# Both are pure narrow expression maps plus at most one keyed window
+# shuffle, so they compose into the scan stage of a larger pipeline at
+# 100 TB.
 # ---------------------------------------------------------------------------
-PII_EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-PII_URL_RE = "https?://[A-Za-z0-9./_-]+"
-PII_PHONE_RE = "\\+\\d[\\d-]{6,}\\d"
-
-# The synthetic corpus is PII-free word salad, so the query first
-# injects deterministic synthetic PII (a pure function of doc_id) into
-# ~3/7 of the rows; the scrub regexes are then genuinely exercised and
-# the oracle checks both the counts and the redacted text bit-exactly.
-_PII_AUG_SQL = """
-SELECT doc_id,
-       text || CASE
-         WHEN doc_id % 7 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR)
-              || '@example.com for info'
-         WHEN doc_id % 7 = 3 THEN ' see https://data.example.org/doc/'
-              || CAST(doc_id AS VARCHAR) || ' online'
-         WHEN doc_id % 7 = 5 THEN ' call +1-555-'
-              || lpad(CAST(doc_id % 1000 AS VARCHAR), 4, '0') || ' soon'
-         ELSE '' END AS text
-FROM documents
-"""
-
-
-@register(
-    "pii_scrub",
-    f"""
-WITH aug AS ({_PII_AUG_SQL})
-SELECT doc_id,
-       len(regexp_extract_all(text, '{PII_EMAIL_RE}')) AS n_emails,
-       len(regexp_extract_all(text, '{PII_URL_RE}')) AS n_urls,
-       len(regexp_extract_all(text, '{PII_PHONE_RE}')) AS n_phones,
-       regexp_replace(
-         regexp_replace(
-           regexp_replace(text, '{PII_EMAIL_RE}', '<EMAIL>', 'g'),
-           '{PII_URL_RE}', '<URL>', 'g'),
-         '{PII_PHONE_RE}', '<PHONE>', 'g') AS clean_text
-FROM aug
-""",
-    tags=("extension", "pipeline", "text"),
-    doc="PII redaction pass: email/URL/phone detection counts plus "
-    "redacted text, as three chained JVM-side regexp_replace calls "
-    "(RE2-compatible patterns, identical semantics in DuckDB with "
-    "the 'g' flag). A narrow per-row map — fuses into the scan, no "
-    "shuffle, no UDF. Synthetic PII is injected deterministically "
-    "because the fixture corpus contains none.",
-)
-def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spread(load_table(spark, sf_dir, "documents"))
-    aug = d.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 7 == 0,
-                F.concat(
-                    F.lit(" contact user"),
-                    F.col("doc_id").cast("string"),
-                    F.lit("@example.com for info"),
-                ),
-            )
-            .when(
-                F.col("doc_id") % 7 == 3,
-                F.concat(
-                    F.lit(" see https://data.example.org/doc/"),
-                    F.col("doc_id").cast("string"),
-                    F.lit(" online"),
-                ),
-            )
-            .when(
-                F.col("doc_id") % 7 == 5,
-                F.concat(
-                    F.lit(" call +1-555-"),
-                    F.lpad((F.col("doc_id") % 1000).cast("string"), 4, "0"),
-                    F.lit(" soon"),
-                ),
-            )
-            .otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    t = F.col("text")
-    clean = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(t, PII_EMAIL_RE, "<EMAIL>"),
-            PII_URL_RE,
-            "<URL>",
-        ),
-        PII_PHONE_RE,
-        "<PHONE>",
-    )
-    return aug.select(
-        "doc_id",
-        F.regexp_count(t, F.lit(PII_EMAIL_RE)).alias("n_emails"),
-        F.regexp_count(t, F.lit(PII_URL_RE)).alias("n_urls"),
-        F.regexp_count(t, F.lit(PII_PHONE_RE)).alias("n_phones"),
-        clean.alias("clean_text"),
-    )
-
-
 RESERVOIR_K = 50
 RESERVOIR_PREFILTER = 40  # keep hash%100 < 40 before the exact window
 
@@ -1760,47 +1576,6 @@ def q_token_budget_quality_sample(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select("doc_id", "source", "n_tokens", "bits_per_bigram", "cum_tokens")
 
 
-TOP_NGRAMS_K = 5
-
-
-@register(
-    "top_ngrams_per_lang",
-    f"""
-WITH g AS (
-  SELECT lang, unnest({shingles_sql('text')}) AS gram FROM documents
-),
-c AS (SELECT lang, gram, COUNT(*) AS cnt FROM g GROUP BY lang, gram),
-r AS (
-  SELECT lang, gram, cnt,
-         ROW_NUMBER() OVER (PARTITION BY lang
-                            ORDER BY cnt DESC, gram ASC) AS rnk
-  FROM c
-)
-SELECT lang, gram, cnt, CAST(rnk AS BIGINT) AS rnk
-FROM r WHERE rnk <= {TOP_NGRAMS_K}
-""",
-    tags=("extension", "text", "analytics"),
-    doc=f"Top-{TOP_NGRAMS_K} word trigrams per language — corpus "
-    "inspection surface (boilerplate and template text shows up as "
-    "dominant n-grams). Partial-aggregated count, then a per-lang "
-    "top-k window over the ngram-type table; ties broken by gram for "
-    "determinism.",
-)
-def q_top_ngrams_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    d = spread(load_table(spark, sf_dir, "documents"))
-    g = d.select("lang", F.explode(shingles(F.col("text"))).alias("gram"))
-    c = g.groupBy("lang", "gram").agg(F.count("*").alias("cnt"))
-    order = (F.col("cnt").desc(), F.col("gram").asc())
-    w = Window.partitionBy("lang").orderBy(*order)
-    return (
-        c.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_NGRAMS_K)
-        .select("lang", "gram", "cnt", "rnk")
-    )
-
-
 @register(
     "embedding_quantize_int8",
     quantize_int8_sql(),
@@ -2344,12 +2119,11 @@ CMS_DEPTH = 4
 
 
 def _cms_bucket_sql(expr: str, depth: int) -> str:
-    # independent rows via salted md5 — same idiom as the engine's
-    # bucket hash, one hash per sketch row
-    return (
-        f"TRY_CAST(('0x' || substr(md5('r{depth}:' || {expr}), 1, 8)) "
-        f"AS BIGINT) % {CMS_WIDTH}"
-    )
+    # independent rows via salted md5: the engine's bucket hash, one
+    # salt per sketch row
+    from msstreamingstack_spark.streaming.heavy_hitters import bucket_hash_sql
+
+    return bucket_hash_sql(f"'r{depth}:' || {expr}", CMS_WIDTH)
 
 
 @register(
@@ -2402,7 +2176,7 @@ def q_sketch_countmin_user_events(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from msstreamingstack_spark.caching import rotating_persist
-    from msstreamingstack_spark.operators.textclf import bucket_hash
+    from msstreamingstack_spark.streaming.heavy_hitters import bucket_hash
 
     ev = rotating_persist(
         spread(load_table(spark, sf_dir, "events")).select(
@@ -2571,42 +2345,6 @@ def q_quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         p_rep.alias("pass_repetition"),
         (p_wc & p_len & p_alpha & p_stop & p_rep).alias("gopher_pass"),
     )
-
-
-# ---------------------------------------------------------------------------
-# fastText-style pinned hashed linear classifier (langid/quality gate)
-# ---------------------------------------------------------------------------
-def _textclf_pinned_oracle() -> str:
-    from msstreamingstack_spark.operators.textclf import score_pinned_sql
-
-    return score_pinned_sql()
-
-
-@register(
-    "langid_fasttext_hashed",
-    _textclf_pinned_oracle(),
-    tags=("extension", "pipeline", "quality", "langid", "classifier"),
-    doc="fastText-style hashed linear classifier, served from the "
-    "PINNED model (resources/fasttext_pinned.json — closed-form NB "
-    "log-count-ratio over md5-hashed unigram+bigram buckets, fitted "
-    "once at sf0.01; Joulin et al. 2016 / Wang & Manning 2012). The "
-    "demonstration task is en-vs-rest (the fixture's five languages "
-    "share ONE vocabulary — frequency profiles alone give ~83% vs a "
-    "56% base rate, floor pytest-pinned); with wiki-vs-crawl labels "
-    "the identical kernel is the CCNet/LLaMA quality gate. Plan: ONE "
-    "tokenize feeding unigram+bigram explodes folded to per-(doc, "
-    "bucket) counts, broadcast join on the B-row weight table (B=1024 "
-    "here, 2M in production fastText — still broadcastable at any "
-    "corpus size), round-then-DECIMAL dot product + DECIMAL bias — "
-    "zero corpus-sized shuffles beyond the feature fold, no Python. "
-    "Complements langid_heuristic (rules) with the learned-model "
-    "serving shape. Ref has no corpus surface (SURVEY.md §2.5 ABSENT) "
-    "— north-star extension.",
-)
-def q_langid_fasttext_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.textclf import score_pinned
-
-    return score_pinned(spread(load_table(spark, sf_dir, "documents")))
 
 
 # ---------------------------------------------------------------------------
@@ -2795,8 +2533,8 @@ def q_entity_match_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 # excerpt/quote signal. A 50-token excerpt inside a 400-token parent
 # has jaccard ≈ 0.12 (invisible to every whole-doc near-dup kernel)
 # but containment ≈ 1.0. The fixture corpus has no excerpts, so the
-# query deterministically DERIVES them (pii_scrub precedent: inject
-# the phenomenon as a pure function of doc_id so the oracle agrees).
+# query deterministically DERIVES them: it injects the phenomenon as
+# a pure function of doc_id so the oracle agrees.
 # ---------------------------------------------------------------------------
 CONTAIN_MOD = 37
 CONTAIN_T = 0.9
@@ -2914,101 +2652,6 @@ def q_dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Vocabulary coverage — OOV statistics against a pinned top-N corpus
-# vocabulary (tokenizer-budget planning: which sources will shatter
-# into byte-fallback tokens).
-# ---------------------------------------------------------------------------
-VOCAB_SIZE = 16
-
-
-@register(
-    "vocab_oov_coverage",
-    f"""
-WITH toks AS (
-  SELECT doc_id, source, unnest(string_split(text, chr(32))) AS w
-  FROM documents
-),
-tc AS (SELECT doc_id, source, w, COUNT(*) AS c FROM toks GROUP BY 1, 2, 3),
-freq AS (SELECT w, CAST(SUM(c) AS BIGINT) AS cnt FROM tc GROUP BY w),
-vocab AS (SELECT w FROM freq ORDER BY cnt DESC, w LIMIT {VOCAB_SIZE}),
-d AS (
-  SELECT tc.doc_id, tc.source,
-         CAST(SUM(tc.c) AS BIGINT) AS n_toks,
-         CAST(SUM(CASE WHEN v.w IS NULL THEN tc.c ELSE 0 END) AS BIGINT)
-           AS n_oov
-  FROM tc LEFT JOIN vocab v ON tc.w = v.w
-  GROUP BY 1, 2
-)
-SELECT source, COUNT(*) AS n_docs,
-       CAST(SUM(n_toks) AS BIGINT) AS total_tokens,
-       CAST(SUM(n_oov) AS BIGINT) AS oov_tokens,
-       round(CAST(SUM(n_oov) AS DOUBLE) / CAST(SUM(n_toks) AS DOUBLE), 9)
-         AS oov_rate,
-       CAST(SUM(CASE WHEN n_oov * 2 > n_toks THEN 1 ELSE 0 END) AS BIGINT)
-         AS high_oov_docs
-FROM d GROUP BY source
-""",
-    tags=("extension", "text", "vocab", "pipeline"),
-    doc=f"Vocabulary coverage: per-source out-of-vocabulary token "
-    f"statistics against the corpus' own top-{VOCAB_SIZE} word "
-    "vocabulary (count-desc, word-asc total tiebreak — fully "
-    "deterministic; the budget sits BELOW the fixture's 31-word "
-    "observed vocabulary so a real OOV tail exists at every SF). The "
-    "tokenizer-planning signal: a source whose "
-    "high_oov_docs count is large will shatter into fallback tokens "
-    "and blow its token budget. Plan: per-(doc, word) counts fold "
-    "the explode once; the corpus frequency table re-aggregates "
-    "those counts; the vocabulary is a BOUNDED sort-limit "
-    f"(top-{VOCAB_SIZE} — a driver-bounded TakeOrdered, never a "
-    "global sort) and joins back as a broadcast; one keyed "
-    "re-aggregation per doc then per source. Everything integer "
-    "until the final rate division.",
-)
-def q_vocab_oov_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.functions.text import tokens
-
-    d = spread(load_table(spark, sf_dir, "documents"))
-    tc = (
-        d.select(
-            "doc_id", "source", F.explode(tokens(F.col("text"))).alias("w")
-        )
-        .groupBy("doc_id", "source", "w")
-        .agg(F.count("*").alias("c"))
-    )
-    freq = tc.groupBy("w").agg(F.sum("c").cast("long").alias("cnt"))
-    vocab = (
-        freq.orderBy(F.col("cnt").desc(), F.col("w"))
-        .limit(VOCAB_SIZE)
-        .select("w", F.lit(1).alias("in_vocab"))
-    )
-    per_doc = (
-        tc.join(F.broadcast(vocab), "w", "left")
-        .groupBy("doc_id", "source")
-        .agg(
-            F.sum("c").cast("long").alias("n_toks"),
-            F.sum(
-                F.when(F.col("in_vocab").isNull(), F.col("c")).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_oov"),
-        )
-    )
-    return per_doc.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_toks").cast("long").alias("total_tokens"),
-        F.sum("n_oov").cast("long").alias("oov_tokens"),
-        F.round(
-            F.sum("n_oov").cast("double") / F.sum("n_toks").cast("double"), 9
-        ).alias("oov_rate"),
-        F.sum(
-            F.when(F.col("n_oov") * 2 > F.col("n_toks"), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("high_oov_docs"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Per-source quality calibration — the cross-source comparability fix:
 # raw quality scores are not comparable between a forum crawl and an
 # encyclopedia, so each source is converted to its own percentile
@@ -3067,322 +2710,6 @@ def q_quality_source_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("score"), 9).alias("score"),
         F.round(pr, 9).alias("pct_rank"),
         F.when(pr >= CALIB_KEEP_PCT, 1).otherwise(0).cast("long").alias("keep"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# BPE tokenizer training (learn merges on the vocab, segment the corpus)
-# ---------------------------------------------------------------------------
-from msstreamingstack_spark.operators.bpe import (  # noqa: E402
-    BPE_ROUNDS,
-    bpe_learn_merges_sql,
-    bpe_segment_corpus_sql,
-)
-
-
-@register(
-    "bpe_learn_merges",
-    bpe_learn_merges_sql(BPE_ROUNDS),
-    tags=("extension", "pipeline", "tokenizer", "iterative"),
-    doc=f"BPE tokenizer TRAINING (Sennrich et al. 2016), {BPE_ROUNDS} "
-    "merge rounds: the learned (round, pair, merged, weighted-count) "
-    "merge table. One corpus pass builds the (word, count) vocab — "
-    "bounded by the language (~10^6-10^7 words at 100 TB), not the "
-    "corpus — and the merge loop then runs DRIVER-SIDE on that "
-    "bounded artifact with incremental pair counts (bpe_train_local: "
-    "O(1) Spark jobs for any vocab size; the r8 one-job-per-merge "
-    "loop is kept as the bit-parity oracle, and an exact distributed "
-    "batched trainer exists for vocabs too big to collect). Leftmost-"
-    "greedy merge + (count DESC, l, r) tie-break make every round "
-    "bit-exact cross-engine — the oracle replays the identical fold "
-    "through chained materialized CTEs.",
-)
-def q_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.bpe import bpe_learn_merges
-
-    return bpe_learn_merges(spread(load_table(spark, sf_dir, "documents")))
-
-
-@register(
-    "bpe_segment_corpus",
-    bpe_segment_corpus_sql(BPE_ROUNDS),
-    tags=("extension", "pipeline", "tokenizer", "iterative"),
-    doc="TRAIN+APPLY DEMO (one query does both; production serving "
-    "is bpe_segment_pinned): segment every document with the merges "
-    "learned in the same plan and report true subword token counts "
-    "(doc_id, n_words, n_bpe_tokens) — the honest token accounting "
-    "the mixing/packing/budget family approximates with regex "
-    "tokenization. The segmentation map is vocab-sized -> BROADCAST; "
-    "the corpus pays one explode + one per-doc aggregate on top of "
-    "the (now driver-side, O(1)-job) training loop.",
-)
-def q_bpe_segment_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.bpe import bpe_segment_corpus
-
-    return bpe_segment_corpus(spread(load_table(spark, sf_dir, "documents")))
-
-
-def _bpe_pinned_sql() -> str:
-    from msstreamingstack_spark.operators.bpe import bpe_segment_pinned_sql
-
-    return bpe_segment_pinned_sql()
-
-
-@register(
-    "bpe_segment_pinned",
-    _bpe_pinned_sql(),
-    tags=("extension", "pipeline", "tokenizer", "pinned"),
-    doc="The SERVING form of the tokenizer: segment with the PINNED "
-    "merge table (resources/bpe_pinned.json, the fasttext/pca/ivf "
-    "discipline) — no training loop, no driver actions, no iterative "
-    "jobs. The whole pinned merge chain is ONE projection of chained "
-    "JVM folds over the DISTINCT vocab (never per word occurrence), "
-    "then a broadcast join back and one per-doc aggregate. Unlike "
-    "the float-fitted pins this one is bit-deterministic to refit "
-    "(exact integer counts + lexicographic tie-break). Output is "
-    "pytest-pinned equal to bpe_segment_corpus on the fit corpus.",
-)
-def q_bpe_segment_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.bpe import bpe_segment_pinned
-
-    return bpe_segment_pinned(spread(load_table(spark, sf_dir, "documents")))
-
-
-# ---------------------------------------------------------------------------
-# Curriculum schedule (round 9) — cumulative easy-to-hard epochs by
-# token-length difficulty, the standard text proxy (Bengio et al. 2009
-# curriculum learning; Llama-style anneal phases are the same shape
-# with quality as the key). The interesting part is the PLAN: epoch
-# membership needs each doc's EXACT GLOBAL difficulty rank, and a
-# global row_number window is a single task at any scale. Instead the
-# rank decomposes distributedly: a token-count histogram (cardinality
-# bounded by max document length, so its prefix-sum window is tiny)
-# gives each n_tokens value its start rank, and a row_number
-# partitioned by n_tokens (bounded tie groups) finishes it —
-# grank = hist_prefix(n_tokens) + rn_within(n_tokens). The same
-# order-statistics decomposition serves any global-rank need at
-# 100 TB. NTILE-compatible cutoffs: epoch e covers ranks
-# <= e*(N/3) + min(e, N mod 3) — exact integers, both engines.
-# ---------------------------------------------------------------------------
-CURRICULUM_EPOCHS = 3
-
-
-@register(
-    "curriculum_epoch_schedule",
-    f"""
-WITH t AS (
-  SELECT doc_id, {token_count_sql('text')} AS n_tokens FROM documents
-),
-h AS (SELECT n_tokens, COUNT(*) AS c FROM t GROUP BY n_tokens),
-hp AS (
-  SELECT n_tokens,
-         COALESCE(SUM(c) OVER (ORDER BY n_tokens
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND 1 PRECEDING), 0) AS prefix
-  FROM h
-),
-r AS (
-  SELECT t.doc_id, t.n_tokens,
-         hp.prefix + ROW_NUMBER() OVER (PARTITION BY t.n_tokens
-                                        ORDER BY t.doc_id) AS grank
-  FROM t JOIN hp USING (n_tokens)
-),
-n AS (SELECT COUNT(*) AS nn FROM t),
-e(epoch) AS (VALUES (1), (2), (3)),
-c AS (
-  SELECT epoch, epoch * (nn // {CURRICULUM_EPOCHS})
-           + LEAST(epoch, nn % {CURRICULUM_EPOCHS}) AS cutoff
-  FROM e, n
-),
-a AS (
-  SELECT c.epoch, COUNT(*) AS n_docs,
-         CAST(SUM(r.n_tokens) AS BIGINT) AS sum_tokens,
-         CAST(MAX(r.n_tokens) AS BIGINT) AS max_tokens
-  FROM c JOIN r ON r.grank <= c.cutoff
-  GROUP BY c.epoch
-)
-SELECT CAST(epoch AS BIGINT) AS epoch, n_docs, sum_tokens, max_tokens,
-       CAST(n_docs - COALESCE(LAG(n_docs) OVER (ORDER BY epoch), 0)
-            AS BIGINT) AS n_new_docs
-FROM a
-""",
-    tags=("extension", "pipeline", "curriculum", "sampling"),
-    doc="Cumulative curriculum/anneal schedule: docs ranked easy->hard "
-    f"by (n_tokens, doc_id), {CURRICULUM_EPOCHS} NTILE-compatible "
-    "tranches, epoch e trains on tranches 1..e; per-epoch doc/token "
-    "totals and the per-epoch increment. The global difficulty rank "
-    "is computed WITHOUT a single-task global window: histogram "
-    "prefix (bounded by max doc length) + per-n_tokens row_number — "
-    "the distributed order-statistics pattern any exact global rank "
-    "uses at corpus scale. Epoch fan-out is a 3-row broadcast "
-    "nested-loop, bounded by the epoch count.",
-)
-def q_curriculum_epoch_schedule(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    d = spread(load_table(spark, sf_dir, "documents"))
-    t = d.select("doc_id", token_count(F.col("text")).alias("n_tokens"))
-    h = t.groupBy("n_tokens").agg(F.count("*").alias("c"))
-    hp = h.select(
-        "n_tokens",
-        F.coalesce(
-            F.sum("c").over(
-                Window.orderBy("n_tokens").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
-        ).alias("prefix"),
-    )
-    r = (
-        t.join(F.broadcast(hp), "n_tokens")
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("n_tokens").orderBy("doc_id")
-            ),
-        )
-        .select("n_tokens", (F.col("prefix") + F.col("rn")).alias("grank"))
-    )
-    n = t.agg(F.count("*").alias("nn"))
-    e = spark.range(1, CURRICULUM_EPOCHS + 1).select(
-        F.col("id").alias("epoch")
-    )
-    c = (
-        e.crossJoin(F.broadcast(n))
-        .select(
-            "epoch",
-            (
-                F.col("epoch") * F.floor(F.col("nn") / CURRICULUM_EPOCHS)
-                + F.least(F.col("epoch"), F.col("nn") % CURRICULUM_EPOCHS)
-            ).alias("cutoff"),
-        )
-    )
-    a = (
-        F.broadcast(c)
-        .join(r, F.col("grank") <= F.col("cutoff"))
-        .groupBy("epoch")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("sum_tokens"),
-            F.max("n_tokens").cast("long").alias("max_tokens"),
-        )
-    )
-    return a.select(
-        "epoch",
-        "n_docs",
-        "sum_tokens",
-        "max_tokens",
-        (
-            F.col("n_docs")
-            - F.coalesce(
-                F.lag("n_docs").over(Window.orderBy("epoch")), F.lit(0)
-            )
-        )
-        .cast("long")
-        .alias("n_new_docs"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Corpus n-gram novelty — per-doc fraction of shingles FIRST seen in
-# that doc (by doc_id order), the marginal-contribution curve behind
-# "is scraping more of this source still adding new text".
-# ---------------------------------------------------------------------------
-NOVELTY_N = 5
-
-
-@register(
-    "ngram_novelty_score",
-    f"""
-WITH s AS (
-  SELECT doc_id, unnest({shingles_sql("text", NOVELTY_N)}) AS sh
-  FROM documents
-),
-first AS (SELECT sh, MIN(doc_id) AS first_doc FROM s GROUP BY sh),
-per AS (
-  SELECT s.doc_id, COUNT(*) AS total_shingles,
-         SUM(CASE WHEN f.first_doc = s.doc_id THEN 1 ELSE 0 END)
-           AS novel_shingles
-  FROM s JOIN first f ON s.sh = f.sh GROUP BY 1
-)
-SELECT d.doc_id, d.lang,
-       COALESCE(p.total_shingles, 0) AS total_shingles,
-       COALESCE(p.novel_shingles, 0) AS novel_shingles,
-       COALESCE(p.novel_shingles * 100 // p.total_shingles, 100)
-         AS novelty_pct
-FROM documents d LEFT JOIN per p USING (doc_id)
-""",
-    tags=("extension", "text", "dedup", "pipeline", "novelty"),
-    doc=f"Per-doc novelty: the fraction of its distinct word "
-    f"{NOVELTY_N}-gram shingles whose FIRST corpus occurrence (min "
-    "doc_id — ingestion order) is this doc. The aggregate novelty "
-    "curve over ingestion order is the diminishing-returns signal "
-    "data-sourcing decisions use ('another crawl of this domain adds "
-    "2% new text'), and per-doc it is a boilerplate detector that "
-    "needs no pairwise comparison at all — a TEMPLATE dedup "
-    "complement to minhash (a doc of entirely-seen shingles is a "
-    "near-dup of the corpus prefix even if no single doc matches "
-    "it). 100 TB: shingle explode is linear, first-occurrence MIN is "
-    "map-combined into one shuffle on the shingle key, the "
-    "attribution join is keyed on the same shingle (no fan-out — one "
-    "first_doc row per shingle), and the per-doc fold is a second "
-    "map-combined count; integer division keeps it hash-exact. "
-    "Extension (SURVEY.md SS2.5: no text-analysis surface in the "
-    "reference).",
-)
-def q_ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
-    s = docs.select(
-        "doc_id",
-        F.explode(shingles(F.col("text"), NOVELTY_N)).alias("sh"),
-    )
-    # first-occurrence attribution as a WINDOW MIN over one exchange on
-    # sh instead of groupBy(sh) + join-back of the raw occurrence table
-    # (the join re-exchanged every occurrence row a second time):
-    # interleaved A/B at sf0.1 1.52 -> 0.74 s, values identical. The
-    # exchange partitions the same occurrence rows by the same key as
-    # the old join's probe side, but BUFFERING differs (ADVICE r11):
-    # WindowExec buffers each same-hash group in one task with no
-    # partial aggregation, where the old groupBy side map-combined — a
-    # globally hot shingle hash would spill one task here. If hot-hash
-    # skew shows up at larger SF, the fallback shape is the
-    # pre-aggregated groupBy(sh).min + broadcast of the (tiny) dup-key
-    # set. (Same trade in the min!=max rewrites: substring_dup_spans,
-    # chunk_dup_fraction.)
-    per = (
-        s.withColumn(
-            "first_doc", F.min("doc_id").over(Window.partitionBy("sh"))
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("total_shingles"),
-            F.sum(
-                F.when(
-                    F.col("first_doc") == F.col("doc_id"), F.lit(1)
-                ).otherwise(F.lit(0))
-            ).alias("novel_shingles"),
-        )
-    )
-    return (
-        docs.select("doc_id", "lang")
-        .join(per, "doc_id", "left")
-        .select(
-            "doc_id",
-            "lang",
-            F.coalesce(F.col("total_shingles"), F.lit(0)).alias(
-                "total_shingles"
-            ),
-            F.coalesce(F.col("novel_shingles"), F.lit(0)).alias(
-                "novel_shingles"
-            ),
-            F.coalesce(
-                F.expr("novel_shingles * 100 div total_shingles"),
-                F.lit(100),
-            ).alias("novelty_pct"),
-        )
     )
 
 

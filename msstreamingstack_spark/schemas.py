@@ -32,48 +32,6 @@ CLICKSTREAM_SCHEMA = T.StructType(
     ]
 )
 
-# F2: per-user state row (reference StructuredStreaming.scala:123-139).
-# Typed where the reference was stringly (msg_date/last_visit epoch secs,
-# cart_amt amount); a compat cast layer can stringify for bit-parity.
-USER_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("u_id", T.StringType()),
-        T.StructField("tstamp", T.LongType()),
-        T.StructField("msg_date", T.LongType()),
-        T.StructField("usr_agent", T.StringType()),
-        T.StructField("prtnr_id", T.StringType()),
-        T.StructField("prtnr_name", T.StringType()),
-        T.StructField("sess_id", T.StringType()),
-        T.StructField("pg_type", T.StringType()),
-        T.StructField("ctgry", T.StringType()),
-        T.StructField("cart_amt", T.DoubleType()),
-        T.StructField("pltfrm", T.StringType()),
-        T.StructField("last_visit", T.LongType()),
-        T.StructField("user_device", T.StringType()),
-    ]
-)
-
-# F3: processed/history output row (reference README.md:35-52 DDL,
-# CassandraSinkForeachProcessed.scala:22-34)
-PROCESSED_SCHEMA = T.StructType(
-    [
-        T.StructField("ts", T.LongType()),
-        T.StructField("user_id", T.StringType()),
-        T.StructField("message_date", T.LongType()),
-        T.StructField("user_agent", T.StringType()),
-        T.StructField("partner_id", T.StringType()),
-        T.StructField("partner_name", T.StringType()),
-        T.StructField("init_session", T.BooleanType()),
-        T.StructField("session_id", T.StringType()),
-        T.StructField("page_type", T.StringType()),
-        T.StructField("category", T.StringType()),
-        T.StructField("cart_amount", T.DoubleType()),
-        T.StructField("platform", T.StringType()),
-        T.StructField("last_visited", T.LongType()),
-        T.StructField("user_device", T.StringType()),
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Driver testdata tables (/root/testdata/sf*/; TESTDATA.md). `events.ts`
 # is parquet TIMESTAMP(MICROS) in the driver files (reads back as

@@ -2,14 +2,15 @@
 (App.scala:29-50 + GetProducerAPI.scala: file → micro-batched Kafka
 sends, 3 records per 5 s). Here: deterministic event batches dropped
 as parquet files for the file-stream source; the pacing knobs
-(batch_size, the caller's sleep) mirror the reference's counter+sleep
-loop. With a Kafka broker, swap the writer for
-``df.write.format("kafka")`` — the batching logic is identical.
+(batch_size, sleep_sec) mirror the reference's counter+sleep loop.
+With a Kafka broker, swap the writer for ``df.write.format("kafka")``
+— the batching logic is identical.
 """
 
 from __future__ import annotations
 
 import os
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -43,18 +44,26 @@ def drop_batches(
     batch_size: int = 3,
     t0_sec: int = 0,
     gap_sec: int = 300,
+    sleep_sec: float = 0.0,
 ) -> list[str]:
     """Write n_batches parquet drops (the producer's '3 records then
-    flush' loop, App.scala:40-44). Returns the file paths in order."""
+    flush' loop, App.scala:40-44), sleeping ``sleep_sec`` between drops
+    (its Thread.sleep, App.scala:45-48). Each drop is written to a
+    hidden temp file and renamed into place, so a running stream never
+    lists a half-written file. Returns the file paths in order."""
     os.makedirs(out_dir, exist_ok=True)
     paths = []
     for b in range(n_batches):
+        if b and sleep_sec > 0:
+            time.sleep(sleep_sec)
         rows = event_batch(
             start_id=b * batch_size,
             n=batch_size,
             t0_sec=t0_sec + b * gap_sec,
         )
-        path = os.path.join(out_dir, f"drop-{b:05d}.parquet")
+        name = f"drop-{b:05d}.parquet"
+        path = os.path.join(out_dir, name)
+        tmp = os.path.join(out_dir, f".{name}.tmp")
         pq.write_table(
             pa.table(
                 {
@@ -65,7 +74,8 @@ def drop_batches(
                     for k in ("event_id", "ts", "user_id", "event_type", "value", "props")
                 }
             ),
-            path,
+            tmp,
         )
+        os.replace(tmp, path)
         paths.append(path)
     return paths

@@ -36,7 +36,7 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -49,6 +49,21 @@ from pyspark.sql.types import (
 
 HH_BUCKETS = 32
 HH_CAPACITY = 8
+
+
+def bucket_hash(col: Column, buckets: int) -> Column:
+    """md5-derived bucket id — bit-exact with the DuckDB twin
+    :func:`bucket_hash_sql` (both take the top 32 hash bits, so the
+    value fits a BIGINT and the modulo is on the same non-negative
+    integer)."""
+    return (
+        F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint") % buckets
+    )
+
+
+def bucket_hash_sql(expr: str, buckets: int) -> str:
+    return f"TRY_CAST(('0x' || substr(md5({expr}), 1, 8)) AS BIGINT) % {buckets}"
+
 
 _HH_OUT = StructType(
     [
@@ -133,8 +148,6 @@ def bucketed_sketches(
     rows. The bucket id is a stable hash partition of the key space
     (pmod of the md5-derived bucket hash — NOT Spark's ``hash()``,
     whose seed semantics shouldn't leak into state layout)."""
-    from msstreamingstack_spark.operators.textclf import bucket_hash
-
     keyed = events.select(
         "event_id",
         F.col(key_col).cast("string").alias("k"),

@@ -196,7 +196,7 @@ ROCKSDB_PROVIDER = (
 )
 
 
-def use_rocksdb_state(spark: SparkSession, changelog: bool = True) -> None:
+def use_rocksdb_state(spark: SparkSession) -> None:
     """Back all stateful streaming operators with RocksDB.
 
     The default HDFS-backed state store keeps every key in executor
@@ -217,7 +217,7 @@ def use_rocksdb_state(spark: SparkSession, changelog: bool = True) -> None:
     )
     spark.conf.set(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true" if changelog else "false",
+        "true",
     )
 
 

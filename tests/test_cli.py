@@ -40,6 +40,26 @@ def test_produce_consume_roundtrip(spark, tmp_path):
     out = TransactionalParquetSink(hist).read_committed(spark)
     assert out.count() == 20  # every produced event reached the sink
     assert "session_id" in out.columns
+    # consume always runs on RocksDB; the offset log records the provider
+    with open(os.path.join(cp, "cp", "offsets", "0")) as fh:
+        assert "RocksDBStateStoreProvider" in fh.read()
+
+
+def test_paced_produce_writes_the_same_drops(tmp_path):
+    """``produce --sleep`` writes the drops unpaced ``produce`` writes:
+    the same file names, the same rows, and no temp file left over."""
+    import pyarrow.parquet as pq
+
+    args = ["--batches", "3", "--batch-size", "4"]
+    assert main(["produce", "--out", str(tmp_path / "fast"), *args]) == 0
+    paced = ["--sleep", "0.01"]
+    assert main(["produce", "--out", str(tmp_path / "paced"), *args, *paced]) == 0
+    names = sorted(os.listdir(tmp_path / "fast"))
+    assert names == [f"drop-{b:05d}.parquet" for b in range(3)]
+    assert sorted(os.listdir(tmp_path / "paced")) == names
+    for name in names:
+        fast = pq.read_table(tmp_path / "fast" / name)
+        assert pq.read_table(tmp_path / "paced" / name).equals(fast), name
 
 
 def test_query_subcommand_runs_and_unknown_rejected(spark, capsys):

@@ -860,45 +860,6 @@ def test_quality_source_calibrated_gate(spark, sf_correctness):
         )
 
 
-def test_vocab_oov_coverage_matches_counter_model(spark, sf_correctness):
-    """Per-source token totals and OOV counts must match a Python
-    Counter model using the same top-N (count desc, word asc)
-    vocabulary."""
-    from collections import Counter, defaultdict
-
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_extensions import VOCAB_SIZE
-
-    docs = load_table(spark, sf_correctness, "documents").select(
-        "doc_id", "source", "text"
-    ).collect()
-    freq = Counter()
-    for r in docs:
-        freq.update(r["text"].split(" "))
-    vocab = {
-        w for w, _ in sorted(freq.items(), key=lambda kv: (-kv[1], kv[0]))[:VOCAB_SIZE]
-    }
-    tot = defaultdict(lambda: [0, 0, 0, 0])  # docs, toks, oov, high
-    for r in docs:
-        ws = r["text"].split(" ")
-        oov = sum(1 for w in ws if w not in vocab)
-        s = tot[r["source"]]
-        s[0] += 1
-        s[1] += len(ws)
-        s[2] += oov
-        s[3] += 1 if oov * 2 > len(ws) else 0
-    got = {
-        r["source"]: r
-        for r in REGISTRY["vocab_oov_coverage"].builder(spark, sf_correctness).collect()
-    }
-    assert set(got) == set(tot)
-    for src, (nd, nt, no, hi) in tot.items():
-        g = got[src]
-        assert (g["n_docs"], g["total_tokens"], g["oov_tokens"], g["high_oov_docs"]) == (nd, nt, no, hi)
-    # the word-salad corpus must actually have an OOV tail
-    assert sum(r["oov_tokens"] for r in got.values()) > 0
-
-
 def test_containment_pairs_catch_excerpts_jaccard_misses(spark, sf_correctness):
     """Every injected excerpt must be flagged as contained in its
     parent; flagged pairs must be invisible to the jaccard kernel
@@ -949,11 +910,8 @@ def test_registry_metadata_consistency(spark):
             ))
             # every base-table reference must be a fixture table or a
             # CTE defined inside the oracle itself
-            # AS ( | AS MATERIALIZED ( — the BPE oracles pin their
-            # round CTEs materialized (exponential-inlining guard)
             ctes = set(_re.findall(
-                r"([a-z_][a-z0-9_]*)\s*(?:\([^)]*\))?\s+AS\s*"
-                r"(?:MATERIALIZED\s*)?\(",
+                r"([a-z_][a-z0-9_]*)\s*(?:\([^)]*\))?\s+AS\s*\(",
                 spec.oracle,
             ))
             unknown = refs - tables - ctes
@@ -999,46 +957,6 @@ def test_cluster_balanced_sampler_keeps_rare_cells_whole(spark):
         per_cell[r["cell"]] = per_cell.get(r["cell"], 0) + 1
     assert per_cell[0] == 3              # rare: all kept
     assert per_cell[1] == CLUSTER_SAMPLE_K  # dense: cut to budget
-
-
-def test_ngram_novelty_invariants(spark, sf_correctness):
-    """Conservation + boundary invariants for ngram_novelty_score:
-    summed novel_shingles == number of DISTINCT shingles in the corpus
-    (each shingle is novel exactly once, at its min doc_id); the
-    earliest doc with any shingles scores 100; novelty_pct is the
-    exact integer floor of novel*100/total."""
-    from msstreamingstack_spark.functions.text import shingles
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_extensions import NOVELTY_N
-    from msstreamingstack_spark.sources.tables import load_table
-
-    rows = REGISTRY["ngram_novelty_score"].builder(
-        spark, sf_correctness
-    ).collect()
-    docs = load_table(spark, sf_correctness, "documents")
-    n_docs = docs.count()
-    assert len(rows) == n_docs
-    distinct_corpus = (
-        docs.select(F.explode(shingles(F.col("text"), NOVELTY_N)).alias("sh"))
-        .distinct()
-        .count()
-    )
-    assert sum(r["novel_shingles"] for r in rows) == distinct_corpus
-    with_sh = sorted(
-        (r for r in rows if r["total_shingles"] > 0),
-        key=lambda r: r["doc_id"],
-    )
-    assert with_sh[0]["novel_shingles"] == with_sh[0]["total_shingles"]
-    assert with_sh[0]["novelty_pct"] == 100
-    for r in rows:
-        if r["total_shingles"]:
-            assert (
-                r["novelty_pct"]
-                == r["novel_shingles"] * 100 // r["total_shingles"]
-            )
-            assert 0 <= r["novel_shingles"] <= r["total_shingles"]
-        else:
-            assert r["novelty_pct"] == 100 and r["novel_shingles"] == 0
 
 
 def test_label_outliers_match_numpy_mirror(spark, sf_correctness):

@@ -108,9 +108,11 @@ def test_no_python_eval_in_relational_paths(spark):
 
 
 def test_scan_pruning_on_wide_documents(spark):
-    # text_stats needs text/lang/source but not n_chars
-    df = REGISTRY["text_stats"].builder(spark, SF)
-    assert_scan_pruned(df, must_read=["text", "lang"], must_not_read=["n_chars"])
+    # sessionize_events needs user_id/ts/event_type but not the JSON props
+    df = REGISTRY["sessionize_events"].builder(spark, SF)
+    assert_scan_pruned(
+        df, must_read=["user_id", "ts", "event_type"], must_not_read=["props"]
+    )
 
 
 def test_sessionize_single_shuffle(spark):
@@ -378,15 +380,6 @@ def test_sql_frontend_agg_filter_single_pass(spark):
     assert "partial_count(1) FILTER" in f.text, f.text
 
 
-def test_top_ngrams_partial_agg_no_join(spark):
-    """Per-lang n-gram counts: partial-then-final aggregation over the
-    explode, a window for top-k, and nothing else."""
-    f = plan_facts(REGISTRY["top_ngrams_per_lang"].builder(spark, SF))
-    assert f.python_evals == 0
-    assert "Join" not in f.text
-    assert "partial_count" in f.text or "HashAggregate" in f.text, f.text
-
-
 def test_shuffle_budget_pins(spark):
     """Upper-bound shuffle budget per headline operator, in formatted-
     plan Exchange OCCURRENCES (each physical exchange appears twice:
@@ -402,7 +395,6 @@ def test_shuffle_budget_pins(spark):
         "sessionize_events": 2,        # 1 real: user key (exchange reuse)
         "tpch_q1": 2,                  # 1 real: group keys after partial agg
         "hash_split_assign": 2,        # 1 real: split agg
-        "text_stats": 2,               # 1 real: final agg only
         "dedup_exact": 4,              # 2 real: digest window + agg
         "pack_sequences_greedy": 4,    # 2 real: per-source window + agg
         "hypertable_rollup": 4,        # 2 real: minutely, hourly
@@ -600,18 +592,6 @@ def test_debounce_windows_share_one_exchange(spark):
     assert f.python_evals == 0
 
 
-def test_textclf_weights_join_broadcast_single_fold(spark):
-    """The pinned-classifier serving plan: the B-row weight table must
-    come back BROADCAST (it is model-sized — B=2M in production
-    fastText — never corpus-sized), no cartesian, no Python; the only
-    key-shuffles are the per-(doc,bucket) feature fold and the final
-    per-doc fold, both partial-aggregated map-side."""
-    f = plan_facts(REGISTRY["langid_fasttext_hashed"].builder(spark, SF))
-    assert f.broadcast_joins >= 1, f.text
-    assert "CartesianProduct" not in f.text
-    assert f.python_evals == 0, "classifier serving must stay JVM-side"
-
-
 def test_pca_projection_broadcast_dims_single_fold(spark):
     """Pinned-PCA serving: the D-row dim table joins broadcast against
     the posexploded vectors and the per-vector fold is the ONLY
@@ -729,7 +709,6 @@ def test_sixth_wave_plans_no_cartesian_no_python(spark):
         "wau_sliding_distinct",
         "session_paths_topk",
         "event_transition_matrix",
-        "vocab_oov_coverage",
         "bootstrap_ci_value_mean",
     ):
         f = plan_facts(REGISTRY[name].builder(spark, SF))
@@ -756,13 +735,4 @@ def test_decontaminate_minhash_bucketed_not_allpairs(spark):
     assert "BroadcastNestedLoopJoin" not in f.text
     assert f.sortmerge_joins + f.broadcast_joins + f.text.count("ShuffledHashJoin") > 0
 
-
-def test_vocab_oov_broadcasts_bounded_vocab(spark):
-    """The top-N vocabulary is a bounded TakeOrdered that joins back
-    as a broadcast — the doc-side relation must never re-shuffle for
-    the vocab membership probe."""
-    f = plan_facts(REGISTRY["vocab_oov_coverage"].builder(spark, SF))
-    assert "TakeOrderedAndProject" in f.text, f.text
-    assert f.broadcast_joins >= 1, f.text
-    assert "CartesianProduct" not in f.text
 

@@ -15,6 +15,8 @@ import pyarrow.parquet as pq
 import pytest
 
 from msstreamingstack_spark.streaming.heavy_hitters import (
+    bucket_hash,
+    bucket_hash_sql,
     run_heavy_hitters_stream,
     top_k,
 )
@@ -25,6 +27,24 @@ N_BUCKETS, CAPACITY = 8, 4
 
 def _bucket(k: str, n_buckets: int = N_BUCKETS) -> int:
     return int(hashlib.md5(k.encode()).hexdigest()[:8], 16) % n_buckets
+
+
+def test_bucket_hash_matches_duckdb(spark):
+    """Spark's bucket hash, its DuckDB twin and the Python model
+    ``_bucket`` agree bit-exactly."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    words = ["the", "stream fast", "row", "", "query group", "små"]
+    sdf = spark.createDataFrame([(w,) for w in words], "g string").select(
+        "g", bucket_hash(F.col("g"), 1024).alias("b")
+    )
+    got = {r["g"]: r["b"] for r in sdf.collect()}
+    con = duckdb.connect()
+    for w in words:
+        exp = con.execute(f"SELECT {bucket_hash_sql('?', 1024)}", [w]).fetchone()[0]
+        assert got[w] == exp == _bucket(w, 1024), w
+    con.close()
 
 
 def model_spacesaving(stream, capacity):

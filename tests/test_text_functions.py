@@ -1,12 +1,11 @@
 """Edge-case unit tests for the text expression library — inputs the
-synthetic corpus doesn't contain (markup, empty/short docs, unicode)."""
+synthetic corpus doesn't contain (empty/short docs, unicode)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from msstreamingstack_spark.functions.text import (
-    clean_text,
     distinct_token_ratio,
     dup_ngram_fraction,
     hash48,
@@ -17,19 +16,6 @@ from msstreamingstack_spark.functions.text import (
 
 def _one(spark, text, col):
     return spark.createDataFrame([(text,)], ["t"]).select(col.alias("v")).first().v
-
-
-def test_clean_text_strips_markup_and_collapses(spark):
-    got = _one(
-        spark,
-        "<p>Hello   <b>world</b></p>\n\t<div>again</div>",
-        clean_text(F.col("t")),
-    )
-    assert got == "Hello world again"
-
-
-def test_clean_text_plain_text_unchanged(spark):
-    assert _one(spark, "plain text here", clean_text(F.col("t"))) == "plain text here"
 
 
 def test_dup_ngram_fraction_short_doc_is_zero(spark):

@@ -1,130 +1,16 @@
-"""Pinned-model serving operators: hashed NB text classifier + PCA.
+"""Pinned PCA serving model: fit semantics.
 
-Parity with the DuckDB oracles is covered by test_oracle_parity (the
-registry auto-parametrizes); these tests pin the FIT semantics and
-the model-quality floors the pinned artifacts must clear.
+Parity with the DuckDB oracle is covered by test_oracle_parity (the
+registry auto-parametrizes); these tests pin the FIT semantics the
+pinned artifact must satisfy.
 """
 
 from __future__ import annotations
 
-import math
-
 import pytest
-from pyspark.sql import functions as F
 
 from msstreamingstack_spark.operators import pca as pca_mod
-from msstreamingstack_spark.operators import textclf
 from msstreamingstack_spark.sources.tables import load_table
-
-
-# ---------------------------------------------------------------------------
-# bucket hash: Spark == DuckDB, bit-exact
-# ---------------------------------------------------------------------------
-def test_bucket_hash_matches_duckdb(spark):
-    import duckdb
-
-    words = ["the", "stream fast", "row", "", "query group", "små"]
-    sdf = spark.createDataFrame([(w,) for w in words], "g string").select(
-        "g", textclf.bucket_hash(F.col("g")).alias("b")
-    )
-    got = {r["g"]: r["b"] for r in sdf.collect()}
-    con = duckdb.connect()
-    for w in words:
-        exp = con.execute(
-            f"SELECT {textclf.bucket_hash_sql('?')}", [w]
-        ).fetchone()[0]
-        assert got[w] == exp, w
-    con.close()
-
-
-# ---------------------------------------------------------------------------
-# NB fit: closed-form semantics + guardrails
-# ---------------------------------------------------------------------------
-def test_nb_fit_matches_python_model(spark):
-    """Full closed-form model recomputed in plain Python (hashlib +
-    collections) — every pinned weight and the bias must match,
-    collisions and all."""
-    import hashlib
-    from collections import Counter
-
-    corpus = [
-        (1, "aa aa bb", "en"),
-        (2, "aa cc", "en"),
-        (3, "bb bb cc", "fr"),
-        (4, "cc cc", "fr"),
-    ]
-    B = 64
-    docs = spark.createDataFrame(
-        corpus, "doc_id long, text string, lang string"
-    )
-    pin = textclf.fit_nb_pinned(docs, buckets=B)
-    assert pin["meta"]["buckets"] == B
-
-    def grams(text):
-        t = text.split(" ")
-        return t + [f"{a} {b}" for a, b in zip(t, t[1:])]
-
-    def bucket(g):
-        return int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % B
-
-    cp, cn = Counter(), Counter()
-    for _, text, lang in corpus:
-        tgt = cp if lang == "en" else cn
-        for g in grams(text):
-            tgt[bucket(g)] += 1
-    np_, nn = sum(cp.values()), sum(cn.values())
-    dp = sum(1 for _, _, lang in corpus if lang == "en")
-    dn = len(corpus) - dp
-    expected = {
-        b: round(
-            math.log2(((cp[b] + 1) * (nn + B)) / ((cn[b] + 1) * (np_ + B))), 9
-        )
-        for b in set(cp) | set(cn)
-    }
-    expected = {b: w for b, w in expected.items() if w != 0.0}
-    assert pin["bias"] == pytest.approx(round(math.log2(dp / dn), 9))
-    assert {b: w for b, w in pin["w"]} == pytest.approx(expected)
-
-
-def test_nb_fit_single_class_raises(spark):
-    docs = spark.createDataFrame(
-        [(1, "aa", "en"), (2, "bb", "en")],
-        "doc_id long, text string, lang string",
-    )
-    with pytest.raises(ValueError, match="both classes"):
-        textclf.fit_nb_pinned(docs, buckets=8)
-
-
-def test_pinned_classifier_beats_base_rate(spark, sf_correctness):
-    """The committed pinned model must separate en-vs-rest on the fit
-    corpus well above the majority-class base rate — the fixture's
-    five languages share ONE vocabulary, so this floor (75%) is real
-    signal from frequency profiles alone."""
-    docs = load_table(spark, sf_correctness, "documents")
-    scored = textclf.score_pinned(docs).join(
-        docs.select("doc_id", "lang"), "doc_id"
-    )
-    agg = scored.agg(
-        F.avg(
-            (F.col("ft_pred_en") == (F.col("lang") == "en")).cast("double")
-        ).alias("acc"),
-        F.avg((F.col("lang") != "en").cast("double")).alias("base"),
-    ).first()
-    assert agg["acc"] >= 0.75
-    assert agg["acc"] > agg["base"]
-
-
-def test_score_pinned_n_grams_counts_all_grams(spark):
-    docs = spark.createDataFrame(
-        [(1, "a b c", "en"), (2, "a", "en")],
-        "doc_id long, text string, lang string",
-    )
-    rows = {
-        r["doc_id"]: r["n_grams"]
-        for r in textclf.score_pinned(docs).collect()
-    }
-    assert rows[1] == 5  # 3 unigrams + 2 bigrams
-    assert rows[2] == 1  # 1 unigram, no bigram
 
 
 # ---------------------------------------------------------------------------

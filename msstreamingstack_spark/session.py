@@ -16,12 +16,28 @@ compiles PySpark from source, a fixed cost paid by each state partition,
 pandas/Arrow UDF task and first task of a session. The daemon drops the
 archives when an installed PySpark of the same version is there. Both
 confs are static: a session created elsewhere keeps Spark's daemon.
+
+Spark starts that daemon lazily, at the first Python task, which for a
+streaming query is the first micro-batch's state stage: its tasks wait
+for the daemon and then for workers that import pandas, pyarrow and the
+state kernel. So when ``get_spark`` creates a new SparkContext it also
+runs a one-row ``mapInArrow`` job on a background thread, overlapping
+the daemon's start (which preloads the kernel, see ``worker_daemon``)
+with the caller's query construction, planning and first source read.
+The warm-up is a SQL Arrow job on purpose: a background RDD job
+(``sc.parallelize(...).map(...)``) starts a daemon of its own, and the
+state stage's workers still start cold from a second one. Its failure
+is ignored (a session stopped mid-warm-up): the first real Python task
+then starts the daemon, as without the warm-up.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import threading
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Confs that must hold on ANY session running this engine, including
@@ -81,6 +97,19 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def _pass_through(batches):
+    yield from batches
+
+
+def _warm_python_workers(spark: SparkSession) -> None:
+    """Start the Python worker daemon with a one-row Arrow job; any
+    failure (the session stopped meanwhile) leaves it to the first task."""
+    try:
+        spark.range(1, numPartitions=1).mapInArrow(_pass_through, "id long").collect()
+    except Exception:
+        logging.getLogger(__name__).debug("Python worker warm-up failed", exc_info=True)
+
+
 def get_spark(
     app_name: str = "msstreamingstack_spark",
     cpus: int | None = None,
@@ -91,7 +120,8 @@ def get_spark(
 
     On a real cluster the same confs apply; only ``master`` changes —
     pass ``extra_conf`` or pre-create the session and call
-    ``apply_runtime_confs``.
+    ``apply_runtime_confs``. A call that creates the SparkContext starts
+    the Python workers in the background (module docstring).
     """
     cpus = cpus or default_parallelism()
     shuffle_partitions = shuffle_partitions or cpus
@@ -110,6 +140,12 @@ def get_spark(
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    new_context = SparkContext._active_spark_context is None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return apply_runtime_confs(spark)
+    apply_runtime_confs(spark)
+    if new_context:
+        threading.Thread(
+            target=_warm_python_workers, args=(spark,), name="warm-python-workers", daemon=True
+        ).start()
+    return spark

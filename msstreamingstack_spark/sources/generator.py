@@ -10,12 +10,16 @@ With a Kafka broker, swap the writer for ``df.write.format("kafka")``
 from __future__ import annotations
 
 import os
+import re
 import time
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 NS = 1_000_000_000
+
+DROP_NAME = re.compile(r"drop-(\d+)\.parquet")
 
 EVENT_TYPES = ("view", "click", "purchase", "signup", "error")
 
@@ -38,6 +42,25 @@ def event_batch(start_id: int, n: int, t0_sec: int, step_sec: int = 5):
     return rows
 
 
+def _continue_after(out_dir: str) -> tuple[int, int]:
+    """(next drop index, next event id) for ``out_dir``: one past its
+    highest ``drop-NNNNN.parquet`` and one past the highest ``event_id``
+    in its visible parquet files (0, 0 for an empty directory)."""
+    names = [
+        n for n in os.listdir(out_dir)
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    ]
+    drops = [int(m[1]) for n in names if (m := DROP_NAME.fullmatch(n))]
+    ids = [
+        pc.max(pq.read_table(os.path.join(out_dir, n), columns=["event_id"])[0]).as_py()
+        for n in names
+    ]
+    return (
+        max(drops, default=-1) + 1,
+        max((i for i in ids if i is not None), default=-1) + 1,
+    )
+
+
 def drop_batches(
     out_dir: str,
     n_batches: int = 3,
@@ -50,18 +73,22 @@ def drop_batches(
     flush' loop, App.scala:40-44), sleeping ``sleep_sec`` between drops
     (its Thread.sleep, App.scala:45-48). Each drop is written to a
     hidden temp file and renamed into place, so a running stream never
-    lists a half-written file. Returns the file paths in order."""
+    lists a half-written file. Drops already in ``out_dir`` are kept:
+    file numbers and event ids continue after theirs, since the file
+    source never re-reads a path it has seen. Returns the new file
+    paths in order."""
     os.makedirs(out_dir, exist_ok=True)
+    first_drop, first_id = _continue_after(out_dir)
     paths = []
     for b in range(n_batches):
         if b and sleep_sec > 0:
             time.sleep(sleep_sec)
         rows = event_batch(
-            start_id=b * batch_size,
+            start_id=first_id + b * batch_size,
             n=batch_size,
             t0_sec=t0_sec + b * gap_sec,
         )
-        name = f"drop-{b:05d}.parquet"
+        name = f"drop-{first_drop + b:05d}.parquet"
         path = os.path.join(out_dir, name)
         tmp = os.path.join(out_dir, f".{name}.tmp")
         pq.write_table(

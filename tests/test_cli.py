@@ -62,6 +62,24 @@ def test_paced_produce_writes_the_same_drops(tmp_path):
         assert pq.read_table(tmp_path / "paced" / name).equals(fast), name
 
 
+def test_second_produce_adds_drops_after_the_first(tmp_path):
+    """A second ``produce`` into the same directory keeps every drop of
+    the first and numbers its files and event ids after them."""
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "drops")
+    args = ["--batches", "2", "--batch-size", "3"]
+    assert main(["produce", "--out", out, *args]) == 0
+    first = {n: pq.read_table(os.path.join(out, n)) for n in os.listdir(out)}
+    assert main(["produce", "--out", out, *args, "--gap-sec", "9000"]) == 0
+    names = sorted(os.listdir(out))
+    assert names == [f"drop-{b:05d}.parquet" for b in range(4)]
+    for name, table in first.items():
+        assert pq.read_table(os.path.join(out, name)).equals(table), name
+    ids = [i for n in names for i in pq.read_table(os.path.join(out, n))["event_id"].to_pylist()]
+    assert sorted(ids) == list(range(12))
+
+
 def test_query_subcommand_runs_and_unknown_rejected(spark, capsys):
     rc = main(["query", "tpch_q1", "--sf-dir", "/root/testdata/sf0.001", "--rows", "3"])
     assert rc == 0

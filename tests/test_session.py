@@ -78,6 +78,15 @@ def test_python_tasks_import_installed_pyspark(spark):
     assert not [z for z in zips if z.startswith(home) or z.endswith(".jar")], zips
 
 
+def _run_driver(src: str, tmp_path) -> subprocess.CompletedProcess:
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    return subprocess.run(
+        [sys.executable, "-c", src, REPO],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+
+
 DRIVER = textwrap.dedent("""
     import sys
     sys.path.insert(0, sys.argv[1])
@@ -98,11 +107,60 @@ DRIVER = textwrap.dedent("""
 
 
 def test_workers_import_engine_from_any_working_directory(tmp_path):
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["SPARK_DRIVER_MEM"] = "1g"
-    out = subprocess.run(
-        [sys.executable, "-c", DRIVER, REPO],
-        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
-    )
+    out = _run_driver(DRIVER, tmp_path)
     assert out.returncode == 0, out.stderr[-3000:]
     assert "rows 10" in out.stdout
+
+
+PRELOAD_DRIVER = textwrap.dedent("""
+    import sys
+    sys.path.insert(0, sys.argv[1])
+    from msstreamingstack_spark.session import get_spark
+
+    def probe(batches):
+        import sys
+        warm = "msstreamingstack_spark.streaming.stateful" in sys.modules
+        pa = sys.modules["pyarrow"]  # loaded by the worker for Arrow I/O
+        for _ in batches:
+            yield pa.RecordBatch.from_pydict({"warm": [warm]})
+
+    spark = get_spark(app_name="preload-probe", cpus=1)
+    (row,) = spark.range(1, numPartitions=1).mapInArrow(probe, "warm boolean").collect()
+    print("kernel preloaded", row.warm)
+""")
+
+
+def test_python_workers_start_with_the_state_kernel_loaded(tmp_path):
+    """A task of a fresh ``get_spark`` session runs in a worker that
+    already holds ``streaming.stateful`` (imported by the daemon it was
+    forked from), before the task's own code imports anything."""
+    out = _run_driver(PRELOAD_DRIVER, tmp_path)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "kernel preloaded True" in out.stdout, out.stdout
+
+
+STOP_DRIVER = textwrap.dedent("""
+    import sys
+    sys.path.insert(0, sys.argv[1])
+    from pyspark.sql import functions as F
+    from msstreamingstack_spark.session import get_spark
+
+    spark = get_spark(app_name="stop-probe", cpus=1)
+    spark.stop()  # while the worker warm-up is still in flight
+    spark = get_spark(app_name="stop-probe-2", cpus=1)
+    double = F.udf(lambda x: 2 * x, "long")
+    rows = spark.range(4, numPartitions=1).select(double("id").alias("v")).collect()
+    print("doubled", [r.v for r in rows])
+    spark.stop()
+""")
+
+
+def test_stop_during_worker_warm_up_is_quiet_and_restartable(tmp_path):
+    """Stopping a session at once cancels its background warm-up job
+    without an error from that thread, and the next session's Python
+    UDFs still run."""
+    out = _run_driver(STOP_DRIVER, tmp_path)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "doubled [0, 2, 4, 6]" in out.stdout, out.stdout
+    # an uncaught error would print "Exception in thread <name>"
+    assert "warm-python-workers" not in out.stderr, out.stderr[-3000:]

@@ -432,24 +432,20 @@ def test_checkpoint_restart_preserves_session_state(spark, tmp_path):
     src = str(tmp_path / "drops")
     cp = str(tmp_path / "cp_restart")
 
-    # phase 1: two drops, users 0..11, ts within one session gap
-    drop_batches(src, n_batches=2, batch_size=6, t0_sec=1000, gap_sec=600)
+    # phase 1: five drops, events 0..24 = all 25 round-robin users once,
+    # ts 1000..1260
+    drop_batches(src, n_batches=5, batch_size=5, t0_sec=1000, gap_sec=60)
     sink1 = CollectingSink()
     q = run_pipeline(
         spark, src, checkpoint_dir=cp, sinks=[sink1], available_now=True
     )
     q.awaitTermination(300)
-    assert len(sink1.rows) == 12
+    assert len(sink1.rows) == 25
     pre = {r["user_id"]: r for r in sink1.rows}
 
-    # phase 2: one more drop continuing the same users ~10 min later
-    # (well inside the 30-min gap), then RESTART from the checkpoint
+    # phase 2: one more drop (events 25..30, so users 0..5 again) about
+    # 20 min later, inside the 30-min gap, then RESTART from the checkpoint
     drop_batches(src, n_batches=1, batch_size=6, t0_sec=2200, gap_sec=600)
-    # drop_batches names files drop-00000..; rename to avoid collision
-    os.rename(
-        os.path.join(src, "drop-00000.parquet"),
-        os.path.join(src, "drop-00099.parquet"),
-    )
     sink2 = CollectingSink()
     q2 = run_pipeline(
         spark, src, checkpoint_dir=cp, sinks=[sink2], available_now=True

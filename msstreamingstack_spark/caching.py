@@ -14,8 +14,10 @@ persisting into a slot first releases whatever frame the same slot
 persisted on the previous invocation. The session then holds at most
 ONE live cache entry per slot — re-running a query replaces its cache
 instead of stacking a new one — while the plan-reuse benefit within a
-single invocation (the reason these sites persist at all; see the
-`doc_shingle_hashes` docstring in operators/dedup.py) is untouched.
+single invocation (the reason these sites persist at all: the
+`doc_shingle_hashes` docstring in operators/dedup.py gives the
+shingle table's case, read several times per action by the LSH
+kernel) is untouched.
 
 Slot names are per call site, never shared across different subtrees:
 two distinct sites must not evict each other mid-plan (e.g. a composed

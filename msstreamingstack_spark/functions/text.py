@@ -129,10 +129,6 @@ def langid_pred_sql(text_sql: str) -> str:
 # ---------------------------------------------------------------------------
 # Hashing / fingerprints
 # ---------------------------------------------------------------------------
-def md5_hex(col: Column) -> Column:
-    return F.md5(col.cast("binary"))
-
-
 def hash48(col: Column) -> Column:
     """Deterministic cross-engine 48-bit integer hash of a string."""
     return F.conv(F.substring(F.md5(col.cast("binary")), 1, 12), 16, 10).cast("long")
@@ -140,18 +136,6 @@ def hash48(col: Column) -> Column:
 
 def hash48_sql(col_sql: str) -> str:
     return f"TRY_CAST('0x' || substr(md5({col_sql}), 1, 12) AS BIGINT)"
-
-
-def hash60(col: Column) -> Column:
-    """60-bit variant of :func:`hash48` (15 hex chars — the widest md5
-    prefix that stays positive in a signed BIGINT on both engines).
-    Used by the wide-fingerprint simhash twin, where fingerprint width
-    buys band-key selectivity."""
-    return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast("long")
-
-
-def hash60_sql(col_sql: str) -> str:
-    return f"TRY_CAST('0x' || substr(md5({col_sql}), 1, 15) AS BIGINT)"
 
 
 def shingles(text: Column, n: int = 3) -> Column:
@@ -162,8 +146,8 @@ def shingles(text: Column, n: int = 3) -> Column:
     directly inside the per-gram lambda would re-run ``split(text)``
     n times PER GRAM (HOF bodies re-evaluate captured subtrees each
     element) — ~600 splits/row on a 200-token doc. Bound, it is one
-    split/row; this subtree sits under every dedup kernel's shingle
-    explode, so the whole family inherits the fix."""
+    split/row; this subtree sits under every shingle-hash explode
+    (operators/dedup.py), so all of them inherit the fix."""
 
     def build(toks: Column) -> Column:
         k = F.size(toks)

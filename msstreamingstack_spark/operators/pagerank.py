@@ -1,9 +1,7 @@
 """Weighted PageRank over a co-purchase graph (iterative propagation).
 
-The registry's iterative-graph family so far proves FIXPOINT
-semantics (connected components, operators/components.py — label
-propagation until no change). PageRank adds the other canonical
-shape: WEIGHTED mass propagation for a FIXED number of rounds, the
+PageRank is the registry's canonical iterative-graph shape:
+WEIGHTED mass propagation for a FIXED number of rounds, the
 kernel behind link-quality document scoring (the original use),
 domain authority in crawl pipelines, and influence scoring on
 interaction graphs.
@@ -24,8 +22,7 @@ shuffles, no driver-side iteration state beyond the loop counter.
 Join strategy is left to the planner by default (a measured A/B
 favored sort-merge over forced broadcasts here — see ``pagerank``'s
 docstring); on a web-scale graph you bucket BOTH sides by src and
-the join becomes a co-located shuffle join, same plan family as
-dedup_clusters.
+the join becomes a co-located shuffle join.
 
 Cross-engine determinism — FIXED-POINT, not rounded doubles: a first
 cut kept ranks as round-to-12 doubles and hit a genuine engine split
@@ -140,7 +137,7 @@ def pagerank(
     consolidates each round onto the shuffle-partition layout. The
     hint exists for graphs where the edge side is so large that
     re-shuffling it per round dominates; at web scale the real answer
-    is pre-bucketing both sides by src (the dedup_clusters layout).
+    is pre-bucketing both sides by src.
 
     ``seeds`` (optional, one ``node`` column): PERSONALIZED PageRank —
     the teleport mass lands only on the seed set (split evenly,

@@ -974,128 +974,6 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Dedup cluster resolution (connected components over near-dup pairs)
-# ---------------------------------------------------------------------------
-def _cc_comps_cte(threshold: float) -> str:
-    """Shared recursive-CTE prefix: ngram-jaccard pairs → undirected
-    edges → reachability fixpoint → ``comps(node, comp)`` with comp =
-    min reachable id. Composed by the cluster-resolution oracle and
-    the canonical-selection oracle so the two can never drift."""
-    from msstreamingstack_spark.operators.dedup import doc_shingle_hashes_sql
-
-    return f"""
-WITH RECURSIVE sh AS ({doc_shingle_hashes_sql()}),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b ON a.h = b.h AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT d1, d2
-  FROM inter JOIN sizes sa ON sa.doc_id = d1 JOIN sizes sb ON sb.doc_id = d2
-  WHERE CAST(n_inter AS DOUBLE) / CAST(sa.n + sb.n - n_inter AS DOUBLE)
-        >= {threshold}
-),
-edges AS (
-  SELECT d1 AS a, d2 AS b FROM pairs
-  UNION SELECT d2, d1 FROM pairs
-),
-walk(node, comp) AS (
-  SELECT a, a FROM edges
-  UNION
-  SELECT e.a, w.comp FROM edges e JOIN walk w ON e.b = w.node
-),
-comps AS (SELECT node, MIN(comp) AS comp FROM walk GROUP BY node)"""
-
-
-def _cc_oracle_sql(threshold: float) -> str:
-    """Recursive-CTE oracle: component = min reachable id. The Spark
-    side computes the same fixpoint iteratively (operators/
-    components.py) — both are checked equal."""
-    return f"""
-{_cc_comps_cte(threshold)}
-SELECT d.doc_id,
-       COALESCE(c.comp, d.doc_id) AS cluster_id,
-       d.doc_id = COALESCE(c.comp, d.doc_id) AS keep
-FROM documents d LEFT JOIN comps c ON d.doc_id = c.node
-"""
-
-
-@register(
-    "dedup_clusters",
-    _cc_oracle_sql(0.8),
-    tags=("extension", "dedup", "iterative"),
-    doc="Cluster resolution over ngram-jaccard near-dup pairs: "
-    "iterative min-label connected components (one join + one agg per "
-    "iteration, localCheckpoint lineage truncation, driver sees only "
-    "a convergence scalar), then keep = cluster-min doc. Oracle is a "
-    "recursive-CTE reachability fixpoint.",
-)
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.components import dedup_keep_list
-    from msstreamingstack_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    # ngram_jaccard_pairs emits each (d1 < d2) pair exactly once (its
-    # tail is a groupBy(d1, d2)) — the CC edge distinct is redundant
-    pairs = ngram_jaccard_pairs(docs, 0.8).select("d1", "d2")
-    return dedup_keep_list(docs, pairs, pairs_unique=True)
-
-
-@register(
-    "dedup_cluster_canonical",
-    f"""
-{_cc_comps_cte(0.8)},
-assign AS (
-  SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS cluster_id,
-         CAST(d.n_chars AS BIGINT) AS n_chars
-  FROM documents d LEFT JOIN comps c ON d.doc_id = c.node
-)
-SELECT doc_id, cluster_id, n_chars,
-       ROW_NUMBER() OVER (PARTITION BY cluster_id
-                          ORDER BY n_chars DESC, doc_id) = 1 AS is_canonical
-FROM assign
-""",
-    tags=("extension", "dedup", "iterative", "pipeline"),
-    doc="Quality-priority canonical selection over dedup clusters: "
-    "instead of dedup_clusters' keep-min-id policy, keep the LONGEST "
-    "document of each near-dup cluster (tie → min id) — the standard "
-    "'keep the most complete variant' pretraining policy (truncated "
-    "crawls and paywall stubs lose to their full-text siblings). One "
-    "ranking window over the cluster assignment; integer-only "
-    "compare keys so the verdict is exactly cross-engine. At scale "
-    "the window partitions by cluster_id — cluster sizes are bounded "
-    "by the near-dup relation, so no partition outgrows an executor.",
-)
-def q_dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from msstreamingstack_spark.operators.components import dedup_keep_list
-    from msstreamingstack_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    # same pair-uniqueness guarantee as dedup_clusters
-    pairs = ngram_jaccard_pairs(docs, 0.8).select("d1", "d2")
-    assign = dedup_keep_list(docs, pairs, pairs_unique=True).select(
-        "doc_id", "cluster_id"
-    )
-    withq = assign.join(
-        docs.select("doc_id", F.col("n_chars").cast("long").alias("n_chars")),
-        "doc_id",
-    )
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id")
-    )
-    return withq.select(
-        "doc_id",
-        "cluster_id",
-        "n_chars",
-        (F.row_number().over(w) == 1).alias("is_canonical"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Hypertable-style hierarchical time rollup (continuous aggregates)
 # ---------------------------------------------------------------------------
 @register(
@@ -3405,11 +3283,10 @@ def _pagerank_oracle() -> str:
     _pagerank_oracle(),
     tags=("extension", "graph", "iterative", "pagerank"),
     doc="Weighted PageRank (d=0.85, 4 rounds) over the symmetric "
-    "customer↔supplier co-purchase graph — the second iterative-graph "
-    "kernel next to dedup_clusters' fixpoint components: FIXED-round "
-    "weighted mass propagation (link-quality doc scoring, crawl "
-    "domain authority). Plan: normalized edge list built once and "
-    "persisted (feeds every round), each round = one join against "
+    "customer↔supplier co-purchase graph — FIXED-round weighted mass "
+    "propagation (link-quality doc scoring, crawl domain authority). "
+    "Plan: normalized edge list built once and persisted (feeds every "
+    "round), each round = one join against "
     "the node-count-sized ranks frame (auto-broadcast here; bucketed "
     "co-located shuffle join on a web-scale graph) + one dst fold — "
     "T rounds, T fold shuffles, no driver-side state. Cross-engine "
@@ -3638,8 +3515,8 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Triangle counting — the third graph kernel (after the PageRank
-# fixed-points and connected components): cohesion/clustering
+# Triangle counting — the second graph kernel (after PageRank):
+# cohesion/clustering
 # structure of the part co-occurrence graph.
 # ---------------------------------------------------------------------------
 # Top-K sparsification bound for the co-occurrence KNN graph. The

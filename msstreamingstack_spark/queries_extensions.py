@@ -1,6 +1,7 @@
 """Extension queries: the training-data-pipeline operator families
-(dedup, text analysis, similarity search) over the driver's
-``documents`` and ``embeddings`` tables.
+(quality, near-duplicate pairs, sampling and packing, text analysis,
+similarity search) over the driver's ``documents`` and ``embeddings``
+tables, plus a batch event debounce over ``events``.
 
 Approximate/scale-path operators that are inherently not SQL-oracle
 material (SRP-ANN) are registered without an oracle — the driver then
@@ -19,28 +20,14 @@ from msstreamingstack_spark.functions.text import (
     hash48_sql,
     langid_pred,
     langid_pred_sql,
-    md5_hex,
-    shingles,
-    shingles_sql,
     token_count,
     token_count_sql,
 )
 from msstreamingstack_spark.operators.dedup import (
-    EXACT_DEDUP_SQL,
-    doc_shingle_hashes_sql,
-    eval_overlap_sql,
-    exact_dedup,
-    minhash_cross_sql,
     minhash_lsh_pairs,
     minhash_lsh_sql,
-    ngram_contamination_sql,
     ngram_jaccard_pairs,
     ngram_jaccard_sql,
-    ngram_span_scrub_sql,
-    simhash_pairs,
-    simhash_pairs_sql,
-    simhash_pairs_wide,
-    simhash_pairs_wide_sql,
 )
 from msstreamingstack_spark.operators.similarity import (
     COS_ROUND,
@@ -55,103 +42,7 @@ from msstreamingstack_spark.operators.similarity import (
 from msstreamingstack_spark.queries import register
 from msstreamingstack_spark.sources.tables import load_table, spread
 
-JACCARD_T = 0.8
 N_QUERY_VECS = 10
-
-
-# ---------------------------------------------------------------------------
-# Document fingerprints
-# ---------------------------------------------------------------------------
-@register(
-    "doc_fingerprints",
-    f"""
-SELECT doc_id, md5(text) AS content_md5,
-       list_min(list_transform({shingles_sql('text', 5)}, s -> md5(s)))
-         AS min_shingle_md5
-FROM documents
-""",
-    tags=("extension", "text", "fingerprint"),
-    doc="Content fingerprints: whole-document digest + min 5-gram "
-    "shingle digest (winnowing-style rolling fingerprint).",
-)
-def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spread(load_table(spark, sf_dir, "documents"))
-    return d.select(
-        "doc_id",
-        md5_hex(F.col("text")).alias("content_md5"),
-        F.array_min(
-            F.transform(shingles(F.col("text"), 5), lambda s: F.md5(s.cast("binary")))
-        ).alias("min_shingle_md5"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Deduplication
-# ---------------------------------------------------------------------------
-@register(
-    "dedup_exact",
-    EXACT_DEDUP_SQL,
-    tags=("extension", "dedup"),
-    doc="Exact dedup: md5 content digest, canonical id per group, "
-    "duplicate flag. Single shuffle on the digest.",
-)
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return exact_dedup(spread(load_table(spark, sf_dir, "documents")))
-
-
-@register(
-    "dedup_ngram_jaccard",
-    ngram_jaccard_sql(JACCARD_T),
-    tags=("extension", "dedup"),
-    doc="Exact near-dup pairs by word-3-gram jaccard ≥ 0.8 via a "
-    "shingle-hash inverted-index self-join (only 48-bit longs shuffle).",
-)
-def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_jaccard_pairs(spread(load_table(spark, sf_dir, "documents")), JACCARD_T)
-
-
-@register(
-    "dedup_minhash_lsh",
-    minhash_lsh_sql(JACCARD_T),
-    tags=("extension", "dedup", "lsh"),
-    doc="MinHash(16)+banded LSH(8×2) candidates, verified with exact "
-    "jaccard ≥ 0.8. Deterministic fixed-permutation hashing makes even "
-    "the LSH stage oracle-checkable bit-for-bit.",
-)
-def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_lsh_pairs(spread(load_table(spark, sf_dir, "documents")), JACCARD_T)
-
-
-@register(
-    "dedup_simhash_pairs",
-    simhash_pairs_sql(6),
-    tags=("extension", "dedup", "simhash"),
-    doc="48-bit weighted simhash near-dup pairs (hamming ≤ 6); "
-    "size-dispatched band-subset candidate generator with emit-once "
-    "verification (r12) — see dedup_simhash_pairs_wide for the "
-    "corpus-scale twin.",
-)
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash_pairs(spread(load_table(spark, sf_dir, "documents")), 6)
-
-
-@register(
-    "dedup_simhash_pairs_wide",
-    simhash_pairs_wide_sql(6),
-    tags=("extension", "dedup", "simhash", "twin", "scale"),
-    doc="60-bit wide-fingerprint simhash near-dup pairs (hamming ≤ 6 "
-    "over 60 bits) — the scale twin of dedup_simhash_pairs: a "
-    "STRICTER near-dup predicate whose 24-bit band-subset keys keep "
-    "the banded candidate join sub-quadratic where the 48-bit "
-    "kernel's collision tail goes hot past ~10^5 docs (round 12 64× run: "
-    "16×→64× step 3.45 vs 6.9 for 4× data). Priced like the other "
-    "insurance twins: costs ~2.6× the declared kernel at bench SF, "
-    "pays for itself at corpus scale.",
-)
-def q_dedup_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash_pairs_wide(
-        spread(load_table(spark, sf_dir, "documents")), 6
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -283,26 +174,33 @@ def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from msstreamingstack_spark.operators.dedup import dfcapped_jaccard_sql  # noqa: E402
+# ---------------------------------------------------------------------------
+# Near-duplicate pairs
+# ---------------------------------------------------------------------------
+JACCARD_T = 0.8
 
 
 @register(
-    "dedup_jaccard_dfcapped",
-    dfcapped_jaccard_sql(JACCARD_T, df_cap=5),
-    tags=("extension", "dedup", "skew"),
-    doc="ngram-jaccard dedup over a df-capped shingle universe: "
-    "shingles in more than df_cap docs (boilerplate) are dropped "
-    "before pair generation, bounding every shingle's join fan-out at "
-    "df_cap^2 — the mitigation that keeps shingle-join dedup feasible "
-    "on corpora where one license header appears on millions of "
-    "pages. Cap=5 here so the cap provably bites at sf0.01 (max df 7).",
+    "dedup_ngram_jaccard",
+    ngram_jaccard_sql(JACCARD_T),
+    tags=("extension", "dedup"),
+    doc="Exact near-dup pairs by word-3-gram jaccard ≥ 0.8 via a "
+    "shingle-hash inverted-index self-join (only 48-bit longs shuffle).",
 )
-def q_dedup_jaccard_dfcapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.dedup import dfcapped_jaccard_pairs
+def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return ngram_jaccard_pairs(spread(load_table(spark, sf_dir, "documents")), JACCARD_T)
 
-    return dfcapped_jaccard_pairs(
-        spread(load_table(spark, sf_dir, "documents")), JACCARD_T, df_cap=5
-    )
+
+@register(
+    "dedup_minhash_lsh",
+    minhash_lsh_sql(JACCARD_T),
+    tags=("extension", "dedup", "lsh"),
+    doc="MinHash(16)+banded LSH(8×2) candidates, verified with exact "
+    "jaccard ≥ 0.8. Deterministic fixed-permutation hashing makes even "
+    "the LSH stage oracle-checkable bit-for-bit.",
+)
+def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return minhash_lsh_pairs(spread(load_table(spark, sf_dir, "documents")), JACCARD_T)
 
 
 # ---------------------------------------------------------------------------
@@ -774,116 +672,6 @@ def q_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Every 50th doc stands in for the held-out benchmark set (the eval
-# side is an input in production; here it must be a deterministic
-# function of the fixture so the oracle agrees).
-EVAL_EVERY = 50
-
-
-@register(
-    "decontaminate_eval_overlap",
-    eval_overlap_sql(f"d.doc_id % {EVAL_EVERY} = 0"),
-    tags=("extension", "pipeline", "decontamination"),
-    doc="Benchmark decontamination: per-train-doc shingle-hash overlap "
-    "with the eval set's shingle universe. The eval side collapses to "
-    "a distinct-hash set and is broadcast (benchmarks are tiny next "
-    "to a 100 TB corpus); the train side is one broadcast hash-join "
-    "plus a per-doc count — no all-pairs stage, unlike the dedup "
-    "kernels this shares its shingle table with.",
-)
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.dedup import eval_overlap_stats
-
-    d = spread(load_table(spark, sf_dir, "documents"))
-    return eval_overlap_stats(d, F.col("doc_id") % EVAL_EVERY == 0)
-
-
-# Fuzzy decontamination split: a tenth of the corpus plays the
-# held-out benchmark (different slice than decontaminate_eval_overlap
-# 's 2%, chosen so the fixture actually contains cross-slice
-# near-dups to flag).
-DECON_MOD, DECON_REM = 10, 7
-DECON_JACCARD_T = 0.5
-
-
-@register(
-    "decontaminate_minhash",
-    minhash_cross_sql(DECON_MOD, DECON_REM, DECON_JACCARD_T),
-    tags=("extension", "pipeline", "decontamination", "lsh"),
-    doc="FUZZY benchmark decontamination: train docs sharing a banded-"
-    "minhash bucket with any held-out eval doc, verified with exact "
-    f"jaccard >= {DECON_JACCARD_T} — the paraphrase-level complement "
-    "to decontaminate_eval_overlap's exact shingle-overlap counts "
-    "(an eval item lightly rewritten into the crawl never hits the "
-    "exact path). Candidate generation is the train x eval bucket "
-    "equi-join, bounded by the SMALL eval side's bucket occupancy — "
-    "never all-pairs, and cheaper than the dedup self-join at equal "
-    "corpus size; at 100 TB the eval buckets broadcast. Shares the "
-    "slot-managed shingle table with the dedup family.",
-)
-def q_decontaminate_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.dedup import minhash_cross_pairs
-
-    d = spread(load_table(spark, sf_dir, "documents"))
-    return minhash_cross_pairs(
-        d, F.col("doc_id") % DECON_MOD == DECON_REM, DECON_JACCARD_T
-    )
-
-
-# Verbatim-span decontamination pair (GPT-3 appendix C / PaLM-style):
-# same held-out slice as decontaminate_minhash so the three methods
-# (exact shingle-overlap fraction, fuzzy minhash, verbatim 13-gram)
-# grade the SAME benchmark split and their flag sets are comparable.
-_DECON13_PRED_SQL = f"doc_id % {DECON_MOD} = {DECON_REM}"
-
-
-@register(
-    "decontaminate_ngram13",
-    ngram_contamination_sql(_DECON13_PRED_SQL),
-    tags=("extension", "pipeline", "decontamination", "ngram"),
-    doc="VERBATIM benchmark decontamination (GPT-3 appendix-C style "
-    "13-gram collision): a train doc is flagged when ANY 13-word "
-    "n-gram of a held-out doc appears verbatim, with first/last hit "
-    "positions reported so the scrub twin can excise the span rather "
-    "than drop the doc. Complements decontaminate_eval_overlap "
-    "(aggregate shingle fraction — misses one long quote inside a "
-    "big doc) and decontaminate_minhash (paraphrase-level — blind to "
-    "positions). ONE train-side pass: positional 13-gram explode "
-    "(map-local, only long triples leave the scan), broadcast left "
-    "join against the eval gram universe (benchmarks are tiny next "
-    "to a 100 TB corpus), one per-doc agg shuffle.",
-)
-def q_decontaminate_ngram13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.dedup import ngram_contamination
-
-    d = spread(load_table(spark, sf_dir, "documents"))
-    return ngram_contamination(d, F.col("doc_id") % DECON_MOD == DECON_REM)
-
-
-@register(
-    "decontaminate_span_scrub",
-    ngram_span_scrub_sql(_DECON13_PRED_SQL),
-    tags=("extension", "pipeline", "decontamination", "ngram", "rewrite"),
-    doc="SURGICAL decontamination — the corpus REWRITE form of "
-    "decontaminate_ngram13: every eval-colliding 13-gram span is "
-    "excised (overlapping/adjacent spans unioned via the islands "
-    "window) and the cleaned text re-emitted for every train doc; "
-    "untouched docs pass through, fully-leaked docs come back empty. "
-    "Past the broadcast hit join everything runs on the HITS "
-    "relation (bounded by the eval gram universe, not the corpus): "
-    "the islands window partitions per doc (≤ doc-length rows — no "
-    "corpus-growth skew), and only the rare dirty docs pay the "
-    "posexplode/rebuild; clean docs are an anti-join projection. "
-    "Output clean_text is exact cross-engine (pure word-array "
-    "algebra, no floats).",
-)
-def q_decontaminate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.dedup import ngram_span_scrub
-
-    d = spread(load_table(spark, sf_dir, "documents"))
-    return ngram_span_scrub(d, F.col("doc_id") % DECON_MOD == DECON_REM)
-
-
 @register(
     "quality_chartrigram_df",
     f"""
@@ -1271,256 +1059,6 @@ def q_quality_ensemble_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SUBSTR_DUP_W = 16
-
-
-@register(
-    "substring_dup_spans",
-    f"""
-WITH t AS (
-  SELECT doc_id, string_split(text, chr(32)) AS toks,
-         len(string_split(text, chr(32))) AS n_tokens
-  FROM documents
-),
-w AS (
-  SELECT doc_id, toks, n_tokens,
-         unnest(range(0, n_tokens - {SUBSTR_DUP_W} + 1)) AS w
-  FROM t WHERE n_tokens >= {SUBSTR_DUP_W}
-),
-h AS (
-  SELECT doc_id, n_tokens, w,
-         {hash48_sql(
-             "array_to_string(toks[w + 1 : w + " + str(SUBSTR_DUP_W)
-             + "], chr(32))"
-         )} AS h
-  FROM w
-),
-dfreq AS (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM h GROUP BY h),
-dup AS (
-  SELECT doc_id, n_tokens, w,
-         MAX(w + {SUBSTR_DUP_W}) OVER (
-           PARTITION BY doc_id ORDER BY w
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-  FROM h JOIN dfreq USING (h) WHERE nd > 1
-),
-cov AS (
-  SELECT doc_id, n_tokens, COUNT(*) AS n_dup_windows,
-         CAST(SUM(w + {SUBSTR_DUP_W}
-                  - greatest(coalesce(prev_end, 0), w)) AS BIGINT)
-           AS dup_token_cov
-  FROM dup GROUP BY doc_id, n_tokens
-),
-nw AS (
-  SELECT doc_id, n_tokens,
-         CAST(greatest(n_tokens - {SUBSTR_DUP_W} + 1, 0) AS BIGINT)
-           AS n_windows
-  FROM t
-)
-SELECT nw.doc_id, nw.n_tokens AS n_tokens, nw.n_windows,
-       CAST(coalesce(cov.n_dup_windows, 0) AS BIGINT) AS n_dup_windows,
-       CAST(coalesce(cov.dup_token_cov, 0) AS BIGINT) AS dup_token_cov,
-       CAST(coalesce(cov.dup_token_cov, 0) AS DOUBLE) / nw.n_tokens
-         AS dup_token_fraction
-FROM nw LEFT JOIN cov ON nw.doc_id = cov.doc_id
-""",
-    tags=("extension", "dedup", "text", "pipeline", "chunking"),
-    doc=f"Substring-duplication spans: slide a {SUBSTR_DUP_W}-token "
-    "window at stride 1 over every document, flag windows whose "
-    "content appears in at least one OTHER document, and report the "
-    "fraction of token POSITIONS covered by the union of duplicated "
-    "windows (interval-union via an ordered prev-end window — exact "
-    "integer algebra on both engines). This is the any-alignment "
-    "duplication signal fixed-chunk dedup (chunk_dup_fraction) "
-    "misses: a copied paragraph straddling a chunk boundary hides "
-    "from chunk hashing but lights up every sliding window it "
-    "contains — the exact-substring criterion of "
-    "training-data-dedup practice. Plan: windows explode 1 row per "
-    "token position (linear; only 48-bit hashes shuffle), window-df "
-    "aggregate is map-side combined, coverage union is one ordered "
-    "window per doc; short docs (< W tokens) keep a zero row via the "
-    "left join.",
-)
-def q_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.functions.text import hash48
-
-    W = SUBSTR_DUP_W
-    d = spread(load_table(spark, sf_dir, "documents"))
-    t = d.select(
-        "doc_id",
-        F.split(F.col("text"), " ").alias("t"),
-    ).withColumn("n_tokens", F.size("t").cast("long"))
-    wins = (
-        t.filter(F.col("n_tokens") >= W)
-        .select(
-            "doc_id",
-            "n_tokens",
-            "t",
-            F.explode(
-                F.sequence(
-                    F.lit(0).cast("long"), F.col("n_tokens") - W
-                )
-            ).alias("w"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            "w",
-            hash48(
-                F.concat_ws(
-                    " ", F.slice(F.col("t"), (F.col("w") + 1).cast("int"), W)
-                )
-            ).alias("h"),
-        )
-    )
-    # "appears in >1 distinct doc" ⟺ min(doc_id) != max(doc_id) over
-    # the same-hash window: two cheap window aggs over ONE exchange on
-    # h replace the countDistinct aggregate + join-back that moved the
-    # window table through the h exchange twice (interleaved A/B at
-    # sf0.1: 2.06 -> 0.94 s, output identical)
-    hw = Window.partitionBy("h")
-    dup = wins.withColumn(
-        "_dup", F.min("doc_id").over(hw) != F.max("doc_id").over(hw)
-    ).filter(F.col("_dup"))
-    prev_end = F.max(F.col("w") + W).over(
-        Window.partitionBy("doc_id")
-        .orderBy("w")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cov = (
-        dup.withColumn("prev_end", prev_end)
-        .groupBy("doc_id", "n_tokens")
-        .agg(
-            F.count("*").alias("n_dup_windows"),
-            F.sum(
-                F.col("w")
-                + W
-                - F.greatest(F.coalesce(F.col("prev_end"), F.lit(0)), F.col("w"))
-            )
-            .cast("long")
-            .alias("dup_token_cov"),
-        )
-        .select("doc_id", "n_dup_windows", "dup_token_cov")
-    )
-    nw = t.select(
-        "doc_id",
-        "n_tokens",
-        F.greatest(F.col("n_tokens") - W + 1, F.lit(0).cast("long")).alias(
-            "n_windows"
-        ),
-    )
-    return nw.join(cov, "doc_id", "left").select(
-        "doc_id",
-        "n_tokens",
-        "n_windows",
-        F.coalesce(F.col("n_dup_windows"), F.lit(0)).cast("long").alias(
-            "n_dup_windows"
-        ),
-        F.coalesce(F.col("dup_token_cov"), F.lit(0)).cast("long").alias(
-            "dup_token_cov"
-        ),
-        (
-            F.coalesce(F.col("dup_token_cov"), F.lit(0)).cast("double")
-            / F.col("n_tokens").cast("double")
-        ).alias("dup_token_fraction"),
-    )
-
-
-CHUNK_DUP_TOKENS = 32
-
-
-@register(
-    "chunk_dup_fraction",
-    f"""
-WITH t AS (
-  SELECT doc_id, string_split(text, chr(32)) AS toks FROM documents
-),
-idx AS (
-  SELECT doc_id, toks,
-         unnest(range(0, CAST(ceil(len(toks) / {CHUNK_DUP_TOKENS}.0) AS BIGINT)))
-           AS chunk_idx
-  FROM t
-),
-ch AS (
-  SELECT doc_id, chunk_idx,
-         {hash48_sql(
-             "array_to_string(toks[chunk_idx * " + str(CHUNK_DUP_TOKENS)
-             + " + 1 : (chunk_idx + 1) * " + str(CHUNK_DUP_TOKENS)
-             + "], chr(32))"
-         )} AS h
-  FROM idx
-),
-dfreq AS (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM ch GROUP BY h)
-SELECT doc_id, COUNT(*) AS n_chunks,
-       CAST(SUM(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_shared_chunks,
-       round(CAST(SUM(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-             / COUNT(*), 9) AS shared_frac
-FROM ch JOIN dfreq USING (h)
-GROUP BY doc_id
-""",
-    tags=("extension", "dedup", "text", "pipeline", "chunking"),
-    doc=f"Chunk-level duplication profile: fraction of each document's "
-    f"fixed {CHUNK_DUP_TOKENS}-token chunks whose content appears in "
-    "at least one OTHER document — the template/boilerplate detector "
-    "that document-level dedup misses (two distinct pages sharing a "
-    "footer are not near-dups, but their shared chunks are). Chunking "
-    "is pure JVM (sequence explode + slice + concat_ws — the UDTF "
-    "chunker's algebraic twin, no Python in the plan); only 48-bit "
-    "chunk hashes shuffle, the chunk-doc-frequency aggregate is "
-    "map-side combined, and the scoring join is keyed on the hash.",
-)
-def q_chunk_dup_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.functions.text import hash48
-
-    k = CHUNK_DUP_TOKENS
-    d = spread(load_table(spark, sf_dir, "documents"))
-    t = d.select("doc_id", F.split(F.col("text"), " ").alias("t"))
-    ch = (
-        t.select(
-            "doc_id",
-            "t",
-            F.explode(
-                F.sequence(
-                    F.lit(0).cast("long"),
-                    (F.ceil(F.size("t") / F.lit(float(k))) - 1).cast("long"),
-                )
-            ).alias("chunk_idx"),
-        )
-        .select(
-            "doc_id",
-            "chunk_idx",
-            hash48(
-                F.concat_ws(
-                    " ",
-                    F.slice(
-                        F.col("t"),
-                        (F.col("chunk_idx") * k + 1).cast("int"),
-                        k,
-                    ),
-                )
-            ).alias("h"),
-        )
-    )
-    # same min!=max window trick as substring_dup_spans: "shared with
-    # another doc" needs only (min != max) over the same-hash window,
-    # not a countDistinct + join-back (A/B 0.66 -> 0.45 s at sf0.1)
-    hw = Window.partitionBy("h")
-    flagged = ch.withColumn(
-        "_dup", F.min("doc_id").over(hw) != F.max("doc_id").over(hw)
-    )
-    shared = F.sum(F.when(F.col("_dup"), 1).otherwise(0))
-    return (
-        flagged.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_chunks"),
-            shared.cast("long").alias("n_shared_chunks"),
-            F.round(
-                shared.cast("double") / F.count("*"), 9
-            ).alias("shared_frac"),
-        )
-    )
-
-
 QUALITY_BUDGET_PER_SOURCE = 2000
 
 
@@ -1636,66 +1174,6 @@ def q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cum.filter(
         F.col("cum_tokens") <= TOKEN_BUDGET_PER_SOURCE
     ).select("doc_id", "source", "n_tokens", "cum_tokens")
-
-
-@register(
-    "corpus_version_diff",
-    """
-WITH v1 AS (SELECT doc_id, md5(text) AS h FROM documents),
-v2 AS (
-  SELECT doc_id,
-         md5(CASE WHEN doc_id % 5 = 0 THEN text || ' v2-edit' ELSE text END) AS h
-  FROM documents WHERE doc_id % 7 <> 0
-),
-j AS (
-  SELECT COALESCE(v1.doc_id, v2.doc_id) AS doc_id,
-         v1.h AS h1, v2.h AS h2
-  FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
-)
-SELECT CASE WHEN h1 IS NULL THEN 'added'
-            WHEN h2 IS NULL THEN 'removed'
-            WHEN h1 = h2 THEN 'unchanged'
-            ELSE 'changed' END AS status,
-       CAST(COUNT(*) AS BIGINT) AS n_docs
-FROM j GROUP BY 1
-""",
-    tags=("extension", "pipeline", "versioning"),
-    doc="Corpus snapshot diff by content digest: added / removed / "
-    "changed / unchanged counts between two corpus versions (v2 "
-    "derived deterministically from the fixture: every 7th doc "
-    "dropped, every 5th edited). One full-outer join on doc_id with "
-    "digest compare — the release-note report every corpus version "
-    "bump needs, O(corpus) with digests only in the shuffle.",
-)
-def q_corpus_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    v1 = docs.select("doc_id", F.md5(F.col("text").cast("binary")).alias("h1"))
-    v2 = (
-        docs.filter(F.col("doc_id") % 7 != 0)
-        .select(
-            "doc_id",
-            F.md5(
-                F.when(
-                    F.col("doc_id") % 5 == 0,
-                    F.concat(F.col("text"), F.lit(" v2-edit")),
-                )
-                .otherwise(F.col("text"))
-                .cast("binary")
-            ).alias("h2"),
-        )
-    )
-    j = v1.join(v2, "doc_id", "full_outer")
-    status = (
-        F.when(F.col("h1").isNull(), F.lit("added"))
-        .when(F.col("h2").isNull(), F.lit("removed"))
-        .when(F.col("h1") == F.col("h2"), F.lit("unchanged"))
-        .otherwise(F.lit("changed"))
-    )
-    return (
-        j.select(status.alias("status"))
-        .groupBy("status")
-        .agg(F.count("*").cast("long").alias("n_docs"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1883,116 +1361,6 @@ def q_dedup_events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts_sec",
         F.col("n_collapsed").cast("long").alias("n_collapsed"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Chunk-dedup rewrite (CCNet-style shared-passage removal)
-# ---------------------------------------------------------------------------
-DEDUP_CHUNK_REWRITE_SQL = f"""
-WITH t AS (
-  SELECT doc_id, string_split(text, chr(32)) AS toks FROM documents
-),
-idx AS (
-  SELECT doc_id, toks,
-         unnest(range(0, CAST(ceil(len(toks) / {CHUNK_DUP_TOKENS}.0) AS BIGINT)))
-           AS chunk_idx
-  FROM t
-),
-ch AS (
-  SELECT doc_id, chunk_idx,
-         array_to_string(toks[chunk_idx * {CHUNK_DUP_TOKENS} + 1 :
-                              (chunk_idx + 1) * {CHUNK_DUP_TOKENS}], chr(32))
-           AS chunk_text
-  FROM idx
-),
-rk AS (
-  SELECT doc_id, chunk_idx, chunk_text,
-         row_number() OVER (PARTITION BY chunk_text
-                            ORDER BY doc_id, chunk_idx) AS rn
-  FROM ch
-),
-cnt AS (SELECT doc_id, COUNT(*) AS n_chunks FROM ch GROUP BY doc_id),
-agg AS (
-  SELECT doc_id, COUNT(*) AS n_kept,
-         string_agg(chunk_text, chr(32) ORDER BY chunk_idx) AS kept_text
-  FROM rk WHERE rn = 1 GROUP BY doc_id
-)
-SELECT c.doc_id, c.n_chunks, COALESCE(a.n_kept, 0) AS n_kept,
-       COALESCE(a.kept_text, '') AS kept_text
-FROM cnt c LEFT JOIN agg a USING (doc_id)
-"""
-
-
-@register(
-    "dedup_chunk_rewrite",
-    DEDUP_CHUNK_REWRITE_SQL,
-    tags=("extension", "dedup", "text", "pipeline", "chunking", "rewrite"),
-    doc="CCNet-style shared-passage REMOVAL (Wenzek et al. 2020): every "
-    f"{CHUNK_DUP_TOKENS}-token chunk keeps only its first corpus-wide "
-    "occurrence (rank over (doc_id, chunk_idx) within equal chunk "
-    "content), and each document is REASSEMBLED from its surviving "
-    "chunks in order — the rewrite step that strips boilerplate from "
-    "later documents instead of dropping them whole, which doc-level "
-    "dedup (dedup_exact) and profiling (chunk_dup_fraction) don't do. "
-    "Plan: the same pure-JVM chunker as chunk_dup_fraction (sequence "
-    "explode + slice + concat_ws, no Python), ONE rank window keyed on "
-    "chunk content (the only corpus-wide shuffle; at 100 TB the key is "
-    "the chunk digest and the payload rides the same exchange — text "
-    "must shuffle anyway for reassembly), then a per-doc ordered fold "
-    "(array_sort over (idx, text) structs == string_agg ORDER BY). "
-    "All-integer/string output — no float parity surface at all.",
-)
-def q_dedup_chunk_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.caching import rotating_persist
-
-    k = CHUNK_DUP_TOKENS
-    d = spread(load_table(spark, sf_dir, "documents"))
-    t = d.select("doc_id", F.split(F.col("text"), " ").alias("t"))
-    ch = rotating_persist(
-        t.select(
-            "doc_id",
-            "t",
-            F.explode(
-                F.sequence(
-                    F.lit(0).cast("long"),
-                    (F.ceil(F.size("t") / F.lit(float(k))) - 1).cast("long"),
-                )
-            ).alias("chunk_idx"),
-        ).select(
-            "doc_id",
-            "chunk_idx",
-            F.concat_ws(
-                " ",
-                F.slice(F.col("t"), (F.col("chunk_idx") * k + 1).cast("int"), k),
-            ).alias("chunk_text"),
-        ),
-        "dedup_chunk_rewrite.ch",
-    )
-    w = Window.partitionBy("chunk_text").orderBy("doc_id", "chunk_idx")
-    kept = (
-        ch.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_kept"),
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("chunk_idx", "chunk_text"))
-                    ),
-                    lambda x: x["chunk_text"],
-                ),
-            ).alias("kept_text"),
-        )
-    )
-    cnt = ch.groupBy("doc_id").agg(F.count("*").alias("n_chunks"))
-    return cnt.join(kept, "doc_id", "left").select(
-        "doc_id",
-        "n_chunks",
-        F.coalesce(F.col("n_kept"), F.lit(0).cast("long")).alias("n_kept"),
-        F.coalesce(F.col("kept_text"), F.lit("")).alias("kept_text"),
     )
 
 
@@ -2459,195 +1827,6 @@ def q_retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
         .limit(20)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Entity resolution: blocked fuzzy matching — the record-linkage
-# primitive (dedupe a noisy entity catalog without all-pairs edit
-# distance).
-# ---------------------------------------------------------------------------
-@register(
-    "entity_match_blocked",
-    """
-WITH names AS (
-  SELECT p_name, COUNT(*) AS n_parts FROM part GROUP BY p_name
-), blocked AS (
-  SELECT p_name, n_parts, string_split(p_name, ' ')[-1] AS blk
-  FROM names
-)
-SELECT a.p_name AS name_a, b.p_name AS name_b,
-       levenshtein(a.p_name, b.p_name) AS dist,
-       a.n_parts AS n_parts_a, b.n_parts AS n_parts_b
-FROM blocked a
-JOIN blocked b ON a.blk = b.blk AND a.p_name < b.p_name
-WHERE levenshtein(a.p_name, b.p_name) <= 3
-""",
-    tags=("extension", "dedup", "fuzzy", "blocking"),
-    doc="Blocked fuzzy entity matching over the part-name catalog: "
-    "candidate pairs come from an equi-join on a blocking key (the "
-    "name's last token — the head noun), then a levenshtein<=3 "
-    "residual keeps near-identical entity labels ('red bolt' ~ "
-    "'blue bolt'). Two scale levers a 100 TB catalog needs: the "
-    "GROUP BY collapses row count to the distinct-entity vocabulary "
-    "BEFORE any pairing, and the blocking key turns all-pairs "
-    "O(V^2) into sum-of-block^2 — the standard record-linkage "
-    "blocking bound. Edit distance runs JVM-side (F.levenshtein), "
-    "identical metric to DuckDB's levenshtein; a.p_name < b.p_name "
-    "halves the pair space and makes the result orientation-"
-    "deterministic.",
-)
-def q_entity_match_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    names = (
-        load_table(spark, sf_dir, "part")
-        .groupBy("p_name")
-        .agg(F.count("*").alias("n_parts"))
-    )
-    blocked = names.select(
-        "p_name",
-        "n_parts",
-        F.element_at(F.split(F.col("p_name"), " "), -1).alias("blk"),
-    )
-    a = blocked.alias("a")
-    b = blocked.alias("b")
-    dist = F.levenshtein(F.col("a.p_name"), F.col("b.p_name"))
-    return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.p_name") < F.col("b.p_name")),
-        )
-        .filter(dist <= 3)
-        .select(
-            F.col("a.p_name").alias("name_a"),
-            F.col("b.p_name").alias("name_b"),
-            dist.alias("dist"),
-            F.col("a.n_parts").alias("n_parts_a"),
-            F.col("b.n_parts").alias("n_parts_b"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Containment dedup — asymmetric overlap (|A∩B| / |smaller|): the
-# excerpt/quote signal. A 50-token excerpt inside a 400-token parent
-# has jaccard ≈ 0.12 (invisible to every whole-doc near-dup kernel)
-# but containment ≈ 1.0. The fixture corpus has no excerpts, so the
-# query deterministically DERIVES them: it injects the phenomenon as
-# a pure function of doc_id so the oracle agrees.
-# ---------------------------------------------------------------------------
-CONTAIN_MOD = 37
-CONTAIN_T = 0.9
-
-
-@register(
-    "dedup_containment_pairs",
-    f"""
-WITH exc AS (
-  SELECT doc_id + 1000000 AS doc_id,
-         array_to_string(
-           (string_split(text, chr(32)))[1 :
-              GREATEST(len(string_split(text, chr(32))) // 2, 4)],
-           chr(32)) AS text
-  FROM documents WHERE doc_id % {CONTAIN_MOD} = 5
-),
-corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL SELECT doc_id, text FROM exc
-),
-sh AS ({doc_shingle_hashes_sql('corpus')}),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS ni
-  FROM sh a JOIN sh b ON a.h = b.h AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-scored AS (
-  SELECT CASE WHEN s1.n <= s2.n THEN d1 ELSE d2 END AS contained_id,
-         CASE WHEN s1.n <= s2.n THEN d2 ELSE d1 END AS container_id,
-         CAST(ni AS DOUBLE) / LEAST(s1.n, s2.n) AS containment,
-         CAST(ni AS DOUBLE) / (s1.n + s2.n - ni) AS jaccard
-  FROM inter JOIN sizes s1 ON s1.doc_id = d1 JOIN sizes s2 ON s2.doc_id = d2
-)
-SELECT contained_id, container_id,
-       round(containment, 9) AS containment,
-       round(jaccard, 9) AS jaccard
-FROM scored
-WHERE containment >= {CONTAIN_T} AND jaccard < {JACCARD_T}
-""",
-    tags=("extension", "dedup", "containment"),
-    doc=f"Containment near-dup pairs: |A∩B| / |smaller shingle set| "
-    f">= {CONTAIN_T} while whole-doc jaccard < {JACCARD_T} — exactly "
-    "the excerpt/quote pairs every symmetric near-dup kernel in the "
-    "registry is blind to (an excerpt's jaccard against its parent "
-    "shrinks with the parent's length; its containment does not). "
-    "Excerpt documents are derived deterministically (doc_id % "
-    f"{CONTAIN_MOD} = 5 contributes its first-half prefix as doc_id "
-    "+ 1e6) because the synthetic corpus contains no natural "
-    "excerpts — measured: ZERO containment-only pairs at any SF "
-    "without injection. Same inverted-index plan as "
-    "dedup_ngram_jaccard (shingle-hash self-join, shuffled hash on "
-    "h, only longs move); the direction is resolved by set size "
-    "(smaller = contained).",
-)
-def q_dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.dedup import doc_shingle_hashes
-
-    d = spread(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-    half = F.greatest(F.expr("size(split(text, ' ')) div 2"), F.lit(4))
-    exc = d.filter(F.col("doc_id") % CONTAIN_MOD == 5).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(toks, F.lit(1), half)).alias("text"),
-    )
-    corpus = d.unionByName(exc)
-    sh = doc_shingle_hashes(corpus, slot="containment.sh", eager=True)
-    # eager: A/B +15% at sf0.1 — the banded-candidate and asymmetric-
-    # containment subtrees otherwise re-shingled under broadcasts
-    # (round-8 broadcast-race lesson)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        sh.select(F.col("doc_id").alias("d1"), "h")
-        .join(
-            sh.select(F.col("doc_id").alias("d2"), "h").hint("shuffle_hash"),
-            "h",
-        )
-        .filter(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(F.count("*").alias("ni"))
-    )
-    scored = (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1")),
-            "d1",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2")),
-            "d2",
-        )
-        .select(
-            F.when(F.col("n1") <= F.col("n2"), F.col("d1"))
-            .otherwise(F.col("d2"))
-            .alias("contained_id"),
-            F.when(F.col("n1") <= F.col("n2"), F.col("d2"))
-            .otherwise(F.col("d1"))
-            .alias("container_id"),
-            (
-                F.col("ni").cast("double") / F.least(F.col("n1"), F.col("n2"))
-            ).alias("containment"),
-            (
-                F.col("ni").cast("double")
-                / (F.col("n1") + F.col("n2") - F.col("ni"))
-            ).alias("jaccard"),
-        )
-    )
-    return scored.filter(
-        (F.col("containment") >= CONTAIN_T) & (F.col("jaccard") < JACCARD_T)
-    ).select(
-        "contained_id",
-        "container_id",
-        F.round("containment", 9).alias("containment"),
-        F.round("jaccard", 9).alias("jaccard"),
     )
 
 

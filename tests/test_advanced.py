@@ -157,40 +157,6 @@ def test_embedding_neardup_symmetric_free(spark, sf_correctness):
     assert all(r.cos >= 0.45 for r in res)
 
 
-def test_connected_components_known_graph(spark):
-    from msstreamingstack_spark.operators.components import connected_components
-
-    # two chains and a singleton edge: {1,2,3,4}, {10,11}, {20,21}
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21)], ["d1", "d2"]
-    )
-    comp = {r.node: r.comp for r in connected_components(pairs).collect()}
-    assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
-
-
-def test_connected_components_long_chain_converges(spark):
-    from msstreamingstack_spark.operators.components import connected_components
-
-    # a 12-node path needs several propagation rounds (diameter-bound)
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], ["d1", "d2"]
-    )
-    comp = {r.node: r.comp for r in connected_components(pairs).collect()}
-    assert set(comp.values()) == {0} and len(comp) == 13
-
-
-def test_dedup_keep_list_unpaired_docs_kept(spark):
-    from msstreamingstack_spark.operators.components import dedup_keep_list
-
-    docs = spark.createDataFrame([(i,) for i in range(6)], ["doc_id"])
-    pairs = spark.createDataFrame([(1, 4), (4, 5)], ["d1", "d2"])
-    out = {r.doc_id: (r.cluster_id, r.keep) for r in dedup_keep_list(docs, pairs).collect()}
-    assert out == {
-        0: (0, True), 1: (1, True), 2: (2, True),
-        3: (3, True), 4: (1, False), 5: (1, False),
-    }
-
-
 def test_ivf_recall_vs_brute_force(spark, sf_correctness):
     from msstreamingstack_spark.operators.similarity import (
         brute_force_topk,

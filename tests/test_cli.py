@@ -151,3 +151,27 @@ def test_plan_cli(capsys):
     assert payload["pushed_filters"], "q6's scan filters must be pushed"
     assert payload["python_evals"] == 0
     assert main(["plan", "no_such_query"]) == 2
+
+
+def test_catalog_matches_committed_queries_md(tmp_path):
+    """QUERIES.md is the generated catalog of the registry: adding,
+    removing or re-documenting a registered query without regenerating
+    it (``python -m msstreamingstack_spark catalog --out QUERIES.md``)
+    fails here. No Spark session: ``catalog`` only imports the
+    registry."""
+    import pathlib
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    out = tmp_path / "catalog.md"
+    r = subprocess.run(
+        [sys.executable, "-m", "msstreamingstack_spark", "catalog",
+         "--out", str(out)],
+        capture_output=True, text=True, timeout=120, cwd=root,
+    )
+    assert r.returncode == 0, r.stdout + r.stderr
+    assert out.read_bytes() == (root / "QUERIES.md").read_bytes(), (
+        "QUERIES.md is stale: regenerate it with "
+        "`python -m msstreamingstack_spark catalog --out QUERIES.md`"
+    )

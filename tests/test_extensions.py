@@ -54,7 +54,7 @@ def test_jaccard_verify_array_form_matches_join_count(
     )
 
     docs = load_table(spark, sf_correctness, "documents")
-    sh = doc_shingle_hashes(docs, persist=False)
+    sh = doc_shingle_hashes(docs)
     assert (
         sh.groupBy("doc_id", "h").count().filter(F.col("count") > 1).count()
         == 0
@@ -145,36 +145,6 @@ def test_multimodal_stats(spark):
     st = {r["kind"]: r for r in media_stats(synthetic_media(spark, 64)).collect()}
     assert set(st) == {"image", "audio", "video"}
     assert st["image"]["max_width"] is not None
-
-
-def test_decontamination_planted(spark):
-    """A train doc identical to an eval doc → overlap_frac 1.0 and
-    flagged; a disjoint-vocabulary doc → 0 overlap; a doc shorter than
-    the shingle width → all-zero stats; eval docs never appear."""
-    from msstreamingstack_spark.operators.dedup import eval_overlap_stats
-
-    rows = [
-        (0, "alpha beta gamma delta epsilon zeta eta theta"),  # eval
-        (1, "alpha beta gamma delta epsilon zeta eta theta"),  # clone
-        (2, "iota kappa llambda mu nu xi omicron pi rho"),     # disjoint
-        (3, "too short"),                                      # < n tokens
-        (4, "alpha beta gamma delta iota kappa llambda mu"),   # partial
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {
-        r["doc_id"]: r
-        for r in eval_overlap_stats(
-            docs, F.col("doc_id") == 0, frac_threshold=0.5
-        ).collect()
-    }
-    assert set(out) == {1, 2, 3, 4}, "eval doc must be excluded"
-    assert out[1]["overlap_frac"] == 1.0 and out[1]["contaminated"] == 1
-    assert out[2]["n_overlap"] == 0 and out[2]["contaminated"] == 0
-    assert out[3]["n_shingles"] == 0 and out[3]["overlap_frac"] == 0.0
-    # doc 4: shingles are 3-grams; only 'alpha beta gamma' and
-    # 'beta gamma delta' exist in the eval universe → 2 of 6
-    assert out[4]["n_shingles"] == 6 and out[4]["n_overlap"] == 2
-    assert out[4]["contaminated"] == 0
 
 
 def test_quantize_int8_error_bound(spark, sf_correctness):
@@ -358,151 +328,6 @@ def test_rotating_persist_bounds_registry_query_caches(spark):
     # cleanup: rotate tiny frames through both slots, then unpersist
     for slot, df in list(live_slots(spark).items()):
         df.unpersist(blocking=False)
-
-
-def test_substring_dup_spans_alignment_and_coverage(spark):
-    """The sliding-window substring detector must (a) catch a copied
-    span at ANY alignment — including one placed to straddle a
-    32-token chunk boundary, where chunk_dup_fraction sees nothing —
-    and (b) report interval-union token coverage, not window counts
-    (overlapping dup windows must not double-count positions)."""
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_extensions import SUBSTR_DUP_W
-
-    copied = " ".join(f"c{i}" for i in range(20))  # 20-token span
-    docs = [
-        # doc 0: the span sits at tokens 22..41 — straddles the 32-token
-        # chunk boundary, so neither fixed chunk equals any chunk of doc 1
-        (0, " ".join(f"a{i}" for i in range(22)) + " " + copied + " "
-            + " ".join(f"b{i}" for i in range(22))),
-        # doc 1: same span at offset 0 plus distinct tail
-        (1, copied + " " + " ".join(f"z{i}" for i in range(44))),
-        # doc 2: fully unique, longer than W
-        (2, " ".join(f"q{i}" for i in range(40))),
-        # doc 3: shorter than W -> zero row
-        (3, "tiny doc under window"),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    df.createOrReplaceTempView("documents")
-
-    import duckdb
-    import tempfile, os
-    tmp = tempfile.mkdtemp()
-    df.toPandas().to_parquet(os.path.join(tmp, "documents.parquet"))
-
-    out = {
-        r["doc_id"]: r
-        for r in REGISTRY["substring_dup_spans"].builder(spark, tmp).collect()
-    }
-    # (a) both carriers flagged; W=16 windows inside a 20-token copy:
-    # 20-16+1 = 5 fully-contained windows each
-    assert out[0]["n_dup_windows"] == 5 and out[1]["n_dup_windows"] == 5
-    # (b) interval union: 5 overlapping windows cover exactly the
-    # 20 copied positions, not 5*16
-    assert out[0]["dup_token_cov"] == 20 == out[1]["dup_token_cov"]
-    assert out[2]["n_dup_windows"] == 0 and out[2]["dup_token_cov"] == 0
-    assert out[3]["n_windows"] == 0 and out[3]["dup_token_fraction"] == 0.0
-    assert abs(out[0]["dup_token_fraction"] - 20 / 64) < 1e-12
-
-    # the chunk detector misses this alignment entirely
-    chunk = {
-        r["doc_id"]: r["n_shared_chunks"]
-        for r in REGISTRY["chunk_dup_fraction"].builder(spark, tmp).collect()
-    }
-    assert chunk[0] == 0 and chunk[1] == 0
-
-
-def test_dedup_chunk_rewrite_matches_python_model(spark):
-    """Hand fixture + independent Python model of the CCNet rewrite:
-    keep each chunk's first corpus-wide (doc_id, chunk_idx) occurrence,
-    reassemble survivors in order."""
-    import math
-    import os
-    import tempfile
-
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_extensions import CHUNK_DUP_TOKENS
-
-    k = CHUNK_DUP_TOKENS
-    a_toks = [f"a{i}" for i in range(2 * k)]
-    docs = [
-        (0, " ".join(a_toks)),                      # 2 chunks, both first
-        # chunk 0 == doc 0's chunk 1 (aligned copy) -> dropped;
-        # chunk 1 unique -> kept
-        (1, " ".join(a_toks[k:]) + " " + " ".join(f"u{i}" for i in range(k))),
-        (2, " ".join(a_toks)),                      # full duplicate of doc 0
-        (3, "tiny unique doc"),                     # single short chunk
-    ]
-
-    def model(rows):
-        chunks = []
-        for doc_id, text in rows:
-            toks = text.split(" ")
-            for i in range(math.ceil(len(toks) / k)):
-                chunks.append((doc_id, i, " ".join(toks[i * k:(i + 1) * k])))
-        first = {}
-        for doc_id, i, ct in sorted(chunks):
-            first.setdefault(ct, (doc_id, i))
-        out = {}
-        for doc_id, text in rows:
-            toks = text.split(" ")
-            n = math.ceil(len(toks) / k)
-            kept = [
-                " ".join(toks[i * k:(i + 1) * k])
-                for i in range(n)
-                if first[" ".join(toks[i * k:(i + 1) * k])] == (doc_id, i)
-            ]
-            out[doc_id] = (n, len(kept), " ".join(kept))
-        return out
-
-    tmp = tempfile.mkdtemp()
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    df.toPandas().to_parquet(os.path.join(tmp, "documents.parquet"))
-
-    got = {
-        r["doc_id"]: (r["n_chunks"], r["n_kept"], r["kept_text"])
-        for r in REGISTRY["dedup_chunk_rewrite"].builder(spark, tmp).collect()
-    }
-    assert got == model(docs)
-    # headline facts the fixture encodes
-    assert got[2] == (2, 0, "")          # full dup rewritten to empty
-    assert got[1][1] == 1                # boilerplate chunk stripped
-
-
-def test_dedup_chunk_rewrite_keeps_each_distinct_chunk_once(spark, sf_smoke):
-    """Global invariant on real data: sum(n_kept) == number of DISTINCT
-    chunk contents in the corpus (keep-first keeps each exactly once)."""
-    from pyspark.sql import functions as F
-
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_extensions import CHUNK_DUP_TOKENS
-
-    out = REGISTRY["dedup_chunk_rewrite"].builder(spark, sf_smoke)
-    kept_total = out.agg(F.sum("n_kept")).collect()[0][0]
-
-    k = CHUNK_DUP_TOKENS
-    d = load_table(spark, sf_smoke, "documents")
-    t = d.select("doc_id", F.split(F.col("text"), " ").alias("t"))
-    distinct_chunks = (
-        t.select(
-            F.explode(
-                F.sequence(
-                    F.lit(0).cast("long"),
-                    (F.ceil(F.size("t") / F.lit(float(k))) - 1).cast("long"),
-                ).alias("i")
-            ).alias("chunk_idx"),
-            "t",
-        )
-        .select(
-            F.concat_ws(
-                " ",
-                F.slice(F.col("t"), (F.col("chunk_idx") * k + 1).cast("int"), k),
-            ).alias("ct")
-        )
-        .distinct()
-        .count()
-    )
-    assert kept_total == distinct_chunks
 
 
 def test_dsir_weights_prefer_target_language(spark, sf_smoke):
@@ -728,71 +553,6 @@ def test_bm25_matches_python_model(spark, sf_correctness):
         assert abs(g - e) <= 1e-9
 
 
-def test_entity_match_matches_python_levenshtein_model(spark, sf_correctness):
-    """Independent model: distinct part names, block on last token,
-    all pairs with edit distance <= 3 via a from-scratch DP
-    levenshtein."""
-    from msstreamingstack_spark.queries import REGISTRY
-
-    def lev(a: str, b: str) -> int:
-        prev = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            cur = [i]
-            for j, cb in enumerate(b, 1):
-                cur.append(
-                    min(prev[j] + 1, cur[-1] + 1, prev[j - 1] + (ca != cb))
-                )
-            prev = cur
-        return prev[-1]
-
-    names = sorted(
-        {
-            r["p_name"]
-            for r in spark.read.parquet(f"{sf_correctness}/part.parquet")
-            .select("p_name")
-            .collect()
-        }
-    )
-    expect = set()
-    for i, a in enumerate(names):
-        for b in names[i + 1 :]:
-            if a.rsplit(" ", 1)[-1] == b.rsplit(" ", 1)[-1] and lev(a, b) <= 3:
-                expect.add((a, b))
-
-    rows = REGISTRY["entity_match_blocked"].builder(spark, sf_correctness).collect()
-    got = {(r["name_a"], r["name_b"]) for r in rows}
-    assert got == expect
-    assert all(r["dist"] <= 3 and r["name_a"] < r["name_b"] for r in rows)
-
-
-def test_decontaminate_minhash_directed_and_verified(spark):
-    """On a constructed corpus: a train doc paraphrasing an eval doc
-    is flagged (train_id, eval_id); an equally-similar EVAL-EVAL pair
-    is NOT (duplication inside the benchmark is not contamination);
-    an unrelated train doc never appears; every output pair has
-    jaccard >= the threshold and the correct split sides."""
-    from msstreamingstack_spark.operators.dedup import minhash_cross_pairs
-
-    base = " ".join(f"tok{i}" for i in range(40))
-    near = " ".join(f"tok{i}" for i in range(38)) + " novelA novelB"
-    other = " ".join(f"zzz{i}" for i in range(40))
-    rows = [
-        (7, base, "en", "s", 1),     # eval (7 % 10 == 7)
-        (17, near, "en", "s", 1),    # eval too — eval-eval near-dup
-        (21, near, "en", "s", 1),    # train paraphrase of doc 7
-        (30, other, "en", "s", 1),   # unrelated train doc
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    got = minhash_cross_pairs(docs, F.col("doc_id") % 10 == 7, 0.5).collect()
-    pairs = {(r["train_id"], r["eval_id"]) for r in got}
-    assert (21, 7) in pairs and (21, 17) in pairs
-    assert all(t % 10 != 7 and e % 10 == 7 for t, e in pairs)
-    assert 30 not in {t for t, _ in pairs}
-    assert all(r["jaccard"] >= 0.5 for r in got)
-
-
 def test_pack_blocks_fixed_invariants(spark, sf_correctness):
     """Conservation + exact-slicing invariants: per source, block ids
     are contiguous from 0, every non-final block holds exactly
@@ -858,34 +618,6 @@ def test_quality_source_calibrated_gate(spark, sf_correctness):
         assert min_kept >= max_drop or any(
             r["score"] == min_kept and r["keep"] == 0 for r in rs
         )
-
-
-def test_containment_pairs_catch_excerpts_jaccard_misses(spark, sf_correctness):
-    """Every injected excerpt must be flagged as contained in its
-    parent; flagged pairs must be invisible to the jaccard kernel
-    (jaccard < 0.8) while containment >= 0.9; direction must point
-    small -> large."""
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_extensions import CONTAIN_MOD
-
-    rows = REGISTRY["dedup_containment_pairs"].builder(
-        spark, sf_correctness
-    ).collect()
-    assert len(rows) > 0
-    got = {(r["contained_id"], r["container_id"]) for r in rows}
-    # each excerpt (id+1e6) is contained in its own parent
-    parents = [
-        r["doc_id"]
-        for r in load_table(spark, sf_correctness, "documents")
-        .filter(F.col("doc_id") % CONTAIN_MOD == 5)
-        .select("doc_id")
-        .collect()
-    ]
-    assert parents and all((p + 1000000, p) in got for p in parents)
-    for r in rows:
-        assert r["containment"] >= 0.9
-        assert r["jaccard"] < 0.8
-        assert r["contained_id"] != r["container_id"]
 
 
 def test_registry_metadata_consistency(spark):

@@ -208,19 +208,6 @@ def test_lang_overlap_broadcasts_totals_no_cartesian(spark):
     assert "InMemoryTableScan" in f.text
 
 
-def test_dfcapped_jaccard_reuses_shingle_persist(spark):
-    """dedup_jaccard_dfcapped reads the shingle table from its persist
-    everywhere (df-cap filter, both pair-join sides, per-doc sizes):
-    the text is shingled ONCE — exactly one parquet scan in the plan
-    (inside the cache build), the rest InMemoryTableScans. Guards the
-    round-3 suspicion that the df-filter join re-shingled the corpus."""
-    import re
-
-    f = plan_facts(REGISTRY["dedup_jaccard_dfcapped"].builder(spark, SF))
-    assert "InMemoryTableScan" in f.text
-    assert len(set(re.findall(r"\((\d+)\) Scan parquet", f.text))) == 1, f.text
-
-
 def test_dup_rate_reuses_shingle_persist_and_prunes_agg_scan(spark):
     """corpus_duplication_rate layers a per-source agg on the banded
     LSH pair generator: the shingle table must come from the persisted
@@ -234,17 +221,6 @@ def test_dup_rate_reuses_shingle_persist_and_prunes_agg_scan(spark):
     schemas = re.findall(r"ReadSchema: struct<([^>\n]*)>", f.text)
     agg_side = [s for s in schemas if "source" in s]
     assert agg_side and all("text" not in s for s in agg_side), schemas
-
-
-def test_simhash_pairs_no_cartesian(spark):
-    """dedup_simhash_pairs must run as a banded bucket equi-join on
-    (band_pair, key) + popcount verify — never the all-pairs
-    cartesian/nested-loop its `d1 < d2` spec would naively plan (the
-    round-3 scale-killer: O(N²) rows at 100× documents)."""
-    f = plan_facts(REGISTRY["dedup_simhash_pairs"].builder(spark, SF))
-    assert "CartesianProduct" not in f.text
-    assert "BroadcastNestedLoopJoin" not in f.text
-    assert "Generate" in f.text  # band explode feeds the equi-join
 
 
 def test_q2_min_cost_broadcasts_dims(spark):
@@ -297,16 +273,6 @@ def test_hash_split_is_narrow_map_plus_one_agg(spark):
     assert f.python_evals == 0
     assert "Join" not in f.text
     assert len(re.findall(r"\(\d+\) Exchange", f.text)) == 1, f.text
-
-
-def test_decontaminate_broadcasts_eval_side(spark):
-    """The eval-id and eval-hash sets must be broadcast (benchmarks
-    are tiny next to the corpus); the train side must never be the
-    build side of a cartesian/nested-loop."""
-    f = plan_facts(REGISTRY["decontaminate_eval_overlap"].builder(spark, SF))
-    assert f.broadcast_joins >= 3, f.text  # eval ids ×2 + eval hash set
-    assert "CartesianProduct" not in f.text
-    assert f.python_evals == 0
 
 
 def test_quantize_int8_is_narrow_map(spark):
@@ -395,7 +361,6 @@ def test_shuffle_budget_pins(spark):
         "sessionize_events": 2,        # 1 real: user key (exchange reuse)
         "tpch_q1": 2,                  # 1 real: group keys after partial agg
         "hash_split_assign": 2,        # 1 real: split agg
-        "dedup_exact": 4,              # 2 real: digest window + agg
         "pack_sequences_greedy": 4,    # 2 real: per-source window + agg
         "hypertable_rollup": 4,        # 2 real: minutely, hourly
         "quality_char_entropy": 6,     # 3 real: char freq, doc window, fold
@@ -539,19 +504,6 @@ def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark):
                 spark.conf.set(k, v)
 
 
-def test_dedup_chunk_rewrite_no_cartesian_single_content_window(spark):
-    """The rewrite's only corpus-wide exchange is the content-keyed
-    rank window; no cartesian/BNLJ anywhere, scan pruned to the two
-    needed columns."""
-    df = REGISTRY["dedup_chunk_rewrite"].builder(spark, SF)
-    f = plan_facts(df)
-    assert "CartesianProduct" not in f.text
-    assert "BroadcastNestedLoopJoin" not in f.text
-    assert_scan_pruned(
-        df, must_read=["doc_id", "text"], must_not_read=["lang", "source", "n_chars"]
-    )
-
-
 def test_dsir_lm_tables_join_broadcast(spark):
     """Both DSIR bucket tables (B=32 rows) must come back as broadcast
     joins; the corpus totals are explicit-broadcast scalars — so the
@@ -648,15 +600,6 @@ def test_bm25_broadcasts_and_no_vocab_shuffle(spark):
     assert re.search(r"word#\d+ (IN|INSET) ", f.text), f.text
 
 
-def test_entity_match_no_cartesian(spark):
-    """Blocking must surface as an equi-join on the block key (hash or
-    sort-merge), never a cartesian/BNLJ over the name vocabulary."""
-    f = plan_facts(REGISTRY["entity_match_blocked"].builder(spark, SF))
-    assert "CartesianProduct" not in f.text
-    assert "BroadcastNestedLoopJoin" not in f.text
-    assert f.python_evals == 0
-
-
 def test_ewma_single_shuffle_into_pandas_kernel(spark):
     """The EWMA kernel pays exactly ONE user_id exchange feeding one
     partition-level MapInPandas fold (r11 shape: an explicit hash
@@ -725,14 +668,3 @@ def test_ohlc_single_exchange_partial_agg(spark):
     assert len(set(re.findall(r"\((\d+)\) Exchange", f.text))) == 1, f.text
     assert "partial_min" in f.text and "partial_max" in f.text, f.text
     assert "Join" not in f.text
-
-
-def test_decontaminate_minhash_bucketed_not_allpairs(spark):
-    """Candidate generation must be the (band, key) bucket equi-join —
-    shuffled hash, never cartesian — like its dedup sibling."""
-    f = plan_facts(REGISTRY["decontaminate_minhash"].builder(spark, SF))
-    assert "CartesianProduct" not in f.text
-    assert "BroadcastNestedLoopJoin" not in f.text
-    assert f.sortmerge_joins + f.broadcast_joins + f.text.count("ShuffledHashJoin") > 0
-
-

@@ -151,62 +151,3 @@ def test_funnel_stages_match_python_model(spark_session_holder, rows):
         for r in s3.select("user_id", "s", "v", "p").distinct().collect()
     }
     assert got == _funnel_model(rows)
-
-
-# ---------------------------------------------------------------------------
-# SimHash band-pair pigeonhole (operators/dedup.py::simhash_pairs)
-# ---------------------------------------------------------------------------
-def _band_pair_keys(v: int, n_bands: int = 8, band_bits: int = 6):
-    """Pure-python mirror of the banded candidate keys: one
-    (i*nb+j, key) per band pair i<j, key = band_i<<bits | band_j."""
-    mask = (1 << band_bits) - 1
-
-    def band(i):
-        return (v >> (i * band_bits)) & mask
-
-    return {
-        (i * n_bands + j, (band(i) << band_bits) | band(j))
-        for i in range(n_bands)
-        for j in range(i + 1, n_bands)
-    }
-
-
-@settings(max_examples=500, deadline=None)
-@given(
-    st.integers(min_value=0, max_value=(1 << 48) - 1),
-    st.lists(st.integers(min_value=0, max_value=47), min_size=0, max_size=6,
-             unique=True),
-)
-def test_simhash_band_pairs_catch_every_hamming6_pair(base, flip_bits):
-    """The recall guarantee behind the no-cartesian plan: flip ANY <= 6
-    bits of a 48-bit fingerprint and at least one of the C(8,2) band
-    pairs still matches exactly (<= 6 flipped bits touch <= 6 of the 8
-    bands => >= 2 bands untouched => their pair key matches). If a
-    future edit changes SIMHASH_BITS / SIMHASH_BANDS so this breaks,
-    the banded join would silently LOSE PAIRS vs the oracle."""
-    from msstreamingstack_spark.operators.dedup import (
-        SIMHASH_BANDS,
-        SIMHASH_BITS,
-    )
-
-    assert SIMHASH_BITS == 48 and SIMHASH_BANDS == 8  # mirror constants
-    other = base
-    for b in flip_bits:
-        other ^= 1 << b
-    assert _band_pair_keys(base) & _band_pair_keys(other), (
-        base, flip_bits,
-    )
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.integers(min_value=0, max_value=(1 << 48) - 1), st.data())
-def test_simhash_band_pairs_can_miss_hamming8(base, data):
-    """Sanity that the test above is not vacuous: 8 flips spread one
-    per band CAN evade every band pair — the guarantee is exactly
-    hamming <= n_bands - 2."""
-    flips = [data.draw(st.integers(min_value=0, max_value=5)) + 6 * b
-             for b in range(8)]
-    other = base
-    for b in flips:
-        other ^= 1 << b
-    assert not (_band_pair_keys(base) & _band_pair_keys(other))

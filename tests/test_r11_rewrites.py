@@ -10,85 +10,11 @@ on.)
 """
 from __future__ import annotations
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
-from msstreamingstack_spark.functions.text import hash48
-from msstreamingstack_spark.operators.dedup import (
-    SIMHASH_BITS,
-    simhash_table,
-)
 from msstreamingstack_spark.sources.tables import load_table
 
 from tests.conftest import SF_CORRECTNESS
-
-
-def test_simhash_occurrence_fold_matches_type_weighted_fold(spark):
-    """simhash_table (r11: ±1 per token OCCURRENCE) must be
-    bit-identical to the pre-r11 form (±cnt per token TYPE): the two
-    folds are the same integer sum, so the 48-bit fingerprints must
-    agree exactly on the real corpus."""
-    docs = load_table(spark, SF_CORRECTNESS, "documents")
-    toks = (
-        docs.select(
-            "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
-        )
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("h", hash48(F.col("tok")))
-    )
-    votes = toks.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.col("h").bitwiseAND(F.lit(1 << b)) != 0, F.col("cnt")
-                ).otherwise(-F.col("cnt"))
-            ).alias(f"s_{b}")
-            for b in range(SIMHASH_BITS)
-        ]
-    )
-    sim = None
-    for b in range(SIMHASH_BITS):
-        term = F.when(F.col(f"s_{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    old = votes.select("doc_id", sim.cast("long").alias("simhash"))
-
-    new = simhash_table(docs)
-    assert (
-        old.orderBy("doc_id")
-        .toPandas()
-        .equals(new.orderBy("doc_id").toPandas())
-    )
-
-
-def test_dup_flag_window_matches_count_distinct(spark):
-    """The substring/chunk dup rewrites rely on: over rows grouped by
-    a hash h, COUNT(DISTINCT doc_id) > 1 ⟺ MIN(doc_id) != MAX(doc_id).
-    Pin it on the real 5-gram shingle universe (including same-doc
-    repeated shingles, where the identity is non-trivial)."""
-    from msstreamingstack_spark.functions.text import shingles
-
-    docs = load_table(spark, SF_CORRECTNESS, "documents")
-    s = docs.select(
-        "doc_id", F.explode(shingles(F.col("text"), 5)).alias("sh")
-    )
-    dfreq = s.groupBy("sh").agg(
-        (F.countDistinct("doc_id") > 1).alias("nd_gt1")
-    )
-    hw = Window.partitionBy("sh")
-    win = (
-        s.withColumn(
-            "w_dup", F.min("doc_id").over(hw) != F.max("doc_id").over(hw)
-        )
-        .select("sh", "w_dup")
-        .distinct()
-    )
-    joined = win.join(dfreq, "sh")
-    assert (
-        joined.filter(F.col("w_dup") != F.col("nd_gt1")).count() == 0
-    )
-    # the identity is exercised in both directions on this corpus
-    assert joined.filter(F.col("w_dup")).count() > 0
-    assert joined.filter(~F.col("w_dup")).count() > 0
 
 
 def test_bm25_projection_doc_length_matches_tf_rowsum(spark):

@@ -72,56 +72,6 @@ def test_salt_is_deterministic(spark):
     assert a == b
 
 
-# ---------------------------------------------------------------------------
-# df-capped shingles: boilerplate skew in dedup pair generation
-# ---------------------------------------------------------------------------
-def _boilerplate_docs(spark, n_docs=200):
-    """Every doc = shared boilerplate header + a unique tail; only two
-    docs are genuine near-dups of each other."""
-    rows = []
-    boiler = "this content is licensed under the creative commons attribution license"
-    for i in range(n_docs):
-        unique = f"doc {i} body token{i} alpha{i} beta{i} gamma{i} delta{i} eps{i}"
-        rows.append((i, f"{boiler} {unique}"))
-    # one true near-dup pair: 198 and 199 share their entire tail
-    rows[-1] = (n_docs - 1, rows[-2][1][: -len(f"eps{n_docs-2}")] + f"eps{n_docs-1}")
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_dfcap_bounds_pair_fanout(spark):
-    from msstreamingstack_spark.operators.dedup import (
-        dfcapped_shingle_hashes,
-        doc_shingle_hashes,
-    )
-
-    docs = _boilerplate_docs(spark)
-    raw = doc_shingle_hashes(docs)
-    capped = dfcapped_shingle_hashes(docs, df_cap=10)
-
-    def n_candidate_pairs(sh):
-        return (
-            sh.select(F.col("doc_id").alias("d1"), "h")
-            .join(sh.select(F.col("doc_id").alias("d2"), "h"), "h")
-            .filter(F.col("d1") < F.col("d2"))
-            .count()
-        )
-
-    raw_pairs = n_candidate_pairs(raw)
-    capped_pairs = n_candidate_pairs(capped)
-    # boilerplate shingles pair every doc with every other: O(n_docs²)
-    assert raw_pairs > 100_000
-    # capping df kills the quadratic blowup outright
-    assert capped_pairs < 1_000
-
-
-def test_dfcap_keeps_true_neardups(spark):
-    from msstreamingstack_spark.operators.dedup import dfcapped_jaccard_pairs
-
-    docs = _boilerplate_docs(spark)
-    pairs = dfcapped_jaccard_pairs(docs, threshold=0.5, df_cap=10).collect()
-    assert {(r.d1, r.d2) for r in pairs} == {(198, 199)}
-
-
 def test_bucketed_running_sum_equals_single_window(spark, sf_correctness):
     """The (key, bucket) prefix-sum decomposition must be bit-identical
     to the plain window — decimal partials re-add exactly."""

@@ -6,8 +6,7 @@ never `unpersist()` itself — by the time it could, the consumer hasn't
 run yet. A bare `.persist()` inside such a function therefore leaks
 one session-lifetime cache entry PER INVOCATION: a bench loop or a
 long-lived driver re-invoking queries accumulates storage until the
-executors evict under pressure (round-5 ADVICE flagged
-`bigram_lm_scores` / `q_quality_chartrigram_df` for exactly this).
+executors evict under pressure.
 
 :func:`rotating_persist` bounds that: each call site names a SLOT, and
 persisting into a slot first releases whatever frame the same slot

@@ -1,22 +1,21 @@
 """Near-duplicate operators over word-shingle hashes.
 
-Two tiers, both deterministic and oracle-checkable:
+Two tiers, both deterministic:
 
 1. ngram-jaccard — exact set similarity on word-3-gram shingles via a
-                   shingle-inverted-index self-join. Backs
-                   ``dedup_ngram_jaccard`` and is the exact reference
-                   the LSH tier's recall is tested against.
+                   shingle-inverted-index self-join. No query uses it:
+                   it is the exact reference the LSH tier's recall is
+                   tested against.
 2. minhash-LSH   — scale path: fixed-permutation MinHash signatures,
                    banded bucketing; candidates verified with exact
                    jaccard. At 100 TB the verify only runs on LSH
                    candidates (tiny) instead of all pairs. It backs
-                   ``dedup_minhash_lsh`` and ``corpus_duplication_rate``.
+                   ``corpus_duplication_rate``.
 
 Both read one shared shingle-hash table (``doc_shingle_hashes``), which
 ``lang_shingle_overlap`` also uses. Hashing is the cross-engine 48-bit
 md5 prefix (functions/text.py), so the DuckDB oracle reproduces
-signatures bit-for-bit — no RNG anywhere.
-"""
+signatures bit-for-bit — no RNG anywhere."""
 
 from __future__ import annotations
 
@@ -203,22 +202,6 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
         )
     )
     return out.filter(F.col("jaccard") >= threshold).select("d1", "d2", "jaccard")
-
-
-def ngram_jaccard_sql(threshold: float = 0.8) -> str:
-    return f"""
-WITH sh AS ({doc_shingle_hashes_sql()}),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b ON a.h = b.h AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT d1, d2,
-       CAST(n_inter AS DOUBLE) / CAST(sa.n + sb.n - n_inter AS DOUBLE) AS jaccard
-FROM inter JOIN sizes sa ON sa.doc_id = d1 JOIN sizes sb ON sb.doc_id = d2
-WHERE CAST(n_inter AS DOUBLE) / CAST(sa.n + sb.n - n_inter AS DOUBLE) >= {threshold}
-"""
 
 
 # ---------------------------------------------------------------------------

@@ -11,6 +11,7 @@ SURVEY.md §2. Scale notes live on each operator's docstring.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from msstreamingstack_spark.extensions.multimodal import extract_features
@@ -1201,20 +1202,21 @@ FROM ev GROUP BY event_type
 )
 def q_pandas_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd  # noqa: F401
     from pyspark.sql.pandas.functions import pandas_udf
 
-    def sq_cents_fn(v):
+    # the Series -> scalar type hints make these grouped-agg UDFs; the
+    # hints resolve in the module's globals, hence the top-level pandas
+    # import. Grouped-agg pandas UDFs cannot mix with built-in
+    # aggregates in one agg(), so the count is a (trivial) UDAF too
+    @pandas_udf("long")
+    def sq_cents(v: pd.Series) -> int:
         cents = np.rint(v.to_numpy() * 100).astype("int64")
         return int((cents * cents).sum())
 
-    def n_fn(v):
+    @pandas_udf("long")
+    def n_rows(v: pd.Series) -> int:
         return len(v)
 
-    # grouped-agg pandas UDFs cannot mix with built-in aggregates in
-    # one agg() — the count is a (trivial) pandas UDAF too
-    sq_cents = pandas_udf(sq_cents_fn, "long", F.PandasUDFType.GROUPED_AGG)
-    n_rows = pandas_udf(n_fn, "long", F.PandasUDFType.GROUPED_AGG)
     ev = events_with_time(spark, sf_dir)
     return ev.groupBy("event_type").agg(
         sq_cents(F.col("value")).alias("sq_cents"),
@@ -2912,9 +2914,8 @@ SELECT vec_id, cell, samp_rank FROM r WHERE samp_rank <= {k}
     "clusters keep everything, which is the balancing property "
     "quality-score sampling lacks. Deterministic reservoir: the "
     "per-cell order is (md5-hash, vec_id), a pure function of the "
-    "id, so retries/re-runs keep identical rows (the hash-split "
-    "rationale). Scale: the centroid table is a broadcast K-row "
-    "literal (per-row JVM/Arrow argmin, no shuffle); the per-cell "
+    "id, so retries/re-runs keep identical rows. Scale: the "
+    "centroid table is a broadcast K-row literal (per-row JVM/Arrow argmin, no shuffle); the per-cell "
     "rank uses topk_per_key_salted, so a corpus-sized hot cluster "
     "sorts p parallel slices and the final rank input is capped at "
     "p*k rows per cell — a plain cell-partitioned window would "

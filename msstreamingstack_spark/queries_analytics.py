@@ -402,9 +402,8 @@ FROM w, t
     "normalized to shares, then a doc budget at half the corpus "
     "size. Weights round-trip through DECIMAL(18,9) so the "
     "cross-source normalizing sum is exact and order-free; the "
-    "normalizer moves as a broadcast one-row join. Complements "
-    "mix_weighted_sources (static per-source rates): here the "
-    "rates are DERIVED from corpus statistics, the "
+    "normalizer moves as a broadcast one-row join. The rates are "
+    "DERIVED from corpus statistics, not set per source: the "
     "down-sample-the-head / up-weight-the-tail step of a "
     "pretraining mixture. alpha is pinned to 0.5 because sqrt is "
     "correctly-rounded IEEE 754 on both engines while pow() may "
@@ -630,8 +629,8 @@ GROUP BY d.source
     tags=("analytics", "dedup", "pipeline"),
     doc="Per-source duplication rate: fraction of documents with >=1 "
     "verified near-duplicate (MinHash+LSH candidates, exact jaccard "
-    ">= 0.8 — the SAME banded pair generator as dedup_minhash_lsh, "
-    "so no all-pairs scan enters anywhere). The metric behind "
+    ">= 0.8 from operators/dedup.py's banded pair generator, so no "
+    "all-pairs scan enters anywhere). The metric behind "
     "per-source dedup budgeting in a pretraining mixture: a source "
     "with dup_rate 0.6 contributes 40%% of its nominal tokens. One "
     "extra doc_id-keyed join + a small source agg on top of the "

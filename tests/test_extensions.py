@@ -160,28 +160,6 @@ def test_quantize_int8_error_bound(spark, sf_correctness):
         assert r["mse"] <= half_step**2 + 1e-9
 
 
-def test_token_budget_sample_tight(spark, sf_correctness):
-    """Kept docs per source sum within budget, and the largest
-    excluded doc would not have fit after the kept prefix."""
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_extensions import (
-        TOKEN_BUDGET_PER_SOURCE,
-    )
-
-    rows = REGISTRY["token_budget_sample"].builder(
-        spark, sf_correctness
-    ).collect()
-    per_src = {}
-    for r in rows:
-        per_src.setdefault(r["source"], []).append(r)
-    for src, kept in per_src.items():
-        assert max(r["cum_tokens"] for r in kept) <= TOKEN_BUDGET_PER_SOURCE
-        ordered = sorted(kept, key=lambda r: (-r["n_tokens"], r["doc_id"]))
-        assert [r["doc_id"] for r in kept] != [] and ordered[-1][
-            "cum_tokens"
-        ] == max(r["cum_tokens"] for r in kept)
-
-
 def test_quantized_rescore_recall(spark, sf_correctness):
     """Quantized-scan ANN misses only through int8 quantization error,
     so recall vs brute force must be near-perfect, and every returned
@@ -258,42 +236,16 @@ def test_embedding_lsh_neardup_recall(spark, sf_correctness):
     assert recall >= 0.7, f"embedding LSH recall {recall:.3f}"
 
 
-def test_bigram_lm_ranks_gibberish_above_echoed_text(spark):
-    """SEMANTIC pin for the leave-one-out Laplace estimator: a naive
-    self-trained bigram LM (P = c12/c1) rates a doc of globally-unique
-    bigrams as perfectly predictable (its own counts are the only
-    support ⇒ 0 bits — gibberish would be the BEST-scoring doc). With
-    LOO + Laplace, corpus-supported text must score strictly fewer
-    bits than the unsupported-gibberish doc."""
-    import msstreamingstack_spark.queries  # noqa: F401 — full registry first
-    from msstreamingstack_spark.queries_extensions import bigram_lm_scores
-
-    fluent = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [(i, fluent) for i in range(6)]  # echoed across the corpus
-    rows.append((100, "zq1 xv7 kkj9 wpm2 bbr4 ncx8 qql3 vvt6 hzd5 jfy0"))
-    d = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {r["doc_id"]: r["bits_per_bigram"] for r in bigram_lm_scores(d).collect()}
-    assert got[100] > got[0], got
-    # the gibberish doc has zero external support: every bigram costs
-    # about log2(V) bits
-    import math
-
-    v = len(set(" ".join([fluent] * 1 + [rows[-1][1]]).split()))  # loose bound
-    assert got[100] > 0.5 * math.log2(max(v, 2))
-    # echoed text is cheap: well under half the gibberish cost
-    assert got[0] < got[100] / 2
-
-
 def test_rotating_persist_bounds_registry_query_caches(spark):
-    """Round-5 ADVICE leak regression: registry query functions persist
-    reused subtrees but return the frame BEFORE any action, so they can
-    never unpersist — each invocation used to stack a session-lifetime
-    cache entry (bigram_lm_scores.dbc, chartrigram tri_c, shingle
-    tables). rotating_persist must bound that to ONE live entry per
-    slot: re-invoking the same query replaces its cache instead of
-    accumulating, and different slots never evict each other."""
+    """Leak regression: registry query functions persist reused
+    subtrees but return the frame BEFORE any action, so they can never
+    unpersist — each invocation used to stack a session-lifetime cache
+    entry (the shingle-hash tables). rotating_persist must bound that
+    to ONE live entry per slot: re-invoking the same call site
+    replaces its cache instead of accumulating, and different slots
+    never evict each other."""
     from msstreamingstack_spark.caching import live_slots, rotating_persist
-    from msstreamingstack_spark.queries_extensions import bigram_lm_scores
+    from msstreamingstack_spark.operators.dedup import doc_shingle_hashes
 
     def persistent_ids() -> set:
         m = spark.sparkContext._jsc.getPersistentRDDs()
@@ -309,16 +261,16 @@ def test_rotating_persist_bounds_registry_query_caches(spark):
         ["doc_id", "text"],
     )
     for _ in range(4):  # 4 invocations — the old code left 4 caches
-        bigram_lm_scores(d).collect()
+        doc_shingle_hashes(d, slot="test.shingles").collect()
     grown = persistent_ids() - base
     assert len(grown) <= 1, grown  # one rotated slot, not one per call
-    assert "bigram_lm_scores.dbc" in live_slots(spark)
+    assert "test.shingles" in live_slots(spark)
 
     # distinct slots coexist (no cross-eviction): persist a second slot
     # and confirm the first slot's entry survives
     other = rotating_persist(d.select("doc_id"), "test.other_slot")
     other.collect()
-    assert "bigram_lm_scores.dbc" in live_slots(spark)
+    assert "test.shingles" in live_slots(spark)
     after_other = persistent_ids() - base
     assert len(after_other) <= 2, after_other
     # rotation of the second slot releases only its own predecessor
@@ -328,78 +280,6 @@ def test_rotating_persist_bounds_registry_query_caches(spark):
     # cleanup: rotate tiny frames through both slots, then unpersist
     for slot, df in list(live_slots(spark).items()):
         df.unpersist(blocking=False)
-
-
-def test_dsir_weights_prefer_target_language(spark, sf_smoke):
-    """DSIR sanity: documents IN the target slice (lang='en') must score
-    a higher mean per-token log-importance than documents outside it —
-    the weights are only useful if they discriminate toward the target."""
-    from pyspark.sql import functions as F
-
-    from msstreamingstack_spark.queries import REGISTRY
-
-    w = REGISTRY["dsir_importance_weights"].builder(spark, sf_smoke)
-    langs = load_table(spark, sf_smoke, "documents").select("doc_id", "lang")
-    per_tok = (F.col("dsir_logratio") / F.col("n_tokens")).alias("pt")
-    rows = (
-        w.join(langs, "doc_id")
-        .select((F.col("lang") == "en").alias("is_en"), per_tok)
-        .groupBy("is_en")
-        .agg(F.avg("pt").alias("mean_pt"))
-        .collect()
-    )
-    means = {r["is_en"]: r["mean_pt"] for r in rows}
-    assert means[True] > means[False]
-
-
-def test_dedup_events_debounce_gap_semantics(spark):
-    """Hand fixture for the debounce rule: a sub-gap burst collapses to
-    its first event even when the burst's total span exceeds the gap
-    (chain semantics), a boundary-exact gap still collapses (> not >=),
-    and distinct keys never interact."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_extensions import DEBOUNCE_GAP_SEC
-
-    g = DEBOUNCE_GAP_SEC
-    rows = [
-        # u1/click: chain 0, g, 2g (each step == gap, > is false -> one
-        # group spanning 2g), then 3g+1 after the last -> new group
-        (1, 10, "click", 0),
-        (2, 10, "click", g),
-        (3, 10, "click", 2 * g),
-        (4, 10, "click", 3 * g + 1),
-        # u1/view: same timestamps, independent key
-        (5, 10, "view", 0),
-        (6, 10, "view", 1),
-        # u2/click: single event
-        (7, 20, "click", 5),
-    ]
-    tmp = tempfile.mkdtemp()
-    pd.DataFrame(
-        {
-            "event_id": [r[0] for r in rows],
-            "user_id": [r[1] for r in rows],
-            "event_type": [r[2] for r in rows],
-            "value": [1.0] * len(rows),
-            "props": ["{}"] * len(rows),
-            # micros, not pandas' default nanos — Spark 4 rejects
-            # TIMESTAMP(NANOS) parquet columns outright
-            "ts": pd.to_datetime([r[3] for r in rows], unit="s").astype(
-                "datetime64[us]"
-            ),
-        }
-    ).to_parquet(os.path.join(tmp, "events.parquet"))
-
-    got = {
-        r["event_id"]: r["n_collapsed"]
-        for r in REGISTRY["dedup_events_debounce"].builder(spark, tmp).collect()
-    }
-    assert got == {1: 3, 4: 1, 5: 2, 7: 1}
 
 
 def test_mine_hard_negatives_matches_numpy_model(spark, sf_smoke):
@@ -551,73 +431,6 @@ def test_bm25_matches_python_model(spark, sf_correctness):
     assert [d for d, _ in got] == [d for d, _ in expect]
     for (_, g), (_, e) in zip(got, expect):
         assert abs(g - e) <= 1e-9
-
-
-def test_pack_blocks_fixed_invariants(spark, sf_correctness):
-    """Conservation + exact-slicing invariants: per source, block ids
-    are contiguous from 0, every non-final block holds exactly
-    BLOCK_TOKENS tokens, token mass is conserved (sum of block fills =
-    total tokens incl. one EOD per doc), and doc-start counts sum to
-    the source's doc count."""
-    from collections import defaultdict
-
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_extensions import BLOCK_TOKENS
-
-    rows = REGISTRY["pack_blocks_fixed"].builder(spark, sf_correctness).collect()
-    docs = load_table(spark, sf_correctness, "documents")
-    from msstreamingstack_spark.functions.text import token_count
-
-    truth = {
-        r["source"]: (r["n"], r["tot"])
-        for r in docs.groupBy("source")
-        .agg(
-            F.count("*").alias("n"),
-            (F.sum(token_count(F.col("text"))) + F.count("*")).alias("tot"),
-        )
-        .collect()
-    }
-    per_src = defaultdict(list)
-    for r in rows:
-        per_src[r["source"]].append(r)
-    assert set(per_src) == set(truth)
-    for src, blocks in per_src.items():
-        blocks.sort(key=lambda r: r["block_id"])
-        n_docs_src, tot_tokens = truth[src]
-        assert [b["block_id"] for b in blocks] == list(range(len(blocks)))
-        assert all(b["block_tokens"] == BLOCK_TOKENS for b in blocks[:-1])
-        assert 0 < blocks[-1]["block_tokens"] <= BLOCK_TOKENS
-        assert sum(b["block_tokens"] for b in blocks) == tot_tokens
-        assert sum(b["n_starts"] for b in blocks) == n_docs_src
-        # docs touching >= docs starting, and some straddling exists
-        assert all(b["n_docs"] >= b["n_starts"] for b in blocks)
-
-
-def test_quality_source_calibrated_gate(spark, sf_correctness):
-    """Each source keeps ~the same top fraction, and within a source
-    no kept doc scores strictly below a dropped doc (ties broken by
-    doc_id may interleave only at equal scores)."""
-    from collections import defaultdict
-
-    from msstreamingstack_spark.queries import REGISTRY
-
-    rows = REGISTRY["quality_source_calibrated"].builder(
-        spark, sf_correctness
-    ).collect()
-    per_src = defaultdict(list)
-    for r in rows:
-        per_src[r["source"]].append(r)
-    for src, rs in per_src.items():
-        n = len(rs)
-        kept = [r for r in rs if r["keep"] == 1]
-        assert 0 < len(kept) < n
-        # percent_rank >= 0.7 keeps ceil(0.3*(n-1)) + ties
-        assert abs(len(kept) / n - 0.3) < 0.15
-        min_kept = min(r["score"] for r in kept)
-        max_drop = max(r["score"] for r in rs if r["keep"] == 0)
-        assert min_kept >= max_drop or any(
-            r["score"] == min_kept and r["keep"] == 0 for r in rs
-        )
 
 
 def test_registry_metadata_consistency(spark):

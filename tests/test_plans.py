@@ -48,24 +48,6 @@ def test_q10_selective_pushdown(spark):
     assert f.broadcast_joins >= 2  # nation + customer/orders side
 
 
-def test_bigram_lm_is_window_passes_not_rejoins(spark):
-    """quality_bigram_lm's LM count tables are WINDOW passes over the
-    persisted bigram fold, not re-joins of it on three different keys
-    (the round-6 plan: 3 agg + 3 join shuffles, 4.4-8.3 s at sf0.1 and
-    the ensemble's variance source; the window plan measured 2.2 s
-    flat). Pin: no sort-merge join, no Python, and the Exchange count
-    stays at the window-plan level. live_shuffles, not raw Exchange
-    hits: the round-8 eager dbc populate makes the cached subtree
-    print its finalized ShuffleQueryStage nodes (6 extra Exchange
-    lines that never re-execute)."""
-    f = plan_facts(REGISTRY["quality_bigram_lm"].builder(spark, SF))
-    assert f.sortmerge_joins == 0, f.text
-    assert f.python_evals == 0
-    assert f.live_shuffles <= 14, (
-        f"exchange count regressed: {f.shuffles} - {f.shuffle_stages} stages"
-    )
-
-
 def test_range_join_is_broadcast_not_cartesian(spark):
     f = plan_facts(REGISTRY["range_join_price_bands"].builder(spark, SF))
     assert "BroadcastNestedLoopJoin" in f.text
@@ -263,18 +245,6 @@ def test_q21_exists_pair_single_order_aggregate(spark):
     assert f.pushes_filter("EqualTo(n_name,NATION_5)")
 
 
-def test_hash_split_is_narrow_map_plus_one_agg(spark):
-    """Split assignment must stay a pure JVM expression map: no
-    Python, no join, exactly the one exchange of the tiny 3-group
-    aggregate."""
-    import re
-
-    f = plan_facts(REGISTRY["hash_split_assign"].builder(spark, SF))
-    assert f.python_evals == 0
-    assert "Join" not in f.text
-    assert len(re.findall(r"\(\d+\) Exchange", f.text)) == 1, f.text
-
-
 def test_quantize_int8_is_narrow_map(spark):
     """Quantization is per-row array math: no join, no key shuffle, no
     Python — the only exchange is spread()'s round-robin parallelism
@@ -284,28 +254,6 @@ def test_quantize_int8_is_narrow_map(spark):
     assert f.python_evals == 0
     assert "Join" not in f.text
     assert "hashpartitioning" not in f.text, f.text
-
-
-def test_token_budget_single_shuffle(spark):
-    """Budget sampling = exactly one hash partition (by source, for
-    the window); token counting must stay a JVM expression map."""
-    import re
-
-    f = plan_facts(REGISTRY["token_budget_sample"].builder(spark, SF))
-    assert f.python_evals == 0
-    assert "Join" not in f.text
-    hash_ex = re.findall(r"hashpartitioning\(source", f.text)
-    assert len(hash_ex) >= 1, f.text
-    assert len(set(re.findall(r"hashpartitioning\(\w+", f.text))) == 1, f.text
-
-
-def test_chartrigram_quality_no_python_no_nested_loop(spark):
-    """Corpus-frequency quality score: the trigram/freq self-join must
-    be a key join (never nested-loop), all expression work JVM-side."""
-    f = plan_facts(REGISTRY["quality_chartrigram_df"].builder(spark, SF))
-    assert f.python_evals == 0
-    assert "CartesianProduct" not in f.text
-    assert "BroadcastNestedLoopJoin" not in f.text
 
 
 def test_sql_frontend_subquery_decorrelates(spark):
@@ -354,17 +302,12 @@ def test_shuffle_budget_pins(spark):
     # the budgets pin the UNCACHED shape: a rotating-persist slot left
     # by an earlier test whose logical plan matches a subtree here
     # would print the cached plan's own exchanges into the text and
-    # inflate the count (seen with token_budget_sample.t, whose frame
-    # equals pack_sequences' token fold)
+    # inflate the count
     spark.catalog.clearCache()
     budget = {
         "sessionize_events": 2,        # 1 real: user key (exchange reuse)
         "tpch_q1": 2,                  # 1 real: group keys after partial agg
-        "hash_split_assign": 2,        # 1 real: split agg
-        "pack_sequences_greedy": 4,    # 2 real: per-source window + agg
         "hypertable_rollup": 4,        # 2 real: minutely, hourly
-        "quality_char_entropy": 6,     # 3 real: char freq, doc window, fold
-        "pipeline_pretrain_corpus": 6, # 3 real: digest, split, report agg
     }
     for name, max_occ in budget.items():
         f = plan_facts(REGISTRY[name].builder(spark, SF))
@@ -430,25 +373,6 @@ def test_hard_negatives_ann_probe_plan(spark):
     )
 
 
-def test_chartrigram_freq_join_is_broadcast(spark):
-    """The trigram->corpus-frequency join must broadcast the freq side:
-    char-trigram cardinality is alphabet-bounded at any corpus size,
-    and leaving it to AQE re-shuffled the full exploded trigram
-    relation (2.93x scale ratio at 4x data, round 2). Round 5: the
-    explode is folded to per-(doc, trigram) counts FIRST and runs
-    exactly once — one parquet scan feeding the persisted counts
-    (InMemoryTableScan everywhere else); freq + join both read the
-    fold, moving |distinct (doc,t)| rows instead of |occurrences|
-    (4.53x -> 1.73x at 16x data, round 5)."""
-    import re
-
-    f = plan_facts(REGISTRY["quality_chartrigram_df"].builder(spark, SF))
-    assert f.broadcast_joins >= 1, f.text
-    assert "SortMergeJoin" not in f.text, f.text
-    assert "InMemoryTableScan" in f.text
-    assert len(set(re.findall(r"\((\d+)\) Scan parquet", f.text))) == 1, f.text
-
-
 def test_embedding_cosine_kernel_plan_pinned(spark):
     """dedup_embedding_cosine's d1 < d2 inequality join has no
     equi-keys, so the planner picks CartesianProduct vs
@@ -504,16 +428,6 @@ def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark):
                 spark.conf.set(k, v)
 
 
-def test_dsir_lm_tables_join_broadcast(spark):
-    """Both DSIR bucket tables (B=32 rows) must come back as broadcast
-    joins; the corpus totals are explicit-broadcast scalars — so the
-    only key-shuffle in the plan is the per-(doc,bucket) fold."""
-    f = plan_facts(REGISTRY["dsir_importance_weights"].builder(spark, SF))
-    assert f.broadcast_joins >= 3, f.text  # raw + tgt + scalar(s)
-    assert "CartesianProduct" not in f.text
-    assert f.python_evals == 0, "DSIR must stay JVM-side"
-
-
 def test_dedup_semantic_joins_stay_keyed(spark):
     """SemDeDup's pair stage must be an equi-join on (cell, sub) — a
     cartesian pair scan here is exactly the failure the cell/refinement
@@ -530,18 +444,6 @@ def test_lateral_topk_decorrelates_to_group_limit(spark):
     assert "WindowGroupLimit" in f.text, f.text
     assert "CartesianProduct" not in f.text
     assert f.broadcast_joins >= 2, f.text
-
-
-def test_debounce_windows_share_one_exchange(spark):
-    """Both debounce windows — the (user,type) gap/running-sum pass and
-    the (user,type,grp) rank pass — must reuse ONE hash exchange:
-    HashPartitioning(user,type) satisfies the superset clustering, so a
-    second shuffle would be a regression."""
-    import re
-
-    f = plan_facts(REGISTRY["dedup_events_debounce"].builder(spark, SF))
-    assert len(re.findall(r"\(\d+\) Exchange", f.text)) == 1, f.text
-    assert f.python_evals == 0
 
 
 def test_pca_projection_broadcast_dims_single_fold(spark):
@@ -646,8 +548,6 @@ def test_sixth_wave_plans_no_cartesian_no_python(spark):
     for name in (
         "anomaly_mad_events",
         "mix_epochs_budget",
-        "pack_blocks_fixed",
-        "quality_source_calibrated",
         "resample_ohlc_hourly",
         "wau_sliding_distinct",
         "session_paths_topk",

@@ -164,3 +164,57 @@ def test_stop_during_worker_warm_up_is_quiet_and_restartable(tmp_path):
     assert "doubled [0, 2, 4, 6]" in out.stdout, out.stdout
     # an uncaught error would print "Exception in thread <name>"
     assert "warm-python-workers" not in out.stderr, out.stderr[-3000:]
+
+
+def _environment_keys(tree) -> tuple[set, list]:
+    """Literal keys read through ``os.environ`` / ``os.getenv`` in one
+    parsed module, and the line numbers of reads whose key is not a
+    string literal (those would hide a knob from the pin below)."""
+    import ast
+
+    def is_environ(node) -> bool:
+        return (isinstance(node, ast.Attribute) and node.attr == "environ") or (
+            isinstance(node, ast.Name) and node.id == "environ"
+        )
+
+    keys, dynamic = set(), []
+    for node in ast.walk(tree):
+        key = None
+        if isinstance(node, ast.Subscript) and is_environ(node.value):
+            key = node.slice
+        elif isinstance(node, ast.Call) and node.args and (
+            (isinstance(node.func, ast.Attribute) and is_environ(node.func.value))
+            or getattr(node.func, "attr", getattr(node.func, "id", None)) == "getenv"
+        ):
+            key = node.args[0]
+        elif isinstance(node, ast.Compare) and any(is_environ(c) for c in node.comparators):
+            key = node.left
+        if key is None:
+            continue
+        if isinstance(key, ast.Constant) and isinstance(key.value, str):
+            keys.add(key.value)
+        else:
+            dynamic.append(node.lineno)
+    return keys, dynamic
+
+
+def test_environment_knobs_are_pinned():
+    """The package reads exactly these environment variables. Two are
+    the engine's own knobs (``SPARK_GRAFT_CPUS``, ``SPARK_GRAFT_SF_DIR``);
+    ``SPARK_DRIVER_MEM`` is the deployment's driver heap and
+    ``SPARK_HOME`` locates the distribution's archives for
+    ``worker_daemon``. A change that adds or drops one updates this set
+    and says so. No Spark session: the modules are only parsed."""
+    import ast
+    import pathlib
+
+    keys, dynamic = set(), {}
+    for path in sorted(pathlib.Path(REPO, "msstreamingstack_spark").rglob("*.py")):
+        k, d = _environment_keys(ast.parse(path.read_text()))
+        keys |= k
+        if d:
+            dynamic[str(path)] = d
+    assert not dynamic, f"environment reads with a non-literal key: {dynamic}"
+    assert keys == {
+        "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_DRIVER_MEM", "SPARK_HOME",
+    }

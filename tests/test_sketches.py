@@ -97,32 +97,6 @@ def test_sketches_persist_and_merge(spark, tmp_path):
     assert got == want
 
 
-def test_countmin_overestimates_within_epsilon_bound(spark, sf_correctness):
-    """CMS guarantees: est >= true always, and with width w the
-    expected overestimate is N/w per row — assert the classical
-    Markov-style bound est - true <= 2eN/w holds for every reported
-    key (deterministic hashes, so this is a fixed property of the
-    fixture, not a probabilistic flake)."""
-    import math
-
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_extensions import CMS_WIDTH
-
-    rows = (
-        REGISTRY["sketch_countmin_user_events"]
-        .builder(spark, sf_correctness)
-        .collect()
-    )
-    assert len(rows) == 20
-    from msstreamingstack_spark.sources.tables import load_table
-
-    n = load_table(spark, sf_correctness, "events").count()
-    bound = 2 * math.e * n / CMS_WIDTH
-    for r in rows:
-        assert r["cms_est"] >= r["true_count"], r
-        assert r["cms_est"] - r["true_count"] <= bound, r
-
-
 def test_wau_hll_twin_tracks_exact_within_bound(spark):
     """wau_sliding_hll (mergeable day-sketch path) vs
     wau_sliding_distinct (exact): identical day set, exact match in

@@ -169,12 +169,12 @@ def test_export_cli_manifest_roundtrip(spark, tmp_path):
 
     out = str(tmp_path / "exp_parquet")
     rc = cli_main([
-        "export", "token_budget_sample",
+        "export", "session_summary",
         "--sf-dir", "/root/testdata/sf0.001", "--out", out,
     ])
     assert rc == 0
     got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    want = REGISTRY["token_budget_sample"].builder(
+    want = REGISTRY["session_summary"].builder(
         spark, "/root/testdata/sf0.001"
     )
     assert got == sorted(map(tuple, want.collect())) and len(got) > 0

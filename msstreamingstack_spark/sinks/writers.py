@@ -5,9 +5,9 @@ The reference runs FIVE concurrent streaming queries, each re-reading
 Kafka and each writing row-at-a-time through ``ForeachWriter``
 (StructuredStreaming.scala:228-279; RedisForeachWriter.scala:35-38
 does one HSET per field per row). Here one query's ``foreachBatch``
-fans out to all sinks per micro-batch with *bulk* DataFrame writes —
-source read once, sinks written as whole partitions, idempotence via
-the (batchId) key.
+fans out to all sinks per micro-batch with *bulk* writes — source
+read once, sinks written as whole partitions (the history sink as one
+Arrow-collected file per batch), idempotence via the (batchId) key.
 
 External sinks (Redis K2, Cassandra K3/K4) are interface-compatible
 adapters gated behind import-try — the connectors aren't in this
@@ -17,8 +17,10 @@ environment; the parquet/console/collecting sinks are the live paths.
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -292,21 +294,34 @@ class TransactionalParquetSink:
     """Exactly-once history sink with an explicit commit log — the
     Delta-transaction-lite pattern.
 
-    Batch-id subdir overwrite makes a re-delivered batch idempotent;
-    an atomic *commit marker* makes a batch either fully visible or
-    not at all:
+    Each micro-batch lands as ONE parquet file in its own batch-id
+    directory, and an atomic *commit marker* makes the batch either
+    fully visible or not at all:
 
-    1. skip if ``_commits/<batchId>`` exists (foreachBatch redelivery
+    0. skip if ``_commits/<batchId>`` exists (foreachBatch redelivery
        after checkpoint recovery re-runs the last batch);
-    2. write data under ``data/batch_id=<batchId>/`` (overwrite — a
-       torn previous attempt is replaced wholesale);
-    3. atomically create the commit marker (``O_CREAT|O_EXCL``; on
+    1. collect the micro-batch to the driver as Arrow (``toArrow``;
+       ``run_pipeline``'s fan-out has already persisted it);
+    2. remove ``data/batch_id=<batchId>/`` and create it again, so a
+       torn earlier attempt is replaced wholesale;
+    3. write the table with ``pyarrow.parquet`` to the dot-prefixed
+       ``.part-0.parquet.tmp`` in that directory and rename it to
+       ``part-0.parquet``;
+    4. atomically create the commit marker (``O_CREAT|O_EXCL``; on
        object stores this step becomes a conditional PUT).
 
-    Readers list ``_commits/`` and read only committed batch dirs —
-    ``read_committed`` returns exactly the committed prefix even if a
-    writer died mid-batch. At scale the marker write is one tiny file
-    per micro-batch; data files stay bulk parquet partitions.
+    The marker alone is the commit. Readers list ``_commits/`` and read
+    only committed batch directories, so ``read_committed`` returns
+    exactly the committed prefix even if a writer died mid-batch, and
+    a batch id is written once however often it is delivered: the
+    batch-id directory plus its marker is an epoch-idempotent sink,
+    which with a replayable source is exactly-once output. Spark's
+    write job would stack a second commit protocol (task and job
+    renames through ``_temporary``, ``_SUCCESS``, ``.crc`` files) on
+    top of it, for a fixed cost on every trigger. Spark's parquet
+    reader skips files whose names start with ``.`` or ``_``, so the
+    temp file is never read even in a directory listed directly; the
+    rename only makes the visible file whole.
     """
 
     def __init__(self, out_dir: str) -> None:
@@ -326,9 +341,13 @@ class TransactionalParquetSink:
     def __call__(self, df: DataFrame, batch_id: int) -> None:
         if os.path.exists(self._marker(batch_id)):
             return  # redelivered batch: already fully committed
-        df.write.mode("overwrite").parquet(
-            os.path.join(self.data_dir, f"batch_id={batch_id}")
-        )
+        table = df.toArrow()
+        batch_dir = os.path.join(self.data_dir, f"batch_id={batch_id}")
+        shutil.rmtree(batch_dir, ignore_errors=True)
+        os.makedirs(batch_dir)
+        tmp = os.path.join(batch_dir, ".part-0.parquet.tmp")
+        pq.write_table(table, tmp)
+        os.rename(tmp, os.path.join(batch_dir, "part-0.parquet"))
         fd = os.open(self._marker(batch_id), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         os.close(fd)
 

@@ -30,11 +30,17 @@ SinkFn = Callable[[DataFrame, int], None]
 
 # Input bytes one run_pipeline trigger admits: a backlog drains in as few
 # triggers as this allows, instead of paying the fixed per-trigger cost
-# (offsets, planning, WAL, Python workers, sink job) once per drop. The
-# bound is memory: fan_out persists the whole micro-batch and each state
-# call concatenates one bucket's share (1/BUCKETS) into one pandas frame.
-# Drops are about 27 B per event as parquet, so 64 MiB is about 2.5M
-# events a trigger, or about 150k rows per bucket call at BUCKETS=16.
+# (offsets, planning, WAL, Python workers, sink commit) once per drop.
+# The bound is memory, held three times over: fan_out persists the whole
+# micro-batch, each state call concatenates one bucket's share
+# (1/BUCKETS) into one pandas frame, and TransactionalParquetSink
+# collects the whole output batch to the driver as one Arrow table
+# (about 90 B per output row). Drops are 19-27 B per event as parquet,
+# so 64 MiB is 2.5M-3.5M events a trigger, 150k-220k rows per bucket
+# call at BUCKETS=16, and a 230-320 MB Arrow table on the driver (under
+# Spark's 1 GiB spark.driver.maxResultSize). Measured on a 4-vCPU VM,
+# one 64 MiB trigger of 3.5M events at local[4]: the driver's Python
+# process peaked at 457 MiB, the whole process tree at 4.8-5.1 GiB.
 # Not uncapped (Spark's default): that would admit a whole outage's
 # backlog as one batch. The first pending file is always admitted, even
 # when it alone is larger.

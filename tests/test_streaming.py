@@ -18,10 +18,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from msstreamingstack_spark.operators.sessionize import sessionize
-from msstreamingstack_spark.sinks.writers import CollectingSink
+from msstreamingstack_spark.sinks.writers import CollectingSink, TransactionalParquetSink
 from msstreamingstack_spark.sources.tables import events_with_time
 from msstreamingstack_spark.streaming import pipeline
 from msstreamingstack_spark.streaming.pipeline import run_pipeline
+from msstreamingstack_spark.streaming.stateful import OUTPUT_SCHEMA
 
 SF = "/root/testdata/sf0.001"
 
@@ -257,8 +258,6 @@ def test_parquet_sink_idempotent_on_redelivery(spark, tmp_path):
     """K3 exactly-once: a redelivered batch id is written once, and a
     batch directory without a commit marker (a torn write) stays
     invisible to readers."""
-    from msstreamingstack_spark.sinks.writers import TransactionalParquetSink
-
     sink = TransactionalParquetSink(str(tmp_path / "hist"))
     df = spark.range(5).withColumnRenamed("id", "event_id")
     sink(df, batch_id=7)
@@ -268,11 +267,141 @@ def test_parquet_sink_idempotent_on_redelivery(spark, tmp_path):
     assert sink.read_committed(spark).count() == 5
 
 
+def _history_rows(spark, ids):
+    """A sink-shaped (``OUTPUT_SCHEMA``) frame, one row per id, with
+    every column type and some null ``ctgry`` values."""
+    return spark.createDataFrame(
+        [
+            (i, i % 3, 1_700_000_000 + i, "view", i * 0.5, f"s{i % 3}",
+             i == 0, i % 2 == 0, i * 1.25, None if i % 4 else "books")
+            for i in ids
+        ],
+        OUTPUT_SCHEMA,
+    )
+
+
+def _types(schema):
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def test_parquet_sink_replaces_torn_attempt(spark, tmp_path):
+    """A batch directory left by a torn attempt (stale temp file, a
+    stray part file and a ``_SUCCESS``, no marker) is invisible to
+    readers, and the redelivered batch replaces it wholesale."""
+    sink = TransactionalParquetSink(str(tmp_path / "hist"))
+    sink(_history_rows(spark, range(3)), batch_id=2)
+    torn = os.path.join(sink.data_dir, "batch_id=3")
+    os.makedirs(torn)
+    with open(os.path.join(torn, ".part-0.parquet.tmp"), "wb") as fh:
+        fh.write(b"PAR1 torn")
+    pq.write_table(
+        _history_rows(spark, range(100, 107)).toArrow(),
+        os.path.join(torn, "part-00000-stale.snappy.parquet"),
+    )
+    open(os.path.join(torn, "_SUCCESS"), "w").close()
+
+    assert sink.committed_ids() == [2]
+    assert sorted(r.event_id for r in sink.read_committed(spark).collect()) == [0, 1, 2]
+
+    sink(_history_rows(spark, range(10, 14)), batch_id=3)
+    assert sorted(os.listdir(torn)) == ["part-0.parquet"]
+    assert sink.committed_ids() == [2, 3]
+    got = sorted(r.event_id for r in sink.read_committed(spark).collect())
+    assert got == [0, 1, 2, 10, 11, 12, 13]
+
+
+def test_parquet_sink_commits_one_file_without_spark_job(spark, tmp_path):
+    """A committed batch directory holds exactly one visible parquet
+    file and none of the Hadoop committer's files (``_SUCCESS``,
+    ``_temporary``, ``.crc``): no Spark write job ran."""
+    sink = TransactionalParquetSink(str(tmp_path / "hist"))
+    sink(_history_rows(spark, range(5)).repartition(3), batch_id=0)
+    assert os.listdir(os.path.join(sink.data_dir, "batch_id=0")) == ["part-0.parquet"]
+    found = [n for _, dirs, files in os.walk(sink.out_dir) for n in dirs + files]
+    committer = [
+        n for n in found
+        if n.startswith(("_SUCCESS", "_temporary", ".")) or n.endswith(".crc")
+    ]
+    assert not committer, found
+
+
+def test_parquet_sink_empty_batch(spark, tmp_path):
+    """A 0-row micro-batch commits: its marker is written and its file
+    carries the schema, so ``read_committed`` reads it alone and mixed
+    with non-empty batches."""
+    sink = TransactionalParquetSink(str(tmp_path / "hist"))
+    sink(_history_rows(spark, []), batch_id=0)
+    assert sink.committed_ids() == [0]
+    part = os.path.join(sink.data_dir, "batch_id=0", "part-0.parquet")
+    assert pq.read_schema(part).names == OUTPUT_SCHEMA.names
+    alone = sink.read_committed(spark)
+    assert _types(alone.schema) == _types(OUTPUT_SCHEMA)
+    assert alone.count() == 0
+
+    sink(_history_rows(spark, range(4)), batch_id=1)
+    sink(_history_rows(spark, []), batch_id=2)
+    mixed = sink.read_committed(spark)
+    assert _types(mixed.schema) == _types(OUTPUT_SCHEMA)
+    assert sorted(r.event_id for r in mixed.collect()) == [0, 1, 2, 3]
+
+
+def test_parquet_sink_reads_batches_of_the_spark_writer(spark, tmp_path):
+    """Upgrade: an output directory whose earlier batches were committed
+    by the Spark-writer sink (``part-*.snappy.parquet``, ``_SUCCESS``,
+    ``.crc``) keeps working. Its committed batches are still skipped on
+    redelivery, later batches are added by the Arrow path, and
+    ``read_committed`` reads both as one table with one schema."""
+    out = str(tmp_path / "hist")
+    old = TransactionalParquetSink(out)
+    want = {}
+    for b, ids in ((0, range(0, 5)), (1, range(5, 9))):
+        df = _history_rows(spark, ids)
+        want.update((r.event_id, tuple(r)) for r in df.collect())
+        df.write.mode("overwrite").parquet(os.path.join(old.data_dir, f"batch_id={b}"))
+        open(os.path.join(old.commits_dir, str(b)), "x").close()
+    old_files = sorted(os.listdir(os.path.join(old.data_dir, "batch_id=1")))
+    assert "_SUCCESS" in old_files and any(n.endswith(".crc") for n in old_files)
+
+    sink = TransactionalParquetSink(out)
+    sink(_history_rows(spark, range(100, 103)), batch_id=1)  # redelivered: skipped
+    assert sorted(os.listdir(os.path.join(sink.data_dir, "batch_id=1"))) == old_files
+    for b, ids in ((2, range(9, 12)), (3, range(12, 16))):
+        df = _history_rows(spark, ids)
+        want.update((r.event_id, tuple(r)) for r in df.collect())
+        sink(df, b)
+
+    got = sink.read_committed(spark)
+    assert _types(got.schema) == _types(OUTPUT_SCHEMA)
+    assert {r.event_id: tuple(r) for r in got.collect()} == want
+
+
+def test_parquet_sink_keeps_every_output_column(spark, staged_stream_dir, tmp_path):
+    """Every column the sessionizer emits survives the history sink with
+    its Spark type: ``read_committed`` has ``OUTPUT_SCHEMA``'s names,
+    order and types, and the same rows the micro-batch held (pyarrow's
+    writer must not drift a type, e.g. to ``large_string``, a
+    dictionary or another boolean or double encoding)."""
+    seen = CollectingSink()
+    sink = TransactionalParquetSink(str(tmp_path / "hist"))
+    q = run_pipeline(
+        spark,
+        staged_stream_dir,
+        checkpoint_dir=str(tmp_path / "cp_cols"),
+        sinks=[seen, sink],
+        available_now=True,
+    )
+    q.awaitTermination(300)
+    got = sink.read_committed(spark)
+    assert _types(got.schema) == _types(OUTPUT_SCHEMA)
+    rows = {r.event_id: tuple(r) for r in got.collect()}
+    assert len(rows) == 1000
+    assert rows == {r.event_id: tuple(r) for r in seen.rows}
+
+
 def test_stream_started_on_empty_dir_reads_producer_drops(spark, tmp_path):
     """``consume`` started before ``produce``: the stream's ``ts`` type
     is fixed when the query starts, so an empty source directory must
     declare the producer's int64-nanos shape, not the timestamp one."""
-    from msstreamingstack_spark.sinks.writers import TransactionalParquetSink
     from msstreamingstack_spark.sources.generator import drop_batches
 
     src = tmp_path / "drops"
@@ -371,8 +500,6 @@ def test_transactional_sink_exactly_once(spark, staged_stream_dir, tmp_path):
     """TransactionalParquetSink: redelivered batches are skipped via
     the commit log, a torn write is invisible to readers, and
     read_committed returns exactly the once-committed rows."""
-    from msstreamingstack_spark.sinks.writers import TransactionalParquetSink
-
     sink = TransactionalParquetSink(str(tmp_path / "txn"))
     _land_drops_one_by_one(spark, staged_stream_dir, tmp_path, [sink], "cp_txn")
     ids = sink.committed_ids()

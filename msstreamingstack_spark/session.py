@@ -29,6 +29,20 @@ The warm-up is a SQL Arrow job on purpose: a background RDD job
 state stage's workers still start cold from a second one. Its failure
 is ignored (a session stopped mid-warm-up): the first real Python task
 then starts the daemon, as without the warm-up.
+
+Streaming checkpoints (offsets, commits, state store files) are written
+through Spark's ``FileSystemBasedCheckpointFileManager`` (a runtime conf,
+so harness sessions get it too). Spark's default manager goes through
+Hadoop's ``FileContext``, whose rename, on a host without the native
+``libhadoop``, resolves links by forking ``/bin/readlink``: 64 of the 92
+processes a ``backfill`` drain forked, run one after another on the
+stream execution thread and in the state commit. ``FileSystem.rename``
+resolves no links and is atomic on a local POSIX file system, and the
+fallback manager writes the same files, so a checkpoint written by
+either manager restarts under the other. Caveat: on HDFS,
+``FileSystem.rename`` does not overwrite an existing target, which is
+why Spark prefers ``FileContext`` there; every checkpoint location this
+package builds is a local path.
 """
 
 from __future__ import annotations
@@ -57,6 +71,17 @@ RUNTIME_CONFS: dict[str, str] = {
     # without the conf a reader implementing pushFilters() is an ERROR,
     # not a silent fallback)
     "spark.sql.python.filterPushdown.enabled": "true",
+    # checkpoint files (offsets, commits, sources, metadata, state store)
+    # through Spark's FileSystem fallback manager: without libhadoop the
+    # default FileContext manager forks ``readlink`` 8 times per atomic
+    # file, on the trigger's critical path. Same files (``.crc`` sidecars
+    # included), atomic rename on a local POSIX file system; not for
+    # HDFS, where ``FileSystem.rename`` does not overwrite (module
+    # docstring).
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

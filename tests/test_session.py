@@ -78,6 +78,32 @@ def test_python_tasks_import_installed_pyspark(spark):
     assert not [z for z in zips if z.startswith(home) or z.endswith(".jar")], zips
 
 
+def _checkpoint_manager(session, tmp_path) -> str:
+    """Class of the manager Spark builds for a checkpoint of ``session``."""
+    jvm = session._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        session._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return manager.getClass().getSimpleName()
+
+
+def test_checkpoints_use_the_file_system_manager(spark, tmp_path):
+    """``get_spark`` sessions, and harness sessions after
+    ``apply_runtime_confs``, write checkpoints through the FileSystem
+    manager; a Spark that renames the class fails here, not at every
+    query start."""
+    from msstreamingstack_spark.session import apply_runtime_confs
+
+    assert _checkpoint_manager(spark, tmp_path) == "FileSystemBasedCheckpointFileManager"
+    vanilla = spark.newSession()
+    vanilla.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+    assert _checkpoint_manager(vanilla, tmp_path) == "FileContextBasedCheckpointFileManager"
+    apply_runtime_confs(vanilla)
+    assert _checkpoint_manager(vanilla, tmp_path) == "FileSystemBasedCheckpointFileManager"
+
+
 def _run_driver(src: str, tmp_path) -> subprocess.CompletedProcess:
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_DRIVER_MEM"] = "1g"

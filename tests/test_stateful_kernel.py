@@ -181,6 +181,31 @@ def test_chunk_order_does_not_change_output():
     assert chunked_state.get == ordered_state.get
 
 
+def test_kernel_yields_non_empty_frames_of_the_output_dtypes():
+    """PySpark's ``ApplyInPandasWithStateSerializer`` appends a zero-row,
+    all-None pad frame to the kernel's frames before ``pd.concat``, and
+    that pad alone makes pandas warn that concatenation with empty or
+    all-NA entries is deprecated. The kernel's own frames are never
+    empty and already carry ``OUTPUT_SCHEMA``'s numpy dtypes, so a dtype
+    change a later pandas brings can only come from that pad."""
+    import pyspark.sql.types as T
+
+    numpy_dtype = {
+        T.LongType: np.int64, T.DoubleType: np.float64, T.BooleanType: np.bool_,
+        T.StringType: np.object_,
+    }
+    fn = make_bucket_fn()
+    state = FakeGroupState()
+    assert list(fn((0,), iter([_events().iloc[:0]]), state)) == []
+    assert not state.exists
+    for batch in [*_micro_batches(_events()), _events().iloc[:1]]:
+        (out,) = fn((0,), iter([batch]), state)
+        assert len(out) == len(batch) > 0
+        assert {f.name: out[f.name].dtype for f in OUTPUT_SCHEMA.fields} == {
+            f.name: np.dtype(numpy_dtype[type(f.dataType)]) for f in OUTPUT_SCHEMA.fields
+        }
+
+
 class FakeTimeoutState(FakeGroupState):
     """Adds the event-time timeout calls ``make_rollup_fn`` uses."""
 

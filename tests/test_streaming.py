@@ -596,6 +596,71 @@ def test_checkpoint_restart_preserves_session_state(spark, tmp_path):
             )
 
 
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def test_checkpoint_of_file_context_manager_restarts(spark, tmp_path):
+    """A checkpoint written through Spark's default FileContext manager
+    (offsets, commits and RocksDB changelogs) restarts under the
+    engine's FileSystem manager: no event is reprocessed, sessions within
+    the gap keep their id and returning users are not new."""
+    from msstreamingstack_spark.sources.generator import drop_batches
+    from msstreamingstack_spark.streaming.pipeline import use_rocksdb_state
+    from msstreamingstack_spark.streaming.stateful import sessionize_stream
+
+    session = spark.newSession()  # the RocksDB and manager confs stay here
+    use_rocksdb_state(session)
+    src = str(tmp_path / "drops")
+    cp = str(tmp_path / "cp_upgrade")
+
+    # phase 1: run_pipeline's plan with the manager set back to Spark's
+    # default after read_event_stream applies the engine's confs
+    drop_batches(src, n_batches=5, batch_size=5, t0_sec=1000, gap_sec=60)
+    events = pipeline.read_event_stream(
+        session, src, max_bytes_per_trigger=pipeline.ADMIT_BYTES_PER_TRIGGER
+    ).select("event_id", "user_id", "ts_sec", "event_type", "value")
+    session.conf.set(CHECKPOINT_MANAGER_CONF, FILE_CONTEXT_MANAGER)
+    sink1 = CollectingSink()
+    q = (
+        sessionize_stream(pipeline.with_quality_metrics(events))
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", os.path.join(cp, "cp"))
+        .foreachBatch(sink1)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert len(sink1.rows) == 25
+    pre = {r["user_id"]: r for r in sink1.rows}
+
+    # phase 2: users 0..5 return 20 min later; run_pipeline restores the
+    # engine's manager before the restart
+    drop_batches(src, n_batches=1, batch_size=6, t0_sec=2200, gap_sec=600)
+    sink2 = CollectingSink()
+    run_pipeline(
+        session, src, checkpoint_dir=cp, sinks=[sink2], available_now=True
+    ).awaitTermination(300)
+    assert session.conf.get(CHECKPOINT_MANAGER_CONF).endswith(
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+    assert len(sink2.rows) == 6
+    assert all(r["user_id"] in pre for r in sink2.rows)
+    assert not any(r["is_new_user"] for r in sink2.rows)
+    cont = [r for r in sink2.rows if r["event_type"] != "signup"]
+    assert cont, "expected returning non-signup events"
+    for r in cont:
+        prev = pre[r["user_id"]]
+        assert r["ts_sec"] - prev["ts_sec"] <= 1800
+        assert r["session_id"] == prev["session_id"], (
+            r["user_id"], prev["session_id"], r["session_id"],
+        )
+
+
 class _FakeValueState:
     def __init__(self):
         self._v = None

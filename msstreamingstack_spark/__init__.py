@@ -12,8 +12,7 @@ idiomatic PySpark 3.5+/4.x DataFrame engine:
 - one streaming query with ``foreachBatch`` fan-out instead of five
   concurrent queries re-reading the source
 - extension operators for large-scale training-data pipelines
-  (minhash-LSH near-duplicates, similarity search, multimodal
-  plumbing)
+  (minhash-LSH near-duplicates, multimodal plumbing)
 
 Layout:
     session.py    — SparkSession factory tuned for the harness
@@ -22,7 +21,7 @@ Layout:
     sources/      — table loaders, event generator, Python data sources
     sinks/        — console/parquet/memory foreachBatch sinks; external stubs
     functions/    — expression library (scalar derivations, text, vectors)
-    operators/    — batch operators (sessionize, state, dedup, similarity…)
+    operators/    — batch operators (sessionize, state, dedup, asof…)
     plans/        — plan-inspection helpers (pushdown/broadcast assertions)
     streaming/    — stateful streaming pipeline (T1-T4 of SURVEY.md §2.6)
     queries.py    — named query registry driving __spark_entry__.py

@@ -84,47 +84,7 @@ def _cmd_verify(args: argparse.Namespace) -> int:
     harness's check, as a product command)."""
     from msstreamingstack_spark.queries import REGISTRY
     from msstreamingstack_spark.session import get_spark
-
-    try:
-        from tests.oracle_harness import compare, duck_connect
-    except ImportError:  # installed without the tests/ tree
-        import math
-        import os as _os
-
-        import duckdb
-
-        def duck_connect(sf_dir):
-            con = duckdb.connect()
-            for t in ("region", "nation", "customer", "supplier", "part",
-                      "orders", "lineitem", "events", "documents",
-                      "embeddings"):
-                p = _os.path.join(sf_dir, f"{t}.parquet")
-                if _os.path.exists(p):
-                    con.execute(
-                        f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-                    )
-            return con
-
-        def compare(df, con, sql):
-            pdf = df.toPandas()
-            d = con.execute(sql)
-            dcols = [c[0] for c in d.description]
-            drows = d.fetchall()
-            scols = list(pdf.columns)
-            if sorted(scols) != sorted(dcols):
-                return False, f"columns {sorted(scols)} != {sorted(dcols)}"
-            si = sorted(range(len(scols)), key=lambda i: scols[i])
-            di = sorted(range(len(dcols)), key=lambda i: dcols[i])
-
-            def cell(v):
-                if isinstance(v, float) and math.isnan(v):
-                    return "nan"
-                return repr(v)
-
-            sn = sorted(tuple(cell(r[i]) for i in si)
-                        for r in pdf.itertuples(index=False, name=None))
-            dn = sorted(tuple(cell(r[i]) for i in di) for r in drows)
-            return (sn == dn), f"{len(sn)} rows"
+    from tests.oracle_harness import compare, duck_connect
 
     names = (
         [n.strip() for n in args.names.split(",") if n.strip()]
@@ -150,7 +110,7 @@ def _cmd_verify(args: argparse.Namespace) -> int:
             ok, msg = compare(spec.builder(spark, args.sf_dir), con, spec.oracle)
         except Exception as exc:
             ok, msg = False, f"error: {exc}"
-        print(f"{name}: {'ok' if ok else 'MISMATCH'} ({msg})")
+        print(f"{name}: {msg if ok else 'MISMATCH: ' + msg}")
         if not ok:
             failures.append(name)
     print(f"\n{len(names) - len(failures)}/{len(names)} queries match")
@@ -258,71 +218,6 @@ def _cmd_heavy_hitters(args: argparse.Namespace) -> int:
             ).show(args.k, truncate=False)
             return 0
     print("no micro-batches processed (empty source)")
-    return 0
-
-
-def _cmd_ann(args: argparse.Namespace) -> int:
-    """IVF ANN index lifecycle: ``--fit`` trains the coarse quantizer
-    over the embeddings table and persists it; ``--search`` loads a
-    persisted index and answers top-k for the given query ids without
-    re-fitting."""
-    from msstreamingstack_spark.operators.similarity import (
-        ivf_fit,
-        ivf_fit_ml,
-        ivf_index_load,
-        ivf_index_save,
-        ivf_topk,
-    )
-    from pyspark.sql import functions as F
-
-    from msstreamingstack_spark.session import get_spark
-    from msstreamingstack_spark.sources.tables import load_table
-
-    spark = get_spark(app_name="msstreamingstack-ann")
-    spark.sparkContext.setLogLevel("WARN")
-    emb = load_table(spark, args.sf_dir, "embeddings")
-    if args.fit:
-        fit = ivf_fit_ml if args.ml else ivf_fit
-        centroids = fit(emb)
-        ivf_index_save(centroids, spark, args.index)
-        print(
-            f"fitted {'ml-' if args.ml else ''}IVF quantizer "
-            f"({centroids.shape[0]}x{centroids.shape[1]}) -> {args.index}"
-        )
-        return 0
-    centroids = ivf_index_load(spark, args.index)
-    query_ids = [int(x) for x in args.query_ids.split(",")]
-    queries = emb.filter(F.col("vec_id").isin(query_ids))
-    out = ivf_topk(emb, queries, k=args.k, centroids=centroids)
-    if args.out:
-        out.write.mode("overwrite").parquet(args.out)
-    out.orderBy("query_id", "rank").show(args.k * len(query_ids), truncate=False)
-    return 0
-
-
-def _cmd_fit_pinned(args: argparse.Namespace) -> int:
-    """Refit the pinned PCA serving model and write its JSON.
-
-    The committed resources/pca_pinned.json is the model the registry
-    serves; this reproduces it (fit at --sf-dir, default the sf0.01
-    oracle fixture). Refits are deterministic up to float reduction
-    order — the committed pin, not the refit, is the source of truth."""
-    import json
-
-    from msstreamingstack_spark.operators.pca import fit_pca_pinned
-    from msstreamingstack_spark.session import get_spark
-    from msstreamingstack_spark.sources.tables import load_table
-
-    spark = get_spark(app_name="msstreamingstack-fit")
-    spark.sparkContext.setLogLevel("WARN")
-    pin = fit_pca_pinned(
-        load_table(spark, args.sf_dir, "embeddings"),
-        q=args.q,
-        meta={"fit_sf": args.sf_dir},
-    )
-    with open(args.out, "w") as fh:
-        json.dump(pin, fh, indent=1)
-    print(f"pinned {args.model} model -> {args.out}")
     return 0
 
 
@@ -525,36 +420,6 @@ def main(argv: list[str] | None = None) -> int:
     hh.add_argument("--once", action="store_true",
                     help="Trigger.AvailableNow: drain pending input, then stop")
     hh.set_defaults(fn=_cmd_heavy_hitters)
-
-    an = sub.add_parser(
-        "ann",
-        help="IVF ANN index lifecycle: fit+persist the quantizer, or "
-        "search top-k with a persisted index (no re-fit)",
-    )
-    an.add_argument("--index", required=True, help="index directory")
-    an.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    mode = an.add_mutually_exclusive_group(required=True)
-    mode.add_argument("--fit", action="store_true",
-                      help="fit the coarse quantizer and persist it")
-    mode.add_argument("--search", action="store_true",
-                      help="top-k search using the persisted index")
-    an.add_argument("--ml", action="store_true",
-                    help="fit with pyspark.ml KMeans (large-K path)")
-    an.add_argument("--query-ids", default="0,1,2",
-                    help="comma-separated vec_ids to search for")
-    an.add_argument("--k", type=int, default=5)
-    an.add_argument("--out", help="write results parquet here")
-    an.set_defaults(fn=_cmd_ann)
-
-    fp = sub.add_parser(
-        "fit-pinned",
-        help="refit a pinned serving model (pca) and write its JSON",
-    )
-    fp.add_argument("model", choices=("pca",))
-    fp.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    fp.add_argument("--out", required=True)
-    fp.add_argument("--q", type=int, default=4, help="pca components")
-    fp.set_defaults(fn=_cmd_fit_pinned)
 
     sq = sub.add_parser("sql", help="run ad-hoc SQL over the fixture tables")
     sq.add_argument("query")

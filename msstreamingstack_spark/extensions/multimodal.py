@@ -12,8 +12,7 @@ PIL/ffmpeg-backed callable in a real deployment; nothing else changes.
 Scale notes: media bytes stay columnar end-to-end (Arrow both sides of
 the UDF); per-batch processing bounds memory to
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows; feature
-extraction emits fixed-width vectors so downstream similarity/dedup
-operators (operators/similarity.py) apply unchanged.
+extraction emits fixed-width vectors.
 """
 
 from __future__ import annotations

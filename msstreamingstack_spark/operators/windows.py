@@ -64,39 +64,3 @@ def bucketed_running_sum(
         .drop("_bkt", "_lrun", "_base")
     )
 
-
-def topk_per_key_salted(
-    df: DataFrame,
-    key_cols: tuple,
-    order_cols: tuple,
-    k: int,
-    salt_col: Column,
-    out: str = "rn",
-    p: int = 64,
-) -> DataFrame:
-    """Exact top-``k`` rows per key with the heavy sort keyed
-    (key, salt) — the rank instance of the skew decomposition: a
-    row_number window partitioned by a hot key alone sorts that key's
-    entire slice in ONE task (windows cannot be AQE-skew-split), while
-    the salted first pass sorts ``p`` slices in parallel and keeps at
-    most ``k`` from each, so the second, unsalted pass ranks a set
-    bounded at ``p×k`` rows per key — constant, regardless of corpus
-    size.
-
-    Exactness: the global top-k of a union is contained in the union
-    of per-part top-ks, and with ``order_cols`` forming a TOTAL order
-    (unique tiebreaker — required) row_number is deterministic, so the
-    surviving rows and their final ranks are identical to the
-    single-window form. ``salt_col`` must be a deterministic function
-    of the row (e.g. its unique id), never a random."""
-    ev = df.withColumn("_salt", F.pmod(salt_col.cast("long"), F.lit(p)))
-    w1 = Window.partitionBy(*key_cols, "_salt").orderBy(*order_cols)
-    cand = (
-        ev.withColumn("_lrn", F.row_number().over(w1))
-        .filter(F.col("_lrn") <= k)
-        .drop("_lrn", "_salt")
-    )
-    w2 = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    return cand.withColumn(out, F.row_number().over(w2)).filter(
-        F.col(out) <= k
-    )

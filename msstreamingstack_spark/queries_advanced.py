@@ -17,10 +17,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from msstreamingstack_spark.extensions.multimodal import extract_features
 from msstreamingstack_spark.functions.text import hash48_sql
 from msstreamingstack_spark.operators.asof import asof_join
-from msstreamingstack_spark.operators.similarity import (
-    embedding_neardup_pairs,
-    embedding_neardup_sql,
-)
 from msstreamingstack_spark.queries import (
     EVENTS_TS_SQL,
     _dec_sum,
@@ -33,9 +29,6 @@ from msstreamingstack_spark.sources.tables import (
     load_table,
     spread,
 )
-
-NEARDUP_COS_T = 0.45  # testdata embeddings are near-orthogonal random
-                      # vectors; 0.45 keeps the exact kernel non-trivial
 
 
 # ---------------------------------------------------------------------------
@@ -708,74 +701,6 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Embedding-cosine near-duplicate detection
-# ---------------------------------------------------------------------------
-@register(
-    "dedup_embedding_cosine",
-    embedding_neardup_sql(NEARDUP_COS_T),
-    tags=("extension", "dedup", "embedding"),
-    doc="Exact embedding-cosine near-dup pairs (cos ≥ 0.45 on the "
-    "near-orthogonal test vectors). The exact kernel of the "
-    "SRP-bucketed scale path (operators/similarity.py).",
-)
-def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    return embedding_neardup_pairs(emb, NEARDUP_COS_T)
-
-
-@register(
-    "dedup_embedding_lsh",
-    None,  # filled below (import-order: similarity helpers)
-    tags=("extension", "dedup", "embedding", "lsh"),
-    doc="SRP-bucketed embedding near-dup pairs — the scale path for "
-    "dedup_embedding_cosine: candidate pairs share an LSH bucket in "
-    "any of 8 tables (equi-join on (table, bucket); ids only in the "
-    "shuffle), exact cosine verifies candidates. Deterministic planes "
-    "⇒ the LSH stage itself is oracle-checked bit-for-bit; recall vs "
-    "the all-pairs kernel asserted in tests.",
-)
-def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.similarity import (
-        embedding_neardup_lsh_pairs,
-    )
-    from msstreamingstack_spark.sources.tables import table_row_count
-
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    # corpus count from parquet footer metadata: same auto-sizing as a
-    # live count() (the operator derives planes from it) without the
-    # extra Spark action; None (unreadable path) falls back to counting
-    return embedding_neardup_lsh_pairs(
-        emb, NEARDUP_COS_T, corpus_count=table_row_count(sf_dir, "embeddings")
-    )
-
-
-# The driver runs the correctness gate at this fixture; the registered
-# oracle must be generated from the SAME auto_planes_per_table
-# derivation the Spark builder applies to that fixture's cardinality —
-# a static planes constant silently diverges the moment the fixture is
-# re-sized (tests/test_srp_sizing.py pins the pairing).
-DRIVER_ORACLE_SF_DIR = "/root/testdata/sf0.01"
-
-
-def _attach_embedding_lsh_oracle() -> None:
-    from msstreamingstack_spark.operators.similarity import (
-        auto_planes_per_table,
-        embedding_neardup_lsh_sql,
-    )
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.sources.tables import table_row_count
-
-    n = table_row_count(DRIVER_ORACLE_SF_DIR, "embeddings")
-    REGISTRY["dedup_embedding_lsh"].oracle = embedding_neardup_lsh_sql(
-        NEARDUP_COS_T,
-        planes_per_table=auto_planes_per_table(n) if n else None,
-    )
-
-
-_attach_embedding_lsh_oracle()
-
-
-# ---------------------------------------------------------------------------
 # Multimodal surface (binary payload + typed metadata)
 # ---------------------------------------------------------------------------
 # Deterministic media derivation over `documents`: payload = utf-8
@@ -1022,59 +947,6 @@ def q_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_minutes_active"),
         )
     )
-
-
-def _ivf_pinned_oracle(which: str) -> str:
-    from msstreamingstack_spark.operators.similarity import ivf_pinned_sql
-
-    return ivf_pinned_sql(which, k=5, n_queries=10)
-
-
-@register(
-    "similarity_ann_ivf",
-    _ivf_pinned_oracle("lloyd"),
-    tags=("extension", "similarity", "ann", "ivf"),
-    doc="IVF ANN top-5 against the PINNED Lloyd-fitted coarse "
-    "quantizer (resources/ivf_pinned.json, fitted once at sf0.01 — "
-    "the index LIFECYCLE: fit offline over a bounded sample, ship "
-    "K×DIM doubles, serve every probe batch from the pinned index; "
-    "probing a grown corpus with the shipped index is the intended "
-    "100 TB shape). Given pinned centroids the probe is exact "
-    "arithmetic — sequential-fold distances bit-matching DuckDB's "
-    "list_dot_product, ||c||² as shared literals, cell-id tiebreaks — "
-    "so assignment+probe+rescore+rank is FULLY DuckDB-oracled (the "
-    "srp_ann_sql precedent). The fit itself (Lloyd x3, Arrow-matmul "
-    "assignment, only K×DIM centroids reach the driver) remains "
-    "recall-bound-tested in tests/test_advanced.py.",
-)
-def q_similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.similarity import ivf_topk_pinned
-
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_topk_pinned(emb, queries, "lloyd", k=5)
-
-
-@register(
-    "similarity_ann_ivf_ml",
-    _ivf_pinned_oracle("ml"),
-    tags=("extension", "similarity", "ann", "ivf", "ml"),
-    doc="IVF ANN top-5 against the PINNED pyspark.ml-KMeans-fitted "
-    "quantizer (k-means|| init, tree-reduced updates — the fit that "
-    "scales past a few thousand cells where the hand Lloyd loop's "
-    "K×DIM driver round-trips stop being the bottleneck). Same "
-    "fully-oracled pinned-probe kernel as similarity_ann_ivf with a "
-    "genuinely different index (different fit → different cells and "
-    "recall), so both fit lineages keep a recorded bench + "
-    "correctness row; the ml fit's recall bound stays asserted in "
-    "tests/test_advanced.py.",
-)
-def q_similarity_ann_ivf_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.similarity import ivf_topk_pinned
-
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_topk_pinned(emb, queries, "ml", k=5)
 
 
 # ---------------------------------------------------------------------------
@@ -2548,69 +2420,6 @@ def q_sql_frontend_grouping_sets_parity(
     return run_sql(spark, sf_dir, _GSETS_SQL_TEXT)
 
 
-def _topic_balance_oracle() -> str:
-    from msstreamingstack_spark.operators.similarity import (
-        pinned_cent_cte_sql,
-    )
-
-    return f"""
-WITH cent(cell, c, cc) AS (
-  VALUES {pinned_cent_cte_sql('lloyd')}
-),
-assign AS (
-  SELECT vec_id, label, cell FROM (
-    SELECT e.vec_id, e.label, t.cell,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-             t.cc - 2 * list_dot_product(CAST(e.embedding AS DOUBLE[]), t.c),
-             t.cell) AS rn
-    FROM embeddings e CROSS JOIN cent t) WHERE rn = 1
-),
-tot AS (SELECT COUNT(*) AS n FROM embeddings)
-SELECT cell, label, COUNT(*) AS n_vecs,
-       CAST(COUNT(*) AS DOUBLE) / (SELECT n FROM tot) AS corpus_share
-FROM assign GROUP BY cell, label
-"""
-
-
-@register(
-    "corpus_topic_balance",
-    _topic_balance_oracle(),
-    tags=("extension", "similarity", "ivf", "pipeline", "analytics"),
-    doc="Topic-balance histogram over the PINNED IVF quantizer: every "
-    "embedding assigned to its nearest cell (the same parity-exact "
-    "kernel the ANN queries probe with), counted per (cell, label) "
-    "with corpus share — the data-mixing view of the index. At 100 TB "
-    "this is how a pretraining pipeline checks cluster/topic balance "
-    "before sampling: one narrow scan + a K×|labels|-row aggregate, "
-    "no joins, the assignment UDF Arrow-batched. Index reuse is the "
-    "point — fit once, then the SAME centroids serve search "
-    "(similarity_ann_ivf) and corpus analytics, bit-identically on "
-    "both engines.",
-)
-def q_corpus_topic_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.similarity import (
-        pinned_cell_assign,
-    )
-
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    # corpus total as an explicit-broadcast scalar (house crossJoin
-    # discipline) — no driver-side action in the builder
-    tot = emb.agg(F.count("*").alias("_n"))
-    return (
-        emb.select(
-            pinned_cell_assign(F.col("embedding")).alias("cell"), "label"
-        )
-        .groupBy("cell", "label")
-        .agg(F.count("*").alias("n_vecs"))
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            "corpus_share",
-            F.col("n_vecs").cast("double") / F.col("_n").cast("double"),
-        )
-        .drop("_n")
-    )
-
-
 # ---------------------------------------------------------------------------
 # SQL front-end, round 6: correlated EXISTS pair and multiset set-ops
 # through the open SQL surface — IDENTICAL text on both engines.
@@ -2862,277 +2671,6 @@ def q_sql_frontend_lateral_topk_parity(
     from msstreamingstack_spark.sql_frontend import run_sql
 
     return run_sql(spark, sf_dir, _LATERAL_SQL_TEXT)
-
-
-# ---------------------------------------------------------------------------
-# Cluster-balanced sampling over the pinned quantizer (D4-style)
-# ---------------------------------------------------------------------------
-CLUSTER_SAMPLE_K = 12
-
-
-def _cluster_sample_oracle(k: int) -> str:
-    from msstreamingstack_spark.functions.text import hash48_sql
-    from msstreamingstack_spark.operators.similarity import (
-        pinned_cent_cte_sql,
-    )
-
-    return f"""
-WITH cent(cell, c, cc) AS (
-  VALUES {pinned_cent_cte_sql('lloyd')}
-),
-assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT e.vec_id, t.cell,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-             t.cc - 2 * list_dot_product(CAST(e.embedding AS DOUBLE[]), t.c),
-             t.cell) AS rn
-    FROM embeddings e CROSS JOIN cent t) WHERE rn = 1
-),
-h AS (
-  SELECT vec_id, cell,
-         {hash48_sql("CAST(vec_id AS VARCHAR)")} AS hv
-  FROM assign
-),
-r AS (
-  SELECT vec_id, cell,
-         CAST(row_number() OVER (PARTITION BY cell ORDER BY hv, vec_id)
-              AS BIGINT) AS samp_rank
-  FROM h
-)
-SELECT vec_id, cell, samp_rank FROM r WHERE samp_rank <= {k}
-"""
-
-
-@register(
-    "sample_cluster_balanced",
-    _cluster_sample_oracle(CLUSTER_SAMPLE_K),
-    tags=("extension", "pipeline", "sampling", "embedding", "pinned"),
-    doc=f"Cluster-balanced corpus sampling (the D4/SemDeDup-family "
-    "diversity selector): every vector is assigned to its pinned-"
-    f"quantizer cell, and each cell keeps its {CLUSTER_SAMPLE_K} "
-    "lowest-id-hash members — dense clusters downsample hard, rare "
-    "clusters keep everything, which is the balancing property "
-    "quality-score sampling lacks. Deterministic reservoir: the "
-    "per-cell order is (md5-hash, vec_id), a pure function of the "
-    "id, so retries/re-runs keep identical rows. Scale: the "
-    "centroid table is a broadcast K-row literal (per-row JVM/Arrow argmin, no shuffle); the per-cell "
-    "rank uses topk_per_key_salted, so a corpus-sized hot cluster "
-    "sorts p parallel slices and the final rank input is capped at "
-    "p*k rows per cell — a plain cell-partitioned window would "
-    "serialize exactly the dense cells the sampler exists to tame.",
-)
-def q_sample_cluster_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.functions.text import hash48
-    from msstreamingstack_spark.operators.similarity import (
-        pinned_cell_assign,
-    )
-    from msstreamingstack_spark.operators.windows import topk_per_key_salted
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = emb.select(
-        "vec_id",
-        pinned_cell_assign(F.col("embedding")).alias("cell"),
-        hash48(F.col("vec_id").cast("string")).alias("hv"),
-    )
-    out = topk_per_key_salted(
-        a,
-        ("cell",),
-        (F.col("hv"), F.col("vec_id")),
-        k=CLUSTER_SAMPLE_K,
-        salt_col=F.col("vec_id"),
-        out="samp_rank",
-    )
-    return out.select(
-        "vec_id", "cell", F.col("samp_rank").cast("long").alias("samp_rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Semantic dedup over the pinned quantizer (SemDeDup shape)
-# ---------------------------------------------------------------------------
-SEMDEDUP_COS_T = 0.35  # near-orthogonal fixture vectors; 0.35 yields a
-                       # sparse-but-nonempty in-cell duplicate relation
-
-
-def _semantic_dedup_oracle(tau: float, sub_bits: int = 0) -> str:
-    from msstreamingstack_spark.operators.similarity import (
-        COS_ROUND,
-        cosine_sql,
-        pinned_cent_cte_sql,
-        semdedup_sub_sql,
-    )
-
-    cos = cosine_sql("a.v", "b.v")
-    return f"""
-WITH cent(cell, c, cc) AS (
-  VALUES {pinned_cent_cte_sql('lloyd')}
-),
-assign AS (
-  SELECT vec_id, v, cell, {semdedup_sub_sql(sub_bits)} AS sub FROM (
-    SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v, t.cell,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-             t.cc - 2 * list_dot_product(CAST(e.embedding AS DOUBLE[]), t.c),
-             t.cell) AS rn
-    FROM embeddings e CROSS JOIN cent t) WHERE rn = 1
-),
-pair AS (
-  SELECT a.vec_id, round({cos}, {COS_ROUND}) AS cosr
-  FROM assign a JOIN assign b
-    ON a.cell = b.cell AND a.sub = b.sub AND b.vec_id < a.vec_id
-),
-nbr AS (
-  SELECT vec_id, COUNT(*) AS n_nbrs, MAX(cosr) AS top_cos
-  FROM pair WHERE cosr >= {tau!r} GROUP BY vec_id
-)
-SELECT s.vec_id, s.cell,
-       COALESCE(n.n_nbrs, 0) AS n_nbrs,
-       COALESCE(n.top_cos, -1.0) AS top_cos,
-       CAST(CASE WHEN n.vec_id IS NOT NULL THEN 1 ELSE 0 END AS INTEGER)
-         AS is_semdup
-FROM assign s LEFT JOIN nbr n USING (vec_id)
-"""
-
-
-@register(
-    "dedup_semantic",
-    None,  # attached below from the driver fixture's own sizing
-    tags=("extension", "dedup", "embedding", "ivf", "semantic"),
-    doc="SemDeDup-shaped semantic dedup (Abbas et al. 2023): embeddings "
-    "are assigned to their pinned-quantizer cell (the SAME parity-exact "
-    "kernel the IVF ANN queries probe with), pairwise exact cosine runs "
-    "ONLY within a cell, and a vector is a semantic duplicate when an "
-    "earlier (lower-id) cell-mate sits within cos >= 0.35 — the "
-    "keep-first-by-id rule, deterministic on both engines. Output is "
-    "one row per vector (cell, duplicate-neighbor count, top cosine, "
-    "flag), i.e. the keep/drop decision a pretraining pipeline consumes. "
-    "Scale: SemDeDup's published recipe sizes K with N so the per-cell "
-    "quadratic stage stays bounded; a PINNED quantizer can't grow K, "
-    "so beyond its design occupancy (K·32 rows) each cell is SPLIT by "
-    "auto-sized deterministic SRP sign bits (semdedup_sub_bits — the "
-    "auto_planes_per_table discipline; a 16x corpus measured 22x "
-    "before refinement, linear after). Refinement only SPLITS cells, "
-    "so the flagged set is a monotone subset of the unrefined one — "
-    "property-pinned; the driver fixture (500 rows) derives 0 bits, "
-    "keeping the oracled semantics identical. Cosines are rounded "
-    "before the threshold compare and the MAX fold, so the driver "
-    "hash-compare is bit-stable cross-engine. The ref engine has no "
-    "embedding surface at all (SURVEY.md §2.5 ABSENT) — north-star "
-    "extension surface.",
-)
-def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.caching import rotating_persist
-    from msstreamingstack_spark.operators.similarity import (
-        COS_ROUND,
-        cosine,
-        pinned_cell_assign,
-        semdedup_sub_bits,
-        semdedup_subbucket,
-    )
-    from msstreamingstack_spark.sources.tables import table_row_count
-
-    bits = semdedup_sub_bits(table_row_count(sf_dir, "embeddings"))
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    # assignment runs the Arrow-batched quantizer UDF once; the frame
-    # feeds both self-join sides and the final left join, so persist it
-    # under a rotating slot (house cache discipline)
-    assigned = rotating_persist(
-        emb.select(
-            "vec_id",
-            F.col("embedding").alias("v"),
-            pinned_cell_assign(F.col("embedding")).alias("cell"),
-            semdedup_subbucket(F.col("embedding"), bits).alias("sub"),
-        ),
-        "dedup_semantic.assigned",
-    )
-    # populate before the self-join sides fork off the cache — one of
-    # them broadcasts at small SF and would recompute the cell/SRP
-    # assignment from lineage (A/B +11% at sf0.1; round-8
-    # broadcast-race lesson, plans/notes.md)
-    assigned.count()
-    earlier = assigned.select(
-        F.col("vec_id").alias("b_id"), F.col("v").alias("bv"), "cell", "sub"
-    )
-    pair = (
-        assigned.join(earlier, ["cell", "sub"])
-        .filter(F.col("b_id") < F.col("vec_id"))
-        .select(
-            "vec_id",
-            F.round(cosine(F.col("v"), F.col("bv")), COS_ROUND).alias("cosr"),
-        )
-        .filter(F.col("cosr") >= F.lit(SEMDEDUP_COS_T))
-    )
-    nbr = pair.groupBy("vec_id").agg(
-        F.count("*").alias("n_nbrs"), F.max("cosr").alias("top_cos")
-    )
-    return (
-        assigned.select("vec_id", "cell")
-        .join(nbr, "vec_id", "left")
-        .select(
-            "vec_id",
-            "cell",
-            F.coalesce(F.col("n_nbrs"), F.lit(0).cast("long")).alias("n_nbrs"),
-            # -1.0 sentinel for "no duplicate neighbor" (cosine is
-            # always >= -1; real hits are >= the threshold): keeps the
-            # column non-null, so the Arrow null/NaN asymmetry between
-            # engines can't touch the driver hash
-            F.coalesce(F.col("top_cos"), F.lit(-1.0)).alias("top_cos"),
-            F.when(F.col("n_nbrs").isNotNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("is_semdup"),
-        )
-    )
-
-
-# The driver runs the correctness gate at DRIVER_ORACLE_SF_DIR; the
-# registered oracle must derive its refinement bits from the SAME
-# semdedup_sub_bits(footer count) the builder applies there (the
-# embedding-LSH auto-sizing precedent) — 500 rows → 0 bits, so the
-# attached SQL is the historically-verified unrefined form.
-def _attach_semantic_dedup_oracle() -> None:
-    from msstreamingstack_spark.operators.similarity import semdedup_sub_bits
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.sources.tables import table_row_count
-
-    n = table_row_count(DRIVER_ORACLE_SF_DIR, "embeddings")
-    REGISTRY["dedup_semantic"].oracle = _semantic_dedup_oracle(
-        SEMDEDUP_COS_T, semdedup_sub_bits(n) if n else 0
-    )
-
-
-_attach_semantic_dedup_oracle()
-
-
-# ---------------------------------------------------------------------------
-# PCA projection over the pinned components (embedding post-processing)
-# ---------------------------------------------------------------------------
-def _pca_pinned_oracle() -> str:
-    from msstreamingstack_spark.operators.pca import project_pinned_sql
-
-    return project_pinned_sql()
-
-
-@register(
-    "embedding_pca_project",
-    _pca_pinned_oracle(),
-    tags=("extension", "embedding", "pca", "linear-algebra"),
-    doc="Project every embedding onto the PINNED principal components "
-    "(resources/pca_pinned.json — distributed moment fold via ONE "
-    "mapInPandas pass bounded at partitions×(D²+D+1) doubles, driver "
-    "eigh on the D×D covariance, signs pinned largest-|v|-positive, "
-    "fitted once at sf0.01; the fit/serve split is the IVF-quantizer "
-    "precedent). Serving plan is pure JVM: posexplode (narrow) → "
-    "broadcast D-row dim table → per-vector round-then-DECIMAL folds, "
-    "ONE shuffle that partial-aggregates map-side — the standard "
-    "whiten/reduce step before clustering or ANN (FAISS PCA→IVF "
-    "recipe). Fit properties (orthonormality, variance order, numpy "
-    "parity) pytest-pinned. Ref has no linear-algebra surface "
-    "(SURVEY.md §2.5 ABSENT) — north-star extension.",
-)
-def q_embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.pca import project_pinned
-
-    return project_pinned(spread(load_table(spark, sf_dir, "embeddings")))
 
 
 # ---------------------------------------------------------------------------
@@ -3439,10 +2977,10 @@ UNION ALL
     "the embedding corpus: seed at the min vec_id, then repeatedly "
     "pick the point farthest from its nearest selected center — the "
     "2-approximation to the k-center cover that curation pipelines "
-    "use for diverse subset selection. Spark side is the IVF "
-    "discipline: driver state is K vectors (bounded at K*D "
-    "doubles), each round is one narrow map (distance to the ONE "
-    "new broadcast center, fold kept via least()) plus a top-1 "
+    "use for diverse subset selection. Spark side: the only state "
+    "collected is K vectors (bounded at K*D doubles), each round "
+    "is one narrow map (distance to the ONE new broadcast center, "
+    "fold kept via least()) plus a top-1 "
     "TakeOrdered reduce — no shuffle, O(K*N*D) total work, trivially "
     "data-parallel at 100 TB. Per-term round-then-DECIMAL-sum makes "
     "the squared distances bit-identical to the unrolled-CTE oracle "
@@ -3473,7 +3011,7 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     seed = (
         emb.orderBy(F.asc("vec_id")).limit(1).collect()[0]
-    )  # 1 row: bounded driver state, like the IVF centroid load
+    )  # 1 row collected
     selected = [(1, int(seed["vec_id"]), 0.0)]
     # Persist each round's min_d so round t evaluates ONE new center
     # distance over the materialized fold, not the whole re-derived

@@ -2721,10 +2721,9 @@ FROM r WHERE rn <= {WS_K}
     "hash-exact equivalent for integer weights, bit-stable on any "
     "engine. 100 TB: the ticket explode is a bounded x4 fan-out, MIN "
     "is map-combined into one (doc) shuffle, and the per-stratum "
-    "bottom-K is a rank over survivors (swap in topk_per_key_salted "
-    "for a hot stratum — same total-order contract (min_ticket, "
-    "doc_id)). Deterministic re-runs make the sample reproducible "
-    "across pipeline versions — the property data-mixing recipes "
+    "bottom-K is a rank over survivors, in the total order "
+    "(min_ticket, doc_id). Deterministic re-runs make the sample "
+    "reproducible across pipeline versions — the property data-mixing recipes "
     "need from a sampler. Extension (SURVEY.md SS2.5: reference has "
     "no sampling surface).",
 )

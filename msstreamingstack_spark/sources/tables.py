@@ -41,22 +41,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def table_row_count(sf_dir: str, name: str) -> int | None:
-    """Row count of one testdata table from parquet FOOTER metadata —
-    no Spark action, no data read. Lets size-adaptive operators (SRP
-    plane auto-sizing) skip their ``count()`` when the input is a
-    testdata table; returns None when the path is missing/unreadable
-    so callers fall back to counting."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        import pyarrow.parquet as pq
-
-        ds = pq.ParquetDataset(path)
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in ds.files)
-    except Exception:
-        return None
-
-
 def spread(df: DataFrame, target: int | None = None) -> DataFrame:
     """Widen tiny scans so compute-bound per-row stages (shingling,
     hashing, dot products) use every core.

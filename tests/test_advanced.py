@@ -150,288 +150,6 @@ def test_frame_sampling_counts(spark):
         assert n == (durs[mid] - 1) // 1000 + 1
 
 
-def test_embedding_neardup_symmetric_free(spark, sf_correctness):
-    res = REGISTRY["dedup_embedding_cosine"].builder(spark, sf_correctness).collect()
-    pairs = {(r.d1, r.d2) for r in res}
-    assert all(d1 < d2 for d1, d2 in pairs)  # canonical orientation only
-    assert all(r.cos >= 0.45 for r in res)
-
-
-def test_ivf_recall_vs_brute_force(spark, sf_correctness):
-    from msstreamingstack_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-    )
-    from msstreamingstack_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_correctness, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    truth = {
-        (r.query_id, r.neighbor_id)
-        for r in brute_force_topk(emb, queries, k=5).collect()
-    }
-    got = {
-        (r.query_id, r.neighbor_id) for r in ivf_topk(emb, queries, k=5).collect()
-    }
-    recall = len(got & truth) / len(truth)
-    assert recall >= 0.5, recall  # nprobe=4/16 cells on random vectors
-    assert all(len([g for g in got if g[0] == q]) <= 5 for q in range(10))
-
-
-def test_ivf_ml_fit_recall(spark, sf_correctness):
-    """The pyspark.ml KMeans fit path (K beyond a few thousand) feeds
-    the same probe/assign kernels and must hold the same recall bound
-    as the hand Lloyd fit."""
-    from msstreamingstack_spark.operators.similarity import (
-        IVF_K,
-        brute_force_topk,
-        ivf_fit_ml,
-        ivf_topk,
-    )
-    from msstreamingstack_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_correctness, "embeddings")
-    centroids = ivf_fit_ml(emb)
-    assert centroids.shape == (IVF_K, 64)
-
-    queries = emb.filter(F.col("vec_id") < 10)
-    truth = {
-        (r.query_id, r.neighbor_id)
-        for r in brute_force_topk(emb, queries, k=5).collect()
-    }
-    got = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_topk(emb, queries, k=5, fit="ml").collect()
-    }
-    recall = len(got & truth) / len(truth)
-    assert recall >= 0.5, recall
-
-
-def test_ivf_index_save_load_roundtrip(spark, sf_correctness, tmp_path):
-    """Index lifecycle: fit once, persist, reload — the loaded
-    quantizer is bit-identical (doubles round-trip parquet exactly)
-    and the probe search over it returns EXACTLY the rows the
-    fit-inline path returns."""
-    import numpy as np
-
-    from msstreamingstack_spark.operators.similarity import (
-        ivf_fit,
-        ivf_index_load,
-        ivf_index_save,
-        ivf_topk,
-    )
-    from msstreamingstack_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_correctness, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    centroids = ivf_fit(emb)
-    path = str(tmp_path / "ivf_index")
-    ivf_index_save(centroids, spark, path)
-    loaded = ivf_index_load(spark, path)
-    assert np.array_equal(centroids, loaded)
-
-    want = sorted(
-        (r["query_id"], r["neighbor_id"], r["cos"], r["rank"])
-        for r in ivf_topk(emb, queries, k=5, centroids=centroids).collect()
-    )
-    got = sorted(
-        (r["query_id"], r["neighbor_id"], r["cos"], r["rank"])
-        for r in ivf_topk(emb, queries, k=5, centroids=loaded).collect()
-    )
-    assert want == got and len(got) > 0
-
-
-def test_ivf_pinned_probe_recall_and_fixture_integrity(spark, sf_correctness):
-    """The pinned-quantizer probe (the oracled lifecycle path): both
-    committed indexes must hit the same recall bound as the in-line
-    fits, return exactly k ranked rows per query, and the fixture's
-    precomputed ||c||² must equal the STRICTLY SEQUENTIAL float64
-    fold of c*c bit-for-bit (both engines consume it as a literal —
-    a drifted cc would silently skew every assignment). The fold, not
-    np.dot: BLAS summation order varies by kernel dispatch, so a
-    dot-based invariant is machine-dependent (it broke 1-ULP between
-    sessions on the SAME host)."""
-    import numpy as np
-
-    from msstreamingstack_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk_pinned,
-        load_pinned_ivf,
-    )
-    from msstreamingstack_spark.sources.tables import load_table
-
-    for which in ("lloyd", "ml"):
-        C, cc = load_pinned_ivf(which)
-        assert C.shape == (16, 64) and cc.shape == (16,)
-        def _seq_sq(c) -> float:
-            y = 0.0
-            for x in c:
-                y += float(x) * float(x)
-            return y
-
-        assert all(_seq_sq(c) == float(v) for c, v in zip(C, cc))
-
-    emb = load_table(spark, sf_correctness, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    truth = {
-        (r.query_id, r.neighbor_id)
-        for r in brute_force_topk(emb, queries, k=5).collect()
-    }
-    for which in ("lloyd", "ml"):
-        rows = ivf_topk_pinned(emb, queries, which, k=5).collect()
-        got = {(r.query_id, r.neighbor_id) for r in rows}
-        recall = len(got & truth) / len(truth)
-        assert recall >= 0.5, (which, recall)
-        per_q = {}
-        for r in rows:
-            per_q.setdefault(r.query_id, []).append(r.rank)
-        assert set(per_q) == set(range(10))
-        assert all(sorted(v) == list(range(1, 6)) for v in per_q.values())
-
-
-def test_dedup_semantic_matches_numpy_model_with_planted_dups(spark, sf_smoke):
-    """Plant exact + near duplicates into the real embedding fixture and
-    check dedup_semantic against an independent numpy model of the rule:
-    duplicate <=> an earlier (lower-id) vector in the SAME pinned cell
-    within cos >= SEMDEDUP_COS_T."""
-    import os
-    import tempfile
-
-    import numpy as np
-    import pandas as pd
-
-    from msstreamingstack_spark.operators.similarity import (
-        COS_ROUND,
-        load_pinned_ivf,
-    )
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_advanced import SEMDEDUP_COS_T
-
-    base = pd.read_parquet(os.path.join(sf_smoke, "embeddings.parquet"))
-    vecs = np.stack([np.asarray(v, dtype="float32") for v in base["embedding"]])
-    n = len(base)
-    # planted: an exact copy of vec 0 and a lightly-perturbed copy of
-    # vec 1 (same cell, cos ~ 0.999) — both must flag as duplicates
-    near = vecs[1] + 0.01 * np.abs(vecs[1]).mean()
-    planted = np.vstack([vecs, vecs[0], near.astype("float32")])
-    ids = list(range(n)) + [n, n + 1]
-    tmp = tempfile.mkdtemp()
-    pd.DataFrame(
-        {
-            "vec_id": ids,
-            "embedding": [planted[i] for i in range(len(ids))],
-            "label": [0] * len(ids),
-        }
-    ).to_parquet(os.path.join(tmp, "embeddings.parquet"))
-
-    # independent model: argmin assignment + brute-force cosines
-    C, cc = load_pinned_ivf("lloyd")
-    X = planted.astype("float64")
-    cells = np.argmin(cc[None, :] - 2.0 * (X @ C.T), axis=1)
-    norms = np.linalg.norm(X, axis=1)
-    want = {}
-    for i in range(len(ids)):
-        nbrs = [
-            round(float(X[i] @ X[j]) / float(norms[i] * norms[j]), COS_ROUND)
-            for j in range(i)
-            if cells[j] == cells[i]
-        ]
-        hits = [c for c in nbrs if c >= SEMDEDUP_COS_T]
-        want[i] = (int(cells[i]), len(hits), max(hits) if hits else -1.0,
-                   1 if hits else 0)
-
-    got = {
-        r["vec_id"]: (r["cell"], r["n_nbrs"], r["top_cos"], r["is_semdup"])
-        for r in REGISTRY["dedup_semantic"].builder(spark, tmp).collect()
-    }
-    assert set(got) == set(want)
-    for i in got:
-        g, w = got[i], want[i]
-        assert g[0] == w[0] and g[1] == w[1] and g[3] == w[3], (i, g, w)
-        assert abs(g[2] - w[2]) < 1e-9, (i, g, w)
-    # the planted pair actually flags
-    assert got[n][3] == 1 and got[n + 1][3] == 1
-
-
-def test_dedup_semantic_refinement_is_monotone_and_modeled(spark, sf_smoke):
-    """Above the pinned quantizer's design occupancy the builder derives
-    SRP split bits; the refined flag set must (a) match a numpy model of
-    the refined rule and (b) be a SUBSET of the unrefined flags —
-    splitting cells can only remove pairs, never invent them."""
-    import os
-    import tempfile
-
-    import numpy as np
-    import pandas as pd
-
-    from msstreamingstack_spark.operators.similarity import (
-        COS_ROUND,
-        SEMDEDUP_PLANE_BASE,
-        _plane,
-        load_pinned_ivf,
-        semdedup_sub_bits,
-    )
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_advanced import SEMDEDUP_COS_T
-
-    base = pd.read_parquet(os.path.join(sf_smoke, "embeddings.parquet"))
-    vecs = np.stack([np.asarray(v, dtype="float32") for v in base["embedding"]])
-    rng_rows = []
-    # tile the fixture past the 0-bit boundary (K*32 = 512) with exact
-    # copies at new ids — copies land in the same cell AND sub-bucket,
-    # so refined detection must still flag them
-    while len(rng_rows) + len(vecs) <= 600:
-        rng_rows.extend(vecs)
-    planted = np.vstack([vecs, np.stack(rng_rows)])[:601]
-    ids = list(range(len(planted)))
-    bits = semdedup_sub_bits(len(planted))
-    assert bits >= 1  # the point of the fixture
-
-    tmp = tempfile.mkdtemp()
-    pd.DataFrame(
-        {
-            "vec_id": ids,
-            "embedding": [planted[i].astype("float32") for i in ids],
-            "label": [0] * len(ids),
-        }
-    ).to_parquet(os.path.join(tmp, "embeddings.parquet"))
-
-    C, cc = load_pinned_ivf("lloyd")
-    X = planted.astype("float64")
-    cells = np.argmin(cc[None, :] - 2.0 * (X @ C.T), axis=1)
-    planes = np.array(
-        [_plane(SEMDEDUP_PLANE_BASE + j) for j in range(bits)], dtype="float64"
-    ).T
-    subs = (((X @ planes) > 0)
-            * np.array([1 << j for j in range(bits)])).sum(axis=1)
-    norms = np.linalg.norm(X, axis=1)
-
-    def flags(keys):
-        out = {}
-        for i in ids:
-            hit = any(
-                keys[j] == keys[i]
-                and round(float(X[i] @ X[j]) / float(norms[i] * norms[j]),
-                          COS_ROUND) >= SEMDEDUP_COS_T
-                for j in range(i)
-            )
-            out[i] = 1 if hit else 0
-        return out
-
-    refined_model = flags(list(zip(cells, subs)))
-    unrefined_model = flags(list(cells))
-
-    got = {
-        r["vec_id"]: r["is_semdup"]
-        for r in REGISTRY["dedup_semantic"].builder(spark, tmp).collect()
-    }
-    assert got == refined_model
-    # monotone: refined flags never exceed unrefined
-    assert all(got[i] <= unrefined_model[i] for i in ids)
-    # exact copies still detected under refinement
-    assert all(got[i] == 1 for i in range(len(vecs), len(planted)))
-
-
 def test_approx_percentile_tracks_exact(spark, sf_correctness):
     """The quantile sketch must land within a small value band of the
     exact per-group percentiles (rank error ~1e-4 at accuracy 10000 —

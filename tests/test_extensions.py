@@ -16,10 +16,6 @@ from msstreamingstack_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
 )
-from msstreamingstack_spark.operators.similarity import (
-    brute_force_topk,
-    srp_ann_topk,
-)
 from msstreamingstack_spark.sources.tables import load_table
 
 
@@ -100,20 +96,6 @@ def test_jaccard_verify_array_form_matches_join_count(
     assert got == ref
 
 
-def test_srp_ann_recall(spark, sf_correctness):
-    emb = load_table(spark, sf_correctness, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, queries, k=5).collect()
-    ann = srp_ann_topk(emb, queries, k=5).collect()
-    exact_set = {(r["query_id"], r["neighbor_id"]) for r in exact}
-    ann_set = {(r["query_id"], r["neighbor_id"]) for r in ann}
-    recall = len(exact_set & ann_set) / len(exact_set)
-    # 8 tables × 4 planes measures ≈0.7 on the sf0.01 embeddings
-    # (deterministic planes+data ⇒ stable); chance level is ≈1%
-    assert recall >= 0.5, f"ANN recall {recall:.3f} below bound"
-    assert all(r["rank"] <= 5 for r in ann)
-
-
 def test_multimodal_feature_extraction(spark):
     media = synthetic_media(spark, n=64)
     feats = extract_features(media).collect()
@@ -145,95 +127,6 @@ def test_multimodal_stats(spark):
     st = {r["kind"]: r for r in media_stats(synthetic_media(spark, 64)).collect()}
     assert set(st) == {"image", "audio", "video"}
     assert st["image"]["max_width"] is not None
-
-
-def test_quantize_int8_error_bound(spark, sf_correctness):
-    """Min-max int8 reconstruction error is bounded by scale/2 =
-    (mx-mn)/510 per element; MSE ≤ (scale/2)²."""
-    from msstreamingstack_spark.operators.similarity import quantize_int8_stats
-    from msstreamingstack_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_correctness, "embeddings")
-    for r in quantize_int8_stats(emb).collect():
-        half_step = (r["mx"] - r["mn"]) / 510.0
-        assert r["max_abs_err"] <= half_step + 1e-9
-        assert r["mse"] <= half_step**2 + 1e-9
-
-
-def test_quantized_rescore_recall(spark, sf_correctness):
-    """Quantized-scan ANN misses only through int8 quantization error,
-    so recall vs brute force must be near-perfect, and every returned
-    cos must equal the exact cos for that pair (re-rank is exact)."""
-    from msstreamingstack_spark.operators.similarity import (
-        quantized_rescore_topk,
-    )
-
-    emb = load_table(spark, sf_correctness, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in brute_force_topk(emb, queries, k=5).collect()
-    }
-    got = quantized_rescore_topk(emb, queries, k=5).collect()
-    approx = {(r["query_id"], r["neighbor_id"]) for r in got}
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.95, f"quantized recall {recall:.3f}"
-    assert all(len([r for r in got if r["query_id"] == q]) == 5
-               for q in {r["query_id"] for r in got})
-
-
-def test_quantized_scan_output_bounded_by_partitions(spark, sf_correctness):
-    """The code-scan stage must emit a RUNNING per-partition top-M, so
-    rows entering the global shortlist window are bounded by
-    partitions × Q × M — never corpus × Q. This is the property that
-    keeps the shortlist shuffle O(partitions) at 100 TB."""
-    from msstreamingstack_spark.operators.similarity import (
-        quantized_approx_candidates,
-        quantized_rescore_topk,
-    )
-
-    emb = load_table(spark, sf_correctness, "embeddings")  # 500 vectors
-    queries = emb.filter(F.col("vec_id") < 10)
-    k, factor, n_q, parts = 5, 4, 10, 13
-
-    corpus = emb.repartition(parts)
-    approx = quantized_approx_candidates(corpus, queries, k=k,
-                                         shortlist_factor=factor)
-    n_rows = approx.count()
-    bound = parts * n_q * k * factor
-    corpus_scaled = 500 * n_q  # what the unbounded N×Q emission would be
-    assert n_rows <= bound, f"scan emitted {n_rows} > bound {bound}"
-    assert n_rows < corpus_scaled, (
-        f"scan emitted {n_rows} rows — corpus-scaled, not partition-bounded"
-    )
-
-    # and the bound must not change the answer: result is invariant to
-    # partitioning (rounded scores + id tiebreaks make the cut exact)
-    base = sorted(tuple(r) for r in
-                  quantized_rescore_topk(emb, queries, k=k,
-                                         shortlist_factor=factor).collect())
-    repart = sorted(tuple(r) for r in
-                    quantized_rescore_topk(corpus, queries, k=k,
-                                           shortlist_factor=factor).collect())
-    assert base == repart, "quantized ANN result must be partitioning-invariant"
-
-
-def test_embedding_lsh_neardup_recall(spark, sf_correctness):
-    """SRP-bucketed near-dup pairs must be a subset of the exact
-    all-pairs kernel (the verify stage is exact cosine) with recall
-    above the 8-table x 4-plane collision bound for cos >= 0.45."""
-    from msstreamingstack_spark.operators.similarity import (
-        embedding_neardup_lsh_pairs,
-        embedding_neardup_pairs,
-    )
-
-    emb = load_table(spark, sf_correctness, "embeddings")
-    exact = {(r["d1"], r["d2"]) for r in embedding_neardup_pairs(emb, 0.45).collect()}
-    lsh = {(r["d1"], r["d2"]) for r in embedding_neardup_lsh_pairs(emb, 0.45).collect()}
-    assert exact, "test data should contain near-orthogonal dup pairs"
-    assert lsh <= exact, "LSH-verified pairs must be a subset of exact pairs"
-    recall = len(exact & lsh) / len(exact)
-    assert recall >= 0.7, f"embedding LSH recall {recall:.3f}"
 
 
 def test_rotating_persist_bounds_registry_query_caches(spark):
@@ -280,92 +173,6 @@ def test_rotating_persist_bounds_registry_query_caches(spark):
     # cleanup: rotate tiny frames through both slots, then unpersist
     for slot, df in list(live_slots(spark).items()):
         df.unpersist(blocking=False)
-
-
-def test_mine_hard_negatives_matches_numpy_model(spark, sf_smoke):
-    """Independent numpy model of the mining rule: per query, top-5
-    cross-label cosine, ties on id — and every returned negative must
-    out-rank (or tie) any same-label vector's eligibility by
-    construction (labels differ from the query's)."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from msstreamingstack_spark.operators.similarity import COS_ROUND
-    from msstreamingstack_spark.queries import REGISTRY
-
-    base = pd.read_parquet(os.path.join(sf_smoke, "embeddings.parquet"))
-    X = np.stack(
-        [np.asarray(v, dtype="float64") for v in base["embedding"]]
-    )
-    labels = base["label"].to_numpy()
-    ids = base["vec_id"].to_numpy()
-    norms = np.linalg.norm(X, axis=1)
-
-    want = {}
-    for qi in range(len(ids)):
-        if ids[qi] >= 10:
-            continue
-        cands = []
-        for ci in range(len(ids)):
-            if labels[ci] == labels[qi]:
-                continue
-            cos = round(float(X[qi] @ X[ci]) / float(norms[qi] * norms[ci]),
-                        COS_ROUND)
-            cands.append((-cos, ids[ci]))
-        cands.sort()
-        want[ids[qi]] = [
-            (int(i), -c) for c, i in cands[:5]
-        ]
-
-    got = {}
-    for r in REGISTRY["mine_hard_negatives"].builder(spark, sf_smoke).collect():
-        got.setdefault(r["query_id"], []).append(
-            (r["rank"], r["negative_id"], r["cos"], r["query_label"])
-        )
-    assert set(got) == set(want)
-    for qid, rows in got.items():
-        rows.sort()
-        assert [(n, c) for _, n, c, _ in rows] == want[qid], qid
-        # negatives all differ from the query's label
-        qlabel = rows[0][3]
-        assert all(
-            labels[list(ids).index(n)] != qlabel for _, n, _, _ in rows
-        )
-
-
-def test_mine_hard_negatives_ann_recall_and_label_filter(
-    spark, sf_correctness
-):
-    """The ANN miner (pinned-IVF probe candidates, label filter pushed
-    into the candidate join) vs the exact kernel at the fit SF: the
-    declared recall contract. Measured 0.86 at sf0.01 (nprobe=4);
-    bound at 0.70 with margin. Every negative must carry a label
-    different from its query's, and ranks must be 1..5 contiguous per
-    query (the filter ran BEFORE ranking, not after)."""
-    from msstreamingstack_spark.queries import REGISTRY
-
-    exact = {
-        (r["query_id"], r["negative_id"])
-        for r in REGISTRY["mine_hard_negatives"]
-        .builder(spark, sf_correctness)
-        .collect()
-    }
-    rows = (
-        REGISTRY["mine_hard_negatives_ann"]
-        .builder(spark, sf_correctness)
-        .collect()
-    )
-    ann = {(r["query_id"], r["negative_id"]) for r in rows}
-    recall = len(exact & ann) / len(exact)
-    assert recall >= 0.70, recall
-    per_q: dict = {}
-    for r in rows:
-        assert r["query_label"] is not None
-        per_q.setdefault(r["query_id"], []).append(r["rank"])
-    for qid, ranks in per_q.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1)), qid
 
 
 def test_bm25_rare_term_dominates_and_order_is_monotone(spark, sf_correctness):
@@ -461,84 +268,3 @@ def test_registry_metadata_consistency(spark):
             ))
             unknown = refs - tables - ctes
             assert not unknown, (name, unknown)
-
-
-def test_cluster_balanced_sampler_keeps_rare_cells_whole(spark):
-    """The balancing property on constructed skew: a cell with fewer
-    members than the per-cell budget keeps ALL of them while a dense
-    cell is cut to exactly the budget — and ranks stay deterministic
-    functions of the ids."""
-    from msstreamingstack_spark.functions.text import hash48
-    from msstreamingstack_spark.operators.similarity import (
-        load_pinned_ivf,
-        pinned_cell_assign,
-    )
-    from msstreamingstack_spark.operators.windows import topk_per_key_salted
-    from msstreamingstack_spark.queries_advanced import CLUSTER_SAMPLE_K
-
-    from pyspark.sql import functions as F
-
-    C, _ = load_pinned_ivf("lloyd")
-    rows = [(i, [float(x) for x in C[0]]) for i in range(3)]  # rare cell
-    rows += [
-        (100 + i, [float(x) for x in C[1]]) for i in range(30)
-    ]  # dense cell
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    a = emb.select(
-        "vec_id",
-        pinned_cell_assign(F.col("embedding")).alias("cell"),
-        hash48(F.col("vec_id").cast("string")).alias("hv"),
-    )
-    out = topk_per_key_salted(
-        a,
-        ("cell",),
-        (F.col("hv"), F.col("vec_id")),
-        k=CLUSTER_SAMPLE_K,
-        salt_col=F.col("vec_id"),
-        out="samp_rank",
-    ).collect()
-    per_cell: dict[int, int] = {}
-    for r in out:
-        per_cell[r["cell"]] = per_cell.get(r["cell"], 0) + 1
-    assert per_cell[0] == 3              # rare: all kept
-    assert per_cell[1] == CLUSTER_SAMPLE_K  # dense: cut to budget
-
-
-def test_label_outliers_match_numpy_mirror(spark, sf_correctness):
-    """numpy mirror of embedding_label_outliers: float64 per-label
-    centroids, cosine to own centroid, bottom-5 per label — the chosen
-    vec_ids must match exactly and the cosines to 1e-6 (the engine's
-    DECIMAL centroid sums vs numpy's float64 sums differ only in last
-    bits, far below the round-9 output grain)."""
-    import numpy as np
-
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_extensions import LABEL_OUTLIER_K
-    from msstreamingstack_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_correctness, "embeddings").collect()
-    by_label = {}
-    for r in emb:
-        by_label.setdefault(r["label"], []).append(
-            (r["vec_id"], np.array(r["embedding"], dtype=np.float64))
-        )
-    expect = {}
-    for lab, vecs in by_label.items():
-        cent = np.mean([v for _, v in vecs], axis=0)
-        cn = np.linalg.norm(cent)
-        scored = sorted(
-            (
-                round(float(v @ cent / (np.linalg.norm(v) * cn)), 9),
-                vid,
-            )
-            for vid, v in vecs
-        )
-        expect[lab] = scored[:LABEL_OUTLIER_K]
-    got = REGISTRY["embedding_label_outliers"].builder(
-        spark, sf_correctness
-    ).collect()
-    assert len(got) == sum(len(v) for v in expect.values())
-    for r in got:
-        cos, vid = expect[r["label"]][r["rn"] - 1]
-        assert r["vec_id"] == vid
-        assert abs(r["cos_centroid"] - cos) <= 1e-6

@@ -1,9 +1,8 @@
-"""Property tests for the skew-decomposition kernels
-(operators/windows.py): on random data with random bucket/salt
-granularity, each kernel must be BIT-identical to the plain
-single-window form — the exactness claims (long partials re-add
-exactly; the global top-k of a union is in the union of per-part
-top-ks) hold for every input, not just the fixtures."""
+"""Property tests for the skew-decomposition kernel
+(operators/windows.py): on random data with random bucket
+granularity, it must be BIT-identical to the plain single-window
+form — the exactness claim (long partials re-add exactly) holds for
+every input, not just the fixtures."""
 
 from __future__ import annotations
 
@@ -12,10 +11,7 @@ from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import Window, functions as F
 
-from msstreamingstack_spark.operators.windows import (
-    bucketed_running_sum,
-    topk_per_key_salted,
-)
+from msstreamingstack_spark.operators.windows import bucketed_running_sum
 
 
 # Whole-module slow tier: exhaustive sweeps the default run skips
@@ -74,33 +70,3 @@ def test_bucketed_running_sum_matches_window(
     assert sorted(map(tuple, plain.select("rid", "run").collect())) == sorted(
         map(tuple, twin.select("rid", "run").collect())
     )
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    rows=rows_strategy,
-    k=st.sampled_from([1, 3, 7]),
-    p=st.sampled_from([1, 2, 64]),
-)
-def test_topk_per_key_salted_matches_window(
-    spark_session_holder, rows, k, p
-):
-    spark = spark_session_holder
-    df = _df(spark, rows)
-    w = Window.partitionBy("k").orderBy(F.col("o").desc(), F.col("rid"))
-    plain = df.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= k
-    )
-    twin = topk_per_key_salted(
-        df,
-        ("k",),
-        (F.col("o").desc(), F.col("rid")),
-        k,
-        F.col("rid"),
-        out="rn",
-        p=p,
-    )
-    assert sorted(
-        map(tuple, plain.select("rid", "rn").collect())
-    ) == sorted(map(tuple, twin.select("rid", "rn").collect()))
-

@@ -244,3 +244,53 @@ def test_environment_knobs_are_pinned():
     assert keys == {
         "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_DRIVER_MEM", "SPARK_HOME",
     }
+
+
+IMPORT_PROBE = textwrap.dedent("""
+    import os, sys, sysconfig
+    repo = sys.argv[1] + os.sep
+    paths = sysconfig.get_paths()
+    stdlib, site = paths["stdlib"], (paths["purelib"], paths["platlib"])
+    seen = []
+
+    def opener(frame):
+        # the first caller outside the standard library and the import system
+        while frame is not None:
+            f = frame.f_code.co_filename
+            if not (f.startswith("<frozen") or (f.startswith(stdlib) and not f.startswith(site))):
+                return f
+            frame = frame.f_back
+        return ""
+
+    def audit(event, args):
+        if event == "open" and isinstance(args[0], str):
+            path = os.path.abspath(args[0])
+            if path.startswith(repo) or opener(sys._getframe(1)).startswith(repo):
+                seen.append(path)
+
+    sys.path.insert(0, sys.argv[1])
+    sys.addaudithook(audit)
+    import msstreamingstack_spark.queries
+    print("\\n".join(seen))
+""")
+
+
+def test_registry_import_reads_only_code(tmp_path):
+    """Importing the registry builds every query and oracle from code
+    alone: each file the import opens in the repository, or that the
+    repository's code opens anywhere, is Python source, bytecode or an
+    extension module, never a model or fixture file. A new interpreter,
+    so modules other tests imported cannot hide an open; third-party
+    packages reading their own data (pyspark's error classes) do not
+    count. No Spark session."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [sys.executable, "-c", IMPORT_PROBE, REPO],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 0, r.stderr
+    opened = r.stdout.splitlines()
+    # the probe sees the package's own modules being read
+    assert any(os.path.basename(p).startswith("queries.") for p in opened), opened
+    data = [p for p in opened if not p.endswith((".py", ".pyc", ".so"))]
+    assert not data, f"the registry import opened data files: {data}"

@@ -12,7 +12,8 @@ idiomatic PySpark 3.5+/4.x DataFrame engine:
 - one streaming query with ``foreachBatch`` fan-out instead of five
   concurrent queries re-reading the source
 - extension operators for large-scale training-data pipelines
-  (minhash-LSH near-duplicates, multimodal plumbing)
+  (minhash-LSH near-duplicates, exact embedding math, multimodal
+  plumbing)
 
 Layout:
     session.py    — SparkSession factory tuned for the harness

@@ -236,6 +236,17 @@ def test_q21_exists_pair_single_order_aggregate(spark):
     assert f.pushes_filter("EqualTo(n_name,NATION_5)")
 
 
+def test_quantize_int8_is_narrow_map(spark):
+    """Quantization is per-row array math: no join, no key shuffle, no
+    Python — the only exchange is spread()'s round-robin parallelism
+    fix for the 1-split local parquet, which a real multi-split scan
+    wouldn't need."""
+    f = plan_facts(REGISTRY["embedding_quantize_int8"].builder(spark, SF))
+    assert f.python_evals == 0
+    assert "Join" not in f.text
+    assert "hashpartitioning" not in f.text, f.text
+
+
 def test_sql_frontend_subquery_decorrelates(spark):
     """The ad-hoc subquery parity text must plan as decorrelated key
     joins — IN → LeftSemi, NOT EXISTS → LeftAnti, the scalar subquery

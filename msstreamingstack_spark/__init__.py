@@ -12,8 +12,7 @@ idiomatic PySpark 3.5+/4.x DataFrame engine:
 - one streaming query with ``foreachBatch`` fan-out instead of five
   concurrent queries re-reading the source
 - extension operators for large-scale training-data pipelines
-  (minhash-LSH near-duplicates, exact embedding math, multimodal
-  plumbing)
+  (exact embedding math)
 
 Layout:
     session.py    — SparkSession factory tuned for the harness
@@ -21,8 +20,8 @@ Layout:
     schemas.py    — declared StructTypes (clickstream/state/output + testdata)
     sources/      — table loaders, event generator, Python data sources
     sinks/        — console/parquet/memory foreachBatch sinks; external stubs
-    functions/    — expression library (scalar derivations, text, vectors)
-    operators/    — batch operators (sessionize, state, dedup, asof…)
+    functions/    — expression library (scalar derivations, hashing, sketches)
+    operators/    — batch operators (sessionize, state, asof…)
     plans/        — plan-inspection helpers (pushdown/broadcast assertions)
     streaming/    — stateful streaming pipeline (T1-T4 of SURVEY.md §2.6)
     queries.py    — named query registry driving __spark_entry__.py

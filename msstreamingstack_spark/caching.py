@@ -14,9 +14,9 @@ persisted on the previous invocation. The session then holds at most
 ONE live cache entry per slot — re-running a query replaces its cache
 instead of stacking a new one — while the plan-reuse benefit within a
 single invocation (the reason these sites persist at all: the
-`doc_shingle_hashes` docstring in operators/dedup.py gives the
-shingle table's case, read several times per action by the LSH
-kernel) is untouched.
+`copurchase_edges` docstring in operators/pagerank.py gives the edge
+table's case, whose join would otherwise run four times inside one
+plan) is untouched.
 
 Slot names are per call site, never shared across different subtrees:
 two distinct sites must not evict each other mid-plan (e.g. a composed
@@ -58,10 +58,10 @@ def rotating_persist(
     returning. Use it where the persisted frame feeds MULTIPLE
     broadcast subtrees: broadcast builds run concurrently on the
     driver's broadcast threads and race to populate a lazy cache,
-    re-executing the fold per build — the round 10 contention A/B
-    measured the single-shot cost of lang_shingle_overlap at 12.4 s
-    lazy vs 3.9 s eager under load,
-    against a ~0.3 s steady-state premium for the extra pass."""
+    re-executing the fold per build (segment_overlap_theta's two
+    slots are the case). A contention A/B measured one such query at
+    12.4 s lazy vs 3.9 s eager under load, against a ~0.3 s
+    steady-state premium for the extra pass."""
     spark = df.sparkSession
     with _LOCK:
         slots = _SLOTS.setdefault(spark, {})

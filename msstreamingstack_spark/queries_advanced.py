@@ -1,10 +1,9 @@
 """Advanced operator coverage: as-of / range joins, exact percentiles,
-approximate aggregates, additional TPC-H shapes, and the multimodal
-plumbing surface — registered into the same queries()/oracle_sql()
-driver contract as everything else.
+approximate aggregates and additional TPC-H shapes — registered into
+the same queries()/oracle_sql() driver contract as everything else.
 
-The as-of join and multimodal entries cover operators the reference
-engine lacks outright (SURVEY.md §2.4-2.5 "ABSENT" sections); the
+The as-of join entries cover operators the reference engine lacks
+outright (SURVEY.md §2.4-2.5 "ABSENT" sections); the
 TPC-H shapes widen the relational surface the judge checks against
 SURVEY.md §2. Scale notes live on each operator's docstring.
 """
@@ -14,7 +13,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from msstreamingstack_spark.extensions.multimodal import extract_features
 from msstreamingstack_spark.functions.text import hash48_sql
 from msstreamingstack_spark.operators.asof import asof_join
 from msstreamingstack_spark.queries import (
@@ -701,149 +699,6 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Multimodal surface (binary payload + typed metadata)
-# ---------------------------------------------------------------------------
-# Deterministic media derivation over `documents`: payload = utf-8
-# bytes of text (a stand-in binary column — real deployments read
-# actual media bytes), kind cycles by doc_id, typed metadata per kind.
-MEDIA_FROM_DOCS_SQL = """
-SELECT doc_id AS media_id,
-       CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-            ELSE 'video' END AS kind,
-       encode(text) AS payload,
-       CASE doc_id % 3 WHEN 0 THEN 'image/png' WHEN 1 THEN 'audio/wav'
-            ELSE 'video/mp4' END AS mime,
-       CASE WHEN doc_id % 3 = 0 THEN CAST(64 + doc_id % 8 AS INTEGER) END AS width,
-       CASE WHEN doc_id % 3 = 0 THEN CAST(48 + doc_id % 8 AS INTEGER) END AS height,
-       CASE WHEN doc_id % 3 <> 0
-            THEN CAST(3000 + (doc_id % 100) * 10 AS BIGINT) END AS duration_ms
-FROM documents
-"""
-
-
-def media_from_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spread(load_table(spark, sf_dir, "documents"))
-    kind = (
-        F.when(F.col("doc_id") % 3 == 0, F.lit("image"))
-        .when(F.col("doc_id") % 3 == 1, F.lit("audio"))
-        .otherwise(F.lit("video"))
-    )
-    mime = (
-        F.when(F.col("doc_id") % 3 == 0, F.lit("image/png"))
-        .when(F.col("doc_id") % 3 == 1, F.lit("audio/wav"))
-        .otherwise(F.lit("video/mp4"))
-    )
-    is_img = F.col("doc_id") % 3 == 0
-    return d.select(
-        F.col("doc_id").alias("media_id"),
-        kind.alias("kind"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
-        mime.alias("mime"),
-        F.when(is_img, (64 + F.col("doc_id") % 8).cast("int")).alias("width"),
-        F.when(is_img, (48 + F.col("doc_id") % 8).cast("int")).alias("height"),
-        F.when(~is_img, (3000 + (F.col("doc_id") % 100) * 10).cast("long")).alias(
-            "duration_ms"
-        ),
-    )
-
-
-@register(
-    "multimodal_stats",
-    f"""
-WITH media AS ({MEDIA_FROM_DOCS_SQL})
-SELECT kind, COUNT(*) AS n,
-       CAST(SUM(octet_length(payload)) AS BIGINT) AS total_bytes,
-       COALESCE(MAX(width), -1) AS max_width,
-       COALESCE(MAX(height), -1) AS max_height
-FROM media GROUP BY kind
-""",
-    tags=("extension", "multimodal", "agg"),
-    doc="Typed-metadata rollup over a binary media column — the "
-    "metadata side of the multimodal surface is plain columnar agg; "
-    "payload bytes never leave the JVM.",
-)
-def q_multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = media_from_docs(spark, sf_dir)
-    return m.groupBy("kind").agg(
-        F.count("*").alias("n"),
-        F.sum(F.length(F.col("payload"))).alias("total_bytes"),
-        F.coalesce(F.max("width"), F.lit(-1)).alias("max_width"),
-        F.coalesce(F.max("height"), F.lit(-1)).alias("max_height"),
-    )
-
-
-@register(
-    "multimodal_frame_sample",
-    f"""
-WITH media AS ({MEDIA_FROM_DOCS_SQL})
-SELECT media_id, mime,
-       unnest(range(0, greatest(duration_ms, 1), 1000)) AS frame_ts_ms
-FROM media WHERE kind = 'video'
-""",
-    tags=("extension", "multimodal", "explode"),
-    doc="Video frame-sampling plumbing: JVM-side sequence explode to "
-    "one row per sampled timestamp (1 Hz); the per-frame decode that "
-    "follows is the stubbed Python stage (extensions/multimodal.py).",
-)
-def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.extensions.multimodal import sample_frames
-
-    return sample_frames(media_from_docs(spark, sf_dir), every_ms=1000)
-
-
-@register(
-    "multimodal_features",
-    f"""
-WITH media AS ({MEDIA_FROM_DOCS_SQL}),
-hexed AS (
-  SELECT media_id, kind,
-         CAST(octet_length(payload) AS BIGINT) AS n_bytes,
-         hex(payload) AS h
-  FROM media
-)
-SELECT media_id, kind, n_bytes,
-       array_to_string(
-         list_transform(range(0, 16), i -> CAST(CAST(
-           COALESCE(list_sum(list_transform(
-             range(CAST(i AS INTEGER), CAST(n_bytes AS INTEGER), 16),
-             j -> 16 * (strpos('0123456789ABCDEF',
-                               substr(h, CAST(j * 2 + 1 AS INTEGER), 1)) - 1)
-                    + (strpos('0123456789ABCDEF',
-                              substr(h, CAST(j * 2 + 2 AS INTEGER), 1)) - 1)
-           )), 0) % 997 AS INTEGER) AS VARCHAR)),
-         '|') AS feature_sig
-FROM hexed
-""",
-    tags=("extension", "multimodal", "mapInPandas"),
-    doc="Arrow-batched mapInPandas feature extraction over binary "
-    "payloads (deterministic stub decoder — the container has no "
-    "media libs; see extensions/multimodal.py for the injection "
-    "point). Schema/partitioning/batch plumbing is the real thing. "
-    "Fully oracled: the stub feature is (sum of payload[i::16]) % 997 "
-    "/ 997.0 per dim, so the query re-quantizes each float32 to its "
-    "exact integer code round(x*997) — recoverable losslessly because "
-    "|float32(k/997)*997 - k| < 6e-5 for k in [0,997) — and the DuckDB "
-    "twin reproduces the codes via hex-pair byte extraction. Codes are "
-    "emitted as one '|'-joined string (arrays have no externally-"
-    "verified normalization precedent in the driver compare). The "
-    "Python decode stage stays on the hot path; only the comparison "
-    "surface changes.",
-)
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats = extract_features(media_from_docs(spark, sf_dir))
-    code = F.transform(
-        F.col("feature"),
-        lambda x: F.round(x.cast("double") * 997).cast("int").cast("string"),
-    )
-    return feats.select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        F.concat_ws("|", code).alias("feature_sig"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Skew mitigation (salting) — result-identical to unsalted forms,
 # so the oracle is the PLAIN SQL equivalent
 # ---------------------------------------------------------------------------
@@ -1029,34 +884,8 @@ def q_correlated_max(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# UDTF + pandas-UDAF surface (reference has neither — §2.7)
+# pandas-UDAF surface (the reference has none — §2.7)
 # ---------------------------------------------------------------------------
-@register(
-    "chunk_documents_udtf",
-    None,  # oracle attached below via chunk_documents_sql at import
-    tags=("extension", "udtf", "chunking"),
-    doc="Python UDTF (TokenChunker) in a LATERAL join: fixed 32-token "
-    "context-window chunking of documents — one doc fans out to "
-    "ceil(n/32) chunk rows, Arrow-batched, partition-local. Oracle is "
-    "the slice+unnest SQL twin.",
-)
-def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.functions.udtf_chunking import chunk_documents
-
-    return chunk_documents(spread(load_table(spark, sf_dir, "documents")))
-
-
-# attach the oracle (computed lazily to keep the import graph clean)
-def _attach_chunk_oracle() -> None:
-    from msstreamingstack_spark.functions.udtf_chunking import chunk_documents_sql
-    from msstreamingstack_spark.queries import REGISTRY
-
-    REGISTRY["chunk_documents_udtf"].oracle = chunk_documents_sql()
-
-
-_attach_chunk_oracle()
-
-
 @register(
     "pandas_udaf_value_moments",
     """
@@ -1632,38 +1461,6 @@ def q_hof_array_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         n_pos.alias("n_positive"),
         comp_sum.alias("comp_sum"),
-    )
-
-
-@register(
-    "wordcount_frequent",
-    """
-SELECT word, COUNT(*) AS cnt
-FROM (
-  SELECT u.word AS word
-  FROM documents d, UNNEST(string_split(d.text, ' ')) AS u(word)
-)
-WHERE word <> ''
-GROUP BY word
-HAVING COUNT(*) >= 50
-""",
-    tags=("extension", "lateral", "text"),
-    doc="The canonical lateral-view wordcount: split+explode over the "
-    "corpus, frequency filter instead of top-k LIMIT so the result "
-    "set is deterministic under ties. Split and explode are map-side; "
-    "the single shuffle is the word agg — partial (map-side combine) "
-    "counts make the shuffle O(distinct words), not O(tokens), which "
-    "is what keeps this viable on a 100 TB corpus.",
-)
-def q_wordcount_frequent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("text")
-    words = docs.select(
-        F.explode(F.split(F.col("text"), " ")).alias("word")
-    ).filter(F.col("word") != "")
-    return (
-        words.groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") >= 50)
     )
 
 

@@ -1,7 +1,7 @@
 """Event-analytics operator family: cohort retention, funnels,
 SCD2 run-length histories (gaps-and-islands), rolling anomaly
-detection, exact heavy hitters, temperature-based corpus mixing,
-LTV deciles, and fixed-bin histograms.
+detection, exact heavy hitters, LTV deciles, and fixed-bin
+histograms.
 
 These are the classic "product analytics over a clickstream" shapes a
 user of the reference stack computes downstream of its enrichment
@@ -15,7 +15,7 @@ DOUBLE, total tie-break orders under every window/ntile.
 Scale notes (100 TB) are on each docstring; the common theme is that
 all heavy shuffles key on `user_id` (high cardinality, salting twin
 available via salted_agg_user_values) and every global scalar
-(corpus totals) moves via a broadcast one-row join, never a
+(event totals) moves via a broadcast one-row join, never a
 single-partition window over the full relation.
 """
 
@@ -375,65 +375,6 @@ def q_heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Temperature-based source mixing — alpha=0.5 resampling weights
-# (sqrt is correctly-rounded IEEE on both engines; pow is not, so the
-# temperature is fixed at 0.5 rather than a free parameter here).
-# ---------------------------------------------------------------------------
-@register(
-    "mix_temperature_sources",
-    """
-WITH c AS (SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source),
-w AS (SELECT source, n_docs,
-             CAST(sqrt(CAST(n_docs AS DOUBLE)) AS DECIMAL(18,9)) AS w_dec
-      FROM c),
-t AS (SELECT CAST(SUM(w_dec) AS DECIMAL(38,9)) AS tot_w,
-             CAST(SUM(n_docs) AS BIGINT) AS total_docs FROM w)
-SELECT w.source, w.n_docs,
-       CAST(w.w_dec AS DOUBLE) AS weight,
-       CAST(w.w_dec AS DOUBLE) / CAST(t.tot_w AS DOUBLE) AS share,
-       CAST(FLOOR((CAST(w.w_dec AS DOUBLE) / CAST(t.tot_w AS DOUBLE))
-                  * (CAST(t.total_docs AS DOUBLE) * 0.5)) AS BIGINT)
-         AS budget_docs
-FROM w, t
-""",
-    tags=("analytics", "pipeline", "sampling"),
-    doc="Temperature-based corpus mixing (alpha=0.5, UnifiedQA / "
-    "multilingual-sampling style): per-source weight n^alpha, "
-    "normalized to shares, then a doc budget at half the corpus "
-    "size. Weights round-trip through DECIMAL(18,9) so the "
-    "cross-source normalizing sum is exact and order-free; the "
-    "normalizer moves as a broadcast one-row join. The rates are "
-    "DERIVED from corpus statistics, not set per source: the "
-    "down-sample-the-head / up-weight-the-tail step of a "
-    "pretraining mixture. alpha is pinned to 0.5 because sqrt is "
-    "correctly-rounded IEEE 754 on both engines while pow() may "
-    "differ by ULPs between libm implementations.",
-)
-def q_mix_temperature_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    c = docs.groupBy("source").agg(F.count("*").alias("n_docs"))
-    w = c.select(
-        "source",
-        "n_docs",
-        F.sqrt(F.col("n_docs").cast("double")).cast("decimal(18,9)").alias("w_dec"),
-    )
-    t = w.agg(
-        F.sum("w_dec").cast("decimal(38,9)").alias("tot_w"),
-        F.sum("n_docs").cast("long").alias("total_docs"),
-    )
-    share = F.col("w_dec").cast("double") / F.col("tot_w").cast("double")
-    return w.crossJoin(F.broadcast(t)).select(
-        "source",
-        "n_docs",
-        F.col("w_dec").cast("double").alias("weight"),
-        share.alias("share"),
-        F.floor(share * (F.col("total_docs").cast("double") * 0.5))
-        .cast("long")
-        .alias("budget_docs"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Mergeable HLL sketch rollup — build per-(type, day) DataSketches
 # HLL sketches, union them to per-type distinct-user counts.
 # ---------------------------------------------------------------------------
@@ -537,133 +478,6 @@ def q_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("avg_ltv"),
         F.min("ltv").alias("min_ltv"),
         F.max("ltv").alias("max_ltv"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Inverted index over mid-frequency terms — postings materialized
-# only inside a df band, so no posting list can exceed the band cap.
-# ---------------------------------------------------------------------------
-_POSTINGS_K = 50
-
-
-@register(
-    "inverted_index_sampled",
-    f"""
-WITH tok AS (
-  SELECT DISTINCT doc_id, term FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-  )
-),
-df AS (SELECT term, COUNT(*) AS df_docs FROM tok GROUP BY term),
-r AS (
-  SELECT term, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY term ORDER BY doc_id) AS rn
-  FROM tok
-)
-SELECT d.term, d.df_docs,
-       array_to_string(array_agg(r.doc_id ORDER BY r.doc_id), ',')
-         AS postings_sample
-FROM r JOIN df d USING (term)
-WHERE r.rn <= {_POSTINGS_K}
-GROUP BY d.term, d.df_docs
-""",
-    tags=("analytics", "text", "index"),
-    doc="Inverted index with bounded posting samples: tokenize + "
-    "distinct, exact per-term document frequency, and the K "
-    "smallest doc_ids per term as a deterministic posting sample. "
-    "The row_number cap applies BEFORE any collect, so per-term "
-    "state is O(K) no matter how hot the term — a stopword at "
-    "100 TB contributes K rows, not a corpus-sized collect_list. "
-    "df agg, rank window, and postings agg all key on term, so the "
-    "three stages share one term-hash shuffle lineage. Postings "
-    "serialize as a sorted comma-joined string so both engines "
-    "hash identically.",
-)
-def q_inverted_index_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tok = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
-    ).distinct()
-    dfc = tok.groupBy("term").agg(F.count("*").alias("df_docs"))
-    ranked = tok.withColumn(
-        "rn",
-        F.row_number().over(Window.partitionBy("term").orderBy("doc_id")),
-    ).filter(F.col("rn") <= _POSTINGS_K)
-    post = ranked.groupBy("term").agg(
-        F.array_join(F.sort_array(F.collect_list("doc_id")), ",").alias(
-            "postings_sample"
-        )
-    )
-    return dfc.join(post, "term").select("term", "df_docs", "postings_sample")
-
-
-# ---------------------------------------------------------------------------
-# Corpus duplication rate — per-source share of documents with at
-# least one verified near-duplicate (the corpus-health metric behind
-# "how much of source X survives dedup").
-# ---------------------------------------------------------------------------
-def _dup_rate_sql() -> str:
-    from msstreamingstack_spark.operators.dedup import minhash_lsh_sql
-
-    return f"""
-WITH p AS (SELECT * FROM ({minhash_lsh_sql(0.8)}) q),
-dup AS (
-  SELECT DISTINCT doc_id FROM (
-    SELECT d1 AS doc_id FROM p UNION ALL SELECT d2 AS doc_id FROM p
-  )
-)
-SELECT d.source,
-       COUNT(*) AS n_docs,
-       COUNT(dup.doc_id) AS n_dup,
-       CAST(COUNT(dup.doc_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-         AS dup_rate
-FROM documents d LEFT JOIN dup ON d.doc_id = dup.doc_id
-GROUP BY d.source
-"""
-
-
-@register(
-    "corpus_duplication_rate",
-    _dup_rate_sql(),
-    tags=("analytics", "dedup", "pipeline"),
-    doc="Per-source duplication rate: fraction of documents with >=1 "
-    "verified near-duplicate (MinHash+LSH candidates, exact jaccard "
-    ">= 0.8 from operators/dedup.py's banded pair generator, so no "
-    "all-pairs scan enters anywhere). The metric behind "
-    "per-source dedup budgeting in a pretraining mixture: a source "
-    "with dup_rate 0.6 contributes 40%% of its nominal tokens. One "
-    "extra doc_id-keyed join + a small source agg on top of the "
-    "pair pipeline; the dup-id set is bounded by |docs|.",
-)
-def q_corpus_duplication_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.dedup import minhash_lsh_pairs
-    from msstreamingstack_spark.sources.tables import spread
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    pairs = minhash_lsh_pairs(docs, 0.8)
-    # explode, not union-of-two-selects: a union references the pair
-    # subtree twice and the whole LSH kernel (signatures, bucket join,
-    # jaccard verify) would EXECUTE twice — explode emits both ids in
-    # one pass over one kernel run (measured ~2x on this query)
-    dup_ids = (
-        pairs.select(
-            F.explode(F.array(F.col("d1"), F.col("d2"))).alias("doc_id")
-        )
-        .distinct()
-        .withColumn("is_dup", F.lit(1))
-    )
-    return (
-        docs.select("doc_id", "source")
-        .join(dup_ids, "doc_id", "left")
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.count("is_dup").alias("n_dup"),
-            (
-                F.count("is_dup").cast("double") / F.count("*").cast("double")
-            ).alias("dup_rate"),
-        )
     )
 
 
@@ -781,106 +595,6 @@ def q_histogram_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
             "min_value",
             "max_value",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Cross-lingual shingle-overlap matrix — corpus-health metric for
-# language labeling: shared shingles between language buckets expose
-# mislabeled documents and cross-lingual boilerplate (a high overlap
-# coefficient between "en" and "de" usually means one of them isn't).
-# ---------------------------------------------------------------------------
-def _lang_overlap_sql() -> str:
-    from msstreamingstack_spark.operators.dedup import doc_shingle_hashes_sql
-
-    return f"""
-WITH sh AS ({doc_shingle_hashes_sql()}),
-lh AS (
-  SELECT DISTINCT d.lang, sh.h
-  FROM sh JOIN documents d ON d.doc_id = sh.doc_id
-),
-tot AS (SELECT lang, COUNT(*) AS n FROM lh GROUP BY lang),
-shared AS (
-  SELECT a.lang AS lang_a, b.lang AS lang_b, COUNT(*) AS n_shared
-  FROM lh a JOIN lh b ON a.h = b.h AND a.lang < b.lang
-  GROUP BY 1, 2
-)
-SELECT s.lang_a, s.lang_b, s.n_shared,
-       ta.n AS n_a, tb.n AS n_b,
-       CAST(s.n_shared AS DOUBLE)
-         / CAST(CASE WHEN ta.n < tb.n THEN ta.n ELSE tb.n END AS DOUBLE)
-         AS overlap_coef
-FROM shared s
-JOIN tot ta ON ta.lang = s.lang_a
-JOIN tot tb ON tb.lang = s.lang_b
-"""
-
-
-@register(
-    "lang_shingle_overlap",
-    _lang_overlap_sql(),
-    tags=("analytics", "text", "dedup", "pipeline"),
-    doc="Cross-lingual shingle-overlap matrix: for every language "
-    "pair, the count of shared distinct shingle hashes and the "
-    "overlap coefficient |A∩B| / min(|A|,|B|). The corpus-health "
-    "signal behind language-label QA — overlap far above baseline "
-    "flags mislabeling or cross-lingual boilerplate. Plan: the "
-    "(lang, h) universe is ONE distinct over the persisted shingle "
-    "table joined to the doc lang (the shuffle), then a self-join on "
-    "h whose output is bounded by vocabulary overlap, never by "
-    "document count — the matrix itself is |langs|² rows. Counts "
-    "only, so the oracle compare is integer-exact (the coefficient "
-    "is one exactly-rounded IEEE division of two ints on both "
-    "engines).",
-)
-def q_lang_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.operators.dedup import doc_shingle_hashes
-    from msstreamingstack_spark.sources.tables import spread
-
-    from msstreamingstack_spark.caching import rotating_persist
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    sh = doc_shingle_hashes(docs, slot="lang_shingle_overlap.sh")
-    # (lang, h) is referenced THREE times (totals + both self-join
-    # sides); persist it or the lang-join + distinct re-executes per
-    # reference. The cached relation is vocabulary-bounded (distinct
-    # hashes per language), far smaller than the corpus. Slot-rotated:
-    # one live cache entry across repeat invocations.
-    # eager: lh feeds the self-join sides AND two broadcast totals;
-    # lazy population races per broadcast build (round 10 A/B: 12.4 s
-    # lazy vs 3.9 s eager single-shot under load)
-    lh = rotating_persist(
-        sh.join(docs.select("doc_id", "lang"), "doc_id")
-        .select("lang", "h")
-        .distinct(),
-        "lang_shingle_overlap.lh",
-        eager=True,
-    )
-    tot = lh.groupBy("lang").agg(F.count("*").alias("n"))
-    a = lh.select(F.col("lang").alias("lang_a"), "h")
-    b = lh.select(F.col("lang").alias("lang_b"), "h")
-    shared = (
-        a.join(b.hint("shuffle_hash"), "h")
-        .filter(F.col("lang_a") < F.col("lang_b"))
-        .groupBy("lang_a", "lang_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    return (
-        shared.join(
-            F.broadcast(tot.select(F.col("lang").alias("lang_a"), F.col("n").alias("n_a"))),
-            "lang_a",
-        )
-        .join(
-            F.broadcast(tot.select(F.col("lang").alias("lang_b"), F.col("n").alias("n_b"))),
-            "lang_b",
-        )
-        .select(
-            "lang_a", "lang_b", "n_shared", "n_a", "n_b",
-            (
-                F.col("n_shared").cast("double")
-                / F.least("n_a", "n_b").cast("double")
-            ).alias("overlap_coef"),
         )
     )
 
@@ -1423,85 +1137,6 @@ def q_anomaly_mad_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(flagged).cast("double") / F.count("*"), 9
             ).alias("outlier_rate"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Epoch-capped corpus mixing — uniform per-source token targets with a
-# maximum-repetition cap (the LLaMA-style "up to N epochs of the small
-# sources" mixture plan).
-# ---------------------------------------------------------------------------
-MIX_MAX_EPOCHS = 4
-
-from msstreamingstack_spark.functions.text import token_count_sql  # noqa: E402
-
-
-@register(
-    "mix_epochs_budget",
-    f"""
-WITH toks AS (
-  SELECT source, {token_count_sql('text')} AS n_tokens FROM documents
-),
-c AS (
-  SELECT source, COUNT(*) AS n_docs,
-         CAST(SUM(n_tokens) AS BIGINT) AS avail_tokens
-  FROM toks GROUP BY source
-),
-t AS (
-  SELECT CAST(SUM(avail_tokens) AS BIGINT) AS total_tokens,
-         COUNT(*) AS n_sources
-  FROM c
-)
-SELECT c.source, c.n_docs, c.avail_tokens,
-       t.total_tokens // (2 * t.n_sources) AS target_tokens,
-       LEAST(t.total_tokens // (2 * t.n_sources),
-             c.avail_tokens * {MIX_MAX_EPOCHS}) AS planned_tokens,
-       (LEAST(t.total_tokens // (2 * t.n_sources),
-              c.avail_tokens * {MIX_MAX_EPOCHS}) * 100) // c.avail_tokens
-         AS epochs_pct
-FROM c, t
-""",
-    tags=("analytics", "pipeline", "sampling"),
-    doc=f"Epoch-capped mixture plan: each source gets a UNIFORM token "
-    "target (half the corpus split evenly across sources — the "
-    "rebalancing complement to mix_temperature_sources' "
-    "frequency-derived weights), but a small source may be repeated "
-    f"at most {MIX_MAX_EPOCHS} epochs (planned = min(target, "
-    f"avail x {MIX_MAX_EPOCHS})) — the standard guard against "
-    "memorizing a tiny source by oversampling it without bound. "
-    "epochs_pct is the planned repetition rate in integer percent "
-    "(400 = the cap, <100 = down-sampled head source). ALL "
-    "arithmetic is integer (div, LEAST, x100) so the plan is exact "
-    "on both engines; the corpus totals move as a broadcast one-row "
-    "join. One shuffle on source; the token count folds into the "
-    "scan.",
-)
-def q_mix_epochs_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.functions.text import token_count
-
-    d = load_table(spark, sf_dir, "documents")
-    c = d.select(
-        "source", token_count(F.col("text")).alias("n_tokens")
-    ).groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("avail_tokens"),
-    )
-    t = c.agg(
-        F.sum("avail_tokens").cast("long").alias("total_tokens"),
-        F.count("*").alias("n_sources"),
-    )
-    target = F.expr("total_tokens div (2 * n_sources)")
-    planned = F.least(target, F.col("avail_tokens") * MIX_MAX_EPOCHS)
-    return c.crossJoin(F.broadcast(t)).select(
-        "source",
-        "n_docs",
-        "avail_tokens",
-        target.alias("target_tokens"),
-        planned.alias("planned_tokens"),
-        F.expr(
-            f"least(total_tokens div (2 * n_sources), "
-            f"avail_tokens * {MIX_MAX_EPOCHS}) * 100 div avail_tokens"
-        ).alias("epochs_pct"),
     )
 
 
@@ -2668,103 +2303,6 @@ def q_segment_overlap_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "exact_overlap"
             ),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Deterministic weighted sampling — Efraimidis–Spirakis-style weighted
-# bottom-k, made hash-exact by integer TICKETS instead of u^(1/w)
-# floats (whose libm last bits differ across engines).
-# ---------------------------------------------------------------------------
-WS_K = 25  # sample size per language stratum
-WS_MAX_TIER = 4
-
-
-@register(
-    "sample_weighted_tickets",
-    f"""
-WITH d AS (
-  SELECT doc_id, lang,
-         1 + LEAST({WS_MAX_TIER - 1}, n_chars // 150) AS weight
-  FROM documents
-),
-t AS (
-  SELECT doc_id, lang, weight,
-         unnest(generate_series(1, weight)) AS tick
-  FROM d
-),
-k AS (
-  SELECT doc_id, lang, weight,
-         MIN({hash48_sql(
-             "CAST(doc_id AS VARCHAR) || ':' || CAST(tick AS VARCHAR)"
-         )}) AS min_ticket
-  FROM t GROUP BY 1, 2, 3
-),
-r AS (
-  SELECT doc_id, lang, weight, min_ticket,
-         ROW_NUMBER() OVER (PARTITION BY lang
-                            ORDER BY min_ticket, doc_id) AS rn
-  FROM k
-)
-SELECT lang, doc_id, weight, min_ticket, rn
-FROM r WHERE rn <= {WS_K}
-""",
-    tags=("extension", "pipeline", "sampling", "weighted"),
-    doc="Weighted sampling without replacement, per language stratum: "
-    "each doc gets an integer weight tier (1-4 by length), draws one "
-    "pinned-hash TICKET per weight unit (hash48(doc_id:ticket)), and "
-    "its key is the MIN ticket; the bottom-K keys per stratum are the "
-    "sample. P(selected) rises with weight exactly as in "
-    "Efraimidis-Spirakis u^(1/w) sampling (min of w iid uniforms), "
-    "but the u^(1/w) float key needs pow/log whose LAST BITS differ "
-    "across libm implementations — the integer-ticket form is the "
-    "hash-exact equivalent for integer weights, bit-stable on any "
-    "engine. 100 TB: the ticket explode is a bounded x4 fan-out, MIN "
-    "is map-combined into one (doc) shuffle, and the per-stratum "
-    "bottom-K is a rank over survivors, in the total order "
-    "(min_ticket, doc_id). Deterministic re-runs make the sample "
-    "reproducible across pipeline versions — the property data-mixing recipes "
-    "need from a sampler. Extension (SURVEY.md SS2.5: reference has "
-    "no sampling surface).",
-)
-def q_sample_weighted_tickets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.functions.text import hash48
-
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        (
-            F.lit(1)
-            + F.least(
-                F.lit(WS_MAX_TIER - 1), F.expr("n_chars div 150")
-            )
-        ).alias("weight"),
-    )
-    t = d.select(
-        "doc_id",
-        "lang",
-        "weight",
-        F.explode(F.sequence(F.lit(1), F.col("weight"))).alias("tick"),
-    )
-    k = (
-        t.withColumn(
-            "min_ticket",
-            hash48(
-                F.concat_ws(
-                    ":",
-                    F.col("doc_id").cast("string"),
-                    F.col("tick").cast("string"),
-                )
-            ),
-        )
-        .groupBy("doc_id", "lang", "weight")
-        .agg(F.min("min_ticket").alias("min_ticket"))
-    )
-    wS = Window.partitionBy("lang").orderBy("min_ticket", "doc_id")
-    return (
-        k.withColumn("rn", F.row_number().over(wS))
-        .filter(F.col("rn") <= WS_K)
-        .select("lang", "doc_id", "weight", "min_ticket", "rn")
     )
 
 

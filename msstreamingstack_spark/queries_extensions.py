@@ -1,7 +1,6 @@
-"""Extension queries over the driver's ``embeddings`` and ``documents``
-tables: exact embedding statistics, int8 quantization, hard-negative
-and label-outlier mining, and BM25 retrieval. Every query here is
-exact and SQL-oracle-checked.
+"""Extension queries over the driver's ``embeddings`` table: exact
+embedding statistics, int8 quantization, and hard-negative and
+label-outlier mining. Every query here is exact and SQL-oracle-checked.
 """
 
 from __future__ import annotations
@@ -137,121 +136,6 @@ def q_mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 5)
         .select("query_id", "query_label", "negative_id", "cos", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Retrieval scoring (BM25) — the ranking function a data-curation /
-# RAG pipeline runs over the corpus it just cleaned and deduped.
-# ---------------------------------------------------------------------------
-# Fixed query-term set mixing common terms ('stream' df≈888-doc-scale,
-# 'window') with a rare one ('dup', df≈26 at sf0.01) so the idf
-# weighting is actually exercised, not a constant factor.
-BM25_TERMS = ("stream", "window", "dup")
-BM25_K1 = 1.2
-BM25_B = 0.75
-
-
-@register(
-    "retrieval_bm25_topk",
-    f"""
-WITH words AS (
-  SELECT d.doc_id, u.word
-  FROM documents d, UNNEST(string_split(d.text, ' ')) AS u(word)
-  WHERE u.word <> ''
-), wc AS (
-  SELECT doc_id, word, COUNT(*) AS tf FROM words GROUP BY doc_id, word
-), dl AS (
-  SELECT doc_id, SUM(tf) AS dl FROM wc GROUP BY doc_id
-), stats AS (
-  SELECT COUNT(*) AS n_docs,
-         CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
-  FROM dl
-), tf AS (
-  SELECT doc_id, word, tf FROM wc
-  WHERE word IN {BM25_TERMS!r}
-), idf AS (
-  SELECT word, COUNT(*) AS df FROM tf GROUP BY word
-)
-SELECT t.doc_id,
-       CAST(SUM(CAST(round(
-         ln((s.n_docs - f.df + 0.5) / (f.df + 0.5) + 1.0)
-         * (t.tf * {BM25_K1 + 1.0})
-         / (t.tf + {BM25_K1} * (1.0 - {BM25_B} + {BM25_B} * l.dl / s.avgdl)),
-         9) AS DECIMAL(28,9))) AS DOUBLE) AS bm25,
-       COUNT(*) AS n_terms_matched
-FROM tf t
-JOIN idf f USING (word)
-JOIN dl l USING (doc_id)
-CROSS JOIN stats s
-GROUP BY t.doc_id
-ORDER BY bm25 DESC, t.doc_id ASC
-LIMIT 20
-""",
-    tags=("extension", "text", "retrieval", "topk"),
-    doc="BM25 top-k document retrieval for a fixed query-term set "
-    "(Robertson/Sparck-Jones idf, k1=1.2 b=0.75). The corpus-sized "
-    "inputs never shuffle: per-doc length dl is a PER-ROW projection "
-    "(count of non-empty split tokens == the tf-table row sum the "
-    "oracle states, exactly — docs with zero words drop from dl/stats "
-    "in both forms), and the query-term tf fold filters to the "
-    "|terms| matching occurrences BEFORE its only exchange. The "
-    "3-row df table and the (n_docs, avgdl) scalar are broadcast. "
-    "Per-term scores round to 9 decimals then sum in DECIMAL so the "
-    "fold is order-free vs the oracle; top-20 is tie-broken by "
-    "doc_id. At 100 TB nothing vocabulary- or token-sized crosses an "
-    "exchange — only query-term postings do.",
-)
-def q_retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dl = docs.select(
-        "doc_id",
-        F.expr("size(filter(split(text, ' '), w -> w != ''))")
-        .cast("long")
-        .alias("dl"),
-    ).filter(F.col("dl") > 0)
-    stats = dl.agg(
-        F.count("*").alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-    )
-    words = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
-    )
-    tf = (
-        words.filter(F.col("word").isin(*BM25_TERMS))
-        .groupBy("doc_id", "word")
-        .agg(F.count("*").alias("tf"))
-    )
-    idf_df = tf.groupBy("word").agg(F.count("*").alias("df"))
-    scored = (
-        tf.join(F.broadcast(idf_df), "word")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-    )
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    )
-    term_score = F.round(
-        idf
-        * (F.col("tf") * F.lit(BM25_K1 + 1.0))
-        / (
-            F.col("tf")
-            + F.lit(BM25_K1)
-            * (
-                F.lit(1.0 - BM25_B)
-                + F.lit(BM25_B) * F.col("dl") / F.col("avgdl")
-            )
-        ),
-        9,
-    ).cast("decimal(28,9)")
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.sum(term_score).cast("double").alias("bm25"),
-            F.count("*").alias("n_terms_matched"),
-        )
-        .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-        .limit(20)
     )
 
 

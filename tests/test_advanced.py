@@ -1,18 +1,10 @@
 """Unit tests for the advanced operator wave: as-of join semantics,
-approximate-aggregate accuracy bounds, range-join banding, and the
-multimodal plumbing (deterministic stub decode, frame sampling)."""
+approximate-aggregate accuracy bounds and range-join banding."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from msstreamingstack_spark.extensions.multimodal import (
-    FEATURE_DIM,
-    extract_features,
-    fake_decode_image,
-    sample_frames,
-    synthetic_media,
-)
 from msstreamingstack_spark.operators.asof import asof_join
 from msstreamingstack_spark.queries import REGISTRY
 
@@ -118,36 +110,6 @@ def test_range_join_bands_partition_all_orders(spark, sf_correctness):
     total = sum(r.n_orders for r in res)
     assert total == load_table(spark, sf_correctness, "orders").count()
     assert len(res) <= 5 and len({r.band for r in res}) == len(res)
-
-
-def test_fake_decode_deterministic_and_fixed_width():
-    payload = bytes(range(100))
-    f1, f2 = fake_decode_image(payload), fake_decode_image(payload)
-    assert f1 == f2 and len(f1) == FEATURE_DIM
-    assert fake_decode_image(None) == [0.0] * FEATURE_DIM
-    assert all(0.0 <= v <= 1.0 for v in f1)
-
-
-def test_multimodal_features_plumbing(spark):
-    media = synthetic_media(spark, n=30)
-    feats = extract_features(media).collect()
-    assert len(feats) == 30
-    for r in feats:
-        assert len(r.feature) == FEATURE_DIM
-        assert r.n_bytes > 0
-    # determinism across runs (Arrow batch path)
-    again = {r.media_id: list(r.feature) for r in extract_features(media).collect()}
-    assert all(list(r.feature) == again[r.media_id] for r in feats)
-
-
-def test_frame_sampling_counts(spark):
-    media = synthetic_media(spark, n=12)
-    frames = sample_frames(media, every_ms=1000)
-    per_vid = {r.media_id: r.n for r in frames.groupBy("media_id").agg(F.count("*").alias("n")).collect()}
-    durs = {r.media_id: r.duration_ms for r in media.filter(F.col("kind") == "video").collect()}
-    assert set(per_vid) == set(durs)
-    for mid, n in per_vid.items():
-        assert n == (durs[mid] - 1) // 1000 + 1
 
 
 def test_approx_percentile_tracks_exact(spark, sf_correctness):

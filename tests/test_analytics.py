@@ -27,11 +27,9 @@ PLAN_BUDGET = {
     "scd2_device_runs": 4,        # lag+runsum share the user exchange
     "rolling_zscore_events": 2,   # 1 real: the user window
     "heavy_hitters_exact": 6,     # counts agg + scalar total + bcast
-    "mix_temperature_sources": 6,
     "ltv_deciles": 6,             # custkey agg, ntile, decile agg
     "histogram_event_values": 2,  # 1 real: bin agg after map combine
     "distinct_users_sketch_rollup": 4,  # daily sketches, type union
-    "inverted_index_sampled": 8,  # distinct, df agg, rank window, join
 }
 
 
@@ -54,10 +52,10 @@ def test_funnel_windows_share_one_exchange(spark):
 
 
 def test_scalar_totals_are_broadcast(spark):
-    """Global corpus totals (heavy-hitter denominator, temperature
-    normalizer) must move via a broadcast one-row join, never a
-    single-partition window over the full relation."""
-    for name in ("heavy_hitters_exact", "mix_temperature_sources"):
+    """The global event total (heavy-hitter denominator) must move via
+    a broadcast one-row join, never a single-partition window over the
+    full relation."""
+    for name in ("heavy_hitters_exact",):
         f = plan_facts(REGISTRY[name].builder(spark, SF))
         assert "BroadcastExchange" in f.text, f"{name}: no broadcast\n{f.text[:1500]}"
         assert "Window" not in f.text, f"{name}: global window leaked in"
@@ -166,17 +164,6 @@ def test_heavy_hitters_threshold_is_exact(spark):
         if r["n"] * 200 > total
     }
     assert {r["user_id"]: r["n_events"] for r in rows} == brute
-
-
-def test_mix_temperature_budget_conserved(spark):
-    """Temperature shares must sum to ~1 and the doc budget must not
-    exceed half the corpus."""
-    rows = REGISTRY["mix_temperature_sources"].builder(spark, SF).collect()
-    assert rows
-    total_docs = sum(r["n_docs"] for r in rows)
-    share_sum = sum(r["share"] for r in rows)
-    assert abs(share_sum - 1.0) < 1e-9
-    assert sum(r["budget_docs"] for r in rows) <= total_docs * 0.5 + len(rows)
 
 
 def test_dynamic_gap_matches_native_session_window(spark, sf_correctness):
@@ -347,58 +334,6 @@ def test_anomaly_mad_matches_numpy_model(spark, sf_correctness):
         assert r["n_outliers"] == n_out
         # a 3-MAD fence on real data should flag some but not most
         assert 0 < r["n_outliers"] < 0.5 * r["n_events"]
-
-
-def test_mix_epochs_cap_binds_on_skewed_corpus(spark, tmp_path):
-    """On a corpus with one giant and one tiny source, the tiny source
-    must hit the 4-epoch repetition cap and the giant source must be
-    down-sampled below one epoch — both LEAST branches exercised
-    (the driver fixture's sources are near-uniform, so the cap is
-    data-inactive there). Spark builder and DuckDB oracle must agree
-    row-for-row on the same skewed corpus."""
-    import duckdb
-
-    rows = []
-    did = 0
-    for _ in range(200):  # giant source: ~200 docs x 8 tokens
-        rows.append((did, "w " * 8, "en", "big", 16))
-        did += 1
-    for _ in range(3):  # tiny source: 3 docs x 8 tokens
-        rows.append((did, "w " * 8, "en", "small", 16))
-        did += 1
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    sf_dir = str(tmp_path / "sf_skew")
-    df.coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-
-    got = {
-        r["source"]: r
-        for r in REGISTRY["mix_epochs_budget"].builder(spark, sf_dir).collect()
-    }
-    # total = 203*8 = 1624 tokens; target = 1624//(2*2) = 406/source
-    assert got["small"]["planned_tokens"] == got["small"]["avail_tokens"] * 4
-    assert got["small"]["epochs_pct"] == 400
-    assert got["big"]["planned_tokens"] == got["big"]["target_tokens"]
-    assert got["big"]["epochs_pct"] < 100
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
-    )
-    want = {
-        r[0]: r for r in con.execute(REGISTRY["mix_epochs_budget"].oracle).fetchall()
-    }
-    assert set(want) == set(got)
-    for src, w in want.items():
-        g = got[src]
-        assert (
-            w[1], w[2], w[3], w[4], w[5]
-        ) == (
-            g["n_docs"], g["avail_tokens"], g["target_tokens"],
-            g["planned_tokens"], g["epochs_pct"],
-        )
 
 
 def test_resample_ohlc_matches_sorted_model(spark, sf_correctness):
@@ -781,43 +716,3 @@ def test_theta_overlap_matches_python_sketch_bitwise(spark, sf_correctness):
                 4.0 / (THETA_K ** 0.5) * exact, 8.0
             )
 
-
-def test_weighted_tickets_matches_python_mirror(spark, sf_correctness):
-    """Python mirror of sample_weighted_tickets (weights, per-ticket
-    md5 hashes, min-ticket keys, bottom-K per lang) — bitwise; and the
-    sample must skew toward heavier docs (mean sampled weight >= mean
-    corpus weight per stratum, the point of weighting)."""
-    from collections import defaultdict
-
-    from msstreamingstack_spark.queries_analytics import WS_K, WS_MAX_TIER
-    from msstreamingstack_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_correctness, "documents").select(
-        "doc_id", "lang", "n_chars"
-    ).collect()
-    keys = defaultdict(list)
-    corpus_w = defaultdict(list)
-    for r in docs:
-        w = 1 + min(WS_MAX_TIER - 1, r["n_chars"] // 150)
-        corpus_w[r["lang"]].append(w)
-        mk = min(
-            _md5_hash48(f"{r['doc_id']}:{t}") for t in range(1, w + 1)
-        )
-        keys[r["lang"]].append((mk, r["doc_id"], w))
-    expect = {}
-    for lang, ks in keys.items():
-        ks.sort()
-        for rn, (mk, did, w) in enumerate(ks[:WS_K], start=1):
-            expect[(lang, did)] = (w, mk, rn)
-    got = REGISTRY["sample_weighted_tickets"].builder(
-        spark, sf_correctness
-    ).collect()
-    assert len(got) == len(expect)
-    sampled_w = defaultdict(list)
-    for r in got:
-        w, mk, rn = expect[(r["lang"], r["doc_id"])]
-        assert (r["weight"], r["min_ticket"], r["rn"]) == (w, mk, rn)
-        sampled_w[r["lang"]].append(w)
-    for lang, ws in sampled_w.items():
-        cw = corpus_w[lang]
-        assert sum(ws) / len(ws) >= sum(cw) / len(cw)

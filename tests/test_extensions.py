@@ -1,132 +1,10 @@
-"""Extension-operator tests: ANN recall vs the exact baseline, LSH vs
-exact jaccard agreement, and the multimodal plumbing."""
+"""Extension-operator tests: the exact embedding queries, bounded
+query caches and registry metadata."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from msstreamingstack_spark.extensions.multimodal import (
-    FEATURE_DIM,
-    extract_features,
-    media_stats,
-    sample_frames,
-    synthetic_media,
-)
-from msstreamingstack_spark.operators.dedup import (
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-)
-from msstreamingstack_spark.sources.tables import load_table
-
-
-def test_minhash_lsh_finds_planted_near_dups(spark, sf_correctness):
-    """LSH candidates must recover (nearly) all high-jaccard pairs the
-    exact all-pairs scan finds — at jaccard ≥ 0.8, 8 bands × 2 rows
-    gives pair-catch probability ≥ 1-(1-0.8^2)^8 ≈ 0.9997."""
-    docs = load_table(spark, sf_correctness, "documents")
-    exact = {
-        (r["d1"], r["d2"]) for r in ngram_jaccard_pairs(docs, 0.8).collect()
-    }
-    lsh = {(r["d1"], r["d2"]) for r in minhash_lsh_pairs(docs, 0.8).collect()}
-    assert exact, "test data should contain planted near-dups"
-    recall = len(exact & lsh) / len(exact)
-    assert recall >= 0.95, f"LSH recall {recall:.3f} below bound"
-    assert lsh <= exact, "verified LSH pairs must be a subset of exact pairs"
-
-
-def test_jaccard_verify_array_form_matches_join_count(
-    spark, sf_correctness
-):
-    """The array-intersect verify (r11 _jaccard_on_pairs) is exact iff
-    (doc_id, h) is duplicate-free — pin BOTH: the fixture corpus holds
-    the invariant at this SF, and the array form's (n_inter, n1, n2,
-    jaccard) equals the old two-sided join count on the real LSH
-    candidate set."""
-    from msstreamingstack_spark.operators.dedup import (
-        _band_buckets,
-        _jaccard_on_pairs,
-        doc_shingle_hashes,
-        minhash_signatures,
-    )
-
-    docs = load_table(spark, sf_correctness, "documents")
-    sh = doc_shingle_hashes(docs)
-    assert (
-        sh.groupBy("doc_id", "h").count().filter(F.col("count") > 1).count()
-        == 0
-    ), "(doc_id, h) must be duplicate-free for array-intersect verify"
-    buckets = _band_buckets(minhash_signatures(sh))
-    cand = (
-        buckets.alias("x")
-        .join(buckets.alias("y"), ["band", "key"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
-        .distinct()
-    )
-    # the array form also emits zero-intersection candidates (the old
-    # inner join on h dropped them); every caller filters
-    # jaccard >= threshold > 0, so compare the reachable surface
-    got = {
-        (r["d1"], r["d2"]): (r["n_inter"], r["n1"], r["n2"], r["jaccard"])
-        for r in _jaccard_on_pairs(sh, cand).collect()
-        if r["n_inter"] > 0
-    }
-    # reference: the pre-r11 join-count form, inline
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("d1"), "h")
-    b = sh.select(F.col("doc_id").alias("d2"), "h")
-    ref_df = (
-        cand.join(a, "d1")
-        .join(b, ["d2", "h"])
-        .groupBy("d1", "d2")
-        .agg(F.count("*").alias("n_inter"))
-        .join(sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1")), "d1")
-        .join(sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2")), "d2")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("n_inter")).cast("double"),
-        )
-    )
-    ref = {
-        (r["d1"], r["d2"]): (r["n_inter"], r["n1"], r["n2"], r["jaccard"])
-        for r in ref_df.collect()
-    }
-    assert ref, "candidate set should be non-empty at this SF"
-    assert got == ref
-
-
-def test_multimodal_feature_extraction(spark):
-    media = synthetic_media(spark, n=64)
-    feats = extract_features(media).collect()
-    assert len(feats) == 64
-    for r in feats:
-        assert len(r["feature"]) == FEATURE_DIM
-        assert r["n_bytes"] > 0
-    # determinism
-    again = extract_features(synthetic_media(spark, n=64)).collect()
-    assert sorted((r["media_id"], tuple(r["feature"])) for r in feats) == sorted(
-        (r["media_id"], tuple(r["feature"])) for r in again
-    )
-
-
-def test_multimodal_frame_sampling(spark):
-    media = synthetic_media(spark, n=12)
-    frames = sample_frames(media, every_ms=1000)
-    rows = frames.collect()
-    assert rows, "video rows must yield sampled frames"
-    per_media = {}
-    for r in rows:
-        per_media.setdefault(r["media_id"], []).append(r["frame_ts_ms"])
-    for ts_list in per_media.values():
-        assert ts_list == sorted(ts_list)
-        assert ts_list[0] == 0
-
-
-def test_multimodal_stats(spark):
-    st = {r["kind"]: r for r in media_stats(synthetic_media(spark, 64)).collect()}
-    assert set(st) == {"image", "audio", "video"}
-    assert st["image"]["max_width"] is not None
 
 
 def test_quantize_int8_error_bound(spark, sf_correctness):
@@ -146,12 +24,11 @@ def test_rotating_persist_bounds_registry_query_caches(spark):
     """Leak regression: registry query functions persist reused
     subtrees but return the frame BEFORE any action, so they can never
     unpersist — each invocation used to stack a session-lifetime cache
-    entry (the shingle-hash tables). rotating_persist must bound that
+    entry. rotating_persist must bound that
     to ONE live entry per slot: re-invoking the same call site
     replaces its cache instead of accumulating, and different slots
     never evict each other."""
     from msstreamingstack_spark.caching import live_slots, rotating_persist
-    from msstreamingstack_spark.operators.dedup import doc_shingle_hashes
 
     def persistent_ids() -> set:
         m = spark.sparkContext._jsc.getPersistentRDDs()
@@ -167,7 +44,8 @@ def test_rotating_persist_bounds_registry_query_caches(spark):
         ["doc_id", "text"],
     )
     for _ in range(4):  # 4 invocations — the old code left 4 caches
-        doc_shingle_hashes(d, slot="test.shingles").collect()
+        shingles = d.select("doc_id", F.split("text", " ").alias("toks"))
+        rotating_persist(shingles, "test.shingles").collect()
     grown = persistent_ids() - base
     assert len(grown) <= 1, grown  # one rotated slot, not one per call
     assert "test.shingles" in live_slots(spark)
@@ -241,71 +119,6 @@ def test_mine_hard_negatives_matches_numpy_model(spark, sf_smoke):
         )
 
 
-def test_bm25_rare_term_dominates_and_order_is_monotone(spark, sf_correctness):
-    """idf separates the rare query term ('dup', df~26/500) from the
-    near-ubiquitous ones: every top-20 hit must contain it, scores
-    must be non-increasing, and term-match counts must stay in
-    [1, |terms|]."""
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_extensions import BM25_TERMS
-
-    rows = REGISTRY["retrieval_bm25_topk"].builder(spark, sf_correctness).collect()
-    assert len(rows) == 20
-    scores = [r["bm25"] for r in rows]
-    assert scores == sorted(scores, reverse=True)
-    assert all(1 <= r["n_terms_matched"] <= len(BM25_TERMS) for r in rows)
-
-    docs = {
-        r["doc_id"]: r["text"]
-        for r in spark.read.parquet(f"{sf_correctness}/documents.parquet")
-        .select("doc_id", "text")
-        .collect()
-    }
-    assert all("dup" in docs[r["doc_id"]].split(" ") for r in rows)
-
-
-def test_bm25_matches_python_model(spark, sf_correctness):
-    """Full independent BM25 model in pure Python over the same corpus
-    — same tokenization, same k1/b, same rounding discipline."""
-    import math
-
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_extensions import BM25_B, BM25_K1, BM25_TERMS
-
-    docs = (
-        spark.read.parquet(f"{sf_correctness}/documents.parquet")
-        .select("doc_id", "text")
-        .collect()
-    )
-    tf: dict[tuple[int, str], int] = {}
-    dl: dict[int, int] = {}
-    for r in docs:
-        toks = [w for w in r["text"].split(" ") if w]
-        dl[r["doc_id"]] = len(toks)
-        for w in toks:
-            if w in BM25_TERMS:
-                tf[(r["doc_id"], w)] = tf.get((r["doc_id"], w), 0) + 1
-    n_docs = len(dl)
-    avgdl = float(sum(dl.values())) / n_docs
-    df = {t: sum(1 for (_, w) in tf if w == t) for t in BM25_TERMS}
-    scores: dict[int, float] = {}
-    for (d, w), f in tf.items():
-        idf = math.log((n_docs - df[w] + 0.5) / (df[w] + 0.5) + 1.0)
-        s = idf * (f * (BM25_K1 + 1.0)) / (
-            f + BM25_K1 * ((1.0 - BM25_B) + BM25_B * dl[d] / avgdl)
-        )
-        scores[d] = scores.get(d, 0.0) + round(s, 9)
-    expect = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
-
-    got = [
-        (r["doc_id"], r["bm25"])
-        for r in REGISTRY["retrieval_bm25_topk"].builder(spark, sf_correctness).collect()
-    ]
-    assert [d for d, _ in got] == [d for d, _ in expect]
-    for (_, g), (_, e) in zip(got, expect):
-        assert abs(g - e) <= 1e-9
-
-
 def test_registry_metadata_consistency(spark):
     """Every registry entry carries a doc and at least one tag; every
     oracle references only fixture tables; names are unique and
@@ -313,7 +126,7 @@ def test_registry_metadata_consistency(spark):
     from msstreamingstack_spark.queries import REGISTRY
 
     tables = {"region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"}
+              "orders", "lineitem", "events", "embeddings"}
     builders = set()
     for name, spec in REGISTRY.items():
         assert spec.doc and len(spec.doc) > 40, name

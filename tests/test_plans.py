@@ -63,13 +63,10 @@ def test_left_join_pushes_no_filter_to_preserved_side(spark):
 
 @pytest.mark.slow
 def test_no_python_eval_in_relational_paths(spark):
-    """Every relational/tpch/dedup query stays JVM-side end-to-end —
-    Python appears only in explicitly-Python operators (multimodal
-    features, the chunking UDTF, pandas folds)."""
+    """Every relational/tpch query stays JVM-side end-to-end — Python
+    appears only in explicitly-Python operators (pandas folds)."""
     for name, spec in REGISTRY.items():
         if name in (
-            "multimodal_features",
-            "chunk_documents_udtf",
             "pandas_udaf_value_moments",
             "ewma_event_values",  # prefix-dependent applyInPandas fold
         ):
@@ -130,14 +127,6 @@ def test_hof_pipeline_is_pure_jvm_map(spark):
     assert "Exchange" not in f.text  # narrow map over the scan
 
 
-def test_wordcount_partial_aggregation(spark):
-    """The word agg must map-side combine (partial_count before the
-    exchange) — the O(distinct-words) shuffle property."""
-    f = plan_facts(REGISTRY["wordcount_frequent"].builder(spark, SF))
-    assert f.python_evals == 0
-    assert "partial_count" in f.text, f.text
-
-
 def test_range_frame_single_window_pass(spark):
     """Both RANGE-frame aggs share one Window operator: one shuffle on
     user_id, one sort, no second exchange."""
@@ -167,33 +156,6 @@ def test_interval_join_no_cartesian(spark):
     f = plan_facts(REGISTRY["interval_join_attribution"].builder(spark, SF))
     assert "CartesianProduct" not in f.text
     assert "BroadcastNestedLoopJoin" not in f.text
-
-
-def test_lang_overlap_broadcasts_totals_no_cartesian(spark):
-    """lang_shingle_overlap: per-language totals reach the matrix join
-    by broadcast (|langs| rows), the h self-join is a shuffled hash
-    join (never cartesian), and the thrice-referenced (lang, h)
-    relation comes from its persist (InMemoryTableScan)."""
-    f = plan_facts(REGISTRY["lang_shingle_overlap"].builder(spark, SF))
-    assert "CartesianProduct" not in f.text
-    assert "BroadcastHashJoin" in f.text
-    assert "ShuffledHashJoin" in f.text
-    assert "InMemoryTableScan" in f.text
-
-
-def test_dup_rate_reuses_shingle_persist_and_prunes_agg_scan(spark):
-    """corpus_duplication_rate layers a per-source agg on the banded
-    LSH pair generator: the shingle table must come from the persisted
-    cache (InMemoryTableScan) everywhere the kernel re-reads it, and
-    the agg-side documents scan must be pruned to (doc_id, source) —
-    never a second decode of text."""
-    import re
-
-    f = plan_facts(REGISTRY["corpus_duplication_rate"].builder(spark, SF))
-    assert "InMemoryTableScan" in f.text
-    schemas = re.findall(r"ReadSchema: struct<([^>\n]*)>", f.text)
-    agg_side = [s for s in schemas if "source" in s]
-    assert agg_side and all("text" not in s for s in agg_side), schemas
 
 
 def test_q2_min_cost_broadcasts_dims(spark):
@@ -422,27 +384,6 @@ def test_merge_single_key_shuffle_no_python(spark):
     assert f.python_evals == 0, "merge must stay JVM-side"
 
 
-def test_bm25_broadcasts_and_no_vocab_shuffle(spark):
-    """df (3 rows) and the (n_docs, avgdl) scalar must broadcast.
-    r11 shape: per-doc length is a PROJECTION (size of the split
-    array) and the tf fold filters to the query terms BEFORE its
-    exchange — so no persist exists (no InMemoryTableScan) and every
-    Generate (explode) is followed by the term filter before any
-    aggregate: nothing vocabulary-sized ever crosses an exchange."""
-    import re
-
-    f = plan_facts(REGISTRY["retrieval_bm25_topk"].builder(spark, SF))
-    assert f.broadcast_joins >= 2, f.text
-    assert "InMemoryTableScan" not in f.text, f.text
-    assert "CartesianProduct" not in f.text
-    assert f.python_evals == 0
-    # every exploded-word branch filters on the fixed term set
-    # (detail section lists 'word#N IN (...)' conditions; Spark prints
-    # INSET instead of IN past inSetConversionThreshold — accept both
-    # so growing BM25_TERMS can't fail this spuriously, ADVICE r11)
-    assert re.search(r"word#\d+ (IN|INSET) ", f.text), f.text
-
-
 def test_ewma_single_shuffle_into_pandas_kernel(spark):
     """The EWMA kernel pays exactly ONE user_id exchange feeding one
     partition-level MapInPandas fold (r11 shape: an explicit hash
@@ -488,7 +429,6 @@ def test_sixth_wave_plans_no_cartesian_no_python(spark):
     worker — all are pure JVM expression plans."""
     for name in (
         "anomaly_mad_events",
-        "mix_epochs_budget",
         "resample_ohlc_hourly",
         "wau_sliding_distinct",
         "session_paths_topk",

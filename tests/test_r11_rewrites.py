@@ -17,36 +17,6 @@ from msstreamingstack_spark.sources.tables import load_table
 from tests.conftest import SF_CORRECTNESS
 
 
-def test_bm25_projection_doc_length_matches_tf_rowsum(spark):
-    """retrieval_bm25_topk (r11) derives per-doc length as
-    size(filter(split(text))) — it must equal the row sum of the old
-    per-(doc, word) tf table for every doc, and drop exactly the docs
-    the tf table never contained (zero non-empty words)."""
-    docs = load_table(spark, SF_CORRECTNESS, "documents").select(
-        "doc_id", "text"
-    )
-    words = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
-    ).filter(F.col("word") != "")
-    dl_old = (
-        words.groupBy("doc_id", "word")
-        .agg(F.count("*").alias("tf"))
-        .groupBy("doc_id")
-        .agg(F.sum("tf").alias("dl"))
-    )
-    dl_new = docs.select(
-        "doc_id",
-        F.expr("size(filter(split(text, ' '), w -> w != ''))")
-        .cast("long")
-        .alias("dl"),
-    ).filter(F.col("dl") > 0)
-    assert (
-        dl_old.orderBy("doc_id")
-        .toPandas()
-        .equals(dl_new.orderBy("doc_id").toPandas())
-    )
-
-
 def test_grouping_sets_preagg_matches_direct_expand(spark):
     """grouping_sets_revenue's finest-set pre-aggregate must be exactly
     re-aggregable: the DECIMAL partial sums and counts rolled up from

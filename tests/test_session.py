@@ -294,3 +294,52 @@ def test_registry_import_reads_only_code(tmp_path):
     assert any(os.path.basename(p).startswith("queries.") for p in opened), opened
     data = [p for p in opened if not p.endswith((".py", ".pyc", ".so"))]
     assert not data, f"the registry import opened data files: {data}"
+
+
+
+def test_every_package_import_resolves():
+    """Each `from msstreamingstack_spark.X import a`, at any depth,
+    in the package, the tests, perfbench or the entry point names a
+    module that imports and defines `a` (or has `a` as a submodule).
+    An import inside a function otherwise fails only when that code
+    path runs. No Spark session."""
+    import ast
+    import importlib
+    import pathlib
+
+    def resolves(mod, name):
+        if hasattr(importlib.import_module(mod), name):
+            return True
+        try:
+            importlib.import_module(f"{mod}.{name}")
+        except ModuleNotFoundError:
+            return False
+        return True
+
+    root = pathlib.Path(REPO)
+    files = [root / "__spark_entry__.py"]
+    for d in ("msstreamingstack_spark", "tests", "perfbench"):
+        files += sorted((root / d).rglob("*.py"))
+    checked, broken = 0, []
+    for path in files:
+        for n in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(n, ast.ImportFrom) and not n.level and n.module:
+                imports = [(n.module, [a.name for a in n.names])]
+            elif isinstance(n, ast.Import):
+                imports = [(a.name, []) for a in n.names]
+            else:
+                continue
+            for mod, names in imports:
+                if mod.split(".")[0] != "msstreamingstack_spark":
+                    continue
+                checked += 1
+                where = f"{path.relative_to(root)}:{n.lineno}: {mod}"
+                try:
+                    missing = [a for a in names if not resolves(mod, a)]
+                except ImportError as e:
+                    broken.append(f"{where}: {e}")
+                    continue
+                if missing:
+                    broken.append(f"{where} does not define {missing}")
+    assert checked > 100, checked  # the walk found the package's imports
+    assert not broken, "\n".join(broken)

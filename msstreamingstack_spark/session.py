@@ -43,6 +43,21 @@ either manager restarts under the other. Caveat: on HDFS,
 ``FileSystem.rename`` does not overwrite an existing target, which is
 why Spark prefers ``FileContext`` there; every checkpoint location this
 package builds is a local path.
+
+The driver JVM's threads get an 8 MB stack (``-Xss8m``, put ahead of
+the caller's ``spark.driver.extraJavaOptions``). ``StreamingQuery.stop()``
+interrupts a stream execution thread that may be waiting on a
+``foreachBatch`` call, and Spark's check of whether the resulting error
+is an interruption (``StreamExecution.isInterruptionException``) runs a
+recursive ``java.util.regex`` match over its message. On the JVM's
+default 1 MB stack that match overflowed: the thread died with
+``java.lang.StackOverflowError`` instead of stopping. In a repro that
+stops a ``run_pipeline`` query while its sink sleeps or runs its
+``toArrow`` job (``tests/test_clean_stop.py``), 3 MB still overflowed
+and 4 MB did not; 8 MB is twice that. The option only takes effect
+when it starts the JVM: a session created elsewhere (an external
+``__spark_entry__`` driver, a SparkContext that existed before
+``get_spark``) needs the same ``-Xss`` in its own driver Java options.
 """
 
 from __future__ import annotations
@@ -83,6 +98,11 @@ RUNTIME_CONFS: dict[str, str] = {
         "FileSystemBasedCheckpointFileManager"
     ),
 }
+
+
+# driver thread stack size, for a clean ``StreamingQuery.stop()``
+# (module docstring)
+DRIVER_THREAD_STACK = "-Xss8m"
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
@@ -147,6 +167,9 @@ def get_spark(
     pass ``extra_conf`` or pre-create the session and call
     ``apply_runtime_confs``. A call that creates the SparkContext starts
     the Python workers in the background (module docstring).
+    ``DRIVER_THREAD_STACK`` goes ahead of any
+    ``spark.driver.extraJavaOptions`` in ``extra_conf``, so the caller's
+    options are kept and a caller's own ``-Xss`` wins.
     """
     cpus = cpus or default_parallelism()
     shuffle_partitions = shuffle_partitions or cpus
@@ -163,7 +186,12 @@ def get_spark(
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    java_opts = conf.pop("spark.driver.extraJavaOptions", "")
+    builder = builder.config(
+        "spark.driver.extraJavaOptions", f"{DRIVER_THREAD_STACK} {java_opts}".rstrip()
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     new_context = SparkContext._active_spark_context is None
     spark = builder.getOrCreate()

@@ -18,10 +18,9 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Callable
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 
 def console_sink(df: DataFrame, batch_id: int) -> None:
@@ -298,8 +297,12 @@ class TransactionalParquetSink:
     directory, and an atomic *commit marker* makes the batch either
     fully visible or not at all:
 
-    0. skip if ``_commits/<batchId>`` exists (foreachBatch redelivery
-       after checkpoint recovery re-runs the last batch);
+    0. if ``_commits/<batchId>`` exists (foreachBatch redelivery after
+       checkpoint recovery re-runs the last batch), run the batch's plan
+       into Spark's ``noop`` sink and write nothing: the redelivered
+       batch's state store commits happen only in its tasks, and Spark
+       fails a batch that leaves them unrun
+       (``STATE_STORE_COMMIT_VALIDATION_FAILED``);
     1. collect the micro-batch to the driver as Arrow (``toArrow``;
        ``run_pipeline``'s fan-out has already persisted it);
     2. remove ``data/batch_id=<batchId>/`` and create it again, so a
@@ -340,7 +343,9 @@ class TransactionalParquetSink:
 
     def __call__(self, df: DataFrame, batch_id: int) -> None:
         if os.path.exists(self._marker(batch_id)):
-            return  # redelivered batch: already fully committed
+            # redelivered batch: already fully committed
+            df.write.format("noop").mode("overwrite").save()
+            return
         table = df.toArrow()
         batch_dir = os.path.join(self.data_dir, f"batch_id={batch_id}")
         shutil.rmtree(batch_dir, ignore_errors=True)
@@ -360,23 +365,3 @@ class TransactionalParquetSink:
         ]
         return spark.read.parquet(*paths)
 
-
-def partitioned_history_writer(
-    out_dir: str, partition_cols: tuple[str, ...] = ("event_date",)
-) -> Callable[[DataFrame, int], None]:
-    """K3 analogue with production layout: append the history table
-    hive-partitioned (default by event date derived from ts_sec) so
-    downstream reads prune by day (sinks/layout.py). Plain append is
-    at-least-once under batch re-delivery — compose with the
-    commit-log sink for exactly-once, or rely on idempotent readers.
-    The date derivation stays JVM-side in the sink's own plan."""
-
-    def write(df: DataFrame, batch_id: int) -> None:
-        out = df
-        if "event_date" in partition_cols and "event_date" not in df.columns:
-            out = df.withColumn(
-                "event_date", F.to_date(F.timestamp_seconds(F.col("ts_sec")))
-            )
-        out.write.mode("append").partitionBy(*partition_cols).parquet(out_dir)
-
-    return write

@@ -10,16 +10,24 @@ join buffer would OOM every executor.
 
 Semantics here: attribute each ``view`` event to the first following
 ``purchase`` by the same user within ``bound_sec`` — the classic
-conversion-attribution interval join.
+conversion-attribution interval join. Both legs carry an ``event_time``
+TIMESTAMP built from the integer epoch seconds (``with_event_time``),
+the column their watermarks and the interval condition run on.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from msstreamingstack_spark.streaming.watermark import with_event_time
-
 DEFAULT_BOUND_SEC = 1800
+
+
+def with_event_time(events: DataFrame, ts_sec_col: str = "ts_sec") -> DataFrame:
+    """Attach an event-time TIMESTAMP column derived from integer epoch
+    seconds (the engine's canonical time representation)."""
+    return events.withColumn(
+        "event_time", F.to_timestamp(F.from_unixtime(F.col(ts_sec_col)))
+    )
 
 
 def split_view_purchase(events: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -226,118 +226,3 @@ def session_window_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
             "user_id", "n_events", "start_sec", "end_sec", "sum_value"
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Session ROLLUP stream: one summary row per closed session, state
-# reclaimed via event-time timeout
-# ---------------------------------------------------------------------------
-ROLLUP_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("session_start", T.LongType()),
-        T.StructField("last_ts", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("sum_value", T.DoubleType()),
-    ]
-)
-
-ROLLUP_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_start", T.LongType()),
-        T.StructField("session_end", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("sum_value", T.DoubleType()),
-        T.StructField("closed_by_timeout", T.BooleanType()),
-    ]
-)
-
-
-def make_rollup_fn(gap_sec: int = DEFAULT_GAP_SEC):
-    """Per-user session rollup with ``EventTimeTimeout``: sessions
-    closed by a later event emit immediately; the FINAL session of an
-    idle user emits when the watermark passes last_ts + gap — the
-    state-store entry is then removed. This is the piece the
-    reference's Redis design fundamentally could not do: state there
-    lived forever (no TTL, RedisForeachWriter.scala:25-40); here state
-    size tracks ACTIVE users only.
-    """
-
-    def fn(key, pdfs, state: GroupState):
-        (user_id,) = key
-        cols = [f.name for f in ROLLUP_OUTPUT_SCHEMA.fields]
-
-        if state.hasTimedOut:
-            ss, lt, n, sv = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": int(user_id),
-                        "session_start": ss,
-                        "session_end": lt,
-                        "n_events": n,
-                        "sum_value": sv,
-                        "closed_by_timeout": True,
-                    }
-                ],
-                columns=cols,
-            )
-            return
-
-        if state.exists:
-            ss, lt, n, sv = state.get
-        else:
-            ss = lt = None
-            n, sv = 0, 0.0
-
-        # one sort over all chunks: sorting each chunk on its own lets
-        # Spark's chunking reorder the user's events
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["ts_sec", "event_id"], kind="stable"
-        )
-        out = []
-        for r in pdf.itertuples(index=False):
-            ts = int(r.ts_sec)
-            if lt is not None and (ts - lt) > gap_sec:
-                out.append(
-                    {
-                        "user_id": int(user_id),
-                        "session_start": ss,
-                        "session_end": lt,
-                        "n_events": n,
-                        "sum_value": sv,
-                        "closed_by_timeout": False,
-                    }
-                )
-                ss, n, sv = ts, 0, 0.0
-            if lt is None:
-                ss = ts
-            n += 1
-            sv += float(r.value)
-            lt = ts
-        state.update((ss, lt, n, sv))
-        # close the open session once the watermark passes last_ts+gap
-        state.setTimeoutTimestamp((lt + gap_sec) * 1000)
-        yield pd.DataFrame(out, columns=cols)
-
-    return fn
-
-
-def session_rollup_stream(
-    events: DataFrame,
-    gap_sec: int = DEFAULT_GAP_SEC,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Closed-session summaries over a stream; needs an event-time
-    watermark for the timeout clock."""
-    ev = events.withColumn(
-        "event_time", F.timestamp_seconds(F.col("ts_sec"))
-    ).withWatermark("event_time", watermark)
-    return ev.groupBy("user_id").applyInPandasWithState(
-        make_rollup_fn(gap_sec),
-        outputStructType=ROLLUP_OUTPUT_SCHEMA,
-        stateStructType=ROLLUP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )

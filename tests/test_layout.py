@@ -120,32 +120,6 @@ def test_compaction_reduces_file_count(spark, tmp_path):
     assert spark.read.parquet(dst).count() == ev.count()
 
 
-def test_streaming_history_sink_is_date_partitioned(spark, tmp_path):
-    """The streaming pipeline's history sink lands hive-partitioned by
-    event date, so the batch-side reads of streaming output prune like
-    any other partitioned table."""
-    from msstreamingstack_spark.sinks.writers import partitioned_history_writer
-    from msstreamingstack_spark.sources.generator import drop_batches
-    from msstreamingstack_spark.streaming.pipeline import run_pipeline
-
-    src = str(tmp_path / "drops")
-    hist = str(tmp_path / "hist")
-    drop_batches(src, n_batches=3, batch_size=4, gap_sec=90000)  # spans days
-    q = run_pipeline(
-        spark,
-        src,
-        checkpoint_dir=str(tmp_path / "cp"),
-        sinks=[partitioned_history_writer(hist)],
-        available_now=True,
-    )
-    q.awaitTermination(300)
-    days = [d for d in os.listdir(hist) if d.startswith("event_date=")]
-    assert len(days) > 1, days
-    out = spark.read.parquet(hist)
-    assert out.count() == 12
-    assert "session_id" in out.columns
-
-
 def test_retention_sweep_drops_expired_partitions(spark, tmp_path):
     from msstreamingstack_spark.sinks.layout import retention_sweep
 

@@ -343,3 +343,45 @@ def test_every_package_import_resolves():
                     broken.append(f"{where} does not define {missing}")
     assert checked > 100, checked  # the walk found the package's imports
     assert not broken, "\n".join(broken)
+
+
+# What only tests reach (``tests/caller_scan.py``'s second list), each
+# with why it stays: a reference-contract adapter, a fixture or oracle of
+# a test of kept code, a definition that goes with its family's stage, or
+# package metadata. Delete a name here when its code goes.
+TEST_ONLY = {
+    "__version__": "metadata",
+    "caching.live_slots": "fixture",
+    "operators.quality_checks.check_in_set": "family",
+    "operators.quality_checks.check_not_null": "family",
+    "operators.zorder.write_zordered": "family",
+    "operators.zorder.zvalue": "family",
+    "plans.inspect.assert_scan_pruned": "fixture",
+    "schemas.CLICKSTREAM_SCHEMA": "adapter",
+    "sinks.layout.events_partitioned_by_day": "fixture",
+    "sinks.layout.read_pruned_day": "family",
+    "sinks.layout.write_partitioned": "fixture",
+    "sinks.writers.CASSANDRA_PROCESSED_COLS": "adapter",
+    "sinks.writers._cassandra_write_partition": "adapter",
+    "sinks.writers._kafka_write_partition": "adapter",
+    "sinks.writers.cassandra_insert_statements": "adapter",
+    "sinks.writers.cassandra_row_writer": "adapter",
+    "sinks.writers.kafka_records": "adapter",
+    "sinks.writers.kafka_writer": "adapter",
+    "sources.pysink.read_manifest_jsonl": "fixture",
+    "streaming.heavy_hitters.bucket_hash_sql": "fixture",
+    "streaming.pipeline.decode_kafka_events": "adapter",
+    "streaming.pipeline.kafka_reader": "adapter",
+    "streaming.pipeline.read_kafka_stream": "adapter",
+}
+
+
+def test_only_tests_reach_the_pinned_definitions():
+    """No package definition is reached only by tests unless
+    ``TEST_ONLY`` names it: a helper that loses its last non-test
+    caller, or is added with none, fails here. No Spark session."""
+    from tests.caller_scan import scan
+
+    got = {f"{m}.{n}".removeprefix("msstreamingstack_spark.") for m, n in scan(REPO)["test_only"]}
+    assert got == set(TEST_ONLY)
+    assert set(TEST_ONLY.values()) <= {"adapter", "fixture", "family", "metadata"}

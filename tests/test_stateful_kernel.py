@@ -1,11 +1,9 @@
-"""The bucketed sessionizer kernel and the session rollup function,
-called directly with a stand-in ``GroupState`` — no streaming query,
-so these stay in the fast tier.
+"""The bucketed sessionizer kernel, called directly with a stand-in
+``GroupState`` — no streaming query, so these stay in the fast tier.
 
 The kernel's output must not depend on how Spark chunks a bucket's
 micro-batch, and over several micro-batches it must reproduce the
-DuckDB oracle (``sessionize_oracle_sql``) on every output column. The
-rollup's output must not depend on chunking either.
+DuckDB oracle (``sessionize_oracle_sql``) on every output column.
 """
 
 from __future__ import annotations
@@ -22,7 +20,6 @@ from msstreamingstack_spark.streaming.stateful import (
     OUTPUT_SCHEMA,
     USER_STATE,
     make_bucket_fn,
-    make_rollup_fn,
 )
 
 COLS = ["event_id", "user_id", "ts_sec", "event_type", "value"]
@@ -205,48 +202,3 @@ def test_kernel_yields_non_empty_frames_of_the_output_dtypes():
             f.name: np.dtype(numpy_dtype[type(f.dataType)]) for f in OUTPUT_SCHEMA.fields
         }
 
-
-class FakeTimeoutState(FakeGroupState):
-    """Adds the event-time timeout calls ``make_rollup_fn`` uses."""
-
-    hasTimedOut = False
-    timeout_ms = None
-
-    def setTimeoutTimestamp(self, ms: int) -> None:
-        self.timeout_ms = ms
-
-
-def test_rollup_chunk_order_does_not_change_output():
-    """One user's events delivered as reverse-ordered chunks roll up to
-    the same closed sessions, open-session state and timeout as one
-    time-ordered chunk."""
-    g = DEFAULT_GAP_SEC
-    ev = pd.DataFrame(
-        {
-            "event_id": [1, 2, 3, 4, 5, 6],
-            "user_id": [7] * 6,
-            "ts_sec": [1000, 1060, 1060 + g + 1, 1100 + g + 1, 9000, 9030],
-            "event_type": ["view"] * 6,
-            "value": [1.0, 2.0, 4.0, 8.0, 16.0, 32.0],
-        }
-    )
-
-    def rollup(chunks):
-        state = FakeTimeoutState()
-        (out,) = make_rollup_fn(g)((7,), iter(chunks), state)
-        return out, state
-
-    ordered, ordered_state = rollup([ev])
-    assert ordered[["session_start", "session_end", "n_events", "sum_value"]].values.tolist() == [
-        [1000, 1060, 2, 3.0],
-        [1060 + g + 1, 1100 + g + 1, 2, 12.0],
-    ]
-    assert not ordered["closed_by_timeout"].any()
-    assert ordered_state.get == (9000, 9030, 2, 48.0)
-    assert ordered_state.timeout_ms == (9030 + g) * 1000
-
-    rev = ev.iloc[::-1]
-    chunked, chunked_state = rollup([rev.iloc[i : i + 2] for i in range(0, len(rev), 2)])
-    pd.testing.assert_frame_equal(chunked, ordered)
-    assert chunked_state.get == ordered_state.get
-    assert chunked_state.timeout_ms == ordered_state.timeout_ms

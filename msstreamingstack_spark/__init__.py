@@ -18,7 +18,7 @@ Layout:
     session.py    — SparkSession factory tuned for the harness
     worker_daemon.py — Python worker daemon on the installed PySpark
     schemas.py    — declared StructTypes (clickstream/state/output + testdata)
-    sources/      — table loaders, event generator, Python data sources
+    sources/      — table loaders, event generator
     sinks/        — console/parquet/memory foreachBatch sinks; external stubs
     functions/    — expression library (scalar derivations, hashing, sketches)
     operators/    — batch operators (sessionize, state, asof…)

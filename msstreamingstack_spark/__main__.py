@@ -10,10 +10,6 @@ reference's two runnable apps plus a query runner:
   query     run any registered named query and print its result
   sql       run an ad-hoc Spark SQL statement over the fixture tables
             (all tables as temp views + events_ts with canonical ts_sec)
-  mv        maintain the streaming continuous aggregate (minutely MV
-            with partition-pruned upsert) from event drops
-  compact   compact a small-file parquet directory (MV / streaming
-            sink tails) into target-sized files at a new location
 
 Examples:
   python -m msstreamingstack_spark produce --out /tmp/drops \\
@@ -183,44 +179,6 @@ def _cmd_query(args: argparse.Namespace) -> int:
     return 0
 
 
-def _cmd_heavy_hitters(args: argparse.Namespace) -> int:
-    """Run the streaming space-saving heavy-hitters sketch over event
-    drops; one top-k parquet per micro-batch (the latest batch is the
-    current answer — state is n_buckets × capacity counters, bounded
-    for any stream length)."""
-    from msstreamingstack_spark.session import get_spark
-    from msstreamingstack_spark.streaming.heavy_hitters import (
-        run_heavy_hitters_stream,
-    )
-
-    spark = get_spark(app_name="msstreamingstack-heavy-hitters")
-    spark.sparkContext.setLogLevel("WARN")
-    q = run_heavy_hitters_stream(
-        spark,
-        source_path=args.source,
-        out_dir=args.out,
-        checkpoint_dir=args.checkpoint,
-        key_col=args.key_col,
-        k=args.k,
-        n_buckets=args.buckets,
-        capacity=args.capacity,
-        available_now=args.once,
-        max_files_per_trigger=args.files_per_trigger,
-    )
-    q.awaitTermination()
-    import os
-
-    if os.path.isdir(args.out):
-        batches = sorted(os.listdir(args.out))
-        if batches:
-            spark.read.parquet(os.path.join(args.out, batches[-1])).orderBy(
-                "est", ascending=False
-            ).show(args.k, truncate=False)
-            return 0
-    print("no micro-batches processed (empty source)")
-    return 0
-
-
 def _cmd_plan(args: argparse.Namespace) -> int:
     """The 100 TB plan checklist as a product command: extract the
     assertable facts from a registry query's physical plan (pushed
@@ -299,79 +257,6 @@ def _cmd_sql(args: argparse.Namespace) -> int:
     return 0
 
 
-def _cmd_mv(args: argparse.Namespace) -> int:
-    from msstreamingstack_spark.session import get_spark
-    from msstreamingstack_spark.streaming.continuous_agg import (
-        hourly_from_mv,
-        run_continuous_agg,
-    )
-
-    spark = get_spark(app_name="msstreamingstack-mv")
-    spark.sparkContext.setLogLevel("WARN")
-    q = run_continuous_agg(
-        spark,
-        args.source,
-        args.mv,
-        args.checkpoint,
-        available_now=args.once,
-    )
-    q.awaitTermination()
-    if args.show_hourly:
-        hourly_from_mv(spark, args.mv).orderBy("hour_bucket", "event_type").show(
-            50, truncate=False
-        )
-    return 0
-
-
-def _cmd_compact(args: argparse.Namespace) -> int:
-    from msstreamingstack_spark.session import get_spark
-    from msstreamingstack_spark.sinks.layout import compact_parquet
-
-    spark = get_spark(app_name="msstreamingstack-compact")
-    spark.sparkContext.setLogLevel("WARN")
-    n = compact_parquet(
-        spark, args.src, args.dst, target_file_bytes=args.target_mb * 1024 * 1024
-    )
-    print(f"compacted {args.src} -> {args.dst}: {n} files")
-    return 0
-
-
-def _cmd_export(args: argparse.Namespace) -> int:
-    """Run a registry query and publish its result through a sink:
-    parquet, or the manifest_jsonl Python DataSource (atomic
-    publish-on-commit — see sources/pysink.py)."""
-    import json as _json
-    import os as _os
-
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.session import get_spark
-
-    if args.name not in REGISTRY:
-        print(f"unknown query: {args.name}", file=sys.stderr)
-        return 1
-    spark = get_spark(app_name="msstreamingstack-export")
-    spark.sparkContext.setLogLevel("WARN")
-    df = REGISTRY[args.name].builder(spark, args.sf_dir)
-    if args.format == "parquet":
-        df.write.mode("overwrite").parquet(args.out)
-        print(f"exported {args.name} -> {args.out} (parquet)")
-    else:
-        from msstreamingstack_spark.sources.pysink import (
-            MANIFEST,
-            ManifestJsonlDataSource,
-        )
-
-        spark.dataSource.register(ManifestJsonlDataSource)
-        df.write.format("manifest_jsonl").mode("append").save(args.out)
-        man = _json.load(open(_os.path.join(args.out, MANIFEST)))
-        print(
-            f"exported {args.name} -> {args.out} "
-            f"(manifest_jsonl: {man['n_rows']} rows, "
-            f"{len(man['files'])} committed files)"
-        )
-    return 0
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="msstreamingstack_spark", description=__doc__)
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -402,48 +287,12 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("--explain", action="store_true")
     q.set_defaults(fn=_cmd_query)
 
-    hh = sub.add_parser(
-        "heavy-hitters",
-        help="streaming space-saving top-k over event drops",
-    )
-    hh.add_argument("--source", required=True, help="event drop directory")
-    hh.add_argument("--out", required=True, help="per-batch top-k parquet dir")
-    hh.add_argument("--checkpoint", required=True)
-    hh.add_argument("--key-col", default="user_id")
-    hh.add_argument("--k", type=int, default=10)
-    hh.add_argument("--buckets", type=int, default=32,
-                    help="hash partitions of the key space (one bounded "
-                    "sketch each; scales state horizontally)")
-    hh.add_argument("--capacity", type=int, default=8,
-                    help="counters per bucket sketch (error bound n/capacity)")
-    hh.add_argument("--files-per-trigger", type=int, default=1)
-    hh.add_argument("--once", action="store_true",
-                    help="Trigger.AvailableNow: drain pending input, then stop")
-    hh.set_defaults(fn=_cmd_heavy_hitters)
-
     sq = sub.add_parser("sql", help="run ad-hoc SQL over the fixture tables")
     sq.add_argument("query")
     sq.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     sq.add_argument("--rows", type=int, default=20)
     sq.add_argument("--explain", action="store_true")
     sq.set_defaults(fn=_cmd_sql)
-
-    mv = sub.add_parser("mv", help="maintain the minutely continuous aggregate")
-    mv.add_argument("--source", required=True, help="event drop directory")
-    mv.add_argument("--mv", required=True, help="materialized-view directory")
-    mv.add_argument("--checkpoint", required=True)
-    mv.add_argument("--once", action=argparse.BooleanOptionalAction, default=True,
-                    help="drain pending input then stop (default); "
-                    "--no-once runs continuous maintenance until killed")
-    mv.add_argument("--show-hourly", action="store_true",
-                    help="print the hourly rollup from the MV afterwards")
-    mv.set_defaults(fn=_cmd_mv)
-
-    cp = sub.add_parser("compact", help="compact a small-file parquet dir")
-    cp.add_argument("--src", required=True)
-    cp.add_argument("--dst", required=True)
-    cp.add_argument("--target-mb", type=int, default=128)
-    cp.set_defaults(fn=_cmd_compact)
 
     vf = sub.add_parser(
         "verify", help="run the DuckDB-oracle correctness gate locally"
@@ -462,17 +311,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="drop partitions with value < cutoff (lexical)")
     rt.add_argument("--dry-run", action="store_true")
     rt.set_defaults(fn=_cmd_retain)
-
-    ex = sub.add_parser(
-        "export", help="run a registry query and publish the result"
-    )
-    ex.add_argument("name", help="registry query name")
-    ex.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ex.add_argument("--out", required=True)
-    ex.add_argument(
-        "--format", choices=("parquet", "manifest_jsonl"), default="parquet"
-    )
-    ex.set_defaults(fn=_cmd_export)
 
     pl = sub.add_parser(
         "plan",

@@ -1345,7 +1345,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Stream-stream interval join, checked in batch mode (streaming/joins.py)
+# Interval join: conversion attribution
 # ---------------------------------------------------------------------------
 @register(
     "interval_join_attribution",
@@ -1369,20 +1369,45 @@ FROM (SELECT *, ROW_NUMBER() OVER (
       FROM j)
 WHERE rn = 1
 """,
-    tags=("streaming", "interval-join"),
+    tags=("advanced", "interval-join"),
     doc="Conversion attribution: each view matched to its first "
-    "following same-user purchase within 30 min. Batch face of the "
-    "watermark-bounded stream-stream interval join "
-    "(streaming/joins.py) — the streaming variant buffers each side "
-    "only watermark+bound deep, so join state stays bounded on an "
-    "unbounded feed. Argmin via min(struct) = one shuffle, no "
+    "following same-user purchase within 30 min. An equi-join on user "
+    "with the interval on integer ts_sec as its residual predicate "
+    "(no cartesian); argmin via min(struct) = one shuffle, no "
     "row_number re-sort.",
 )
 def q_interval_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.streaming.joins import first_conversion_per_view
-
     ev = events_with_time(spark, sf_dir)
-    return first_conversion_per_view(ev)
+    views = ev.filter(F.col("event_type") == "view").select(
+        F.col("event_id").alias("view_id"),
+        F.col("user_id").alias("v_user_id"),
+        F.col("ts_sec").alias("view_ts"),
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("p_user_id"),
+        F.col("ts_sec").alias("purchase_ts"),
+        F.col("value").alias("purchase_value"),
+    )
+    joined = views.join(
+        purchases,
+        (F.col("v_user_id") == F.col("p_user_id"))
+        & (F.col("purchase_ts") > F.col("view_ts"))
+        & (F.col("purchase_ts") <= F.col("view_ts") + 1800),
+    )
+    first = F.min(F.struct("purchase_ts", "purchase_id", "purchase_value"))
+    return (
+        joined.groupBy("view_id", "v_user_id", "view_ts")
+        .agg(first.alias("f"))
+        .select(
+            "view_id",
+            F.col("v_user_id").alias("user_id"),
+            "view_ts",
+            "f.purchase_id",
+            "f.purchase_ts",
+            "f.purchase_value",
+        )
+    )
 
 
 # ---------------------------------------------------------------------------

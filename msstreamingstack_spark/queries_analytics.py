@@ -482,67 +482,6 @@ def q_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Python DataSource profile — the pluggable producer's output is
-# deterministic, so its aggregate profile has a table-free oracle.
-# ---------------------------------------------------------------------------
-_DS_N = 10_000
-
-
-@register(
-    "pydatasource_events_profile",
-    f"""
-WITH g AS (SELECT unnest(range({_DS_N})) AS i),
-e AS (
-  SELECT i % 25 AS user_id,
-         (['view','click','purchase','signup','error'])[(i % 5) + 1]
-           AS event_type,
-         CAST((i * 7) % 100 AS DOUBLE) AS value
-  FROM g
-)
-SELECT event_type,
-       COUNT(*) AS n,
-       COUNT(DISTINCT user_id) AS n_users,
-       {_dec_sum_sql('value', 'sum_value')}
-FROM e GROUP BY event_type
-""",
-    tags=("analytics", "source", "pydatasource"),
-    doc="Aggregate profile of the Spark 4 Python DataSource producer "
-    "(sources/pydatasource.py, format 'synthetic_events'): the "
-    "source's row formula is deterministic, so the DuckDB oracle "
-    "regenerates the same rows from range() with NO table at all — "
-    "the only query here whose oracle reads zero parquet. Exercises "
-    "the full custom-source path (InputPartition planning, "
-    "executor-side Arrow batches) under the driver's value-hash "
-    "gate; sf_dir is ignored by design.",
-)
-def q_pydatasource_events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.session import apply_runtime_confs
-    from msstreamingstack_spark.sources.pydatasource import (
-        SyntheticEventsDataSource,
-    )
-
-    # the reader implements pushFilters(), which errors (not falls
-    # back) on sessions without spark.sql.python.filterPushdown.enabled
-    apply_runtime_confs(spark)
-    try:
-        spark.dataSource.register(SyntheticEventsDataSource)
-    except Exception as e:  # pragma: no cover — double registration
-        if "already" not in str(e).lower():
-            raise
-    ev = (
-        spark.read.format("synthetic_events")
-        .option("n_rows", _DS_N)
-        .option("n_partitions", 8)
-        .load()
-    )
-    return ev.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.countDistinct("user_id").alias("n_users"),
-        _dec_sum(F.col("value"), "sum_value"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Fixed-bin histogram — integer bin ids from floor division; decimal
 # sums per bin.
 # ---------------------------------------------------------------------------

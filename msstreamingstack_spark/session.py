@@ -81,11 +81,6 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Spark 4.1 Python DataSource filter pushdown (sources/pydatasource
-    # narrows its generated id range from pushed event_id predicates;
-    # without the conf a reader implementing pushFilters() is an ERROR,
-    # not a silent fallback)
-    "spark.sql.python.filterPushdown.enabled": "true",
     # checkpoint files (offsets, commits, sources, metadata, state store)
     # through Spark's FileSystem fallback manager: without libhadoop the
     # default FileContext manager forks ``readlink`` 8 times per atomic

@@ -126,41 +126,3 @@ def retention_sweep(
                 shutil.rmtree(full)
     return dropped
 
-
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Compact a small-file parquet directory into ~target-sized files
-    at ``dst``; returns the output file count.
-
-    Streaming sinks and fine-grained partition writes accrete small
-    files; at 100 TB the scan's task count — and S3/HDFS listing cost
-    — is proportional to file count, so periodic compaction is part
-    of the table's lifecycle (what Delta/Iceberg call OPTIMIZE; here
-    the plain-parquet form). Sizing uses the actual on-disk bytes,
-    not row counts, so compressed width differences don't skew file
-    sizes. Writes to a NEW directory — atomic swap (rename/repoint)
-    is the caller's job; never compact in place.
-    """
-    import os
-
-    total = 0
-    for root, _dirs, files in os.walk(src):
-        total += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if f.endswith(".parquet")
-        )
-    n_files = max(1, -(-total // target_file_bytes))  # ceil
-    df = spark.read.parquet(src)
-    df.repartition(n_files).write.mode("overwrite").parquet(dst)
-    out = sum(
-        1
-        for _root, _dirs, files in os.walk(dst)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    return out

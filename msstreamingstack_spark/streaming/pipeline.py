@@ -73,19 +73,15 @@ def _ts_is_parquet_timestamp(path: str) -> bool:
 def read_event_stream(
     spark: SparkSession,
     path: str,
-    max_files_per_trigger: int = 1,
-    max_bytes_per_trigger: int | None = None,
+    max_bytes_per_trigger: int = ADMIT_BYTES_PER_TRIGGER,
 ) -> DataFrame:
     """File-drop event stream with the declared schema (streaming
     sources cannot infer — the reference pre-computed its schema from
     a sample batch read, StructuredStreaming.scala:70-76; we declare).
 
-    Admission: each trigger takes up to ``max_files_per_trigger``
-    pending files, oldest first. With ``max_bytes_per_trigger`` set it
-    instead takes pending files until their sizes reach that many bytes
-    (always at least one file), and ``max_files_per_trigger`` is
-    ignored: Spark rejects both options on one source. A trigger's
-    input, and so its memory, is bounded by whichever cap applies.
+    Admission: each trigger takes pending files, oldest first, until
+    their sizes reach ``max_bytes_per_trigger`` bytes (always at least
+    one file), so a trigger's input, and so its memory, is bounded.
 
     ``ts_sec`` (integer epoch seconds) matches the batch loader
     ``sources.tables.events_with_time`` bit-for-bit for either physical
@@ -102,12 +98,12 @@ def read_event_stream(
     else:
         schema = EVENTS_SCHEMA
         ts_sec = (F.col("ts") / NANOS_PER_SEC).cast("long")
-    reader = spark.readStream.schema(schema)
-    if max_bytes_per_trigger is None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    else:
-        reader = reader.option("maxBytesPerTrigger", max_bytes_per_trigger)
-    return reader.parquet(path).withColumn("ts_sec", ts_sec)
+    return (
+        spark.readStream.schema(schema)
+        .option("maxBytesPerTrigger", max_bytes_per_trigger)
+        .parquet(path)
+        .withColumn("ts_sec", ts_sec)
+    )
 
 
 def kafka_reader(spark: SparkSession, bootstrap: str, topic: str,
@@ -170,6 +166,8 @@ def run_pipeline(
     are sessionized in (ts_sec, event_id) order within a trigger, so
     events out of order ACROSS drops can give different sessions
     depending on which drops shared a trigger."""
+    # the module constant read at call time, not the default bound at
+    # definition time, so lowering it takes effect on the next query
     events = read_event_stream(
         spark, source_path, max_bytes_per_trigger=ADMIT_BYTES_PER_TRIGGER
     ).select(

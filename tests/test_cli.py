@@ -87,31 +87,6 @@ def test_query_subcommand_runs_and_unknown_rejected(spark, capsys):
     assert rc == 2
 
 
-def test_cli_mv_and_compact(tmp_path, capsys):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from msstreamingstack_spark.__main__ import main
-
-    # small event drop (generator-encoded int64-nanos ts)
-    from msstreamingstack_spark.sources.generator import drop_batches
-
-    drops = str(tmp_path / "drops")
-    drop_batches(drops, n_batches=2, batch_size=6, t0_sec=1_700_000_000)
-
-    mv = str(tmp_path / "mv")
-    rc = main(["mv", "--source", drops, "--mv", mv,
-               "--checkpoint", str(tmp_path / "cp")])
-    assert rc == 0
-    assert pq.read_table(mv).num_rows > 0
-
-    dst = str(tmp_path / "mv_compact")
-    rc = main(["compact", "--src", mv, "--dst", dst, "--target-mb", "64"])
-    assert rc == 0
-    assert "compacted" in capsys.readouterr().out
-    assert pq.read_table(dst).num_rows == pq.read_table(mv).num_rows
-
-
 @pytest.mark.slow
 def test_cli_verify_subset(tmp_path):
     import subprocess

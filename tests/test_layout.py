@@ -106,20 +106,6 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
                 spark.conf.set(k, v)
 
 
-def test_compaction_reduces_file_count(spark, tmp_path):
-    from msstreamingstack_spark.sinks.layout import compact_parquet
-
-    src = str(tmp_path / "small")
-    dst = str(tmp_path / "compacted")
-    ev = load_table(spark, SF, "events")
-    ev.repartition(40).write.mode("overwrite").parquet(src)
-    n_in = sum(1 for f in os.listdir(src) if f.endswith(".parquet"))
-    assert n_in == 40
-    n_out = compact_parquet(spark, src, dst, target_file_bytes=256 * 1024)
-    assert n_out < n_in
-    assert spark.read.parquet(dst).count() == ev.count()
-
-
 def test_retention_sweep_drops_expired_partitions(spark, tmp_path):
     from msstreamingstack_spark.sinks.layout import retention_sweep
 

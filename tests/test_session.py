@@ -368,8 +368,6 @@ TEST_ONLY = {
     "sinks.writers.cassandra_row_writer": "adapter",
     "sinks.writers.kafka_records": "adapter",
     "sinks.writers.kafka_writer": "adapter",
-    "sources.pysink.read_manifest_jsonl": "fixture",
-    "streaming.heavy_hitters.bucket_hash_sql": "fixture",
     "streaming.pipeline.decode_kafka_events": "adapter",
     "streaming.pipeline.kafka_reader": "adapter",
     "streaming.pipeline.read_kafka_stream": "adapter",

@@ -210,9 +210,9 @@ def test_stream_static_dim_join(spark, staged_stream_dir, tmp_path):
     dim = load_table(spark, SF, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    stream = read_event_stream(spark, staged_stream_dir).select(
-        "event_id", "user_id"
-    )
+    stream = read_event_stream(
+        spark, staged_stream_dir, max_bytes_per_trigger=1
+    ).select("event_id", "user_id")
     joined = stream.join(dim, "user_id", "left")
 
     sink = CollectingSink()
@@ -423,39 +423,6 @@ def test_stream_started_on_empty_dir_reads_producer_drops(spark, tmp_path):
     rows = sink.read_committed(spark).collect()
     assert sorted(r.event_id for r in rows) == list(range(10))
     assert all(r.session_id for r in rows)
-
-
-@pytest.mark.slow
-def test_stream_stream_interval_join(spark, staged_stream_dir, tmp_path):
-    """Stream-stream interval join (streaming/joins.py): the
-    watermarked view⋈purchase join over micro-batched drops must emit
-    exactly the pairs the identical batch expression produces.
-
-    Watermark is set far enough (1 day) that no test pair is evicted;
-    eviction behavior itself is Spark engine semantics, not ours."""
-    from msstreamingstack_spark.streaming.joins import view_purchase_interval_join
-    from msstreamingstack_spark.streaming.pipeline import read_event_stream
-
-    stream = read_event_stream(spark, staged_stream_dir)
-    joined = view_purchase_interval_join(stream, watermark="1 day")
-
-    sink = CollectingSink()
-    q = (
-        joined.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "cp_ssj"))
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = {(r.view_id, r.purchase_id) for r in sink.rows}
-    batch = view_purchase_interval_join(
-        events_with_time(spark, SF)
-    ).collect()
-    want = {(r.view_id, r.purchase_id) for r in batch}
-    assert want, "fixture produced no view→purchase pairs"
-    assert got == want
 
 
 @pytest.mark.slow
@@ -814,7 +781,9 @@ def test_dynamic_gap_session_window_streams(spark, staged_stream_dir, tmp_path):
         )
 
     q = (
-        rollup(read_event_stream(spark, staged_stream_dir))
+        rollup(
+            read_event_stream(spark, staged_stream_dir, max_bytes_per_trigger=1)
+        )
         .writeStream.outputMode("append")
         .format("parquet")
         .option("path", str(tmp_path / "dyn_out"))

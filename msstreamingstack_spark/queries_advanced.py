@@ -1,11 +1,10 @@
-"""Advanced operator coverage: as-of / range joins, exact percentiles,
-approximate aggregates and additional TPC-H shapes — registered into
-the same queries()/oracle_sql() driver contract as everything else.
+"""Advanced operator coverage: as-of / range joins, exact percentiles
+and approximate aggregates — registered through the same
+queries()/oracle_sql() entry points as everything else.
 
 The as-of join entries cover operators the reference engine lacks
-outright (SURVEY.md §2.4-2.5 "ABSENT" sections); the
-TPC-H shapes widen the relational surface the judge checks against
-SURVEY.md §2. Scale notes live on each operator's docstring.
+outright (SURVEY.md §2.4-2.5 "ABSENT" sections). Scale notes live on
+each operator's docstring.
 """
 
 from __future__ import annotations
@@ -19,7 +18,6 @@ from msstreamingstack_spark.queries import (
     EVENTS_TS_SQL,
     _dec_sum,
     _dec_sum_sql,
-    _epoch_sec,
     register,
 )
 from msstreamingstack_spark.sources.tables import (
@@ -488,217 +486,6 @@ def q_percentile_event_values_sketch(
 
 
 # ---------------------------------------------------------------------------
-# Additional TPC-H shapes (q6, q10, q14, q18, q19)
-# ---------------------------------------------------------------------------
-@register(
-    "tpch_q6_forecast_revenue",
-    f"""
-SELECT {_dec_sum_sql('l_extendedprice * l_discount', 'revenue')},
-       COUNT(*) AS n_lines
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-  AND l_discount BETWEEN 0.04 AND 0.06
-  AND l_quantity < 24
-""",
-    tags=("relational", "tpch", "filter-agg"),
-    doc="TPC-H Q6 shape: tight conjunctive filter straight to a "
-    "global aggregate — every predicate reaches the parquet scan "
-    "(PushedFilters), zero joins, one partial+final agg.",
-)
-def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_discount") >= 0.04)
-            & (F.col("l_discount") <= 0.06)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            _dec_sum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"),
-            F.count("*").alias("n_lines"),
-        )
-    )
-
-
-@register(
-    "tpch_q10_returned_items",
-    f"""
-SELECT c.c_custkey, c.c_name, n.n_name,
-       {_dec_sum_sql('l.l_extendedprice * (1 - l.l_discount)', 'revenue')}
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o.o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
-  AND l.l_returnflag = 'R'
-GROUP BY c.c_custkey, c.c_name, n.n_name
-ORDER BY revenue DESC, c_custkey ASC
-LIMIT 20
-""",
-    tags=("relational", "tpch", "multi-join", "topk"),
-    doc="TPC-H Q10 shape: fact-to-fact join plus two broadcast dims, "
-    "selective date + returnflag pushdown, top-20 by grouped revenue.",
-)
-def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-07-01 00:00:00").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(_dec_sum(revenue, "revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
-        .limit(20)
-    )
-
-
-@register(
-    "tpch_q14_promo_revenue",
-    """
-SELECT 100.0 * CAST(SUM(CAST(CASE WHEN p.p_type = 'PROMO'
-                      THEN l.l_extendedprice * (1 - l.l_discount)
-                      ELSE 0 END AS DECIMAL(25,6))) AS DOUBLE)
-         / CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(25,6))) AS DOUBLE)
-       AS promo_revenue_pct
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
-  AND l.l_shipdate < TIMESTAMP '1996-10-01 00:00:00'
-""",
-    tags=("relational", "tpch", "conditional-agg"),
-    doc="TPC-H Q14 shape: conditional aggregate ratio over a "
-    "fact-dim join; part side is broadcast, decimal accumulators keep "
-    "the division bit-stable across engines.",
-)
-def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-09-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-10-01 00:00:00").cast("timestamp"))
-    )
-    p = load_table(spark, sf_dir, "part")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(25,6)"
-    )
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(
-        F.lit(0).cast("decimal(25,6)")
-    )
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .agg(
-            (
-                F.lit(100.0)
-                * F.sum(promo).cast("double")
-                / F.sum(rev).cast("double")
-            ).alias("promo_revenue_pct")
-        )
-    )
-
-
-@register(
-    "tpch_q18_large_orders",
-    f"""
-SELECT c.c_custkey, c.c_name, o.o_orderkey,
-       CAST(epoch(o.o_orderdate) AS BIGINT) AS od_sec,
-       {_dec_sum_sql('l.l_quantity', 'total_qty')}
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-WHERE o.o_orderkey IN (
-  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-  HAVING SUM(CAST(l_quantity AS DECIMAL(25,6))) > 180
-)
-GROUP BY c.c_custkey, c.c_name, o.o_orderkey, od_sec
-ORDER BY total_qty DESC, o_orderkey ASC
-LIMIT 25
-""",
-    tags=("relational", "tpch", "having-semijoin", "topk"),
-    doc="TPC-H Q18 shape: HAVING-filtered aggregate over the fact "
-    "(large-volume orders), then re-aggregate with dims. r11: the "
-    "HAVING filter runs as a window SUM over ONE l_orderkey exchange "
-    "of lineitem (partition = lines-per-order, bounded) instead of a "
-    "separate aggregate + LeftSemi join back onto a second lineitem "
-    "exchange (A/B 1.34 -> 0.99 s, identical DECIMAL comparison); "
-    "the oracle keeps the IN-subquery text.",
-)
-def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    )
-    li_big = (
-        li.withColumn(
-            "q",
-            F.sum(F.col("l_quantity").cast("decimal(25,6)")).over(
-                Window.partitionBy("l_orderkey")
-            ),
-        )
-        .filter(F.col("q") > 180)
-        .drop("q")
-    )
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li_big, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(
-            "c_custkey",
-            "c_name",
-            "o_orderkey",
-            _epoch_sec(F.col("o_orderdate")).alias("od_sec"),
-        )
-        .agg(_dec_sum(F.col("l_quantity"), "total_qty"))
-        .orderBy(F.col("total_qty").desc(), F.col("o_orderkey").asc())
-        .limit(25)
-    )
-
-
-@register(
-    "tpch_q19_disjunctive",
-    f"""
-SELECT {_dec_sum_sql('l.l_extendedprice * (1 - l.l_discount)', 'revenue')},
-       COUNT(*) AS n_lines
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
-       AND l.l_quantity BETWEEN 1 AND 20)
-   OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 10 AND 30
-       AND l.l_quantity BETWEEN 20 AND 40)
-""",
-    tags=("relational", "tpch", "disjunctive"),
-    doc="TPC-H Q19 shape: OR-of-conjunctions across both join sides — "
-    "exercises disjunctive predicate handling; per-side portions "
-    "(brand/size, quantity bounds) still push into each scan.",
-)
-def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    joined = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-    cond = (
-        (F.col("p_brand") == "Brand#1")
-        & F.col("p_size").between(1, 15)
-        & F.col("l_quantity").between(1, 20)
-    ) | (
-        (F.col("p_brand") == "Brand#3")
-        & F.col("p_size").between(10, 30)
-        & F.col("l_quantity").between(20, 40)
-    )
-    return joined.filter(cond).agg(
-        _dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"),
-        F.count("*").alias("n_lines"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Skew mitigation (salting) — result-identical to unsalted forms,
 # so the oracle is the PLAIN SQL equivalent
 # ---------------------------------------------------------------------------
@@ -946,401 +733,6 @@ def q_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = lambda df, t: df.select(F.lit(t).alias("op"), "l_orderkey")  # noqa: E731
     return tag(a.intersectAll(b), "intersect_all").unionAll(
         tag(a.exceptAll(b), "except_all")
-    )
-
-
-@register(
-    "tpch_q7_nation_volume",
-    f"""
-SELECT supp_nation, cust_nation, l_year,
-       {_dec_sum_sql('volume', 'revenue')}
-FROM (
-  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         CAST(year(l.l_shipdate) AS INTEGER) AS l_year,
-         l.l_extendedprice * (1 - l.l_discount) AS volume
-  FROM supplier s
-  JOIN lineitem l ON s.s_suppkey = l.l_suppkey
-  JOIN orders o ON o.o_orderkey = l.l_orderkey
-  JOIN customer c ON c.c_custkey = o.o_custkey
-  JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-  JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-  WHERE ((n1.n_name = 'NATION_0' AND n2.n_name = 'NATION_1')
-      OR (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_0'))
-    AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-    AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-) shipping
-GROUP BY supp_nation, cust_nation, l_year
-""",
-    tags=("relational", "tpch", "multi-join"),
-    doc="TPC-H Q7 shape: bidirectional nation-pair volume — a 6-way "
-    "join with a cross-side disjunctive filter and year extraction; "
-    "both nation dims broadcast.",
-)
-def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = load_table(spark, sf_dir, "supplier")
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    n1 = F.broadcast(n.select(F.col("n_nationkey").alias("n1k"), F.col("n_name").alias("supp_nation")))
-    n2 = F.broadcast(n.select(F.col("n_nationkey").alias("n2k"), F.col("n_name").alias("cust_nation")))
-    joined = (
-        s.join(li, s.s_suppkey == li.l_suppkey)
-        .join(o, o.o_orderkey == li.l_orderkey)
-        .join(c, c.c_custkey == o.o_custkey)
-        .join(n1, F.col("s_nationkey") == F.col("n1k"))
-        .join(n2, F.col("c_nationkey") == F.col("n2k"))
-        .filter(
-            ((F.col("supp_nation") == "NATION_0") & (F.col("cust_nation") == "NATION_1"))
-            | ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_0"))
-        )
-    )
-    return (
-        joined.groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").cast("int").alias("l_year"),
-        )
-        .agg(_dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
-    )
-
-
-@register(
-    "tpch_q9_product_profit",
-    f"""
-SELECT n_name AS nation, l_year,
-       {_dec_sum_sql('amount', 'sum_profit')}
-FROM (
-  SELECT n.n_name,
-         CAST(year(o.o_orderdate) AS INTEGER) AS l_year,
-         l.l_extendedprice * (1 - l.l_discount)
-           - p.p_retailprice * 0.6 * l.l_quantity AS amount
-  FROM part p
-  JOIN lineitem l ON p.p_partkey = l.l_partkey
-  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-  JOIN orders o ON o.o_orderkey = l.l_orderkey
-  JOIN nation n ON s.s_nationkey = n.n_nationkey
-  WHERE p.p_name LIKE '%red%'
-) profit
-GROUP BY nation, l_year
-""",
-    tags=("relational", "tpch", "multi-join"),
-    doc="TPC-H Q9 shape: product-line profit per nation-year — 5-way "
-    "join with a LIKE filter on the part dim and a computed profit "
-    "expression (retailprice*0.6 standing in for ps_supplycost, which "
-    "the schema lacks).",
-)
-def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    o = load_table(spark, sf_dir, "orders")
-    n = F.broadcast(load_table(spark, sf_dir, "nation"))
-    amount = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("p_retailprice") * 0.6 * F.col("l_quantity")
-    )
-    return (
-        p.join(li, p.p_partkey == li.l_partkey)
-        .join(s, s.s_suppkey == li.l_suppkey)
-        .join(o, o.o_orderkey == li.l_orderkey)
-        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("int").alias("l_year"),
-        )
-        .agg(_dec_sum(amount, "sum_profit"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# TPC-H wave 3: q8, q12 (adapted), q13, q15, q17, q22 (adapted)
-# ---------------------------------------------------------------------------
-@register(
-    "tpch_q8_market_share",
-    f"""
-SELECT o_year,
-       CAST(CAST(SUM(CASE WHEN nation = 'NATION_1' THEN volume ELSE 0 END)
-                 AS DECIMAL(25,6)) AS DOUBLE)
-       / CAST(CAST(SUM(volume) AS DECIMAL(25,6)) AS DOUBLE) AS mkt_share
-FROM (
-  SELECT CAST(year(o.o_orderdate) AS INTEGER) AS o_year,
-         l.l_extendedprice * (1 - l.l_discount) AS volume,
-         n2.n_name AS nation
-  FROM part p
-  JOIN lineitem l ON p.p_partkey = l.l_partkey
-  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-  JOIN orders o ON o.o_orderkey = l.l_orderkey
-  JOIN customer c ON c.c_custkey = o.o_custkey
-  JOIN nation n1 ON c.c_nationkey = n1.n_nationkey
-  JOIN region r ON n1.n_regionkey = r.r_regionkey
-  JOIN nation n2 ON s.s_nationkey = n2.n_nationkey
-  WHERE r.r_name = 'ASIA'
-    AND p.p_type = 'ECONOMY'
-    AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-    AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-) all_nations
-GROUP BY o_year
-""",
-    tags=("relational", "tpch", "multi-join"),
-    doc="TPC-H Q8 shape: national market share inside a region-year — "
-    "an 8-way join (the widest plan in the registry) with a "
-    "conditional-numerator / total-denominator ratio. All four dims "
-    "(part-filtered, nation x2, region) broadcast; only "
-    "lineitem-orders shuffles. Ratio computed in DOUBLE after "
-    "DECIMAL(25,6) partial sums so Spark and DuckDB agree bit-exactly.",
-)
-def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = F.broadcast(
-        load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    n1 = F.broadcast(
-        n.select(F.col("n_nationkey").alias("n1k"), F.col("n_regionkey").alias("n1r"))
-    )
-    n2 = F.broadcast(
-        n.select(F.col("n_nationkey").alias("n2k"), F.col("n_name").alias("nation"))
-    )
-    r = F.broadcast(
-        load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    )
-    volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    joined = (
-        p.join(li, p.p_partkey == li.l_partkey)
-        .join(s, s.s_suppkey == li.l_suppkey)
-        .join(o, o.o_orderkey == li.l_orderkey)
-        .join(c, c.c_custkey == o.o_custkey)
-        .join(n1, F.col("c_nationkey") == F.col("n1k"))
-        .join(r, F.col("n1r") == F.col("r_regionkey"))
-        .join(n2, F.col("s_nationkey") == F.col("n2k"))
-    )
-    num = F.sum(
-        F.when(F.col("nation") == "NATION_1", volume).otherwise(F.lit(0.0))
-    ).cast("decimal(25,6)").cast("double")
-    den = F.sum(volume).cast("decimal(25,6)").cast("double")
-    return (
-        joined.groupBy(F.year("o_orderdate").cast("int").alias("o_year"))
-        .agg((num / den).alias("mkt_share"))
-    )
-
-
-@register(
-    "tpch_q12_priority_by_linestatus",
-    """
-SELECT l_linestatus,
-       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM orders o
-JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-WHERE l.l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY l_linestatus
-""",
-    tags=("relational", "tpch"),
-    doc="TPC-H Q12 shape: priority-class line counts per shipping "
-    "class (l_linestatus standing in for l_shipmode, which the schema "
-    "lacks; commit/receipt-date predicates dropped likewise). "
-    "Conditional-count aggregation pushed map-side; the shipdate "
-    "filter reaches the parquet scan.",
-)
-def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    is_high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(is_high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~is_high, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
-
-
-@register(
-    "tpch_q13_custdist",
-    """
-SELECT c_count, COUNT(*) AS custdist
-FROM (
-  SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-  FROM customer c
-  LEFT JOIN orders o
-    ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
-  GROUP BY c.c_custkey
-) c_orders
-GROUP BY c_count
-""",
-    tags=("relational", "tpch", "outer-join"),
-    doc="TPC-H Q13 shape: distribution of per-customer order counts "
-    "including zero-order customers — LEFT OUTER join with an ON-side "
-    "(not WHERE-side) filter so unmatched customers survive with "
-    "COUNT(o_orderkey)=0, then a second aggregation over the counts. "
-    "The o_orderpriority predicate stands in for the o_comment NOT "
-    "LIKE filter the schema lacks.",
-)
-def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT"
-    )
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy(c.c_custkey)
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
-
-
-@register(
-    "tpch_q15_top_supplier",
-    f"""
-WITH revenue AS (
-  SELECT l_suppkey AS supplier_no,
-         {_dec_sum_sql('l_extendedprice * (1 - l_discount)', 'total_revenue')}
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-    AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
-  GROUP BY l_suppkey
-)
-SELECT s.s_suppkey, s.s_name, r.total_revenue
-FROM supplier s
-JOIN revenue r ON s.s_suppkey = r.supplier_no
-WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-""",
-    tags=("relational", "tpch", "subquery"),
-    doc="TPC-H Q15 shape: the supplier(s) with maximum quarterly "
-    "revenue — a derived revenue view consumed twice (argmax join + "
-    "scalar-max subquery). Spark evaluates the scalar subquery as a "
-    "broadcast single-row join; the revenue view computes once per "
-    "branch off one parquet scan with the shipdate filter pushed down.",
-)
-def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
-    )
-    revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        _dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "total_revenue")
-    )
-    max_rev = revenue.agg(F.max("total_revenue").alias("max_revenue"))
-    s = load_table(spark, sf_dir, "supplier")
-    return (
-        revenue.join(F.broadcast(max_rev), F.col("total_revenue") == F.col("max_revenue"))
-        .join(s, F.col("s_suppkey") == F.col("supplier_no"))
-        .select("s_suppkey", "s_name", "total_revenue")
-    )
-
-
-@register(
-    "tpch_q17_small_qty_revenue",
-    """
-SELECT CAST(CAST(SUM(l.l_extendedprice) AS DECIMAL(25,6)) AS DOUBLE) / 7.0
-         AS avg_yearly
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey
-WHERE p.p_brand = 'Brand#1'
-  AND l.l_quantity < (
-    SELECT 0.2 * AVG(CAST(l2.l_quantity AS DOUBLE))
-    FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey
-  )
-""",
-    tags=("relational", "tpch", "subquery"),
-    doc="TPC-H Q17 shape: revenue lost to small-quantity orders — a "
-    "correlated scalar subquery (per-part 20%%-of-average quantity "
-    "threshold) run as a per-part window AVG over ONE exchange of the "
-    "branded rows (r11; was aggregate + join-back, which re-exchanged "
-    "them twice). Order-free cross-engine: quantities are "
-    "integer-valued doubles, so the avg is exact integer sum / count "
-    "under any addition order. Brand dim filter broadcasts; the "
-    "average computes only over parts that survive the broadcast "
-    "join, not all of lineitem.",
-)
-def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    p = F.broadcast(
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_brand") == "Brand#1")
-        .select("p_partkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    branded = li.join(p, li.l_partkey == p.p_partkey)
-    thr = F.lit(0.2) * F.avg(F.col("l_quantity").cast("double")).over(
-        Window.partitionBy("l_partkey")
-    )
-    small = branded.withColumn("qty_threshold", thr).filter(
-        F.col("l_quantity") < F.col("qty_threshold")
-    )
-    return small.agg(
-        (
-            F.sum("l_extendedprice").cast("decimal(25,6)").cast("double") / F.lit(7.0)
-        ).alias("avg_yearly")
-    )
-
-
-@register(
-    "tpch_q22_idle_rich_customers",
-    f"""
-SELECT cntrycode, COUNT(*) AS numcust,
-       {_dec_sum_sql('c_acctbal', 'totacctbal')}
-FROM (
-  SELECT c.c_nationkey AS cntrycode, c.c_acctbal
-  FROM customer c
-  WHERE c.c_acctbal > (
-      SELECT AVG(CAST(c2.c_acctbal AS DOUBLE)) FROM customer c2
-      WHERE c2.c_acctbal > 0.0
-    )
-    AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderpriority = '1-URGENT')
-) custsale
-GROUP BY cntrycode
-""",
-    tags=("relational", "tpch", "subquery", "anti-join"),
-    doc="TPC-H Q22 shape: above-average-balance customers with no "
-    "urgent orders, grouped per country (c_nationkey standing in for "
-    "the phone-prefix cntrycode the schema lacks; the no-orders "
-    "predicate narrowed to no-URGENT-orders because the synthetic "
-    "data gives every customer at least one order). The scalar "
-    "average broadcasts as a single-row cross join — no driver-side "
-    "collect — and NOT EXISTS runs as a LEFT ANTI hash join.",
-)
-def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_custkey")
-    )
-    avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(
-        F.avg(F.col("c_acctbal").cast("double")).alias("avg_bal")
-    )
-    rich = c.crossJoin(F.broadcast(avg_bal)).filter(
-        F.col("c_acctbal") > F.col("avg_bal")
-    )
-    idle = rich.join(o, rich.c_custkey == o.o_custkey, "left_anti")
-    return (
-        idle.groupBy(F.col("c_nationkey").alias("cntrycode"))
-        .agg(
-            F.count("*").alias("numcust"),
-            _dec_sum(F.col("c_acctbal"), "totacctbal"),
-        )
     )
 
 
@@ -1627,345 +1019,6 @@ def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM fine
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
         """
-    )
-
-
-# ---------------------------------------------------------------------------
-# Final TPC-H shapes: q2 / q11 / q16 / q20 / q21 adapted to the harness
-# schema. The testdata has no partsupp table (TESTDATA.md), so the
-# part<->supplier relation is derived from lineitem (l_partkey,
-# l_suppkey) with supplycost := MIN(l_extendedprice / l_quantity); no
-# l_commitdate/l_receiptdate, so "late" := shipped >60 days after the
-# order date. Each adaptation preserves the query's structural
-# character (correlated scalar min, HAVING vs global scalar, NOT IN,
-# nested IN + HAVING, double-correlated EXISTS/NOT EXISTS) — that
-# shape, not the literal predicate constants, is what exercises the
-# engine. Reference parity note: the reference has no relational
-# query surface at all (SURVEY.md §2.5); these extend it.
-# ---------------------------------------------------------------------------
-PSUPP_SQL = (
-    "SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey, "
-    "MIN(l_extendedprice / l_quantity) AS ps_supplycost "
-    "FROM lineitem GROUP BY l_partkey, l_suppkey"
-)
-
-
-def _psupp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lineitem-derived stand-in for TPC-H partsupp (doubles: the
-    division and MIN are IEEE-exact on both engines)."""
-    return (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy(
-            F.col("l_partkey").alias("ps_partkey"),
-            F.col("l_suppkey").alias("ps_suppkey"),
-        )
-        .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("ps_supplycost"))
-    )
-
-
-@register(
-    "tpch_q2_min_cost_supplier",
-    f"""
-WITH psupp AS ({PSUPP_SQL}),
-eur AS (
-  SELECT s.s_suppkey, s.s_acctbal, s.s_name, n.n_name
-  FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey
-  WHERE r.r_name = 'EUROPE'
-)
-SELECT e.s_acctbal, e.s_name, e.n_name, p.p_partkey, p.p_brand,
-       ps.ps_supplycost
-FROM part p
-JOIN psupp ps ON p.p_partkey = ps.ps_partkey
-JOIN eur e ON ps.ps_suppkey = e.s_suppkey
-WHERE p.p_size = 10 AND p.p_type = 'SMALL'
-  AND ps.ps_supplycost = (
-    SELECT MIN(ps2.ps_supplycost)
-    FROM psupp ps2 JOIN eur e2 ON ps2.ps_suppkey = e2.s_suppkey
-    WHERE ps2.ps_partkey = p.p_partkey
-  )
-""",
-    tags=("relational", "tpch", "subquery"),
-    doc="TPC-H Q2 shape: cheapest EUROPE supplier per SMALL size-10 "
-    "part — correlated scalar MIN decorrelated into a per-part "
-    "window MIN over ONE partkey exchange (r11: the aggregate +"
-    "join-back form re-exchanged ps_eur twice; window partition = "
-    "suppliers-per-part, bounded at any scale; A/B 1.10 -> 0.77 s). "
-    "Region/nation/supplier dims broadcast. partsupp derived from "
-    "lineitem (no partsupp in testdata).",
-)
-def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    eur = (
-        load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select("s_suppkey", "s_acctbal", "s_name", "n_name")
-    )
-    ps_eur = _psupp(spark, sf_dir).join(
-        F.broadcast(eur), F.col("ps_suppkey") == F.col("s_suppkey")
-    )
-    p = F.broadcast(
-        load_table(spark, sf_dir, "part")
-        .filter((F.col("p_size") == 10) & (F.col("p_type") == "SMALL"))
-        .select("p_partkey", "p_brand")
-    )
-    return (
-        ps_eur.withColumn(
-            "min_cost",
-            F.min("ps_supplycost").over(Window.partitionBy("ps_partkey")),
-        )
-        .filter(F.col("ps_supplycost") == F.col("min_cost"))
-        .join(p, F.col("ps_partkey") == F.col("p_partkey"))
-        .select(
-            "s_acctbal", "s_name", "n_name", "p_partkey", "p_brand", "ps_supplycost"
-        )
-    )
-
-
-@register(
-    "tpch_q11_important_stock",
-    f"""
-WITH natline AS (
-  SELECT l.l_partkey,
-         CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(25,6)) AS val
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN nation n ON s.s_nationkey = n.n_nationkey
-  WHERE n.n_name = 'NATION_7'
-)
-SELECT l_partkey, CAST(SUM(val) AS DOUBLE) AS part_value
-FROM natline
-GROUP BY l_partkey
-HAVING CAST(SUM(val) AS DOUBLE) > 1.5 * (
-  SELECT CAST(SUM(val) AS DOUBLE) / COUNT(DISTINCT l_partkey) FROM natline
-)
-""",
-    tags=("relational", "tpch", "subquery", "having"),
-    doc="TPC-H Q11 shape: parts holding an outsized share of one "
-    "nation's supply value — per-part aggregate HAVING-compared to a "
-    "global scalar aggregate over the same relation. The scalar "
-    "total broadcasts as a single-row cross join (no driver "
-    "collect); supplier/nation dims broadcast; one partkey shuffle. "
-    "Decimal accumulators keep the Spark/DuckDB sums bit-identical.",
-)
-def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
-    s = (
-        load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey")
-    )
-    natline = (
-        load_table(spark, sf_dir, "lineitem")
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            "l_partkey",
-            (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-            .cast("decimal(25,6)")
-            .alias("val"),
-        )
-    )
-    per_part = natline.groupBy("l_partkey").agg(
-        F.sum("val").cast("double").alias("part_value")
-    )
-    total = natline.agg(
-        F.sum("val").cast("double").alias("total_value"),
-        F.countDistinct("l_partkey").alias("nparts"),
-    )
-    return (
-        per_part.crossJoin(F.broadcast(total))
-        .filter(
-            F.col("part_value")
-            > F.lit(1.5) * (F.col("total_value") / F.col("nparts"))
-        )
-        .select("l_partkey", "part_value")
-    )
-
-
-@register(
-    "tpch_q16_supplier_cnt",
-    """
-SELECT p.p_brand, p.p_type, p.p_size,
-       COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey
-WHERE p.p_brand <> 'Brand#1'
-  AND p.p_type <> 'PROMO'
-  AND p.p_size IN (1, 4, 9, 16, 25, 36, 49)
-  AND l.l_suppkey NOT IN (
-    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0
-  )
-GROUP BY p.p_brand, p.p_type, p.p_size
-""",
-    tags=("relational", "tpch", "anti-join", "distinct-agg"),
-    doc="TPC-H Q16 shape: distinct-supplier count per part attribute "
-    "triple, excluding a NOT IN supplier blacklist (negative account "
-    "balance standing in for the comment-pattern predicate the "
-    "schema lacks). NOT IN runs as a broadcast LEFT ANTI join "
-    "(s_suppkey is non-null so NOT IN == anti join); part dim "
-    "broadcasts with size/brand/type pushed to the scan; the "
-    "COUNT(DISTINCT) expands to a two-phase aggregate.",
-)
-def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = F.broadcast(
-        load_table(spark, sf_dir, "part")
-        .filter(
-            (F.col("p_brand") != "Brand#1")
-            & (F.col("p_type") != "PROMO")
-            & F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49)
-        )
-        .select("p_partkey", "p_brand", "p_type", "p_size")
-    )
-    bad = (
-        load_table(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") < 0)
-        .select("s_suppkey")
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_partkey", "l_suppkey")
-        .join(F.broadcast(bad), F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
-    )
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-@register(
-    "tpch_q20_excess_shippers",
-    """
-SELECT s.s_name, s.s_acctbal
-FROM supplier s
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-WHERE n.n_name = 'NATION_3'
-  AND s.s_suppkey IN (
-    SELECT l.l_suppkey
-    FROM lineitem l
-    WHERE l.l_partkey IN (
-      SELECT p_partkey FROM part WHERE p_name LIKE 'red%'
-    )
-    GROUP BY l.l_suppkey, l.l_partkey
-    HAVING SUM(CASE WHEN l.l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
-                    THEN l.l_quantity ELSE 0 END)
-         > 0.5 * SUM(l.l_quantity)
-  )
-""",
-    tags=("relational", "tpch", "subquery", "semi-join"),
-    doc="TPC-H Q20 shape: suppliers in one nation that shipped more "
-    "than half of their all-time volume of some red part during 1998 "
-    "— the nested IN-subquery + correlated-HAVING pattern, "
-    "decorrelated to conditional-vs-total aggregation per (supplier, "
-    "part) then a LEFT SEMI join. Part-name filter broadcasts into "
-    "the lineitem scan; quantities are integral doubles so the 2x "
-    "comparison is exact.",
-)
-def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    red = F.broadcast(
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("red%"))
-        .select("p_partkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem").join(
-        red, F.col("l_partkey") == F.col("p_partkey"), "left_semi"
-    )
-    excess = (
-        li.groupBy("l_suppkey", "l_partkey")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("l_shipdate")
-                    >= F.lit("1998-01-01 00:00:00").cast("timestamp"),
-                    F.col("l_quantity"),
-                ).otherwise(F.lit(0.0))
-            ).alias("qty_1998"),
-            F.sum("l_quantity").alias("qty_total"),
-        )
-        .filter(F.col("qty_1998") > 0.5 * F.col("qty_total"))
-        .select("l_suppkey")
-        .distinct()
-    )
-    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
-    return (
-        load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(excess, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
-        .select("s_name", "s_acctbal")
-    )
-
-
-@register(
-    "tpch_q21_waiting_suppliers",
-    """
-SELECT s.s_name, COUNT(*) AS numwait
-FROM supplier s
-JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-JOIN orders o ON o.o_orderkey = l1.l_orderkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-WHERE o.o_orderstatus = 'F'
-  AND n.n_name = 'NATION_5'
-  AND l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-  AND EXISTS (SELECT 1 FROM lineitem l2
-              WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                  WHERE l3.l_orderkey = l1.l_orderkey
-                    AND l3.l_suppkey <> l1.l_suppkey
-                    AND l3.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-GROUP BY s.s_name
-""",
-    tags=("relational", "tpch", "subquery", "anti-join"),
-    doc="TPC-H Q21 shape: suppliers solely responsible for a late "
-    "multi-supplier order ('late' := shipped >60 days after the "
-    "order date, standing in for receipt>commit which the schema "
-    "lacks). The EXISTS/NOT-EXISTS pair decorrelates into one "
-    "per-order aggregate — distinct suppliers and distinct LATE "
-    "suppliers — reused for both predicates (ns > 1 AND nlate = 1): "
-    "one orderkey shuffle instead of two correlated re-scans. "
-    "Nation and per-order stats joins are key-partitioned; nation "
-    "dim broadcasts.",
-)
-def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus") == "F")
-        .select("o_orderkey", "o_orderdate")
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_shipdate")
-        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .withColumn(
-            "is_late",
-            F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"),
-        )
-    )
-    ordstats = li.groupBy("l_orderkey").agg(
-        F.countDistinct("l_suppkey").alias("ns"),
-        F.countDistinct(F.when(F.col("is_late"), F.col("l_suppkey"))).alias("nlate"),
-    )
-    sole_late = (
-        li.filter(F.col("is_late"))
-        .join(
-            ordstats.filter((F.col("ns") > 1) & (F.col("nlate") == 1)),
-            "l_orderkey",
-        )
-    )
-    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
-    s = (
-        load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", "s_name")
-    )
-    return (
-        sole_late.join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
     )
 
 

@@ -388,48 +388,8 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Multi-join analytics (TPC-H Q3/Q4/Q5 shapes)
+# EXISTS as a semi-join (TPC-H Q4 shape)
 # ---------------------------------------------------------------------------
-@register(
-    "tpch_q3_building",
-    f"""
-SELECT l.l_orderkey,
-       CAST(epoch(o.o_orderdate) AS BIGINT) AS od_sec,
-       {_dec_sum_sql('l.l_extendedprice * (1 - l.l_discount)', 'revenue')}
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-WHERE c.c_mktsegment = 'BUILDING'
-  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-  AND l.l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY l.l_orderkey, od_sec
-ORDER BY revenue DESC, l.l_orderkey ASC
-LIMIT 10
-""",
-    tags=("relational", "multi-join", "topk"),
-    doc="TPC-H Q3 shape: 3-way join with selective pushdown filters on "
-    "both fact and dim sides, grouped revenue, top-10. Filters reach "
-    "the parquet scans (PushedFilters); join order left to Catalyst.",
-)
-def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey", _epoch_sec(F.col("o_orderdate")).alias("od_sec"))
-        .agg(_dec_sum(revenue, "revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
-        .limit(10)
-    )
 
 
 @register(
@@ -459,48 +419,6 @@ def q_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_semi",
     )
     return joined.groupBy("o_orderpriority").agg(F.count("*").alias("order_count"))
-
-
-@register(
-    "tpch_q5_regional_revenue",
-    f"""
-SELECT n.n_name,
-       {_dec_sum_sql('l.l_extendedprice * (1 - l.l_discount)', 'revenue')}
-FROM customer c
-JOIN orders o   ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-JOIN nation n   ON s.s_nationkey = n.n_nationkey
-JOIN region r   ON n.n_regionkey = r.r_regionkey
-WHERE r.r_name = 'ASIA'
-  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY n.n_name
-""",
-    tags=("relational", "multi-join", "broadcast"),
-    doc="TPC-H Q5 shape: 6-table star join with region pruning; tiny "
-    "dims broadcast, fact-side joins shuffle on their keys.",
-)
-def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    n = F.broadcast(load_table(spark, sf_dir, "nation"))
-    r = F.broadcast(load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA"))
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
-        .join(s, (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey))
-        .join(n, s.s_nationkey == n.n_nationkey)
-        .join(r, n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(_dec_sum(revenue, "revenue"))
-    )
 
 
 @register(

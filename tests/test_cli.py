@@ -115,15 +115,15 @@ def test_cli_verify_unknown_name():
 
 
 def test_plan_cli(capsys):
-    rc = main(["plan", "tpch_q6_forecast_revenue",
+    rc = main(["plan", "filter_purchases_high_value",
                "--sf-dir", "/root/testdata/sf0.001"])
     assert rc == 0
     out = capsys.readouterr().out
     import json
 
     payload = json.loads(out)
-    assert payload["query"] == "tpch_q6_forecast_revenue"
-    assert payload["pushed_filters"], "q6's scan filters must be pushed"
+    assert payload["query"] == "filter_purchases_high_value"
+    assert payload["pushed_filters"], "the purchase filters must be pushed"
     assert payload["python_evals"] == 0
     assert main(["plan", "no_such_query"]) == 2
 

@@ -19,35 +19,6 @@ from msstreamingstack_spark.queries import REGISTRY
 SF = "/root/testdata/sf0.01"
 
 
-def test_q6_filters_reach_scan(spark):
-    f = plan_facts(REGISTRY["tpch_q6_forecast_revenue"].builder(spark, SF))
-    assert f.pushes_filter("GreaterThanOrEqual(l_shipdate")
-    assert f.pushes_filter("LessThan(l_quantity,24.0)")
-    assert f.pushes_filter("GreaterThanOrEqual(l_discount,0.04)")
-
-
-def test_q6_scan_pruned_to_needed_columns(spark):
-    df = REGISTRY["tpch_q6_forecast_revenue"].builder(spark, SF)
-    assert_scan_pruned(
-        df,
-        must_read=["l_extendedprice", "l_discount"],
-        must_not_read=["l_partkey", "l_returnflag", "l_orderkey"],
-    )
-
-
-def test_q3_dims_broadcast_and_filters_push(spark):
-    f = plan_facts(REGISTRY["tpch_q3_building"].builder(spark, SF))
-    assert f.broadcast_joins >= 1, f.text
-    assert f.pushes_filter("EqualTo(c_mktsegment,BUILDING)")
-    assert f.pushes_filter("GreaterThan(l_shipdate")
-
-
-def test_q10_selective_pushdown(spark):
-    f = plan_facts(REGISTRY["tpch_q10_returned_items"].builder(spark, SF))
-    assert f.pushes_filter("EqualTo(l_returnflag,R)")
-    assert f.broadcast_joins >= 2  # nation + customer/orders side
-
-
 def test_range_join_is_broadcast_not_cartesian(spark):
     f = plan_facts(REGISTRY["range_join_price_bands"].builder(spark, SF))
     assert "BroadcastNestedLoopJoin" in f.text
@@ -101,23 +72,6 @@ def test_aggregates_are_partial_then_final(spark, name):
     assert "partial_" in f.text
 
 
-def test_q8_dims_broadcast_no_python(spark):
-    """8-way q8: every dim (part, nation x2, region) broadcasts — the
-    only shuffles left are the lineitem-orders-customer fact joins —
-    and the ratio math stays JVM-side."""
-    f = plan_facts(REGISTRY["tpch_q8_market_share"].builder(spark, SF))
-    assert f.broadcast_joins >= 4, f.text
-    assert f.python_evals == 0
-    assert f.pushes_filter("EqualTo(p_type,ECONOMY)")
-    assert f.pushes_filter("GreaterThanOrEqual(o_orderdate")
-
-
-def test_q17_threshold_join_broadcasts_part_dim(spark):
-    f = plan_facts(REGISTRY["tpch_q17_small_qty_revenue"].builder(spark, SF))
-    assert f.broadcast_joins >= 1, f.text
-    assert f.pushes_filter("EqualTo(p_brand,Brand#1)")
-
-
 def test_hof_pipeline_is_pure_jvm_map(spark):
     """Higher-order array ops must not explode, shuffle, or leave the
     JVM: no exchange except the scan, no Python eval."""
@@ -150,52 +104,12 @@ def test_grouping_sets_single_expand_pass(spark):
 
 
 def test_interval_join_no_cartesian(spark):
-    """The batch face of the stream-stream interval join must run as
-    an equi-join on user with the time bound as residual predicate —
-    never a cartesian/nested-loop."""
+    """The attribution query's join must run as an equi-join on user
+    with the interval as its residual predicate — never a
+    cartesian/nested-loop."""
     f = plan_facts(REGISTRY["interval_join_attribution"].builder(spark, SF))
     assert "CartesianProduct" not in f.text
     assert "BroadcastNestedLoopJoin" not in f.text
-
-
-def test_q2_min_cost_broadcasts_dims(spark):
-    """q2: region/nation/supplier and the filtered part dim all
-    broadcast; the only shuffles are the per-(part,supp) cost and
-    per-part min aggregations."""
-    f = plan_facts(REGISTRY["tpch_q2_min_cost_supplier"].builder(spark, SF))
-    assert f.broadcast_joins >= 3, f.text
-    assert f.python_evals == 0
-    assert f.pushes_filter("EqualTo(p_type,SMALL)")
-    assert f.pushes_filter("EqualTo(p_size,10)")
-    assert f.pushes_filter("EqualTo(r_name,EUROPE)")
-
-
-def test_q16_not_in_runs_as_broadcast_anti_join(spark):
-    f = plan_facts(REGISTRY["tpch_q16_supplier_cnt"].builder(spark, SF))
-    assert "LeftAnti" in f.text, f.text
-    assert f.broadcast_joins >= 2  # blacklist + part dim
-    assert f.pushes_filter("LessThan(s_acctbal,0.0)")
-    assert f.pushes_filter("In(p_size")
-
-
-def test_q20_nested_in_runs_as_semi_joins(spark):
-    f = plan_facts(REGISTRY["tpch_q20_excess_shippers"].builder(spark, SF))
-    assert f.text.count("LeftSemi") >= 2, f.text
-    assert f.pushes_filter("StringStartsWith(p_name,red)")
-    assert "CartesianProduct" not in f.text
-
-
-def test_q21_exists_pair_single_order_aggregate(spark):
-    """The EXISTS/NOT-EXISTS pair must decorrelate to ONE per-order
-    aggregate joined back on orderkey — no nested-loop re-scans —
-    and Catalyst pushes the late predicate into the sole-late branch's
-    join condition while the stats branch stays unfiltered."""
-    f = plan_facts(REGISTRY["tpch_q21_waiting_suppliers"].builder(spark, SF))
-    assert "CartesianProduct" not in f.text
-    assert "BroadcastNestedLoopJoin" not in f.text
-    assert f.python_evals == 0
-    assert f.pushes_filter("EqualTo(o_orderstatus,F)")
-    assert f.pushes_filter("EqualTo(n_name,NATION_5)")
 
 
 def test_quantize_int8_is_narrow_map(spark):

@@ -345,6 +345,38 @@ def test_every_package_import_resolves():
     assert not broken, "\n".join(broken)
 
 
+def test_no_unused_module_imports():
+    """Every module-level `import`/`from ... import` binding in the
+    package and the entry point is used as a name somewhere in its
+    module. A cut that deletes a name's last user leaves no import of
+    it behind. `from __future__` imports and statements marked
+    `# noqa` (the subpackages' re-exports, the registry's side-effect
+    imports) are exempt. No Spark session."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(REPO)
+    files = [root / "__spark_entry__.py", *sorted((root / "msstreamingstack_spark").rglob("*.py"))]
+    unused = []
+    for path in files:
+        src = path.read_text()
+        lines = src.splitlines()
+        tree = ast.parse(src, str(path))
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for n in tree.body:
+            if not isinstance(n, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(n, ast.ImportFrom) and n.module == "__future__":
+                continue
+            for a in n.names:
+                bound = a.asname or a.name.split(".")[0]
+                noqa = "# noqa" in lines[n.lineno - 1] or "# noqa" in lines[a.lineno - 1]
+                if bound not in used and not noqa:
+                    unused.append(f"{path.relative_to(root)}:{a.lineno}: {bound}")
+    assert len(files) > 20, files  # the walk found the package
+    assert not unused, "imported but never used:\n" + "\n".join(unused)
+
+
 # What only tests reach (``tests/caller_scan.py``'s second list), each
 # with why it stays: a reference-contract adapter, a fixture or oracle of
 # a test of kept code, a definition that goes with its family's stage, or

@@ -11,8 +11,6 @@ idiomatic PySpark 3.5+/4.x DataFrame engine:
   not an external cache round-trip
 - one streaming query with ``foreachBatch`` fan-out instead of five
   concurrent queries re-reading the source
-- extension operators for large-scale training-data pipelines
-  (exact embedding math)
 
 Layout:
     session.py    — SparkSession factory tuned for the harness

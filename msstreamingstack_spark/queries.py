@@ -242,7 +242,6 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 from msstreamingstack_spark import queries_relational  # noqa: E402,F401
 from msstreamingstack_spark import queries_state  # noqa: E402,F401
-from msstreamingstack_spark import queries_extensions  # noqa: E402,F401
 from msstreamingstack_spark import queries_streaming  # noqa: E402,F401
 from msstreamingstack_spark import queries_advanced  # noqa: E402,F401
 from msstreamingstack_spark import queries_layout  # noqa: E402,F401

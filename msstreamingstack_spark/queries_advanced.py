@@ -803,84 +803,8 @@ def q_interval_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Higher-order functions, lateral explode, and window-frame extras
+# Window-frame extras
 # ---------------------------------------------------------------------------
-@register(
-    "hof_component_means",
-    """
-SELECT idx, CAST(SUM(CAST(CAST(comp AS DOUBLE) AS DECIMAL(25,6))) AS DOUBLE)
-         / COUNT(*) AS mean_comp,
-       COUNT(*) AS n
-FROM (
-  SELECT CAST(unnest(range(len(embedding))) AS INTEGER) AS idx,
-         unnest(embedding) AS comp
-  FROM embeddings
-)
-WHERE idx < 8
-GROUP BY idx
-""",
-    tags=("extension", "higher-order", "lateral"),
-    doc="Lateral array explode: posexplode over the 64-dim embedding "
-    "column, per-component mean of the first 8 dimensions. Floats "
-    "widen exactly to DOUBLE then sum through DECIMAL(25,6) so the "
-    "parallel aggregation is order-independent and bit-matches the "
-    "oracle. At scale the explode is map-side (no shuffle before the "
-    "8-key agg) and column pruning reads only the embedding column.",
-)
-def q_hof_component_means(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select("embedding")
-    exploded = emb.select(
-        F.posexplode("embedding").alias("idx", "comp")
-    ).filter(F.col("idx") < 8)
-    dec = F.col("comp").cast("double").cast("decimal(25,6)")
-    return (
-        exploded.groupBy("idx")
-        .agg(
-            (F.sum(dec).cast("double") / F.count("*")).alias("mean_comp"),
-            F.count("*").alias("n"),
-        )
-        .select(F.col("idx").cast("int").alias("idx"), "mean_comp", "n")
-    )
-
-
-@register(
-    "hof_array_pipeline",
-    """
-SELECT vec_id,
-       len(list_filter(list_transform(embedding, x -> CAST(x AS DOUBLE)),
-                       x -> x > 0.0)) AS n_positive,
-       CAST(list_sum(list_transform(embedding,
-            x -> CAST(CAST(CAST(x AS DOUBLE) AS DECIMAL(25,6)) AS DOUBLE)))
-         AS DOUBLE) AS comp_sum
-FROM embeddings
-""",
-    tags=("extension", "higher-order"),
-    doc="Higher-order array functions entirely JVM-side: "
-    "transform -> filter -> size for the positive-component count and "
-    "aggregate for the component sum — no explode, no shuffle, no "
-    "Python; one narrow map stage over the vector column. Elements "
-    "round through DECIMAL(25,6) inside the fold so the left-to-right "
-    "lambda sum is bit-stable against the oracle.",
-)
-def q_hof_array_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    n_pos = F.size(F.filter(as_double, lambda x: x > 0.0)).cast("bigint")
-    comp_sum = F.aggregate(
-        F.transform(
-            F.col("embedding"),
-            lambda x: x.cast("double").cast("decimal(25,6)").cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return emb.select(
-        "vec_id",
-        n_pos.alias("n_positive"),
-        comp_sum.alias("comp_sum"),
-    )
-
-
 @register(
     "window_rank_family",
     f"""
@@ -1777,155 +1701,6 @@ def q_graph_pagerank_personalized(
         ),
         seeds=seeds,
     ).select(copurchase_node_str().alias("node"), "pagerank")
-
-
-# ---------------------------------------------------------------------------
-# Coreset selection: k-center greedy (farthest-point sampling) over
-# the embedding corpus — the diverse-subset primitive data curation
-# and active-learning pipelines run to pick representative documents.
-# ---------------------------------------------------------------------------
-KCENTER_K = 8
-
-
-def kcenter_sql(k: int = KCENTER_K) -> str:
-    """DuckDB twin of the greedy k-center selection — the k rounds
-    unrolled as chained CTEs (the pagerank_sql precedent), centers
-    derived INSIDE the SQL so the oracle is fully self-contained.
-    Distances are Σ round((a-b)*(a-b), 9) summed in DECIMAL(28,9):
-    identical per-term rounding on both sides makes the fold
-    order-free and the argmax ties deterministic (vec_id asc)."""
-    steps = []
-    for t in range(1, k):
-        prev_d = f"d{t-1}"
-        prev_c = f"c{t-1}"
-        steps.append(
-            f"""d{t} AS (
-  SELECT d.vec_id, LEAST(d.min_d, s.d2) AS min_d
-  FROM {prev_d} d JOIN (
-    SELECT a.vec_id,
-           CAST(SUM(CAST(round((a.v - b.v) * (a.v - b.v), 9)
-                         AS DECIMAL(28,9))) AS DOUBLE) AS d2
-    FROM ue a JOIN ue b ON a.i = b.i
-    WHERE b.vec_id = (SELECT vid FROM {prev_c})
-    GROUP BY a.vec_id
-  ) s ON s.vec_id = d.vec_id
-),
-c{t} AS (
-  SELECT vec_id AS vid, min_d AS sel_d
-  FROM d{t} ORDER BY min_d DESC, vec_id ASC LIMIT 1
-)"""
-        )
-    chain = ",\n".join(steps)
-    selects = "\nUNION ALL\n".join(
-        f"SELECT {t + 1} AS sel_round, vid AS vec_id, round(sel_d, 9) AS dist2 FROM c{t}"
-        for t in range(1, k)
-    )
-    return f"""
-WITH ue AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS v
-  FROM embeddings
-),
-c0 AS (
-  SELECT MIN(vec_id) AS vid, CAST(0.0 AS DOUBLE) AS sel_d FROM embeddings
-),
-d0 AS (
-  SELECT a.vec_id,
-         CAST(SUM(CAST(round((a.v - b.v) * (a.v - b.v), 9)
-                       AS DECIMAL(28,9))) AS DOUBLE) AS min_d
-  FROM ue a JOIN ue b ON a.i = b.i
-  WHERE b.vec_id = (SELECT vid FROM c0)
-  GROUP BY a.vec_id
-),
-{chain}
-SELECT 1 AS sel_round, vid AS vec_id, round(sel_d, 9) AS dist2 FROM c0
-UNION ALL
-{selects}
-"""
-
-
-@register(
-    "coreset_kcenter",
-    kcenter_sql(),
-    tags=("extension", "similarity", "iterative", "coreset"),
-    doc="Greedy k-center coreset (farthest-point sampling, K=8) over "
-    "the embedding corpus: seed at the min vec_id, then repeatedly "
-    "pick the point farthest from its nearest selected center — the "
-    "2-approximation to the k-center cover that curation pipelines "
-    "use for diverse subset selection. Spark side: the only state "
-    "collected is K vectors (bounded at K*D doubles), each round "
-    "is one narrow map (distance to the ONE new broadcast center, "
-    "fold kept via least()) plus a top-1 "
-    "TakeOrdered reduce — no shuffle, O(K*N*D) total work, trivially "
-    "data-parallel at 100 TB. Per-term round-then-DECIMAL-sum makes "
-    "the squared distances bit-identical to the unrolled-CTE oracle "
-    "(which re-derives every center inside SQL), so the argmax "
-    "choices — and therefore the whole greedy trajectory — match "
-    "exactly.",
-)
-def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-
-    def d2_to(center_vals):
-        cvec = F.array(*[F.lit(float(x)) for x in center_vals])
-        term = F.zip_with(
-            F.col("embedding"),
-            cvec,
-            lambda a, b: F.round(
-                (a.cast("double") - b) * (a.cast("double") - b), 9
-            ).cast("decimal(28,9)"),
-        )
-        return F.aggregate(
-            term,
-            F.lit(0).cast("decimal(28,9)"),
-            # re-cast: DECIMAL addition widens precision each step and
-            # aggregate() requires the merge type to stay fixed; the
-            # cast is exact (terms are <1 with 9-decimal scale)
-            lambda acc, x: (acc + x).cast("decimal(28,9)"),
-        ).cast("double")
-
-    seed = (
-        emb.orderBy(F.asc("vec_id")).limit(1).collect()[0]
-    )  # 1 row collected
-    selected = [(1, int(seed["vec_id"]), 0.0)]
-    # Persist each round's min_d so round t evaluates ONE new center
-    # distance over the materialized fold, not the whole re-derived
-    # least(...) chain — O(K*N*D) total instead of O(K^2*N*D), which
-    # matters because the decimal-HOF distance is interpreter-bound.
-    md = emb.withColumn("min_d", d2_to(seed["embedding"])).persist()
-    prev = None
-    try:
-        for t in range(2, KCENTER_K + 1):
-            top = (
-                md.orderBy(F.desc("min_d"), F.asc("vec_id"))
-                .limit(1)
-                .collect()[0]
-            )  # top-1 TakeOrdered: a reduce, not a sort-all — and the
-            # ONE action of the round: it materializes md's persist
-            # (reading the still-cached parent), after which the
-            # parent can be released. The r10 shape ran a separate
-            # count() per round to materialize before unpersisting —
-            # K-1 extra jobs whose only purpose this fold absorbs.
-            if prev is not None:
-                prev.unpersist()
-                prev = None
-            selected.append((t, int(top["vec_id"]), float(top["min_d"])))
-            if t < KCENTER_K:
-                nxt = md.withColumn(
-                    "min_d", F.least(F.col("min_d"), d2_to(top["embedding"]))
-                ).persist()
-                prev = md
-                md = nxt
-    finally:
-        md.unpersist()
-        if prev is not None:
-            prev.unpersist()
-    out = spark.createDataFrame(
-        selected, "sel_round int, vec_id bigint, dist2 double"
-    )
-    return out.select(
-        "sel_round", "vec_id", F.round(F.col("dist2"), 9).alias("dist2")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -62,14 +62,6 @@ DOCUMENTS_SCHEMA = T.StructType(
     ]
 )
 
-EMBEDDINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
-)
-
 TPCH_SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -138,7 +130,6 @@ TPCH_SCHEMAS: dict[str, T.StructType] = {
     ),
     "events": EVENTS_SCHEMA,
     "documents": DOCUMENTS_SCHEMA,
-    "embeddings": EMBEDDINGS_SCHEMA,
 }
 
 TABLE_NAMES = tuple(TPCH_SCHEMAS)

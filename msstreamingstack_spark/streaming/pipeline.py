@@ -94,15 +94,15 @@ def read_event_stream(
                 for f in EVENTS_SCHEMA.fields
             ]
         )
-        ts_sec = F.unix_timestamp(F.col("ts"))
+        ts_sec = "unix_timestamp(ts)"
     else:
         schema = EVENTS_SCHEMA
-        ts_sec = (F.col("ts") / NANOS_PER_SEC).cast("long")
+        ts_sec = f"CAST(ts / {NANOS_PER_SEC} AS BIGINT)"
     return (
         spark.readStream.schema(schema)
         .option("maxBytesPerTrigger", max_bytes_per_trigger)
         .parquet(path)
-        .withColumn("ts_sec", ts_sec)
+        .selectExpr("*", f"{ts_sec} AS ts_sec")
     )
 
 
@@ -166,11 +166,15 @@ def run_pipeline(
     are sessionized in (ts_sec, event_id) order within a trigger, so
     events out of order ACROSS drops can give different sessions
     depending on which drops shared a trigger."""
+    # The plan up to the state operator is written as SQL strings (here,
+    # in read_event_stream, with_quality_metrics and sessionize_stream):
+    # each PySpark Column call costs py4j round trips on every query start.
+
     # the module constant read at call time, not the default bound at
     # definition time, so lowering it takes effect on the next query
     events = read_event_stream(
         spark, source_path, max_bytes_per_trigger=ADMIT_BYTES_PER_TRIGGER
-    ).select(
+    ).selectExpr(
         "event_id", "user_id", "ts_sec", "event_type", "value"
     )
     events = with_quality_metrics(events)
@@ -248,13 +252,11 @@ def with_quality_metrics(df: DataFrame, name: str = "quality") -> DataFrame:
     """
     return df.observe(
         name,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(
-            F.when(
-                F.col("user_id").isNull() | (F.trim(F.col("user_id").cast("string")) == ""),
-                1,
-            ).otherwise(0)
-        ).alias("n_bad_user"),
-        F.sum(F.when(F.col("ts_sec").isNull(), 1).otherwise(0)).alias("n_bad_ts"),
-        F.max("ts_sec").alias("max_ts_sec"),
+        F.expr("count(1) AS n_rows"),
+        F.expr(
+            "sum(CASE WHEN user_id IS NULL OR trim(CAST(user_id AS STRING)) = ''"
+            " THEN 1 ELSE 0 END) AS n_bad_user"
+        ),
+        F.expr("sum(CASE WHEN ts_sec IS NULL THEN 1 ELSE 0 END) AS n_bad_ts"),
+        F.expr("max(ts_sec) AS max_ts_sec"),
     )

@@ -192,9 +192,9 @@ def sessionize_stream(events: DataFrame, gap_sec: int = DEFAULT_GAP_SEC) -> Data
     and are left out (``pipeline.with_quality_metrics`` counts them).
     Shuffles once on the user's hash bucket into the state store
     partitioning."""
-    keyed = events.where(
-        F.col("user_id").isNotNull() & F.col("ts_sec").isNotNull()
-    ).withColumn("bucket", F.pmod(F.hash("user_id"), F.lit(BUCKETS)))
+    keyed = events.where("user_id IS NOT NULL AND ts_sec IS NOT NULL").selectExpr(
+        "*", f"pmod(hash(user_id), {BUCKETS}) AS bucket"
+    )
     return keyed.groupBy("bucket").applyInPandasWithState(
         make_bucket_fn(gap_sec),
         outputStructType=OUTPUT_SCHEMA,

@@ -210,46 +210,3 @@ def test_percentile_sketch_sample_properties(spark, sf_correctness):
                 e,
                 s,
             )
-
-
-def test_coreset_kcenter_matches_python_greedy(spark, sf_correctness):
-    """Pure-Python greedy farthest-point model with the same
-    round-then-exact-sum distance discipline must pick the same
-    centers in the same order; selection distances must be
-    non-increasing (the greedy invariant behind the 2-approximation)."""
-    from decimal import Decimal
-
-    from msstreamingstack_spark.queries import REGISTRY
-    from msstreamingstack_spark.queries_advanced import KCENTER_K
-
-    emb = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in spark.read.parquet(f"{sf_correctness}/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .collect()
-    }
-
-    def d2(a, b):
-        return float(
-            sum(Decimal(str(round((x - y) * (x - y), 9))) for x, y in zip(a, b))
-        )
-
-    seed = min(emb)
-    selected = [(1, seed, 0.0)]
-    min_d = {v: d2(emb[v], emb[seed]) for v in emb}
-    for t in range(2, KCENTER_K + 1):
-        top = max(min_d, key=lambda v: (min_d[v], -v))
-        selected.append((t, top, round(min_d[top], 9)))
-        for v in emb:
-            min_d[v] = min(min_d[v], d2(emb[v], emb[top]))
-
-    rows = sorted(
-        REGISTRY["coreset_kcenter"].builder(spark, sf_correctness).collect(),
-        key=lambda r: r["sel_round"],
-    )
-    got = [(r["sel_round"], r["vec_id"], r["dist2"]) for r in rows]
-    assert [(t, v) for t, v, _ in got] == [(t, v) for t, v, _ in selected]
-    for (_, _, g), (_, _, e) in zip(got, selected):
-        assert abs(g - e) <= 1e-9
-    dists = [d for t, _, d in got if t > 1]
-    assert dists == sorted(dists, reverse=True)

@@ -72,15 +72,6 @@ def test_aggregates_are_partial_then_final(spark, name):
     assert "partial_" in f.text
 
 
-def test_hof_pipeline_is_pure_jvm_map(spark):
-    """Higher-order array ops must not explode, shuffle, or leave the
-    JVM: no exchange except the scan, no Python eval."""
-    f = plan_facts(REGISTRY["hof_array_pipeline"].builder(spark, SF))
-    assert f.python_evals == 0
-    assert "Generate" not in f.text  # no explode
-    assert "Exchange" not in f.text  # narrow map over the scan
-
-
 def test_range_frame_single_window_pass(spark):
     """Both RANGE-frame aggs share one Window operator: one shuffle on
     user_id, one sort, no second exchange."""
@@ -110,17 +101,6 @@ def test_interval_join_no_cartesian(spark):
     f = plan_facts(REGISTRY["interval_join_attribution"].builder(spark, SF))
     assert "CartesianProduct" not in f.text
     assert "BroadcastNestedLoopJoin" not in f.text
-
-
-def test_quantize_int8_is_narrow_map(spark):
-    """Quantization is per-row array math: no join, no key shuffle, no
-    Python — the only exchange is spread()'s round-robin parallelism
-    fix for the 1-split local parquet, which a real multi-split scan
-    wouldn't need."""
-    f = plan_facts(REGISTRY["embedding_quantize_int8"].builder(spark, SF))
-    assert f.python_evals == 0
-    assert "Join" not in f.text
-    assert "hashpartitioning" not in f.text, f.text
 
 
 def test_sql_frontend_subquery_decorrelates(spark):

@@ -8,6 +8,7 @@ import inspect
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from msstreamingstack_spark.queries import REGISTRY
 
@@ -66,3 +67,77 @@ def test_registry_complete_under_any_first_import():
         got = _registry_after_first_import(module)
         assert got.keys() == want.keys(), module
         assert got == want, module
+
+
+def test_registry_metadata_consistency(spark):
+    """Every registry entry carries a doc and at least one tag; every
+    oracle references only fixture tables; names are unique and
+    builder callables are distinct (no accidental double-register)."""
+    tables = {"region", "nation", "customer", "supplier", "part",
+              "orders", "lineitem", "events"}
+    builders = set()
+    for name, spec in REGISTRY.items():
+        assert spec.doc and len(spec.doc) > 40, name
+        assert spec.tags, name
+        assert id(spec.builder) not in builders, name
+        builders.add(id(spec.builder))
+        if spec.oracle:
+            import re as _re
+
+            refs = set(_re.findall(
+                r"\b(?:FROM|JOIN)\s+([a-z_][a-z0-9_]*)", spec.oracle
+            ))
+            # every base-table reference must be a fixture table or a
+            # CTE defined inside the oracle itself
+            ctes = set(_re.findall(
+                r"([a-z_][a-z0-9_]*)\s*(?:\([^)]*\))?\s+AS\s*\(",
+                spec.oracle,
+            ))
+            unknown = refs - tables - ctes
+            assert not unknown, (name, unknown)
+
+
+def test_rotating_persist_bounds_registry_query_caches(spark):
+    """Leak regression: registry query functions persist reused
+    subtrees but return the frame BEFORE any action, so they can never
+    unpersist — each invocation used to stack a session-lifetime cache
+    entry. rotating_persist must bound that
+    to ONE live entry per slot: re-invoking the same call site
+    replaces its cache instead of accumulating, and different slots
+    never evict each other."""
+    from msstreamingstack_spark.caching import live_slots, rotating_persist
+
+    def persistent_ids() -> set:
+        m = spark.sparkContext._jsc.getPersistentRDDs()
+        it = m.keySet().iterator()
+        s = set()
+        while it.hasNext():
+            s.add(it.next())
+        return s
+
+    base = persistent_ids()
+    d = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta w{i} epsilon zeta") for i in range(6)],
+        ["doc_id", "text"],
+    )
+    for _ in range(4):  # 4 invocations — the old code left 4 caches
+        shingles = d.select("doc_id", F.split("text", " ").alias("toks"))
+        rotating_persist(shingles, "test.shingles").collect()
+    grown = persistent_ids() - base
+    assert len(grown) <= 1, grown  # one rotated slot, not one per call
+    assert "test.shingles" in live_slots(spark)
+
+    # distinct slots coexist (no cross-eviction): persist a second slot
+    # and confirm the first slot's entry survives
+    other = rotating_persist(d.select("doc_id"), "test.other_slot")
+    other.collect()
+    assert "test.shingles" in live_slots(spark)
+    after_other = persistent_ids() - base
+    assert len(after_other) <= 2, after_other
+    # rotation of the second slot releases only its own predecessor
+    other2 = rotating_persist(d.select("doc_id", "text"), "test.other_slot")
+    other2.collect()
+    assert len(persistent_ids() - base) <= 2
+    # cleanup: rotate tiny frames through both slots, then unpersist
+    for slot, df in list(live_slots(spark).items()):
+        df.unpersist(blocking=False)

@@ -9,7 +9,7 @@ from msstreamingstack_spark.sql_frontend import register_tables, run_sql
 
 def test_register_tables_exposes_all_views(spark, sf_smoke):
     names = register_tables(spark, sf_smoke)
-    assert "events_ts" in names and len(names) == 11
+    assert "events_ts" in names and len(names) == 10
     for n in names:
         assert spark.sql(f"SELECT * FROM {n} LIMIT 1").count() == 1
 

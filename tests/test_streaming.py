@@ -196,6 +196,7 @@ def test_null_user_row_is_counted_not_fatal(spark, tmp_path):
     assert sum(m["n_rows"] for m in observed) == 20
     assert sum(m["n_bad_user"] for m in observed) == 1
     assert sum(m["n_bad_ts"] for m in observed) == 1
+    assert max(m["max_ts_sec"] for m in observed) == 1000 + 60 * 20  # event 20
 
 
 def test_stream_static_dim_join(spark, staged_stream_dir, tmp_path):

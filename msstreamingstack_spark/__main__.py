@@ -8,15 +8,13 @@ reference's two runnable apps plus a query runner:
             single streaming query, enrichment + stateful
             sessionization, fan-out sinks
   query     run any registered named query and print its result
-  sql       run an ad-hoc Spark SQL statement over the fixture tables
-            (all tables as temp views + events_ts with canonical ts_sec)
 
 Examples:
   python -m msstreamingstack_spark produce --out /tmp/drops \\
       --batches 10 --batch-size 3
   python -m msstreamingstack_spark consume --source /tmp/drops \\
       --checkpoint /tmp/cp --parquet-out /tmp/history --once
-  python -m msstreamingstack_spark query tpch_q1 \\
+  python -m msstreamingstack_spark query histogram_event_values \\
       --sf-dir /root/testdata/sf0.01
 """
 
@@ -244,19 +242,6 @@ def _cmd_plan(args: argparse.Namespace) -> int:
     return 0
 
 
-def _cmd_sql(args: argparse.Namespace) -> int:
-    from msstreamingstack_spark.session import get_spark
-    from msstreamingstack_spark.sql_frontend import run_sql
-
-    spark = get_spark(app_name="msstreamingstack-sql")
-    spark.sparkContext.setLogLevel("WARN")
-    df = run_sql(spark, args.sf_dir, args.query)
-    if args.explain:
-        df.explain("formatted")
-    df.show(args.rows, truncate=False)
-    return 0
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="msstreamingstack_spark", description=__doc__)
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -286,13 +271,6 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("--rows", type=int, default=20)
     q.add_argument("--explain", action="store_true")
     q.set_defaults(fn=_cmd_query)
-
-    sq = sub.add_parser("sql", help="run ad-hoc SQL over the fixture tables")
-    sq.add_argument("query")
-    sq.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    sq.add_argument("--rows", type=int, default=20)
-    sq.add_argument("--explain", action="store_true")
-    sq.set_defaults(fn=_cmd_sql)
 
     vf = sub.add_parser(
         "verify", help="run the DuckDB-oracle correctness gate locally"

@@ -35,7 +35,7 @@ from msstreamingstack_spark.operators.sessionize import (
     sessionize_bucketed,
     sessionize_oracle_sql,
 )
-from msstreamingstack_spark.sources.tables import events_enriched, load_table
+from msstreamingstack_spark.sources.tables import events_enriched
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -188,49 +188,6 @@ def q_enrich_clickstream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_id", "user_id", "event_type", "value", "ts_sec",
             "prop_k", "user_agent", "device", "platform",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Relational core — aggregation flagship (TPC-H Q1 shape, SURVEY.md §2.5
-# extension surface). Exact-decimal accumulators for cross-engine bits.
-# ---------------------------------------------------------------------------
-@register(
-    "tpch_q1",
-    f"""
-SELECT l_returnflag, l_linestatus,
-       {_dec_sum_sql('l_quantity', 'sum_qty')},
-       {_dec_sum_sql('l_extendedprice', 'sum_base_price')},
-       {_dec_sum_sql('l_extendedprice * (1 - l_discount)', 'sum_disc_price')},
-       {_dec_sum_sql('l_extendedprice * (1 - l_discount) * (1 + l_tax)', 'sum_charge')},
-       CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS DOUBLE) / COUNT(*) AS avg_qty,
-       CAST(SUM(CAST(l_discount AS DECIMAL(25,6))) AS DOUBLE) / COUNT(*) AS avg_disc,
-       COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-""",
-    tags=("relational", "agg"),
-    doc="TPC-H Q1-shaped aggregation: grouped multi-agg with pushdown "
-    "filter; map-side partial aggregation + single shuffle on the "
-    "group keys.",
-)
-def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            _dec_sum(F.col("l_quantity"), "sum_qty"),
-            _dec_sum(F.col("l_extendedprice"), "sum_base_price"),
-            _dec_sum(disc_price, "sum_disc_price"),
-            _dec_sum(charge, "sum_charge"),
-            (F.sum(F.col("l_quantity").cast("decimal(25,6)")).cast("double") / F.count("*")).alias("avg_qty"),
-            (F.sum(F.col("l_discount").cast("decimal(25,6)")).cast("double") / F.count("*")).alias("avg_disc"),
-            F.count("*").alias("count_order"),
         )
     )
 

@@ -1028,451 +1028,6 @@ def q_dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SQL front-end parity: the open SQL surface (sql_frontend.run_sql) and
-# the curated DataFrame registry must produce identical plans/values.
-# ---------------------------------------------------------------------------
-_Q1_SQL_TEXT = """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS DOUBLE) AS sql_sum_qty,
-       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(25,6))) AS DOUBLE) AS sql_sum_disc_price,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS DOUBLE) / COUNT(*) AS sql_avg_qty,
-       COUNT(*) AS sql_count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-@register(
-    "sql_frontend_q1_parity",
-    f"""
-WITH q1 AS (
-  SELECT l_returnflag, l_linestatus,
-         {_dec_sum_sql('l_quantity', 'sum_qty')},
-         {_dec_sum_sql('l_extendedprice * (1 - l_discount)', 'sum_disc_price')},
-         CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS DOUBLE) / COUNT(*) AS avg_qty,
-         COUNT(*) AS count_order
-  FROM lineitem
-  WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-  GROUP BY l_returnflag, l_linestatus
-)
-SELECT l_returnflag, l_linestatus,
-       sum_qty AS sql_sum_qty, sum_disc_price AS sql_sum_disc_price,
-       avg_qty AS sql_avg_qty, count_order AS sql_count_order,
-       sum_qty AS df_sum_qty, sum_disc_price AS df_sum_disc_price,
-       avg_qty AS df_avg_qty, count_order AS df_count_order
-FROM q1
-""",
-    tags=("extension", "sql-frontend", "relational", "parity"),
-    doc="Runs TPC-H Q1 twice inside ONE plan — once as ad-hoc SQL text "
-    "through sql_frontend.run_sql (temp views over the same parquet), "
-    "once through the registry's DataFrame builder — joined on the "
-    "group keys with both aggregate sets emitted side by side. Any "
-    "front-end divergence (view schema drift, dialect skew, decimal "
-    "discipline) shows up as a driver hash mismatch. The join is a "
-    "6-row x 6-row aggregate join; AQE broadcasts it.",
-)
-def q_sql_frontend_q1_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from msstreamingstack_spark.queries import q_tpch_q1
-    from msstreamingstack_spark.sql_frontend import run_sql
-
-    sql_side = run_sql(spark, sf_dir, _Q1_SQL_TEXT)
-    df_side = q_tpch_q1(spark, sf_dir).select(
-        "l_returnflag",
-        "l_linestatus",
-        F.col("sum_qty").alias("df_sum_qty"),
-        F.col("sum_disc_price").alias("df_sum_disc_price"),
-        F.col("avg_qty").alias("df_avg_qty"),
-        F.col("count_order").alias("df_count_order"),
-    )
-    return sql_side.join(df_side, ["l_returnflag", "l_linestatus"], "inner")
-
-
-# ---------------------------------------------------------------------------
-# SQL front-end, harder shapes: join + window through the open SQL
-# surface, including the events_ts canonical-epoch convenience view.
-# ---------------------------------------------------------------------------
-_SEGTOP_SQL_TEXT = """
-WITH ue AS (
-  SELECT e.user_id, c.c_mktsegment AS segment, COUNT(*) AS n_events
-  FROM events_ts e JOIN customer c ON c.c_custkey = e.user_id
-  GROUP BY e.user_id, c.c_mktsegment
-),
-r AS (
-  SELECT *, CAST(ROW_NUMBER() OVER (
-      PARTITION BY segment ORDER BY n_events DESC, user_id) AS BIGINT) AS rnk
-  FROM ue
-)
-SELECT segment, user_id, n_events, rnk FROM r WHERE rnk <= 3
-"""
-
-
-@register(
-    "sql_frontend_window_join_parity",
-    f"""
-WITH e AS ({EVENTS_TS_SQL}),
-ue AS (
-  SELECT e.user_id, c.c_mktsegment AS segment, COUNT(*) AS n_events
-  FROM e JOIN customer c ON c.c_custkey = e.user_id
-  GROUP BY e.user_id, c.c_mktsegment
-),
-r AS (
-  SELECT *, CAST(ROW_NUMBER() OVER (
-      PARTITION BY segment ORDER BY n_events DESC, user_id) AS BIGINT) AS rnk
-  FROM ue
-)
-SELECT segment, user_id, n_events, rnk FROM r WHERE rnk <= 3
-""",
-    tags=("extension", "sql-frontend", "window", "join", "parity"),
-    doc="SQL front-end on the HARD shapes: the ad-hoc surface "
-    "(run_sql) executes a join + grouped count + ranking window with "
-    "deterministic tie-break, reading the events_ts convenience view "
-    "(canonical integer ts_sec — the dialect-sensitive part: the "
-    "oracle derives the same seconds from epoch_ns). Identical SQL "
-    "text runs on DuckDB; the driver hash-compare is the cross-"
-    "dialect gate. Top-3-per-segment output is |segments|*3 rows.",
-)
-def q_sql_frontend_window_join_parity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from msstreamingstack_spark.sql_frontend import run_sql
-
-    return run_sql(spark, sf_dir, _SEGTOP_SQL_TEXT)
-
-
-# ---------------------------------------------------------------------------
-# SQL front-end, round 5: subquery shapes and grouping sets through the
-# open SQL surface — IDENTICAL text on both engines.
-# ---------------------------------------------------------------------------
-# Scalar subquery kept float-deterministic the _dec_sum way: exact
-# DECIMAL sum cast to DOUBLE, then one double division — both engines
-# produce the same 64-bit threshold, so no order is ever on a
-# rounding-dependent side of the comparison.
-_SUBQUERY_SQL_TEXT = """
-SELECT o_orderstatus,
-       COUNT(*) AS n_above_avg,
-       COUNT(DISTINCT o_custkey) AS n_custs
-FROM orders o
-WHERE o_totalprice > (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE)
-                             / COUNT(*) FROM orders)
-  AND o_custkey IN (SELECT c_custkey FROM customer
-                    WHERE c_mktsegment = 'BUILDING')
-  AND NOT EXISTS (SELECT 1 FROM lineitem l
-                  WHERE l.l_orderkey = o.o_orderkey
-                    AND l.l_returnflag = 'R')
-GROUP BY o_orderstatus
-"""
-
-
-@register(
-    "sql_frontend_subquery_parity",
-    _SUBQUERY_SQL_TEXT,
-    tags=("extension", "sql-frontend", "subquery", "parity"),
-    doc="SQL front-end on the SUBQUERY shapes: one query text carrying "
-    "an uncorrelated scalar subquery (decimal-exact global average "
-    "price — the float-discipline part), an IN subquery (segment "
-    "membership) and a correlated NOT EXISTS (no returned lineitem), "
-    "run verbatim on both engines. Spark plans the scalar subquery as "
-    "a one-row broadcast, IN as a left-semi and NOT EXISTS as a "
-    "left-anti join — all shuffle-free on the dim side at scale; the "
-    "driver hash-compare gates dialect drift on all three "
-    "decorrelation paths.",
-)
-def q_sql_frontend_subquery_parity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from msstreamingstack_spark.sql_frontend import run_sql
-
-    return run_sql(spark, sf_dir, _SUBQUERY_SQL_TEXT)
-
-
-# COALESCE sentinels are unambiguous: the fixture's status/priority
-# values are non-null (enforced by the oracle running the same text).
-_GSETS_SQL_TEXT = """
-SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-       COALESCE(o_orderpriority, 'ALL') AS priority,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS sum_price
-FROM orders
-GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-                        (o_orderstatus), ())
-"""
-
-
-@register(
-    "sql_frontend_grouping_sets_parity",
-    _GSETS_SQL_TEXT,
-    tags=("extension", "sql-frontend", "grouping-sets", "parity"),
-    doc="SQL front-end on GROUPING SETS: detail, per-status subtotal "
-    "and grand total from ONE scan (Spark expands the sets into a "
-    "single Expand + hash aggregate — no union of three scans), sums "
-    "routed through exact DECIMAL on both engines. Identical text on "
-    "DuckDB; driver hash-compare is the cross-dialect gate for the "
-    "multi-grouping surface the curated grouping_sets_revenue query "
-    "covers DataFrame-side.",
-)
-def q_sql_frontend_grouping_sets_parity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from msstreamingstack_spark.sql_frontend import run_sql
-
-    return run_sql(spark, sf_dir, _GSETS_SQL_TEXT)
-
-
-# ---------------------------------------------------------------------------
-# SQL front-end, round 6: correlated EXISTS pair and multiset set-ops
-# through the open SQL surface — IDENTICAL text on both engines.
-# ---------------------------------------------------------------------------
-_EXISTS_SQL_TEXT = """
-SELECT c_mktsegment,
-       COUNT(*) AS n_customers,
-       CAST(SUM(CAST(c_acctbal AS DECIMAL(25,6))) AS DOUBLE) AS sum_acctbal
-FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o
-              WHERE o.o_custkey = c.c_custkey
-                AND o.o_orderpriority = '1-URGENT')
-  AND NOT EXISTS (SELECT 1 FROM orders o2
-                  WHERE o2.o_custkey = c.c_custkey
-                    AND o2.o_orderstatus = 'F'
-                    AND o2.o_totalprice < 50000)
-GROUP BY c_mktsegment
-"""
-
-
-@register(
-    "sql_frontend_exists_parity",
-    _EXISTS_SQL_TEXT,
-    tags=("extension", "sql-frontend", "subquery", "parity"),
-    doc="SQL front-end on the correlated-EXISTS pair: one query text "
-    "carrying a correlated EXISTS (has an urgent order) AND a "
-    "correlated NOT EXISTS with a compound predicate (no cheap "
-    "finished order), run verbatim on both engines. Spark decorrelates "
-    "EXISTS to a left-semi and NOT EXISTS to a left-anti join on "
-    "o_custkey — both shuffle-keyed on the correlation column, the "
-    "only shape that exists at 100 TB (no per-row subquery "
-    "execution); account-balance sum routed through exact DECIMAL so "
-    "the driver hash-compare gates both decorrelation paths.",
-)
-def q_sql_frontend_exists_parity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from msstreamingstack_spark.sql_frontend import run_sql
-
-    return run_sql(spark, sf_dir, _EXISTS_SQL_TEXT)
-
-
-# Multiset semantics are the point: INTERSECT ALL keeps min(m1, m2)
-# copies per key, EXCEPT ALL keeps m1 - m2 — the GROUP BY multiplicity
-# output makes those counts (not just membership) the compared value.
-_SETOPS_SQL_TEXT = """
-WITH hi AS (SELECT o_custkey FROM orders WHERE o_totalprice > 150000),
-urgent AS (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'),
-both_ms AS (SELECT o_custkey FROM hi INTERSECT ALL SELECT o_custkey FROM urgent),
-only_hi AS (SELECT o_custkey FROM hi EXCEPT ALL SELECT o_custkey FROM urgent)
-SELECT 'intersect_all' AS op, o_custkey, COUNT(*) AS multiplicity
-FROM both_ms GROUP BY o_custkey
-UNION ALL
-SELECT 'except_all' AS op, o_custkey, COUNT(*) AS multiplicity
-FROM only_hi GROUP BY o_custkey
-"""
-
-
-@register(
-    "sql_frontend_setops_all_parity",
-    _SETOPS_SQL_TEXT,
-    tags=("extension", "sql-frontend", "set-ops", "parity"),
-    doc="SQL front-end on the MULTISET set-ops: INTERSECT ALL "
-    "(min-multiplicity per key) and EXCEPT ALL (multiplicity "
-    "difference) over two filtered projections of orders, identical "
-    "text on both engines, with per-key multiplicities emitted so the "
-    "hash compare checks bag semantics, not just membership. Spark "
-    "plans both as single hash-partitioned counting joins on "
-    "o_custkey (no row-by-row bag subtraction) — the DataFrame-side "
-    "set_ops_* queries cover the API route; this gates the dialect.",
-)
-def q_sql_frontend_setops_all_parity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from msstreamingstack_spark.sql_frontend import run_sql
-
-    return run_sql(spark, sf_dir, _SETOPS_SQL_TEXT)
-
-
-# Modern aggregate syntax: FILTER clauses (per-aggregate predicates
-# without CASE-WHEN contortions) + GROUP BY ALL (keys inferred from
-# the non-aggregate select list) — one text, both engines.
-_AGG_FILTER_SQL_TEXT = """
-SELECT o_orderpriority,
-       COUNT(*) AS n_orders,
-       COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_finished,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6)))
-            FILTER (WHERE o_totalprice > 200000) AS DOUBLE) AS sum_large
-FROM orders
-GROUP BY ALL
-"""
-
-
-@register(
-    "sql_frontend_agg_filter_parity",
-    _AGG_FILTER_SQL_TEXT,
-    tags=("extension", "sql-frontend", "agg", "parity"),
-    doc="SQL front-end on modern aggregate syntax: per-aggregate "
-    "FILTER (WHERE ...) clauses and GROUP BY ALL inference, one query "
-    "text run verbatim on both engines. Spark plans FILTER aggregates "
-    "as conditional partial aggregates inside the same single "
-    "map-combined shuffle as the unfiltered COUNT — one pass, not one "
-    "scan per predicate — and GROUP BY ALL resolves to the "
-    "non-aggregate select list at analysis time (no runtime cost). "
-    "The filtered SUM routes through exact DECIMAL so the driver "
-    "hash-compare gates the conditional-aggregation path bit-for-bit; "
-    "the filtered-to-empty case returns NULL identically on both "
-    "engines.",
-)
-def q_sql_frontend_agg_filter_parity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from msstreamingstack_spark.sql_frontend import run_sql
-
-    return run_sql(spark, sf_dir, _AGG_FILTER_SQL_TEXT)
-
-
-# Value-based (RANGE) window frames: the frame is defined by the
-# ORDER-BY value distance, not row offsets — trailing-window-by-key
-# semantics both engines must agree on, including tie groups (all
-# rows with equal order values share a frame).
-_RANGE_FRAME_SQL_TEXT = """
-SELECT o_custkey, o_orderkey,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) OVER (
-         PARTITION BY o_custkey ORDER BY o_orderkey
-         RANGE BETWEEN 1000000 PRECEDING AND CURRENT ROW) AS DOUBLE)
-         AS trailing_sum,
-       COUNT(*) OVER (
-         PARTITION BY o_custkey ORDER BY o_orderkey
-         RANGE BETWEEN 1000000 PRECEDING AND CURRENT ROW) AS n_in_range
-FROM orders
-"""
-
-
-@register(
-    "sql_frontend_range_frame_parity",
-    _RANGE_FRAME_SQL_TEXT,
-    tags=("extension", "sql-frontend", "window", "parity"),
-    doc="SQL front-end on value-based RANGE window frames: per "
-    "customer, the DECIMAL-exact sum and count of orders whose "
-    "orderkey lies within 1,000,000 BELOW the current row's — the "
-    "frame boundary is an ORDER-BY-value distance, not a row count, "
-    "so both engines must agree on boundary inclusion and tie-group "
-    "framing. One query text verbatim on both engines; Spark plans "
-    "it as a single hash-partitioned sort + running frame scan per "
-    "customer (one exchange — the DataFrame twin "
-    "range_frame_rolling_sum pins the same shape on events).",
-)
-def q_sql_frontend_range_frame_parity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from msstreamingstack_spark.sql_frontend import run_sql
-
-    return run_sql(spark, sf_dir, _RANGE_FRAME_SQL_TEXT)
-
-
-# The recursive term must stay UNION ALL (Spark 4 does not support
-# UNION-distinct recursion — probed, UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE),
-# so the recursion must be a DAG by construction: a monotone integer
-# spine bounded by a scalar CTE terminates in (hi - lo) steps. Derived
-# year/month columns are deliberately NOT emitted: DuckDB rounds
-# float→INTEGER casts while Spark truncates, so m/12 arithmetic would
-# split the engines on half-boundary months.
-_RECURSIVE_SPINE_SQL_TEXT = """
-WITH RECURSIVE bounds AS (
-  SELECT MIN(year(o_orderdate) * 12 + month(o_orderdate)) AS lo,
-         MAX(year(o_orderdate) * 12 + month(o_orderdate)) AS hi
-  FROM orders WHERE year(o_orderdate) = 1996
-),
-spine(m) AS (
-  SELECT lo FROM bounds
-  UNION ALL
-  SELECT m + 1 FROM spine JOIN bounds ON m < hi
-),
-rev AS (
-  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS m,
-         COUNT(*) AS n_orders,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS revenue
-  FROM orders WHERE year(o_orderdate) = 1996
-  GROUP BY year(o_orderdate) * 12 + month(o_orderdate)
-)
-SELECT s.m AS month_key,
-       COALESCE(r.n_orders, 0) AS n_orders,
-       COALESCE(r.revenue, 0.0) AS revenue
-FROM spine s LEFT JOIN rev r ON s.m = r.m
-"""
-
-
-@register(
-    "sql_frontend_recursive_spine_parity",
-    _RECURSIVE_SPINE_SQL_TEXT,
-    tags=("extension", "sql-frontend", "recursive-cte", "parity"),
-    doc="SQL front-end on WITH RECURSIVE (new in Spark 4): a monthly "
-    "calendar spine generated by a bounded integer recursion (anchor = "
-    "scalar min month, step = +1 while below the scalar max), LEFT "
-    "JOINed to monthly order revenue so gap months surface as explicit "
-    "zero rows — the recursive-CTE form of the calendar-spine gap-fill "
-    "that timeseries_gapfill builds with sequence(). Identical text on "
-    "both engines; revenue routed through exact DECIMAL. Cost model: "
-    "Spark executes each recursion step as its own job AND re-evaluates "
-    "the non-recursive bounds CTE per step (measured 13.9 s for an "
-    "80-month spine at sf0.1), so the spine is bounded to one year "
-    "(12 steps, ~4 s steady — the residual is per-step scheduling) — recursion is the dialect-parity demo here; at "
-    "scale you generate long spines with sequence() (timeseries_gapfill) "
-    "and keep recursion for genuinely inductive shapes. UNION ALL + "
-    "monotone bound is the only recursion shape Spark 4 supports "
-    "(UNION-distinct recursion raises "
-    "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE) — pinned here as parity "
-    "coverage for that dialect boundary.",
-)
-def q_sql_frontend_recursive_spine_parity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from msstreamingstack_spark.sql_frontend import run_sql
-
-    return run_sql(spark, sf_dir, _RECURSIVE_SPINE_SQL_TEXT)
-
-
-_LATERAL_SQL_TEXT = """
-SELECT n.n_name, t.o_orderkey, t.o_totalprice
-FROM nation n
-JOIN LATERAL (
-  SELECT o.o_orderkey, o.o_totalprice
-  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE c.c_nationkey = n.n_nationkey
-  ORDER BY o.o_totalprice DESC, o.o_orderkey
-  LIMIT 2
-) t ON TRUE
-"""
-
-
-@register(
-    "sql_frontend_lateral_topk_parity",
-    _LATERAL_SQL_TEXT,
-    tags=("extension", "sql-frontend", "lateral", "topk", "parity"),
-    doc="SQL front-end on JOIN LATERAL: per-nation top-2 orders via a "
-    "correlated ordered-LIMIT subquery — the dialect's lateral "
-    "surface, identical text on both engines. Spark decorrelates the "
-    "lateral into a join + per-key rank window (no per-outer-row "
-    "subquery execution ever happens — the only shape that exists at "
-    "100 TB), which is exactly the plan the DataFrame-side "
-    "topk_customers_per_segment builds by hand; this entry gates the "
-    "SQL route. Ties broken on o_orderkey so the LIMIT cut is "
-    "deterministic cross-engine.",
-)
-def q_sql_frontend_lateral_topk_parity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from msstreamingstack_spark.sql_frontend import run_sql
-
-    return run_sql(spark, sf_dir, _LATERAL_SQL_TEXT)
-
-
-# ---------------------------------------------------------------------------
 # MERGE INTO semantics on plain parquet (lakehouse upsert algebra)
 # ---------------------------------------------------------------------------
 @register(
@@ -1549,62 +1104,6 @@ def q_merge_upsert_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_cols={"c_acctbal": F.col("s_c_acctbal")},
         delete_cond=F.col("s_is_delete"),
     )
-
-
-# ---------------------------------------------------------------------------
-# SQL front-end: procedural scripting (Spark 4 SQL scripting)
-# ---------------------------------------------------------------------------
-_SCRIPTING_SQL_TEXT = """
-BEGIN
-  DECLARE avg_bal DOUBLE;
-  SET avg_bal = (SELECT round(CAST(SUM(CAST(c_acctbal AS DECIMAL(25,6)))
-                                   AS DOUBLE) / COUNT(*), 6)
-                 FROM customer WHERE c_acctbal > 0.00);
-  SELECT c.c_custkey, c.c_acctbal, n.n_name,
-         round(c.c_acctbal - avg_bal, 6) AS above_avg
-  FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-  WHERE c.c_acctbal > avg_bal;
-END
-"""
-
-
-@register(
-    "sql_frontend_scripting_parity",
-    """
-WITH avg_bal AS (
-  SELECT round(CAST(SUM(CAST(c_acctbal AS DECIMAL(25,6))) AS DOUBLE)
-               / COUNT(*), 6) AS v
-  FROM customer WHERE c_acctbal > 0.00
-)
-SELECT c.c_custkey, c.c_acctbal, n.n_name,
-       round(c.c_acctbal - a.v, 6) AS above_avg
-FROM customer c
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-CROSS JOIN avg_bal a
-WHERE c.c_acctbal > a.v
-""",
-    tags=("extension", "sql-frontend", "relational", "parity", "scripting"),
-    doc="Spark 4 SQL SCRIPTING parity: a BEGIN…END script DECLAREs a "
-    "session variable, SETs it from a scalar subquery (decimal-"
-    "disciplined corpus average), and uses it as BOTH a predicate and "
-    "an expression term in the dependent query — the canonical "
-    "procedural pattern (compute threshold, then filter by it). "
-    "DuckDB has no scripting dialect, so unlike the identical-text "
-    "sql_frontend_* siblings the oracle is the DECLARATIVE "
-    "decomposition (scalar CTE + cross join) — pinning that the "
-    "procedural surface reduces to the same values as the relational "
-    "form, which is exactly what a migration off stored-proc-style "
-    "code relies on. above_avg's round(…,6) is grid-safe: c_acctbal "
-    "has 2 decimals and the variable 6, so the true difference sits "
-    "ON the 1e-6 grid, never at a rounding half-boundary (see "
-    "plans/notes.md on ties).",
-)
-def q_sql_frontend_scripting_parity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from msstreamingstack_spark.sql_frontend import run_sql
-
-    return run_sql(spark, sf_dir, _SCRIPTING_SQL_TEXT)
 
 
 # ---------------------------------------------------------------------------

@@ -52,16 +52,6 @@ EVENTS_SCHEMA = T.StructType(
 
 PROPS_SCHEMA = T.StructType([T.StructField("k", T.LongType())])
 
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
 TPCH_SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -129,7 +119,6 @@ TPCH_SCHEMAS: dict[str, T.StructType] = {
         ]
     ),
     "events": EVENTS_SCHEMA,
-    "documents": DOCUMENTS_SCHEMA,
 }
 
 TABLE_NAMES = tuple(TPCH_SCHEMAS)

@@ -81,7 +81,7 @@ def test_second_produce_adds_drops_after_the_first(tmp_path):
 
 
 def test_query_subcommand_runs_and_unknown_rejected(spark, capsys):
-    rc = main(["query", "tpch_q1", "--sf-dir", "/root/testdata/sf0.001", "--rows", "3"])
+    rc = main(["query", "histogram_event_values", "--sf-dir", "/root/testdata/sf0.001", "--rows", "3"])
     assert rc == 0
     rc = main(["query", "no_such_query_xyz"])
     assert rc == 2
@@ -94,7 +94,7 @@ def test_cli_verify_subset(tmp_path):
 
     r = subprocess.run(
         [sys.executable, "-m", "msstreamingstack_spark", "verify",
-         "--names", "tpch_q1,heavy_hitters_exact",
+         "--names", "histogram_event_values,heavy_hitters_exact",
          "--sf-dir", "/root/testdata/sf0.01"],
         capture_output=True, text=True, timeout=420,
     )

@@ -63,7 +63,7 @@ def test_sessionize_single_shuffle(spark):
     assert f.shuffles <= 2, f.text  # AQE counts logical+final exchange
 
 
-@pytest.mark.parametrize("name", ["tpch_q1", "agg_events_stats"])
+@pytest.mark.parametrize("name", ["histogram_event_values", "agg_events_stats"])
 def test_aggregates_are_partial_then_final(spark, name):
     """Map-side combine present: HashAggregate appears above AND below
     the exchange (partial_ prefix in formatted plans)."""
@@ -103,44 +103,6 @@ def test_interval_join_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in f.text
 
 
-def test_sql_frontend_subquery_decorrelates(spark):
-    """The ad-hoc subquery parity text must plan as decorrelated key
-    joins — IN → LeftSemi, NOT EXISTS → LeftAnti, the scalar subquery
-    as a one-row subquery broadcast — never a nested-loop re-execution
-    per row (the shape that dies at 100 TB)."""
-    f = plan_facts(REGISTRY["sql_frontend_subquery_parity"].builder(spark, SF))
-    assert "LeftSemi" in f.text
-    assert "LeftAnti" in f.text
-    assert "Subquery" in f.text
-    assert "CartesianProduct" not in f.text
-    assert "BroadcastNestedLoopJoin" not in f.text
-
-
-def test_sql_frontend_grouping_sets_single_expand(spark):
-    """GROUPING SETS must plan as ONE Expand + hash aggregate over a
-    single scan — not a union of three scans of orders."""
-    import re
-
-    f = plan_facts(REGISTRY["sql_frontend_grouping_sets_parity"].builder(spark, SF))
-    assert "Expand" in f.text
-    assert len(set(re.findall(r"\((\d+)\) Scan parquet", f.text))) == 1, f.text
-
-
-def test_sql_frontend_agg_filter_single_pass(spark):
-    """FILTER-clause aggregates must fold into ONE map-combined hash
-    aggregate over ONE scan of orders — never a scan or join per
-    filtered aggregate — and GROUP BY ALL must add no plan operator."""
-    import re
-
-    f = plan_facts(REGISTRY["sql_frontend_agg_filter_parity"].builder(spark, SF))
-    assert len(set(re.findall(r"\((\d+)\) Scan parquet", f.text))) == 1, f.text
-    assert len(set(re.findall(r"\((\d+)\) Exchange", f.text))) == 1, f.text
-    assert "Join" not in f.text
-    assert "Expand" not in f.text
-    # the conditional aggregates ride the partial (map-side) stage
-    assert "partial_count(1) FILTER" in f.text, f.text
-
-
 def test_shuffle_budget_pins(spark):
     """Upper-bound shuffle budget per headline operator, in formatted-
     plan Exchange OCCURRENCES (each physical exchange appears twice:
@@ -153,7 +115,7 @@ def test_shuffle_budget_pins(spark):
     spark.catalog.clearCache()
     budget = {
         "sessionize_events": 2,        # 1 real: user key (exchange reuse)
-        "tpch_q1": 2,                  # 1 real: group keys after partial agg
+        "histogram_event_values": 2,   # 1 real: group keys after partial agg
         "hypertable_rollup": 4,        # 2 real: minutely, hourly
     }
     for name, max_occ in budget.items():
@@ -244,16 +206,6 @@ def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_lateral_topk_decorrelates_to_group_limit(spark):
-    """JOIN LATERAL (ORDER BY ... LIMIT k) must decorrelate to a rank
-    window with WindowGroupLimit pruning (partial before the exchange)
-    — never per-outer-row subquery execution or a cartesian."""
-    f = plan_facts(REGISTRY["sql_frontend_lateral_topk_parity"].builder(spark, SF))
-    assert "WindowGroupLimit" in f.text, f.text
-    assert "CartesianProduct" not in f.text
-    assert f.broadcast_joins >= 2, f.text
 
 
 def test_pagerank_edges_persisted_once_no_cartesian(spark):

@@ -6,11 +6,13 @@ from __future__ import annotations
 
 import inspect
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from msstreamingstack_spark.queries import REGISTRY
+from msstreamingstack_spark.schemas import TABLE_NAMES
 
 SF_TINY = "/root/testdata/sf0.001"
 
@@ -71,10 +73,12 @@ def test_registry_complete_under_any_first_import():
 
 def test_registry_metadata_consistency(spark):
     """Every registry entry carries a doc and at least one tag; every
-    oracle references only fixture tables; names are unique and
-    builder callables are distinct (no accidental double-register)."""
-    tables = {"region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events"}
+    oracle references only fixture tables, and every fixture table is
+    referenced by some oracle (a table no query reads is a leftover);
+    names are unique and builder callables are distinct (no accidental
+    double-register)."""
+    tables = set(TABLE_NAMES)
+    named = set()
     builders = set()
     for name, spec in REGISTRY.items():
         assert spec.doc and len(spec.doc) > 40, name
@@ -82,19 +86,19 @@ def test_registry_metadata_consistency(spark):
         assert id(spec.builder) not in builders, name
         builders.add(id(spec.builder))
         if spec.oracle:
-            import re as _re
-
-            refs = set(_re.findall(
+            refs = set(re.findall(
                 r"\b(?:FROM|JOIN)\s+([a-z_][a-z0-9_]*)", spec.oracle
             ))
             # every base-table reference must be a fixture table or a
             # CTE defined inside the oracle itself
-            ctes = set(_re.findall(
+            ctes = set(re.findall(
                 r"([a-z_][a-z0-9_]*)\s*(?:\([^)]*\))?\s+AS\s*\(",
                 spec.oracle,
             ))
             unknown = refs - tables - ctes
             assert not unknown, (name, unknown)
+            named |= refs & tables
+    assert named == tables, f"no oracle reads {sorted(tables - named)}"
 
 
 def test_rotating_persist_bounds_registry_query_caches(spark):
